@@ -1287,7 +1287,7 @@ object AdvancedQueries {
           "store25: the widening append lost an uncontended CAS"))
     val rec = graft.ops.AtomicPublish.manifestMetaOf(spark, root,
       graft.ops.AtomicPublish.currentTxn(spark, root).get)("documents")
-      .schema.get
+      .schema
     require(rec("doc_id").dataType ==
         org.apache.spark.sql.types.LongType &&
       rec("score").dataType == org.apache.spark.sql.types.DoubleType,
@@ -1655,8 +1655,8 @@ object AdvancedQueries {
       // loudly if the statement silently degraded to a rewrite
       val delMeta = AtomicPublish.currentManifestMeta(es, root).get
         ._2.get(AtomicPublish.deleteTableOf("chunks"))
-      require(delMeta.exists(_.schema.exists(
-        _.fieldNames.toSet == Set("doc_id", "chunk_no", "_asof"))),
+      require(delMeta.exists(
+        _.schema.fieldNames.toSet == Set("doc_id", "chunk_no", "_asof")),
         "store13 staging: MERGE did not pin the composite tombstone key")
     }
     root

@@ -731,9 +731,8 @@ object SimilarityOps {
       batch: DataFrame, cents: DataFrame): String = {
     val appended = assignCells(batch, cents)
       .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
-    var attempt = 0
-    while (attempt < 5) {
-      attempt += 1
+    graft.ops.AtomicPublish.retryLostRace(
+        s"ivfAppendBatch under $indexRoot") {
       val parent = graft.ops.AtomicPublish.currentTxn(spark, indexRoot)
       // an existing table's layout is inherited (appends must keep it);
       // only a FIRST append decides one — cell-partitioned, the layout
@@ -744,13 +743,8 @@ object SimilarityOps {
         if (hasTable) Map.empty else Map("ivf_index" -> Seq("cell"))
       graft.ops.AtomicPublish.publishDelta(spark, indexRoot,
         append = Map("ivf_index" -> appended), parent = parent,
-        partitionBy = layout) match {
-        case Some(txn) => return txn
-        case None => () // concurrent appender won; re-pin and retry
-      }
+        partitionBy = layout)
     }
-    throw new IllegalStateException(
-      s"ivfAppendBatch lost the commit race 5 times under $indexRoot")
   }
 
   /** Published index store per corpus dir, built once per JVM (the

@@ -93,12 +93,14 @@ object PatientIngestion {
     val consented = valid.filter(col("consented")).drop("errors", "consented")
     val loaded = transformProjection(consented, codec)
 
-    // one aggregate pass for every stage count
+    // one aggregate pass for every stage count (a sum over an empty
+    // batch is null, hence the coalesce)
     val c = annotated.agg(
       count(lit(1)).as("extract"),
-      sum(when(size(col("errors")) === 0, 1L).otherwise(0L)).as("valid"),
-      sum(when(size(col("errors")) === 0 && col("consented"), 1L).otherwise(0L))
-        .as("consented")).head()
+      coalesce(sum(when(size(col("errors")) === 0, 1L).otherwise(0L)),
+        lit(0L)).as("valid"),
+      coalesce(sum(when(size(col("errors")) === 0 && col("consented"), 1L)
+        .otherwise(0L)), lit(0L)).as("consented")).head()
     val counts = IngestCounts(c.getLong(0), c.getLong(1), c.getLong(2),
       c.getLong(2), c.getLong(2))
     IngestResult(loaded, invalid, blocked, counts)

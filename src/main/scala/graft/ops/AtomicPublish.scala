@@ -387,9 +387,9 @@ object AtomicPublish {
 
   /** Per-table manifest record: owning version dirs (the table is the
     * union of `v_<owner>/<table>` reads), the recorded logical schema
-    * (JSON `StructType`; None for pre-schema manifests), the partition
-    * columns its segments are laid out by (empty = flat), the columns
-    * zone maps are kept for, the per-owner zone maps themselves, and —
+    * (JSON `StructType`, required — every read mounts under it), the
+    * partition columns its segments are laid out by (empty = flat), the
+    * columns zone maps are kept for, the per-owner zone maps themselves, and —
     * one level below — per-FILE zone maps (owner → relative file path →
     * stats). File maps are what keep data skipping alive AFTER
     * compaction consolidates many segments into one: segment-level
@@ -399,7 +399,7 @@ object AtomicPublish {
     * cost is O(files × statCols) for the stat-carrying tables only, and
     * compaction bounds the file count. */
   final case class TableMeta(owners: Seq[String],
-      schemaJson: Option[String] = None,
+      schemaJson: String,
       partitionCols: Seq[String] = Nil,
       statCols: Seq[String] = Nil,
       segStats: Map[String, SegStats] = Map.empty,
@@ -459,8 +459,8 @@ object AtomicPublish {
         * rewrites consolidate under the current spec and clear the
         * rewritten owners' entries. */
       ownerParts: Map[String, Seq[String]] = Map.empty) {
-    def schema: Option[StructType] =
-      schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
+    def schema: StructType =
+      DataType.fromJson(schemaJson).asInstanceOf[StructType]
     /** The directory component of `owner`'s segment of this table. */
     def dirOf(owner: String, table: String): String =
       ownerDirs.getOrElse(owner, table)
@@ -501,11 +501,12 @@ object AtomicPublish {
     * sealed but NOT yet committed (no reader resolves it), and a crash
     * here leaves a consistent uncommitted dir for vacuum. */
   private def rewriteSealedManifest(spark: SparkSession, root: String,
-      txn: String, manifest: Array[Byte]): Unit = {
+      txn: String, manifest: String): Unit = {
     val p = new Path(new Path(root, s"v_$txn"), ManifestFile)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val os = fs.create(p, true)
-    try os.write(manifest) finally os.close()
+    try os.write(manifest.getBytes(StandardCharsets.UTF_8))
+    finally os.close()
   }
 
   /** One lock object per publish root (same-JVM commit serialization),
@@ -624,10 +625,10 @@ object AtomicPublish {
     * (data lives in THIS version's dir) or `name=t1,t2,…` (the UNION of
     * those versions' dirs — the append/carry representation, so
     * re-publishing unchanged history never copies it) — then optional
-    * metadata lines `#parts:name=c1,c2` (partition columns) and
-    * `#schema:name=<StructType JSON>` (the recorded merged schema).
-    * Pre-metadata manifests simply lack `#` lines — both directions stay
-    * readable. The same content is written as `_CURRENT` at commit and
+    * metadata lines such as `#parts:name=c1,c2` (partition columns) and
+    * `#schema:name=<StructType JSON>` (the recorded merged schema —
+    * required for every table; the other `#` lines are optional). The
+    * same content is written as `_CURRENT` at commit and
     * as `_MANIFEST` inside the version dir (time-travel readers and
     * vacuum's reference chase resolve the latter). */
   private val ManifestFile = "_MANIFEST"
@@ -728,8 +729,8 @@ object AtomicPublish {
     val parts = names.collect { case (name, m) if m.partitionCols.nonEmpty =>
       s"#parts:$name=${m.partitionCols.mkString(",")}"
     }
-    val schemas = names.collect { case (name, m) if m.schemaJson.isDefined =>
-      s"#schema:$name=${m.schemaJson.get}"
+    val schemas = names.map { case (name, m) =>
+      s"#schema:$name=${m.schemaJson}"
     }
     val statcols = names.collect { case (name, m) if m.statCols.nonEmpty =>
       s"#statcols:$name=${m.statCols.mkString(",")}"
@@ -853,7 +854,12 @@ object AtomicPublish {
     owners.map { case (name, os) =>
       val (ccols, z) = cluster.getOrElse(name, (Nil, false))
       val (bcols, nb) = bucket.getOrElse(name, (Nil, 0))
-      name -> TableMeta(os, schemas.get(name), parts.getOrElse(name, Nil),
+      // the manifest is outside input: refuse a table without its
+      // schema record by name instead of failing later on a null
+      val schema = schemas.getOrElse(name, throw new IllegalStateException(
+        s"manifest of txn $txn records no schema for table '$name' — " +
+          "the store is corrupt or was written by an unsupported version"))
+      name -> TableMeta(os, schema, parts.getOrElse(name, Nil),
         statcols.getOrElse(name, Nil), stats.getOrElse(name, Map.empty),
         fstats.getOrElse(name, Map.empty), bloomcols.getOrElse(name, Nil),
         ccols, z, bcols, nb, checks.getOrElse(name, Map.empty),
@@ -862,26 +868,24 @@ object AtomicPublish {
     }
   }
 
-  /** Table→owning-versions map of `txn`. Falls back to listing the dir
-    * (self-owned tables) for versions sealed before `_MANIFEST` existed. */
+  /** Table→owning-versions map of `txn`, from its `_MANIFEST`. */
   def manifestOf(spark: SparkSession, root: String,
       txn: String): Map[String, Seq[String]] =
     manifestMetaOf(spark, root, txn).map { case (n, m) => n -> m.owners }
 
-  /** Full per-table metadata (owners + schema + partition spec) of `txn`. */
+  /** Full per-table metadata (owners + schema + partition spec) of `txn`,
+    * read from `v_<txn>/_MANIFEST`. [[stageAndSeal]] writes that file
+    * before the sealing rename, so every version dir carries one; a
+    * missing manifest (unknown or vacuumed txn) throws
+    * FileNotFoundException. */
   def manifestMetaOf(spark: SparkSession, root: String,
       txn: String): Map[String, TableMeta] = {
-    val vdir = new Path(root, s"v_$txn")
-    val fs = vdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val mf = new Path(vdir, ManifestFile)
-    if (fs.exists(mf)) {
-      val in = fs.open(mf)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().toList finally in.close()
-      parseManifestMeta(txn, lines.drop(1))
-    } else
-      fs.listStatus(vdir).filter(_.isDirectory)
-        .map(_.getPath.getName -> TableMeta(Seq(txn))).toMap
+    val mf = new Path(new Path(root, s"v_$txn"), ManifestFile)
+    val fs = mf.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val in = fs.open(mf)
+    val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
+      .getLines().toList finally in.close()
+    parseManifestMeta(txn, lines.drop(1))
   }
 
   private def fc(spark: SparkSession, p: Path): FileContext =
@@ -998,6 +1002,129 @@ object AtomicPublish {
           .getBytes(StandardCharsets.UTF_8))
       finally mos.close()
     } catch { case _: Throwable => () }
+
+  // --- the commit skeleton ----------------------------------------------------
+
+  private def newTxnId(): String =
+    java.util.UUID.randomUUID().toString.replace("-", "")
+
+  /** The lifecycle every store commit shares: a fresh txn id (or the
+    * pinned `txnId`), registered in [[inFlight]] for the whole call so a
+    * same-JVM vacuum spares its dirs. On ANY failure the txn's scratch
+    * dir and tmp pointer are removed best-effort and the error rethrows
+    * — a raised row-guard violation by name ([[unwrapViolation]]). A
+    * sealed `v_<txn>` is left alone: it may already be live, and vacuum
+    * reclaims it once nothing references it. */
+  private def withTxn[T](spark: SparkSession, root: String,
+      txnId: Option[String] = None)(body: String => T): T = {
+    val txn = txnId.getOrElse(newTxnId())
+    val sc = spark.sparkContext
+    val tag = s"graft-txn-$txn"
+    inFlight.add(txn)
+    sc.addJobTag(tag)
+    try body(txn)
+    catch {
+      case e: Throwable =>
+        awaitTasks(sc, tag)
+        val rootPath = new Path(root)
+        val ctx = fc(spark, rootPath)
+        try ctx.delete(new Path(rootPath, s".staging_$txn"), true)
+        catch { case _: Throwable => () }
+        try ctx.delete(new Path(rootPath, s"._current_$txn"), false)
+        catch { case _: Throwable => () }
+        throw unwrapViolation(e)
+    } finally {
+      sc.removeJobTag(tag)
+      inFlight.remove(txn)
+    }
+  }
+
+  /** Wait (bounded) until no task of a job tagged `tag` is still
+    * running. A failed job returns while its killed sibling tasks can
+    * still be writing into the scratch dir, re-creating it after the
+    * abort removed it. */
+  private def awaitTasks(sc: org.apache.spark.SparkContext,
+      tag: String): Unit = {
+    val st = sc.statusTracker
+    val stages = st.getJobIdsForTag(tag).toSeq
+      .flatMap(st.getJobInfo(_)).flatMap(_.stageIds())
+    val deadline = System.currentTimeMillis() + 30000L
+    while (stages.exists(s => st.getStageInfo(s).exists(_.numActiveTasks > 0))
+        && System.currentTimeMillis() < deadline)
+      Thread.sleep(10)
+  }
+
+  /** The commit step every store write shares: stage `tables` and seal
+    * `meta` as version `txn` ([[stageAndSeal]]), swap the pointer — only
+    * while the live version is still `parent`, unless `cas` is off (a
+    * plain [[publish]]) — and mark the commit ([[swapAndMark]]).
+    * `afterSwap` runs once the version is live (a post-swap re-verify
+    * that may roll it back). On a lost race the sealed dir is left for
+    * vacuum and `onLost` decides: a rebase onto the winner, or None. */
+  private def commit(spark: SparkSession, root: String, txn: String,
+      tables: Map[String, DataFrame], meta: Map[String, TableMeta],
+      parent: Option[String], op: String, dataChange: Boolean = true,
+      cdfTables: Seq[String] = Nil, cas: Boolean = true,
+      afterSwap: () => Unit = () => (),
+      onLost: Map[String, TableMeta] => Option[String] = _ => None)
+      : Option[String] = {
+    val sealedMeta = stageAndSeal(spark, new Path(root), txn, tables, meta)
+    if (swapAndMark(spark, root, txn, renderManifest(txn, sealedMeta),
+        parent, op, dataChange, cdfTables, cas)) {
+      afterSwap()
+      Some(txn)
+    } else onLost(sealedMeta)
+  }
+
+  /** Swap the pointer to `txn`'s `manifest` (CAS on `parent` unless
+    * `cas` is off) and, once it moved, write the commit marker linking
+    * `parent`, with seq = the parent's + 1 — CAS serializes commits, so
+    * the chain strictly increases; a parent without a readable seq
+    * (the best-effort marker write failed) restarts at 0, and ties then
+    * break by name. False: the race was lost. */
+  private def swapAndMark(spark: SparkSession, root: String, txn: String,
+      manifest: String, parent: Option[String], op: String,
+      dataChange: Boolean = true, cdfTables: Seq[String] = Nil,
+      cas: Boolean = true): Boolean = {
+    val swapped = swapPointer(spark, root, txn,
+      manifest.getBytes(StandardCharsets.UTF_8),
+      expectParent = if (cas) Some(parent) else None)
+    if (swapped)
+      markCommitted(spark, root, txn, seq = parent
+        .flatMap(commitSeqOf(spark, root, _)).map(_ + 1).getOrElse(0L),
+        op = op, parent = parent, dataChange = dataChange,
+        cdfTables = cdfTables)
+    swapped
+  }
+
+  /** The version a metadata commit builds on — `parent`, or the live
+    * one — with its manifest. */
+  private def pinParent(spark: SparkSession, root: String,
+      parent: Option[String]): (String, Map[String, TableMeta]) = {
+    val p = parent.orElse(currentTxn(spark, root)).getOrElse(
+      throw new IllegalStateException(s"no published version under $root"))
+    p -> manifestMetaOf(spark, root, p)
+  }
+
+  /** How many lost races any commit loop absorbs before it fails. */
+  private val MaxCommitAttempts = 8
+
+  /** The lost-race retry every commit loop shares: `tryOnce` re-pins the
+    * live version, makes ONE commit attempt against it and returns None
+    * when a concurrent commit won the CAS. It re-runs up to
+    * [[MaxCommitAttempts]] times; then the call fails, naming `what`. */
+  def retryLostRace[T](what: => String)(tryOnce: => Option[T]): T = {
+    var attempt = 0
+    while (attempt < MaxCommitAttempts) {
+      attempt += 1
+      tryOnce match {
+        case Some(r) => return r
+        case None => ()
+      }
+    }
+    throw new IllegalStateException(s"$what lost the commit race " +
+      s"$MaxCommitAttempts times")
+  }
 
   /** Everything a commit marker records about `txn`. Fields absent
     * from older markers parse as None/default; a missing or unreadable
@@ -1141,11 +1268,8 @@ object AtomicPublish {
     * conservatively, so skipping degrades, never corrupts. */
   private def computeSegStats(spark: SparkSession, segPath: Path,
       statCols: Seq[String],
-      sliceSchema: Option[StructType]): (SegStats, Map[String, SegStats]) = {
-    val df = sliceSchema match {
-      case Some(s) => spark.read.schema(s).parquet(segPath.toString)
-      case None => spark.read.parquet(segPath.toString)
-    }
+      sliceSchema: StructType): (SegStats, Map[String, SegStats]) = {
+    val df = spark.read.schema(sliceSchema).parquet(segPath.toString)
     computeSegStatsOf(spark, df.withColumn("__file",
       org.apache.spark.sql.functions.input_file_name()), segPath, statCols)
   }
@@ -1444,15 +1568,15 @@ object AtomicPublish {
       else {
         val sliceSchema = tables(name).schema
         val (ss0, fm0) = computeSegStats(spark, new Path(scratch, name),
-          m.statCols, Some(sliceSchema))
+          m.statCols, sliceSchema)
         // a FLOAT slice landing in a DoubleType-recorded column (a
         // narrow writer appending after a widen): its fresh stats are
         // float-rendered — re-encode exactly under the recorded type
         val floatCols = m.statCols.filter(c =>
           sliceSchema.fieldNames.contains(c) &&
             sliceSchema(c).dataType == FloatType &&
-            m.schema.exists(rs => rs.fieldNames.contains(c) &&
-              rs(c).dataType == DoubleType)).toSet
+            m.schema.fieldNames.contains(c) &&
+            m.schema(c).dataType == DoubleType).toSet
         val ss = widenFloatStats(ss0, floatCols)
         val fm = fm0.map { case (f, s) =>
           f -> widenFloatStats(s, floatCols) }
@@ -1658,9 +1782,8 @@ object AtomicPublish {
     if (meta.checks.isEmpty) return df
     import org.apache.spark.sql.functions.{raise_error, when => fwhen}
     val have = df.columns.toSet
-    val missing: Seq[StructField] = meta.schema
-      .map(_.fields.filterNot(f => have.contains(f.name)).toSeq)
-      .getOrElse(Nil)
+    val missing: Seq[StructField] =
+      meta.schema.fields.filterNot(f => have.contains(f.name)).toSeq
     val evalFrame = missing.foldLeft(df) { (d, f) =>
       d.withColumn(f.name, lit(null).cast(f.dataType))
     }
@@ -1719,13 +1842,10 @@ object AtomicPublish {
       df: DataFrame, meta: TableMeta): Unit = {
     if (meta.checks.isEmpty) return
     val have = df.columns.toSet
-    val evalFrame = meta.schema match {
-      case Some(s) =>
-        s.fields.filterNot(f => have.contains(f.name)).foldLeft(df) {
-          (d, f) => d.withColumn(f.name, lit(null).cast(f.dataType))
-        }
-      case None => df
-    }
+    val evalFrame =
+      meta.schema.fields.filterNot(f => have.contains(f.name)).foldLeft(df) {
+        (d, f) => d.withColumn(f.name, lit(null).cast(f.dataType))
+      }
     meta.checks.toSeq.sortBy(_._1).foreach { case (cn, predSql) =>
       val pred =
         try org.apache.spark.sql.functions.expr(predSql)
@@ -1971,7 +2091,7 @@ object AtomicPublish {
       pred: org.apache.spark.sql.catalyst.expressions.Expression)
       : Seq[String] = {
     if (meta.bloomCols.isEmpty || keep.isEmpty) return keep
-    val schema = meta.schema.getOrElse(return keep)
+    val schema = meta.schema
     val typed = meta.bloomCols.filter(schema.fieldNames.contains)
       .map(c => c -> schema(c).dataType).toMap
     if (typed.isEmpty) return keep
@@ -2147,14 +2267,11 @@ object AtomicPublish {
       require(tables.contains(n), s"checks names unknown table '$n'")
       validateChecks(n, cs)
     }
-    val txn = java.util.UUID.randomUUID().toString.replace("-", "")
-    val rootPath = new Path(root)
-    inFlight.add(txn)
-    try {
+    withTxn(spark, root) { txn =>
       val meta = tables.map { case (n, df) =>
         val (ccols, z) = clusterBy.getOrElse(n, (Nil, false))
         val (bcols, nb) = bucketBy.getOrElse(n, (Nil, 0))
-        n -> TableMeta(Seq(txn), Some(df.schema.json),
+        n -> TableMeta(Seq(txn), df.schema.json,
           partitionBy.getOrElse(n, Nil), statsBy.getOrElse(n, Nil),
           bloomCols = bloomBy.getOrElse(n, Nil),
           clusterCols = ccols, clusterZOrder = z,
@@ -2163,35 +2280,11 @@ object AtomicPublish {
       }
       val guarded = tables.map { case (n, df) =>
         n -> checkGuarded(spark, n, df, meta(n)) }
-      val sealedMeta = stageAndSeal(spark, rootPath, txn, guarded, meta)
-      swapPointer(spark, root, txn,
-        renderManifest(txn, sealedMeta).getBytes(StandardCharsets.UTF_8),
-        expectParent = None)
-      markCommitted(spark, root, txn, seq = 0L, op = "CREATE")
+      commit(spark, root, txn, guarded, meta, parent = None, op = "CREATE",
+        cas = false)
       txn
-    } catch {
-      case e: Throwable =>
-        val ctx = fc(spark, rootPath)
-        try ctx.delete(new Path(rootPath, s".staging_$txn"), true)
-        catch { case _: Throwable => () }
-        try ctx.delete(new Path(rootPath, s"._current_$txn"), false)
-        catch { case _: Throwable => () }
-        throw unwrapViolation(e)
-    } finally inFlight.remove(txn)
-  }
-
-  /** Recorded schema of the parent's table, or — for manifests written
-    * before schemas were recorded — ONE `mergeSchema` union read of the
-    * parent segments (a publish-time footer sweep, never paid on the
-    * read path; the result is recorded so it is paid at most once). */
-  private def parentSchemaOf(spark: SparkSession, root: String,
-      table: String, meta: TableMeta): StructType =
-    meta.schema.getOrElse {
-      spark.read.option("mergeSchema", "true").parquet(
-        meta.owners.map(t =>
-          new Path(new Path(root, s"v_$t"),
-            meta.dirOf(t, table)).toString): _*).schema
     }
+  }
 
   /** Optimistic-concurrency DELTA publish: stage only what changed and
     * commit a version that REFERENCES the parent's data for everything
@@ -2335,11 +2428,7 @@ object AtomicPublish {
           "table's constraints via setCheck)")
       validateChecks(n, cs)
     }
-    val txn =
-      txnId.getOrElse(java.util.UUID.randomUUID().toString.replace("-", ""))
-    val rootPath = new Path(root)
-    inFlight.add(txn)
-    try {
+    withTxn(spark, root, txnId) { txn =>
       val parentMeta =
         parent.map(manifestMetaOf(spark, root, _)).getOrElse(Map.empty)
       drop.foreach(t => require(parentMeta.contains(t),
@@ -2388,7 +2477,7 @@ object AtomicPublish {
         validateStatColsLenient(n, df, scols)
         val bcols = bloomBy.getOrElse(n, pm.map(_.bloomCols).getOrElse(Nil))
         validateBloomCols(n, df, bcols)
-        val parentSchema = pm.map(m => parentSchemaOf(spark, root, n, m))
+        val parentSchema = pm.map(_.schema)
         val merged = parentSchema match {
           case Some(ps) => mergeSchemas(n, ps, df.schema)
           case None => df.schema
@@ -2467,7 +2556,7 @@ object AtomicPublish {
           validateBucketSpec(n, df, bucketSpec, pcols,
             pm.map(_.clusterCols).getOrElse(Nil))
         n -> TableMeta(pm.map(_.owners).getOrElse(Nil) :+ txn,
-          Some(merged.json), pcols, scols, backfilled, backfilledFiles,
+          merged.json, pcols, scols, backfilled, backfilledFiles,
           bcols,
           // the DECLARED layout survives appends untouched — the new
           // segment is not clustered, but the next compaction re-sorts
@@ -2504,7 +2593,7 @@ object AtomicPublish {
             .getOrElse((Nil, 0)))
         if (nBuckets > 0)
           validateBucketSpec(n, df, (bucketCols, nBuckets), pcols, ccols)
-        n -> TableMeta(Seq(txn), Some(df.schema.json), pcols, scols,
+        n -> TableMeta(Seq(txn), df.schema.json, pcols, scols,
           bloomCols = bcols, clusterCols = ccols, clusterZOrder = z,
           bucketCols = bucketCols, numBuckets = nBuckets,
           checks = checks.getOrElse(n,
@@ -2515,38 +2604,20 @@ object AtomicPublish {
       val guarded = (appendA ++ replaceAll).map { case (n, df) =>
         n -> checkGuarded(spark, n, df, meta(n))
       }
-      val sealedMeta = stageAndSeal(spark, rootPath, txn, guarded, meta)
-      val committed = swapPointer(spark, root, txn,
-        renderManifest(txn, sealedMeta).getBytes(StandardCharsets.UTF_8),
-        expectParent = Some(parent))
-      if (committed) {
-        // monotonic chain: strictly increasing under CAS serialization;
-        // a pre-seq parent restarts at 0 (ties then break by name, the
-        // pre-seq status quo)
-        markCommitted(spark, root, txn, seq = parent
-          .flatMap(commitSeqOf(spark, root, _)).map(_ + 1).getOrElse(0L),
-          op = opLabel.getOrElse(Seq(
-            if (append.nonEmpty) Some("APPEND") else None,
-            if (replace.nonEmpty) Some("REPLACE") else None,
-            if (drop.nonEmpty) Some("DROP " + drop.mkString(","))
-            else None).flatten.mkString("+")),
-          parent = parent, dataChange = dataChange,
-          cdfTables = cdf.keys.toSeq)
-        Some(txn)
-      } else if (rebase && replace.isEmpty && drop.isEmpty)
-        rebaseAppendOnto(spark, root, txn, parentMeta, sealedMeta,
-          append.map { case (n, df) => n -> df.schema },
-          opLabel, dataChange)
-      else None
-    } catch {
-      case e: Throwable =>
-        val ctx = fc(spark, rootPath)
-        try ctx.delete(new Path(rootPath, s".staging_$txn"), true)
-        catch { case _: Throwable => () }
-        try ctx.delete(new Path(rootPath, s"._current_$txn"), false)
-        catch { case _: Throwable => () }
-        throw unwrapViolation(e)
-    } finally inFlight.remove(txn)
+      commit(spark, root, txn, guarded, meta, parent,
+        op = opLabel.getOrElse(Seq(
+          if (append.nonEmpty) Some("APPEND") else None,
+          if (replace.nonEmpty) Some("REPLACE") else None,
+          if (drop.nonEmpty) Some("DROP " + drop.mkString(","))
+          else None).flatten.mkString("+")),
+        dataChange = dataChange, cdfTables = cdf.keys.toSeq,
+        onLost = sealedMeta =>
+          if (rebase && replace.isEmpty && drop.isEmpty)
+            rebaseAppendOnto(spark, root, txn, parentMeta, sealedMeta,
+              append.map { case (n, df) => n -> df.schema },
+              opLabel, dataChange)
+          else None)
+    }
   }
 
   /** RESTORE: reset `table` to its state at version `toTxn` as a NEW
@@ -2580,11 +2651,9 @@ object AtomicPublish {
         * METADATA commit, and the diff costs a two-version anti-join
         * scan plus a staged write of the changed rows; turn it on when
         * downstream streams matter more than rollback latency. */
-      stageCdf: Boolean = false): Option[String] = {
-    val rootPath = new Path(root)
-    val txn = java.util.UUID.randomUUID().toString.replace("-", "")
-    inFlight.add(txn)
-    try {
+      stageCdf: Boolean = false): Option[String] =
+    withTxn(spark, root) { txn =>
+      val rootPath = new Path(root)
       val p = parent.orElse(currentTxn(spark, root))
       val parentMeta =
         p.map(manifestMetaOf(spark, root, _)).getOrElse(Map.empty)
@@ -2644,23 +2713,19 @@ object AtomicPublish {
             .unionByName(aligned.exceptAll(cur)
               .withColumn(CdfTypeCol, lit("insert")))
           val pm = parentMeta.get(cdfT)
-          val merged = pm.map(m => mergeSchemas(cdfT,
-            parentSchemaOf(spark, root, cdfT, m), frame.schema))
+          val merged = pm.map(m => mergeSchemas(cdfT, m.schema, frame.schema))
             .getOrElse(frame.schema)
           Some((cdfT, pm.map(m => m.copy(owners = m.owners :+ txn,
-              schemaJson = Some(merged.json)))
-            .getOrElse(TableMeta(Seq(txn), Some(merged.json))), frame))
+              schemaJson = merged.json))
+            .getOrElse(TableMeta(Seq(txn), merged.json)), frame))
         }
       val newMeta = (parentMeta - table - dt) +
         (table -> restored) ++ companion.map(dt -> _) ++
         cdfEntry.map { case (n, m, _) => n -> m }
-      val sealedMeta = stageAndSeal(spark, rootPath, txn,
-        cdfEntry.map { case (n, _, f) => Map(n -> f) }
-          .getOrElse(Map.empty), newMeta)
-      val committed = swapPointer(spark, root, txn,
-        renderManifest(txn, sealedMeta).getBytes(StandardCharsets.UTF_8),
-        expectParent = Some(p))
-      if (committed) {
+      commit(spark, root, txn,
+        cdfEntry.map { case (n, _, f) => Map(n -> f) }.getOrElse(Map.empty),
+        newMeta, p, op = s"RESTORE $table",
+        cdfTables = if (cdfEntry.isDefined) Seq(table) else Nil,
         // re-verify AFTER the swap (ADVICE-r7): a cross-process vacuum
         // racing the pre-check window could have reclaimed a target
         // segment while it belonged to no surviving version's closure;
@@ -2668,24 +2733,9 @@ object AtomicPublish {
         // post-swap existence pass closes the window — on a hit the
         // pointer rolls back to the parent state before erroring,
         // leaving no committed manifest that reads half a table
-        reverifyOrRollback(spark, root, txn, p, parentMeta, needed, fs,
-          s"restore '$table' to $toTxn")
-        markCommitted(spark, root, txn, seq = p
-          .flatMap(commitSeqOf(spark, root, _)).map(_ + 1).getOrElse(0L),
-          op = s"RESTORE $table", parent = p,
-          cdfTables = if (cdfEntry.isDefined) Seq(table) else Nil)
-        Some(txn)
-      } else None
-    } catch {
-      case e: Throwable =>
-        val ctx = fc(spark, rootPath)
-        try ctx.delete(new Path(rootPath, s".staging_$txn"), true)
-        catch { case _: Throwable => () }
-        try ctx.delete(new Path(rootPath, s"._current_$txn"), false)
-        catch { case _: Throwable => () }
-        throw e
-    } finally inFlight.remove(txn)
-  }
+        afterSwap = () => reverifyOrRollback(spark, root, txn, parentMeta,
+          needed, fs, s"restore '$table' to $toTxn"))
+    }
 
   /** MINOR-compaction commit: replace the table's owner-chain SUFFIX
     * with one freshly staged segment while the `keepOwners` PREFIX is
@@ -2739,11 +2789,8 @@ object AtomicPublish {
       /** Per-row change set of this rewrite (inserted, removed) to
         * stage as one [[cdfTableOf]] owner in the same commit — the
         * feed ride-through contract of [[publishDelta]]'s `cdf`. */
-      cdf: Option[(DataFrame, DataFrame)] = None): Option[String] = {
-    val rootPath = new Path(root)
-    val txn = java.util.UUID.randomUUID().toString.replace("-", "")
-    inFlight.add(txn)
-    try {
+      cdf: Option[(DataFrame, DataFrame)] = None): Option[String] =
+    withTxn(spark, root) { txn =>
       val parentMeta = manifestMetaOf(spark, root, parent)
       val m = parentMeta.getOrElse(table,
         throw new IllegalArgumentException(
@@ -2778,43 +2825,25 @@ object AtomicPublish {
       }
       val cdfMeta = cdfFrame.map { f =>
         val pm = parentMeta.get(cdfT)
-        val merged = pm.map(p => mergeSchemas(cdfT,
-          parentSchemaOf(spark, root, cdfT, p), f.schema))
+        val merged = pm.map(p => mergeSchemas(cdfT, p.schema, f.schema))
           .getOrElse(f.schema)
         cdfT -> pm.map(p => p.copy(owners = p.owners :+ txn,
-            schemaJson = Some(merged.json)))
-          .getOrElse(TableMeta(Seq(txn), Some(merged.json)))
+            schemaJson = merged.json))
+          .getOrElse(TableMeta(Seq(txn), merged.json))
       }
       val all = parentMeta + (table -> newMeta) ++ cdfMeta
-      val sealedMeta = stageAndSeal(spark, rootPath, txn,
-        Map(table -> tail) ++ cdfFrame.map(cdfT -> _), all)
-      val committed = swapPointer(spark, root, txn,
-        renderManifest(txn, sealedMeta).getBytes(StandardCharsets.UTF_8),
-        expectParent = Some(Some(parent)))
-      val cdfTables = if (cdf.isDefined) Seq(table) else Nil
-      if (committed) {
-        markCommitted(spark, root, txn, seq =
-          commitSeqOf(spark, root, parent).map(_ + 1).getOrElse(0L),
-          op = op, parent = Some(parent), dataChange = dataChange,
-          cdfTables = cdfTables)
-        Some(txn)
-      } else
-        rebaseSubsetOnto(spark, root, table, txn, m,
-          m.owners.toSet -- keepOwners.toSet,
-          sealedMeta.getOrElse(table, newMeta), conflictPredicate,
-          op, dataChange,
-          sealedCdf = cdfMeta.map { case (n, mm) =>
-            n -> sealedMeta.getOrElse(n, mm) })
-    } catch {
-      case e: Throwable =>
-        val ctx = fc(spark, rootPath)
-        try ctx.delete(new Path(rootPath, s".staging_$txn"), true)
-        catch { case _: Throwable => () }
-        try ctx.delete(new Path(rootPath, s"._current_$txn"), false)
-        catch { case _: Throwable => () }
-        throw e
-    } finally inFlight.remove(txn)
-  }
+      commit(spark, root, txn,
+        Map(table -> tail) ++ cdfFrame.map(cdfT -> _), all, Some(parent),
+        op = op, dataChange = dataChange,
+        cdfTables = if (cdf.isDefined) Seq(table) else Nil,
+        onLost = sealedMeta =>
+          rebaseSubsetOnto(spark, root, table, txn, m,
+            m.owners.toSet -- keepOwners.toSet,
+            sealedMeta.getOrElse(table, newMeta), conflictPredicate,
+            op, dataChange,
+            sealedCdf = cdfMeta.map { case (n, mm) =>
+              n -> sealedMeta.getOrElse(n, mm) }))
+    }
 
   /** [[rebaseAppendOnto]]'s sibling for a SUBSET rewrite
     * ([[replaceOwners]]) that lost its CAS race: the staged
@@ -2840,7 +2869,7 @@ object AtomicPublish {
         * winner's companion chain, like any append. */
       sealedCdf: Option[(String, TableMeta)] = None): Option[String] = {
     var attempt = 0
-    while (attempt < 5) {
+    while (attempt < MaxCommitAttempts) {
       attempt += 1
       val q = currentTxn(spark, root) match {
         case Some(v) => v
@@ -2902,23 +2931,19 @@ object AtomicPublish {
               sm.fileStats.get(txn).map(txn -> _)))
           .getOrElse(sm)
       }
-      val bytes = renderManifest(txn, qMeta + (table -> newMeta) ++
+      val manifest = renderManifest(txn, qMeta + (table -> newMeta) ++
           cdfEntry)
-        .getBytes(StandardCharsets.UTF_8)
       // keep the version dir's _MANIFEST in lockstep with what commits
       // (see rebaseAppendOnto: time travel / vacuum read it)
-      rewriteSealedManifest(spark, root, txn, bytes)
-      if (swapPointer(spark, root, txn, bytes,
-          expectParent = Some(Some(q)))) {
+      rewriteSealedManifest(spark, root, txn, manifest)
+      if (swapAndMark(spark, root, txn, manifest, Some(q), op, dataChange,
+          cdfTables = if (sealedCdf.isDefined) Seq(table) else Nil)) {
         Concurrency.rebased.incrementAndGet()
-        markCommitted(spark, root, txn,
-          seq = commitSeqOf(spark, root, q).map(_ + 1).getOrElse(0L),
-          op = op, parent = Some(q), dataChange = dataChange,
-          cdfTables = if (sealedCdf.isDefined) Seq(table) else Nil)
         return Some(txn)
       }
     }
-    rebaseConflict(s"rebase under $root: lost 5 successive races")
+    rebaseConflict(s"rebase under $root: lost " +
+      s"$MaxCommitAttempts successive races")
   }
 
   /** COMMIT REBASE for an append-only delta that LOST its CAS race:
@@ -2958,7 +2983,7 @@ object AtomicPublish {
       appendSchemas: Map[String, StructType],
       opLabel: Option[String], dataChange: Boolean): Option[String] = {
     var attempt = 0
-    while (attempt < 5) {
+    while (attempt < MaxCommitAttempts) {
       attempt += 1
       val q = currentTxn(spark, root) match {
         case Some(v) => v
@@ -3012,8 +3037,8 @@ object AtomicPublish {
                 else if (qm.bloomCols != pm.bloomCols)
                   bad(s"table '$n': bloom columns changed concurrently")
                 else {
-                  val pSchema = parentSchemaOf(spark, root, n, pm)
-                  val qSchema = parentSchemaOf(spark, root, n, qm)
+                  val pSchema = pm.schema
+                  val qSchema = qm.schema
                   // the winner may only have WIDENED what we staged
                   // against (concurrent evolving appends compose);
                   // catalogString ignores nullability by design
@@ -3046,13 +3071,12 @@ object AtomicPublish {
                           case f if f.dataType == FloatType &&
                             merged(f.name).dataType == DoubleType => f.name
                         }.toSet
-                        val txnWiden: Set[String] = sm.schema
-                          .map(ss => ss.fields.collect {
-                            case sf if sf.dataType == FloatType &&
-                              merged.fieldNames.contains(sf.name) &&
-                              merged(sf.name).dataType == DoubleType =>
-                              sf.name
-                          }.toSet).getOrElse(Set.empty)
+                        val txnWiden: Set[String] = sm.schema.fields.collect {
+                          case sf if sf.dataType == FloatType &&
+                            merged.fieldNames.contains(sf.name) &&
+                            merged(sf.name).dataType == DoubleType =>
+                            sf.name
+                        }.toSet
                         val qStats = qm.segStats.map { case (o, s) =>
                           o -> widenFloatStats(backfill(s), qWiden) }
                         val qFiles = qm.fileStats.map { case (o, fm) =>
@@ -3060,7 +3084,7 @@ object AtomicPublish {
                             f -> widenFloatStats(backfill(s), qWiden) } }
                         Seq(n -> qm.copy(
                           owners = qm.owners :+ txn,
-                          schemaJson = Some(merged.json),
+                          schemaJson = merged.json,
                           statCols = scols,
                           bloomCols = sm.bloomCols,
                           segStats = qStats ++ sm.segStats.get(txn)
@@ -3082,25 +3106,21 @@ object AtomicPublish {
           s"rebase under $root refused: $c")
         case None => ()
       }
-      val bytes = renderManifest(txn, qMeta ++ rebuilt)
-        .getBytes(StandardCharsets.UTF_8)
+      val manifest = renderManifest(txn, qMeta ++ rebuilt)
       // the version dir's own _MANIFEST was sealed with the STAGED
       // (pre-race) manifest — rewrite it to the rebased one BEFORE the
       // swap, or time travel, restore and vacuum's reference closure
       // would read a manifest that omits the winner's owners (vacuum
       // could then reclaim segments the live version references)
-      rewriteSealedManifest(spark, root, txn, bytes)
-      if (swapPointer(spark, root, txn, bytes,
-          expectParent = Some(Some(q)))) {
+      rewriteSealedManifest(spark, root, txn, manifest)
+      if (swapAndMark(spark, root, txn, manifest, Some(q),
+          opLabel.getOrElse("APPEND"), dataChange)) {
         Concurrency.rebased.incrementAndGet()
-        markCommitted(spark, root, txn,
-          seq = commitSeqOf(spark, root, q).map(_ + 1).getOrElse(0L),
-          op = opLabel.getOrElse("APPEND"),
-          parent = Some(q), dataChange = dataChange)
         return Some(txn)
       }
     }
-    rebaseConflict(s"rebase under $root: lost 5 successive races")
+    rebaseConflict(s"rebase under $root: lost " +
+      s"$MaxCommitAttempts successive races")
   }
 
   /** ZERO-COPY table clone (Delta's SHALLOW CLONE shape): `target`
@@ -3121,14 +3141,9 @@ object AtomicPublish {
       parent: Option[String] = None): Option[String] = {
     validateNames(Seq(target))
     require(source != target, "clone: source and target are the same name")
-    val rootPath = new Path(root)
-    val txn = java.util.UUID.randomUUID().toString.replace("-", "")
-    inFlight.add(txn)
-    try {
-      val p = parent.orElse(currentTxn(spark, root)).getOrElse(
-        throw new IllegalStateException(
-          s"no published version under $root"))
-      val parentMeta = manifestMetaOf(spark, root, p)
+    withTxn(spark, root) { txn =>
+      val rootPath = new Path(root)
+      val (p, parentMeta) = pinParent(spark, root, parent)
       require(!parentMeta.contains(target) &&
           !parentMeta.contains(deleteTableOf(target)),
         s"clone: table '$target' already exists under $root")
@@ -3155,7 +3170,6 @@ object AtomicPublish {
       require(missing.isEmpty,
         s"clone: segment(s) ${missing.mkString(", ")} of '$source'@$at " +
           "were already reclaimed by vacuum")
-      val cloneNeeded = needed
       // the clone's owners resolve to the SOURCE's physical dirs —
       // recorded per owner, so later own appends default to the
       // clone's name while the shared history keeps resolving
@@ -3165,30 +3179,14 @@ object AtomicPublish {
         c.owners.map(o => o -> c.dirOf(o, srcDel)).toMap))
       val newMeta = parentMeta + (target -> cloned) ++
         clonedCompanion.map(deleteTableOf(target) -> _)
-      val sealedMeta = stageAndSeal(spark, rootPath, txn, Map.empty, newMeta)
-      val committed = swapPointer(spark, root, txn,
-        renderManifest(txn, sealedMeta).getBytes(StandardCharsets.UTF_8),
-        expectParent = Some(Some(p)))
-      if (committed) {
+      commit(spark, root, txn, Map.empty, newMeta, Some(p),
+        op = s"CLONE $source -> $target",
         // post-swap existence re-verify — same race as restore (a
         // historical clone's segments may be outside every surviving
         // closure until this commit references them)
-        reverifyOrRollback(spark, root, txn, Some(p), parentMeta,
-          cloneNeeded, fs, s"clone '$source'@$at as '$target'")
-        markCommitted(spark, root, txn, seq =
-          commitSeqOf(spark, root, p).map(_ + 1).getOrElse(0L),
-          op = s"CLONE $source -> $target", parent = Some(p))
-        Some(txn)
-      } else None
-    } catch {
-      case e: Throwable =>
-        val ctx = fc(spark, rootPath)
-        try ctx.delete(new Path(rootPath, s".staging_$txn"), true)
-        catch { case _: Throwable => () }
-        try ctx.delete(new Path(rootPath, s"._current_$txn"), false)
-        catch { case _: Throwable => () }
-        throw e
-    } finally inFlight.remove(txn)
+        afterSwap = () => reverifyOrRollback(spark, root, txn, parentMeta,
+          needed, fs, s"clone '$source'@$at as '$target'"))
+    }
   }
 
   /** Post-swap half of the restore/clone vacuum race (ADVICE-r7,
@@ -3208,12 +3206,12 @@ object AtomicPublish {
     * fresh commit of the parent state — the parent's own segments are
     * still closure-protected) and the operation fails loudly instead
     * of leaving a live manifest that reads half a table; the
-    * superseded txn is marked committed (it DID hold the pointer), so
+    * superseded txn stays marked committed (it DID hold the pointer), so
     * the seq chain stays dense and the version ages out of history
-    * through the normal grace cutoff. */
+    * through the normal grace cutoff. Runs after `txn`'s marker write
+    * ([[commit]]'s `afterSwap`), so the rollback's seq follows it. */
   private def reverifyOrRollback(spark: SparkSession, root: String,
-      txn: String, parent: Option[String],
-      parentMeta: Map[String, TableMeta], needed: Seq[Path],
+      txn: String, parentMeta: Map[String, TableMeta], needed: Seq[Path],
       fs: org.apache.hadoop.fs.FileSystem, what: String): Unit = {
     val gone1 = needed.filterNot(fs.exists)
     val gone =
@@ -3223,24 +3221,11 @@ object AtomicPublish {
         needed.filterNot(fs.exists)
       }
     if (gone.isEmpty) return
-    // txn held the pointer between swap and rollback: record it so the
-    // rollback's seq derives from it and no slot is skipped
-    val txnSeq = parent.flatMap(commitSeqOf(spark, root, _))
-      .map(_ + 1).getOrElse(0L)
-    markCommitted(spark, root, txn, seq = txnSeq, parent = parent)
-    val rollback = java.util.UUID.randomUUID().toString.replace("-", "")
     val rolledBack =
-      try {
-        val sealedMeta = stageAndSeal(spark, new Path(root), rollback,
-          Map.empty, parentMeta)
-        swapPointer(spark, root, rollback,
-          renderManifest(rollback, sealedMeta)
-            .getBytes(StandardCharsets.UTF_8),
-          expectParent = Some(Some(txn)))
+      try withTxn(spark, root) { rollback =>
+        commit(spark, root, rollback, Map.empty, parentMeta, Some(txn),
+          op = "ROLLBACK").isDefined
       } catch { case scala.util.control.NonFatal(_) => false }
-    if (rolledBack)
-      markCommitted(spark, root, rollback, seq = txnSeq + 1,
-        op = "ROLLBACK", parent = Some(txn))
     throw new IllegalStateException(
       s"$what: a concurrent vacuum reclaimed segment(s) " +
         s"${gone.mkString(", ")} between the pre-commit check and the " +
@@ -3265,14 +3250,8 @@ object AtomicPublish {
       to: String, parent: Option[String] = None): Option[String] = {
     validateNames(Seq(to))
     require(from != to, "rename: source and target are the same name")
-    val rootPath = new Path(root)
-    val txn = java.util.UUID.randomUUID().toString.replace("-", "")
-    inFlight.add(txn)
-    try {
-      val p = parent.orElse(currentTxn(spark, root)).getOrElse(
-        throw new IllegalStateException(
-          s"no published version under $root"))
-      val parentMeta = manifestMetaOf(spark, root, p)
+    withTxn(spark, root) { txn =>
+      val (p, parentMeta) = pinParent(spark, root, parent)
       val sm = parentMeta.getOrElse(from,
         throw new IllegalArgumentException(
           s"rename: table '$from' is not in version $p under $root"))
@@ -3287,25 +3266,9 @@ object AtomicPublish {
         c.owners.map(o => o -> c.dirOf(o, fromDel)).toMap))
       val newMeta = (parentMeta - from - fromDel) + (to -> renamed) ++
         renamedCompanion.map(deleteTableOf(to) -> _)
-      val sealedMeta = stageAndSeal(spark, rootPath, txn, Map.empty, newMeta)
-      val committed = swapPointer(spark, root, txn,
-        renderManifest(txn, sealedMeta).getBytes(StandardCharsets.UTF_8),
-        expectParent = Some(Some(p)))
-      if (committed) {
-        markCommitted(spark, root, txn, seq =
-          commitSeqOf(spark, root, p).map(_ + 1).getOrElse(0L),
-          op = s"RENAME $from -> $to", parent = Some(p))
-        Some(txn)
-      } else None
-    } catch {
-      case e: Throwable =>
-        val ctx = fc(spark, rootPath)
-        try ctx.delete(new Path(rootPath, s".staging_$txn"), true)
-        catch { case _: Throwable => () }
-        try ctx.delete(new Path(rootPath, s"._current_$txn"), false)
-        catch { case _: Throwable => () }
-        throw e
-    } finally inFlight.remove(txn)
+      commit(spark, root, txn, Map.empty, newMeta, Some(p),
+        op = s"RENAME $from -> $to")
+    }
   }
 
   /** PARTITION-SPEC EVOLUTION (Iceberg's spec evolution, restricted
@@ -3331,24 +3294,15 @@ object AtomicPublish {
     * on a lost CAS race. */
   def setPartitionSpec(spark: SparkSession, root: String, table: String,
       newSpec: Seq[String], parent: Option[String] = None)
-      : Option[String] = {
-    val rootPath = new Path(root)
-    val txn = java.util.UUID.randomUUID().toString.replace("-", "")
-    inFlight.add(txn)
-    try {
-      val p = parent.orElse(currentTxn(spark, root)).getOrElse(
-        throw new IllegalStateException(
-          s"no published version under $root"))
-      val parentMeta = manifestMetaOf(spark, root, p)
+      : Option[String] =
+    withTxn(spark, root) { txn =>
+      val (p, parentMeta) = pinParent(spark, root, parent)
       require(!table.endsWith("__del"),
         s"setPartitionSpec: tombstone companion '$table' owns no layout")
       val m = parentMeta.getOrElse(table,
         throw new IllegalArgumentException(
           s"table '$table' is not in version $p under $root"))
-      val schema = m.schema.getOrElse(throw new IllegalStateException(
-        s"table '$table' has no recorded schema — partition-spec " +
-          "evolution needs one"))
-      validatePartitionColsSchema(table, schema, newSpec)
+      validatePartitionColsSchema(table, m.schema, newSpec)
       require(newSpec != m.partitionCols,
         s"setPartitionSpec: table '$table' already has spec " +
           s"(${m.partitionCols.mkString(",")})")
@@ -3374,28 +3328,10 @@ object AtomicPublish {
         // entry (evolving back drops bookkeeping instead of growing it)
         ownerParts = m.owners.map(o => o -> m.partsOf(o))
           .filter(_._2 != newSpec).toMap)
-      val newMeta = parentMeta + (table -> evolved)
-      val sealedMeta = stageAndSeal(spark, rootPath, txn, Map.empty, newMeta)
-      val committed = swapPointer(spark, root, txn,
-        renderManifest(txn, sealedMeta).getBytes(StandardCharsets.UTF_8),
-        expectParent = Some(Some(p)))
-      if (committed) {
-        markCommitted(spark, root, txn, seq =
-          commitSeqOf(spark, root, p).map(_ + 1).getOrElse(0L),
-          op = s"SET PARTITION SPEC $table (" +
-            newSpec.mkString(",") + ")", parent = Some(p))
-        Some(txn)
-      } else None
-    } catch {
-      case e: Throwable =>
-        val ctx = fc(spark, rootPath)
-        try ctx.delete(new Path(rootPath, s".staging_$txn"), true)
-        catch { case _: Throwable => () }
-        try ctx.delete(new Path(rootPath, s"._current_$txn"), false)
-        catch { case _: Throwable => () }
-        throw e
-    } finally inFlight.remove(txn)
-  }
+      commit(spark, root, txn, Map.empty, parentMeta + (table -> evolved),
+        Some(p), op = s"SET PARTITION SPEC $table (" +
+          newSpec.mkString(",") + ")")
+    }
 
   /** ANALYZE — restate a table's recorded column statistics over its
     * LIVE rows, in one METADATA-ONLY commit: the whole table is read
@@ -3435,15 +3371,10 @@ object AtomicPublish {
     * race (re-pin and retry). */
   def analyzeTable(spark: SparkSession, root: String, table: String,
       parent: Option[String] = None,
-      forColumns: Seq[String] = Nil): Option[String] = {
-    val rootPath = new Path(root)
-    val txn = java.util.UUID.randomUUID().toString.replace("-", "")
-    inFlight.add(txn)
-    try {
-      val p = parent.orElse(currentTxn(spark, root)).getOrElse(
-        throw new IllegalStateException(
-          s"no published version under $root"))
-      val metas = manifestMetaOf(spark, root, p)
+      forColumns: Seq[String] = Nil): Option[String] =
+    withTxn(spark, root) { txn =>
+      val rootPath = new Path(root)
+      val (p, metas) = pinParent(spark, root, parent)
       require(!table.endsWith("__del"),
         s"analyze: '$table' is a tombstone companion — analyze the " +
           "base table")
@@ -3451,15 +3382,12 @@ object AtomicPublish {
         throw new IllegalArgumentException(
           s"table '$table' is not in version $p under $root"))
       val statCols = (m.statCols ++ forColumns).distinct
-      if (forColumns.nonEmpty) {
-        val rec = m.schema.getOrElse(
-          readSegments(spark, root, table, m, m.owners).schema)
+      if (forColumns.nonEmpty)
         validateStatCols(table,
           spark.createDataFrame(
             java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-            rec),
+            m.schema),
           forColumns)
-      }
       require(statCols.nonEmpty,
         s"analyze: table '$table' records no stat columns — declare " +
           "them here (forColumns / FOR COLUMNS) or at publish (statsBy)")
@@ -3508,29 +3436,10 @@ object AtomicPublish {
         segStats = restated.map { case (o, (s, _)) => o -> s }.toMap,
         fileStats = restated.collect {
           case (o, (_, f)) if f.nonEmpty => o -> f }.toMap)
-      val sealedMeta = stageAndSeal(spark, rootPath, txn, Map.empty,
-        metas + (table -> evolved))
-      val committed = swapPointer(spark, root, txn,
-        renderManifest(txn, sealedMeta).getBytes(StandardCharsets.UTF_8),
-        expectParent = Some(Some(p)))
-      if (committed) {
-        markCommitted(spark, root, txn, seq =
-          commitSeqOf(spark, root, p).map(_ + 1).getOrElse(0L),
-          op = s"ANALYZE $table" + (if (forColumns.isEmpty) ""
-            else s" FOR COLUMNS (${forColumns.mkString(",")})"),
-          parent = Some(p))
-        Some(txn)
-      } else None
-    } catch {
-      case e: Throwable =>
-        val ctx = fc(spark, rootPath)
-        try ctx.delete(new Path(rootPath, s".staging_$txn"), true)
-        catch { case _: Throwable => () }
-        try ctx.delete(new Path(rootPath, s"._current_$txn"), false)
-        catch { case _: Throwable => () }
-        throw e
-    } finally inFlight.remove(txn)
-  }
+      commit(spark, root, txn, Map.empty, metas + (table -> evolved),
+        Some(p), op = s"ANALYZE $table" + (if (forColumns.isEmpty) ""
+          else s" FOR COLUMNS (${forColumns.mkString(",")})"))
+    }
 
   /** PREDICATE-SCOPED OVERWRITE — Delta's `replaceWhere` / the
     * `INSERT OVERWRITE` backfill shape: atomically replace exactly the
@@ -3552,7 +3461,6 @@ object AtomicPublish {
     * debt. Returns the committed txn; retries lost CAS races. */
   def overwriteWhere(spark: SparkSession, root: String, table: String,
       replacement: DataFrame, where: String,
-      maxAttempts: Int = 5,
       /** Stage the rewrite's per-row change set ([[cdfTableOf]]) in
         * the same commit so live change-feed consumers stream THROUGH
         * the backfill instead of resyncing (r14). Default on — the
@@ -3577,9 +3485,7 @@ object AtomicPublish {
       .otherwise(lit(true))
     val guarded = replacement.filter(guard ||
       org.apache.spark.sql.graftvec.CatalystBridge.column(GuardBarrier()))
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
+    retryLostRace(s"overwriteWhere('$table') under $root") {
       val parent = currentTxn(spark, root).getOrElse(
         throw new IllegalStateException(
           s"no published version under $root"))
@@ -3592,79 +3498,65 @@ object AtomicPublish {
       // while the COW path surfaced a raw unionByName analysis error —
       // refuse malformed replacements identically on every route,
       // before any data moves
-      m.schema.foreach { rec =>
-        val recNames = rec.fieldNames.toSet
-        val replNames = replacement.columns.toSet
-        val missing = rec.fieldNames.filterNot(replNames)
-        val unknown = replacement.columns.filterNot(recNames)
-        if (missing.nonEmpty || unknown.nonEmpty)
-          throw new IllegalArgumentException(
-            s"GRAFT_OVERWRITE_SCHEMA_MISMATCH: overwriteWhere('$table') " +
-              "replacement does not match the recorded schema" +
-              (if (missing.nonEmpty)
-                s"; missing: ${missing.mkString(", ")}" else "") +
-              (if (unknown.nonEmpty)
-                s"; unknown: ${unknown.mkString(", ")}" else "") +
-              " — an overwrite re-states rows of the table's recorded " +
-              "shape (schema evolution goes through append/ALTER)")
-      }
+      val recNames = m.schema.fieldNames.toSet
+      val missing = m.schema.fieldNames.filterNot(replacement.columns.toSet)
+      val unknown = replacement.columns.filterNot(recNames)
+      if (missing.nonEmpty || unknown.nonEmpty)
+        throw new IllegalArgumentException(
+          s"GRAFT_OVERWRITE_SCHEMA_MISMATCH: overwriteWhere('$table') " +
+            "replacement does not match the recorded schema" +
+            (if (missing.nonEmpty)
+              s"; missing: ${missing.mkString(", ")}" else "") +
+            (if (unknown.nonEmpty)
+              s"; unknown: ${unknown.mkString(", ")}" else "") +
+            " — an overwrite re-states rows of the table's recorded " +
+            "shape (schema evolution goes through append/ALTER)")
       val tombstoned = metas.get(deleteTableOf(table))
         .exists(_.owners.nonEmpty)
-      val committed: Option[String] = try {
-        if (tombstoned) {
-          // COW fallback: delete-aware read, keep non-matching rows
-          val kept = readTableAt(spark, root, table, parent)
-            .filter(fnot(matches))
-          publishDelta(spark, root, append = Map.empty,
-            replace = Map(table -> kept.unionByName(guarded)),
+      if (tombstoned) {
+        // COW fallback: delete-aware read, keep non-matching rows
+        val kept = readTableAt(spark, root, table, parent)
+          .filter(fnot(matches))
+        publishDelta(spark, root, append = Map.empty,
+          replace = Map(table -> kept.unionByName(guarded)),
+          parent = Some(parent),
+          opLabel = Some(s"REPLACE WHERE $table ($where)"),
+          cdf = if (!stageCdf) Map.empty else Map(table -> ((guarded,
+            // removed = the live rows the predicate matched
+            readTableAt(spark, root, table, parent).filter(matches)))))
+      } else {
+        val admitted = pruneOwners(spark, m, where)
+        if (admitted.isEmpty)
+          // no segment can hold a matching row: pure append
+          publishDelta(spark, root, append = Map(table -> guarded),
             parent = Some(parent),
-            opLabel = Some(s"REPLACE WHERE $table ($where)"),
-            cdf = if (!stageCdf) Map.empty else Map(table -> ((guarded,
-              // removed = the live rows the predicate matched
-              readTableAt(spark, root, table, parent).filter(matches)))))
-        } else {
-          val admitted = pruneOwners(spark, m, where)
-          if (admitted.isEmpty)
-            // no segment can hold a matching row: pure append
-            publishDelta(spark, root, append = Map(table -> guarded),
-              parent = Some(parent),
-              opLabel = Some(s"REPLACE WHERE $table ($where)"))
-          else {
-            val admittedSet = admitted.toSet
-            val keep = m.owners.filterNot(admittedSet)
-            val kept = readTableSegments(spark, root, table, parent,
-              admitted).filter(fnot(matches))
-            // the subset commit stages directly (replaceOwners —
-            // publishDelta's per-table checkGuarded never runs), and
-            // the REPLACEMENT rows are new data: enforce the table's
-            // CHECK constraints on them here. `kept` rows passed the
-            // checks when they were first written.
-            replaceOwners(spark, root, table, keep,
-              kept.unionByName(checkGuarded(spark, table, guarded, m)),
-              parent, op = s"REPLACE WHERE $table ($where)",
-              // lost-CAS rebase: provably-disjoint concurrent commits
-              // (appends outside the predicate, rewrites of other
-              // owners) compose without recomputing; anything that
-              // may overlap `where` refuses and recomputes here
-              conflictPredicate = Some(where),
-              cdf = if (!stageCdf) None else Some((guarded,
-                // removed = matching rows of the admitted owners (the
-                // carried-by-reference owners provably hold none)
-                readTableSegments(spark, root, table, parent, admitted)
-                  .filter(matches))))
-          }
+            opLabel = Some(s"REPLACE WHERE $table ($where)"))
+        else {
+          val admittedSet = admitted.toSet
+          val keep = m.owners.filterNot(admittedSet)
+          val kept = readTableSegments(spark, root, table, parent,
+            admitted).filter(fnot(matches))
+          // the subset commit stages directly (replaceOwners —
+          // publishDelta's per-table checkGuarded never runs), and
+          // the REPLACEMENT rows are new data: enforce the table's
+          // CHECK constraints on them here. `kept` rows passed the
+          // checks when they were first written.
+          replaceOwners(spark, root, table, keep,
+            kept.unionByName(checkGuarded(spark, table, guarded, m)),
+            parent, op = s"REPLACE WHERE $table ($where)",
+            // lost-CAS rebase: provably-disjoint concurrent commits
+            // (appends outside the predicate, rewrites of other
+            // owners) compose without recomputing; anything that
+            // may overlap `where` refuses and recomputes here
+            conflictPredicate = Some(where),
+            cdf = if (!stageCdf) None else Some((guarded,
+              // removed = matching rows of the admitted owners (the
+              // carried-by-reference owners provably hold none)
+              readTableSegments(spark, root, table, parent, admitted)
+                .filter(matches))))
         }
-      } catch { case scala.util.control.NonFatal(e) =>
-        throw unwrapViolation(e)
-      }
-      committed match {
-        case Some(txn) => return txn
-        case None => () // a commit landed meanwhile; re-pin, retry
       }
     }
-    throw new IllegalStateException(
-      s"overwriteWhere('$table') lost the commit race $maxAttempts " +
-        s"times under $root")
   }
 
   /** Evolve a LIVE table's CHECK constraints: `predicate = Some(sql)`
@@ -3677,15 +3569,9 @@ object AtomicPublish {
     * Returns the new txn, or None on a lost race. */
   def setCheck(spark: SparkSession, root: String, table: String,
       name: String, predicate: Option[String],
-      parent: Option[String] = None): Option[String] = {
-    val rootPath = new Path(root)
-    val txn = java.util.UUID.randomUUID().toString.replace("-", "")
-    inFlight.add(txn)
-    try {
-      val p = parent.orElse(currentTxn(spark, root)).getOrElse(
-        throw new IllegalStateException(
-          s"no published version under $root"))
-      val parentMeta = manifestMetaOf(spark, root, p)
+      parent: Option[String] = None): Option[String] =
+    withTxn(spark, root) { txn =>
+      val (p, parentMeta) = pinParent(spark, root, parent)
       val meta = parentMeta.getOrElse(table,
         throw new IllegalArgumentException(
           s"table '$table' is not in version $p under $root"))
@@ -3704,28 +3590,10 @@ object AtomicPublish {
               s"(has: ${meta.checks.keys.toSeq.sorted.mkString(", ")})")
           meta.copy(checks = meta.checks - name)
       }
-      val all = parentMeta + (table -> newMeta)
-      val sealedMeta = stageAndSeal(spark, rootPath, txn, Map.empty, all)
-      val committed = swapPointer(spark, root, txn,
-        renderManifest(txn, sealedMeta).getBytes(StandardCharsets.UTF_8),
-        expectParent = Some(Some(p)))
-      if (committed) {
-        markCommitted(spark, root, txn, seq =
-          commitSeqOf(spark, root, p).map(_ + 1).getOrElse(0L),
-          op = (if (predicate.isDefined) "ADD CHECK " else "DROP CHECK ") +
-            s"$table.$name", parent = Some(p))
-        Some(txn)
-      } else None
-    } catch {
-      case e: Throwable =>
-        val ctx = fc(spark, rootPath)
-        try ctx.delete(new Path(rootPath, s".staging_$txn"), true)
-        catch { case _: Throwable => () }
-        try ctx.delete(new Path(rootPath, s"._current_$txn"), false)
-        catch { case _: Throwable => () }
-        throw e
-    } finally inFlight.remove(txn)
-  }
+      commit(spark, root, txn, Map.empty, parentMeta + (table -> newMeta),
+        Some(p), op = (if (predicate.isDefined) "ADD CHECK "
+          else "DROP CHECK ") + s"$table.$name")
+    }
 
   /** CDF RETENTION — trim a table's change-data companion
     * ([[cdfTableOf]]) to its newest `keepLast` staged change sets, in
@@ -3747,49 +3615,26 @@ object AtomicPublish {
   def trimCdf(spark: SparkSession, root: String, table: String,
       keepLast: Int, parent: Option[String] = None): Option[String] = {
     require(keepLast >= 0, s"keepLast must be >= 0, got $keepLast")
-    val rootPath = new Path(root)
-    val txn = java.util.UUID.randomUUID().toString.replace("-", "")
-    inFlight.add(txn)
-    try {
-      val p = parent.orElse(currentTxn(spark, root)).getOrElse(
-        throw new IllegalStateException(
-          s"no published version under $root"))
-      val parentMeta = manifestMetaOf(spark, root, p)
+    withTxn(spark, root) { txn =>
+      val (p, parentMeta) = pinParent(spark, root, parent)
       require(parentMeta.contains(table),
         s"table '$table' is not in version $p under $root")
       val cdfT = cdfTableOf(table)
-      val m = parentMeta.getOrElse(cdfT, return None)
-      if (m.owners.size <= keepLast) return None
-      val dropped = m.owners.dropRight(keepLast).toSet
-      val newMeta = m.copy(
-        owners = m.owners.takeRight(keepLast),
-        segStats = m.segStats.filterNot(kv => dropped(kv._1)),
-        fileStats = m.fileStats.filterNot(kv => dropped(kv._1)),
-        ownerDirs = m.ownerDirs.filterNot(kv => dropped(kv._1)),
-        ownerParts = m.ownerParts.filterNot(kv => dropped(kv._1)))
-      val all = parentMeta + (cdfT -> newMeta)
-      val sealedMeta = stageAndSeal(spark, rootPath, txn, Map.empty, all)
-      val committed = swapPointer(spark, root, txn,
-        renderManifest(txn, sealedMeta).getBytes(StandardCharsets.UTF_8),
-        expectParent = Some(Some(p)))
-      if (committed) {
-        markCommitted(spark, root, txn, seq =
-          commitSeqOf(spark, root, p).map(_ + 1).getOrElse(0L),
-          op = s"TRIM CDF $table (keep $keepLast)", parent = Some(p),
+      parentMeta.get(cdfT).filter(_.owners.size > keepLast).flatMap { m =>
+        val dropped = m.owners.dropRight(keepLast).toSet
+        val newMeta = m.copy(
+          owners = m.owners.takeRight(keepLast),
+          segStats = m.segStats.filterNot(kv => dropped(kv._1)),
+          fileStats = m.fileStats.filterNot(kv => dropped(kv._1)),
+          ownerDirs = m.ownerDirs.filterNot(kv => dropped(kv._1)),
+          ownerParts = m.ownerParts.filterNot(kv => dropped(kv._1)))
+        commit(spark, root, txn, Map.empty, parentMeta + (cdfT -> newMeta),
+          Some(p), op = s"TRIM CDF $table (keep $keepLast)",
           // dropping cdf owners changes no table CONTENT: change-feed
           // consumers ride through it like any reorganization
           dataChange = false)
-        Some(txn)
-      } else None
-    } catch {
-      case e: Throwable =>
-        val ctx = fc(spark, rootPath)
-        try ctx.delete(new Path(rootPath, s".staging_$txn"), true)
-        catch { case _: Throwable => () }
-        try ctx.delete(new Path(rootPath, s"._current_$txn"), false)
-        catch { case _: Throwable => () }
-        throw e
-    } finally inFlight.remove(txn)
+      }
+    }
   }
 
   /** The live (txn, table→metadata) in ONE `_CURRENT` read, or None
@@ -3829,33 +3674,18 @@ object AtomicPublish {
   def currentTxn(spark: SparkSession, root: String): Option[String] =
     currentManifestMeta(spark, root).map(_._1)
 
-  private def segmentPaths(root: String, table: String,
-      meta: TableMeta, owners: Seq[String]): Seq[String] =
-    owners.map(t =>
-      new Path(new Path(root, s"v_$t"), meta.dirOf(t, table)).toString)
-
   /** Read of a table's owner segments under its recorded merged schema:
     * segments written before a column existed serve nulls for it, and no
-    * per-file footer sweep happens at read time. With a recorded schema
-    * this mounts ONE [[GraftFileIndex]]-backed relation (not a union):
-    * any filter Catalyst later pushes down reaches
+    * per-file footer sweep happens at read time. This mounts ONE
+    * [[GraftFileIndex]]-backed relation per partition-layout class (not
+    * a per-segment union): any filter Catalyst later pushes down reaches
     * [[GraftFileIndex.listFiles]], where partition pruning, segment/file
     * zone maps and bloom sidecars all fire — `readTable(...).filter`
-    * and the SQL face skip exactly like [[readTableWhere]]. Pre-schema
-    * manifests fall back to the legacy multi-path parquet union. */
+    * and the SQL face skip exactly like [[readTableWhere]]. */
   private def readSegments(spark: SparkSession, root: String, table: String,
       meta: TableMeta, owners: Seq[String]): DataFrame =
-    meta.schema match {
-      case Some(_) =>
-        GraftFileIndex.relationFor(spark, root, table, meta,
-          owners.map(_ -> None))
-      case None =>
-        val paths = segmentPaths(root, table, meta, owners)
-        if (meta.partitionCols.isEmpty || paths.size == 1)
-          spark.read.parquet(paths: _*)
-        else // partition discovery rejects multiple roots
-          paths.map(p => spark.read.parquet(p)).reduce(_.unionByName(_))
-    }
+    GraftFileIndex.relationFor(spark, root, table, meta,
+      owners.map(_ -> None))
 
   // --- row-level deletes (merge-on-read tombstones) ----------------------------
 
@@ -3956,8 +3786,7 @@ object AtomicPublish {
       .slice(fromF, toF)
     if (files.isEmpty)
       readSegments(spark, root, cdfT, m, Seq(rewriteTxn)).limit(0)
-    else m.schema.map(s => spark.read.schema(s))
-      .getOrElse(spark.read).parquet(files: _*)
+    else spark.read.schema(m.schema).parquet(files: _*)
   }
 
   /** Tombstone scope column: a tombstone with `_asof = n` applies to
@@ -4024,8 +3853,9 @@ object AtomicPublish {
         // file pruning all keep firing on delete-aware reads), whereas
         // input_file_name() is non-deterministic to Catalyst and pins
         // every filter above the Project — all skipping layers silently
-        // dead. Fallback for plans that expose no metadata column
-        // (pre-schema union reads): the old non-deterministic source.
+        // dead. Fallback for plans that expose no metadata column (the
+        // union of per-layout-class relations): the non-deterministic
+        // source.
         val based = scala.util.Try(
           base.withColumn("__seg_pos", element_at(posOf,
             regexp_extract(col("_metadata.file_path"), ownerRe, 1))))
@@ -4060,24 +3890,23 @@ object AtomicPublish {
     require(!keys.columns.contains(TombAsofCol),
       s"'$TombAsofCol' is the tombstone scope column — it cannot be " +
         s"part of '$t''s delete key")
+    val s = meta.schema
     keys.schema.fields.foreach { kf =>
-      meta.schema.foreach { s =>
-        require(s.fieldNames.contains(kf.name),
-          s"delete key '${kf.name}' is not a column of table '$t' " +
-            s"(${s.fieldNames.mkString(", ")})")
-        require(s(kf.name).dataType.catalogString ==
-          kf.dataType.catalogString,
-          s"delete key '${kf.name}' of table '$t' has type " +
-            s"${s(kf.name).dataType.simpleString} but the tombstone " +
-            s"frame carries ${kf.dataType.simpleString}")
-      }
+      require(s.fieldNames.contains(kf.name),
+        s"delete key '${kf.name}' is not a column of table '$t' " +
+          s"(${s.fieldNames.mkString(", ")})")
+      require(s(kf.name).dataType.catalogString ==
+        kf.dataType.catalogString,
+        s"delete key '${kf.name}' of table '$t' has type " +
+          s"${s(kf.name).dataType.simpleString} but the tombstone " +
+          s"frame carries ${kf.dataType.simpleString}")
     }
     // a table has ONE delete key (single or COMPOSITE) for life: the
     // read-side anti-join resolves the key columns from the tombstone
     // table's schema, so a delete under a different column set would
     // schema-merge into rows the reader can never match — a silent
     // no-op delete
-    metas.get(deleteTableOf(t)).flatMap(_.schema).foreach { ds =>
+    metas.get(deleteTableOf(t)).map(_.schema).foreach { ds =>
       val existing = ds.fieldNames.filterNot(_ == TombAsofCol)
       require(existing.isEmpty ||
         existing.toSet == keys.columns.toSet,
@@ -4101,11 +3930,9 @@ object AtomicPublish {
     * recorded-schema validation every append gets. Returns the commit
     * txn. */
   def deleteRows(spark: SparkSession, root: String,
-      deletes: Map[String, DataFrame], maxAttempts: Int = 5): String = {
+      deletes: Map[String, DataFrame]): String = {
     require(deletes.nonEmpty, "deleteRows needs at least one table")
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
+    retryLostRace(s"deleteRows under $root") {
       val pinned = currentTxn(spark, root).getOrElse(
         throw new IllegalStateException(s"no published version under $root"))
       // rebase on a lost race: the tombstone rows are caller keys with
@@ -4116,13 +3943,8 @@ object AtomicPublish {
       // would re-aim). Verified-delete callers use deleteRowsAt
       // directly, where rebase stays off — their exactness guard needs
       // the conflict signal.
-      deleteRowsAt(spark, root, pinned, deletes, rebase = true) match {
-        case Some(txn) => return txn
-        case None => () // lost the race: re-pin, retry
-      }
+      deleteRowsAt(spark, root, pinned, deletes, rebase = true)
     }
-    throw new IllegalStateException(
-      s"deleteRows lost the commit race $maxAttempts times under $root")
   }
 
   /** One [[deleteRows]] attempt against an explicitly pinned `parent`:
@@ -4167,21 +3989,12 @@ object AtomicPublish {
     * Returns the commit txn. */
   def upsertMany(spark: SparkSession, root: String,
       upserts: Map[String, Upsert],
-      extraAppend: Map[String, DataFrame] = Map.empty,
-      maxAttempts: Int = 5): String = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
+      extraAppend: Map[String, DataFrame] = Map.empty): String =
+    retryLostRace(s"upsertMany under $root") {
       val pinned = currentTxn(spark, root).getOrElse(
         throw new IllegalStateException(s"no published version under $root"))
-      upsertManyAt(spark, root, pinned, upserts, extraAppend) match {
-        case Some(txn) => return txn
-        case None => ()
-      }
+      upsertManyAt(spark, root, pinned, upserts, extraAppend)
     }
-    throw new IllegalStateException(
-      s"upsertMany lost the commit race $maxAttempts times under $root")
-  }
 
   /** One upsert attempt against an explicitly pinned `parent`: None on
     * CAS loss — for callers whose slices derive from reads at the same
@@ -4221,10 +4034,9 @@ object AtomicPublish {
     * Keys should be unique within `rows` (duplicates all survive, like
     * any append). */
   def upsertRows(spark: SparkSession, root: String, table: String,
-      rows: DataFrame, keyCol: String, maxAttempts: Int = 5): String =
+      rows: DataFrame, keyCol: String): String =
     upsertMany(spark, root,
-      Map(table -> Upsert(rows, rows.select(keyCol).distinct())),
-      maxAttempts = maxAttempts)
+      Map(table -> Upsert(rows, rows.select(keyCol).distinct())))
 
   /** Read a table from the CURRENT version — the only resolution path
     * readers use, so partially-published data is unreachable. A reader
@@ -4437,8 +4249,7 @@ object AtomicPublish {
       pred: org.apache.spark.sql.catalyst.expressions.Expression)
       : Seq[String] = {
     if (meta.statCols.isEmpty || meta.segStats.isEmpty) return candidates
-    val schema = meta.schema.getOrElse(return candidates)
-    pruneEntries(spark, schema, meta.statCols,
+    pruneEntries(spark, meta.schema, meta.statCols,
       candidates.map(o => o -> meta.segStats.get(o)), pred)
   }
 
@@ -4451,7 +4262,6 @@ object AtomicPublish {
       owners: Seq[String],
       pred: org.apache.spark.sql.catalyst.expressions.Expression)
       : Map[String, Seq[String]] = {
-    val schema = meta.schema.getOrElse(return Map.empty)
     val mapped = owners.filter(o => meta.fileStats.get(o).exists(_.nonEmpty))
     if (mapped.isEmpty) return Map.empty
     val entries = mapped.flatMap { o =>
@@ -4459,7 +4269,7 @@ object AtomicPublish {
         (o + FileKeySep + f) -> Option(s)
       }
     }
-    val kept = pruneEntries(spark, schema, meta.statCols, entries, pred)
+    val kept = pruneEntries(spark, meta.schema, meta.statCols, entries, pred)
       .map { k =>
         val i = k.indexOf(FileKeySep)
         (k.substring(0, i), k.substring(i + 1))
@@ -4551,34 +4361,27 @@ object AtomicPublish {
     val pred = spark.sessionState.sqlParser.parseExpression(where)
     val keep = pruneOwnersBloomExpr(spark, root, table, meta,
       pruneOwnersExpr(spark, meta, meta.owners, pred), pred)
-    meta.schema match {
-      case Some(_) =>
-        // second granularity: within surviving owners that carry
-        // COMPLETE per-file maps, drop every file the predicate provably
-        // rejects; owners without file maps read whole, conservatively.
-        // Survivors mount as ONE eagerly RESTRICTED relation: the file
-        // set is decided here (so `inputFiles` reflects it — the
-        // spec-pinned contract), and [[GraftFileIndex.listFiles]]
-        // re-applies the same conservative layers to whatever Catalyst
-        // pushes down at planning — one pruning engine, two entry
-        // points.
-        val fileKeep = pruneFilesExpr(spark, meta, keep, pred)
-        val selection = keep.flatMap { o =>
-          fileKeep.get(o) match {
-            case None => Some(o -> None) // no file map: whole segment
-            case Some(fs) if fs.isEmpty => None // provably empty owner
-            case Some(fs) if fs.size == meta.fileStats(o).size =>
-              Some(o -> None) // nothing pruned: whole-dir read
-            case Some(fs) => Some(o -> Some(fs))
-          }
-        }
-        GraftFileIndex.relationFor(spark, root, table, meta, selection)
-          .where(where)
-      case None =>
-        // pre-schema manifest: zone maps/blooms require the recorded
-        // schema, so nothing can have pruned (keep == owners)
-        readSegments(spark, root, table, meta, keep).where(where)
+    // second granularity: within surviving owners that carry
+    // COMPLETE per-file maps, drop every file the predicate provably
+    // rejects; owners without file maps read whole, conservatively.
+    // Survivors mount as ONE eagerly RESTRICTED relation: the file
+    // set is decided here (so `inputFiles` reflects it — the
+    // spec-pinned contract), and [[GraftFileIndex.listFiles]]
+    // re-applies the same conservative layers to whatever Catalyst
+    // pushes down at planning — one pruning engine, two entry
+    // points.
+    val fileKeep = pruneFilesExpr(spark, meta, keep, pred)
+    val selection = keep.flatMap { o =>
+      fileKeep.get(o) match {
+        case None => Some(o -> None) // no file map: whole segment
+        case Some(fs) if fs.isEmpty => None // provably empty owner
+        case Some(fs) if fs.size == meta.fileStats(o).size =>
+          Some(o -> None) // nothing pruned: whole-dir read
+        case Some(fs) => Some(o -> Some(fs))
+      }
     }
+    GraftFileIndex.relationFor(spark, root, table, meta, selection)
+      .where(where)
   }
 
   /** CHANGE FEED between two versions: the owner segments `table`
@@ -4601,8 +4404,7 @@ object AtomicPublish {
         s"table '$table' is not in version $at under $root"))
     def emptyLike = spark.createDataFrame(
       java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      after.schema.getOrElse(
-        readSegments(spark, root, table, after, after.owners).schema))
+      after.schema)
     // append-only evolution keeps every prior owner; a missing one
     // means the table was replaced in the interval
     if (before.forall(after.owners.contains)) {
@@ -4627,8 +4429,7 @@ object AtomicPublish {
             val frames =
               parts.map(readAppendedPart(spark, root, table, _))
             if (frames.isEmpty) emptyLike
-            else alignFrames(frames, after.schema.getOrElse(
-              frames.last.schema))
+            else alignFrames(frames, after.schema)
           }
       }
     }
@@ -4778,8 +4579,7 @@ object AtomicPublish {
         s"table '$table' is not in version $toTxn under $root"))
     def emptyLike = spark.createDataFrame(
       java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      mTo.schema.getOrElse(
-        readSegments(spark, root, table, mTo, mTo.owners).schema))
+      mTo.schema)
     if (fromTxn == toTxn)
       Some(
         if (fromN >= toN) emptyLike
@@ -4803,8 +4603,7 @@ object AtomicPublish {
           val frames =
             parts.map(readAppendedPart(spark, root, table, _))
           if (frames.isEmpty) emptyLike
-          else alignFrames(frames, mTo.schema.getOrElse(
-            frames.last.schema))
+          else alignFrames(frames, mTo.schema)
         }
       }
     }
@@ -4929,8 +4728,7 @@ object AtomicPublish {
   def deleteKeyColsAt(spark: SparkSession, root: String, table: String,
       at: String): Option[Seq[String]] =
     manifestMetaOf(spark, root, at).get(deleteTableOf(table))
-      .flatMap(_.schema)
-      .map(_.fieldNames.toSeq.filterNot(_ == TombAsofCol))
+      .map(_.schema.fieldNames.toSeq.filterNot(_ == TombAsofCol))
       .filter(_.nonEmpty)
 
   def changesWithDeletes(spark: SparkSession, root: String, table: String,
@@ -4942,11 +4740,9 @@ object AtomicPublish {
     val mTo = manifestMetaOf(spark, root, at)
     val srcT = mTo.getOrElse(table, throw new IllegalArgumentException(
       s"table '$table' is not in version $at under $root"))
-    def wantSchema: StructType = srcT.schema.getOrElse(
-      readSegments(spark, root, table, srcT, srcT.owners).schema)
     def emptyLike = spark.createDataFrame(
       java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      wantSchema)
+      srcT.schema)
     cdcDiffPrefix(spark, root, table, mFrom, mTo).orElse {
       // the interval REPLACED the table (or its tombstone chain): ride
       // through if every chain-breaking commit is a content-preserving
@@ -5015,7 +4811,7 @@ object AtomicPublish {
           val frames = parts.flatten.flatten
           if (frames.isEmpty) Some((emptyLike, emptyLike))
           else {
-            val want = wantSchema
+            val want = srcT.schema
             val insAll = alignFrames(frames.map(_._1), want)
             val delAll = alignFrames(frames.map(_._2), want)
             if (frames.size == 1) Some((insAll, delAll))
@@ -5069,8 +4865,7 @@ object AtomicPublish {
     if (!tombT.startsWith(tombF)) return None
     def emptyLike = spark.createDataFrame(
       java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      srcT.schema.getOrElse(
-        readSegments(spark, root, table, srcT, srcT.owners).schema))
+      srcT.schema)
     val newOwners = srcT.owners.drop(srcF.owners.size)
     val inserted =
       if (newOwners.isEmpty) emptyLike
@@ -5081,10 +4876,7 @@ object AtomicPublish {
       if (newTombs.isEmpty) emptyLike
       else {
         val dm = mTo(dt)
-        val keyCols = dm.schema
-          .map(_.fieldNames.toSeq.filterNot(_ == TombAsofCol))
-          .getOrElse(readSegments(spark, root, dt, dm, newTombs)
-            .columns.toSeq.filterNot(_ == TombAsofCol))
+        val keyCols = dm.schema.fieldNames.toSeq.filterNot(_ == TombAsofCol)
         val keyRows = readSegments(spark, root, dt, dm, newTombs)
           .select(keyCols.map(col): _*).distinct()
           .limit(MaxInlineDeleteKeys + 1).collect()

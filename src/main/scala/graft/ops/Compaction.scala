@@ -137,43 +137,38 @@ object Compaction {
       targetBytes: Long = 128L * 1024 * 1024,
       minSegs: Int = 2): Option[(String, Int)] = {
     import org.apache.spark.sql.functions.col
-    var attempt = 0
-    while (attempt < 5) {
-      attempt += 1
+    AtomicPublish.retryLostRace(s"compactTail under $root") {
       val parent = AtomicPublish.currentTxn(spark, root).getOrElse(
         throw new IllegalStateException(s"no published version under $root"))
       val metas = AtomicPublish.manifestMetaOf(spark, root, parent)
       val m = metas.getOrElse(table, throw new IllegalArgumentException(
         s"table '$table' is not in version $parent under $root"))
-      if (metas.get(AtomicPublish.deleteTableOf(table))
-          .exists(_.owners.nonEmpty)) return None
-      val tail = m.owners.reverse
+      val tombstoned = metas.get(AtomicPublish.deleteTableOf(table))
+        .exists(_.owners.nonEmpty)
+      val tail = if (tombstoned) Nil else m.owners.reverse
         .takeWhile(o => segmentBytes(spark, root, table, m, o) < targetBytes)
         .reverse
-      if (tail.size < minSegs) return None
-      val keep = m.owners.dropRight(tail.size)
-      val tailBytes = tail.map(segmentBytes(spark, root, table, m, _)).sum
-      val parts = partitionsFor(tailBytes, targetBytes)
-      val union = AtomicPublish.readTableSegments(spark, root, table,
-        parent, tail)
-      val shaped =
-        if (m.numBuckets > 0) union // the publish path re-buckets
-        else if (m.clusterCols.nonEmpty && !m.clusterZOrder) {
-          val key = PartSpec.partitionExprs(m.partitionCols,
-            union.schema) ++ m.clusterCols.map(col)
-          union.repartitionByRange(parts, key: _*)
-            .sortWithinPartitions(key: _*)
-        } else if (m.partitionCols.isEmpty) union.repartition(parts)
-        else union.repartition(parts,
-          PartSpec.partitionExprs(m.partitionCols, union.schema): _*)
-      AtomicPublish.replaceTail(spark, root, table, keep, shaped,
-        parent) match {
-        case Some(txn) => return Some((txn, parts))
-        case None => () // a commit landed meanwhile; re-pin, retry
+      if (tombstoned || tail.size < minSegs) Some(None) // nothing to do
+      else {
+        val keep = m.owners.dropRight(tail.size)
+        val tailBytes = tail.map(segmentBytes(spark, root, table, m, _)).sum
+        val parts = partitionsFor(tailBytes, targetBytes)
+        val union = AtomicPublish.readTableSegments(spark, root, table,
+          parent, tail)
+        val shaped =
+          if (m.numBuckets > 0) union // the publish path re-buckets
+          else if (m.clusterCols.nonEmpty && !m.clusterZOrder) {
+            val key = PartSpec.partitionExprs(m.partitionCols,
+              union.schema) ++ m.clusterCols.map(col)
+            union.repartitionByRange(parts, key: _*)
+              .sortWithinPartitions(key: _*)
+          } else if (m.partitionCols.isEmpty) union.repartition(parts)
+          else union.repartition(parts,
+            PartSpec.partitionExprs(m.partitionCols, union.schema): _*)
+        AtomicPublish.replaceTail(spark, root, table, keep, shaped, parent)
+          .map(txn => Some((txn, parts)))
       }
     }
-    throw new IllegalStateException(
-      s"compactTail lost the commit race 5 times under $root")
   }
 
   /** PREDICATE-SCOPED compaction — `OPTIMIZE WHERE` for the store
@@ -199,45 +194,41 @@ object Compaction {
       where: String, targetBytes: Long = 128L * 1024 * 1024)
       : Option[(String, Int)] = {
     import org.apache.spark.sql.functions.col
-    var attempt = 0
-    while (attempt < 5) {
-      attempt += 1
+    AtomicPublish.retryLostRace(s"compactWhere under $root") {
       val parent = AtomicPublish.currentTxn(spark, root).getOrElse(
         throw new IllegalStateException(s"no published version under $root"))
       val metas = AtomicPublish.manifestMetaOf(spark, root, parent)
       val m = metas.getOrElse(table, throw new IllegalArgumentException(
         s"table '$table' is not in version $parent under $root"))
-      if (metas.get(AtomicPublish.deleteTableOf(table))
-          .exists(_.owners.nonEmpty)) return None
-      val admitted = AtomicPublish.pruneOwners(spark, m, where)
-      if (admitted.size < 2) return None
-      val admittedSet = admitted.toSet
-      val keep = m.owners.filterNot(admittedSet)
-      val bytes = admitted
-        .map(segmentBytes(spark, root, table, m, _)).sum
-      val parts = partitionsFor(bytes, targetBytes)
-      val union = AtomicPublish.readTableSegments(spark, root, table,
-        parent, admitted)
-      val shaped =
-        if (m.numBuckets > 0) union // the publish path re-buckets
-        else if (m.clusterCols.nonEmpty && !m.clusterZOrder) {
-          val key = PartSpec.partitionExprs(m.partitionCols,
-            union.schema) ++ m.clusterCols.map(col)
-          union.repartitionByRange(parts, key: _*)
-            .sortWithinPartitions(key: _*)
-        } else if (m.partitionCols.isEmpty) union.repartition(parts)
-        else union.repartition(parts,
-          PartSpec.partitionExprs(m.partitionCols, union.schema): _*)
-      AtomicPublish.replaceOwners(spark, root, table, keep, shaped,
-        parent, op = s"COMPACT WHERE $table ($where)",
-        // same logical rows, new layout — CDC consumers ride through
-        dataChange = false) match {
-        case Some(txn) => return Some((txn, parts))
-        case None => () // a commit landed meanwhile; re-pin, retry
+      val tombstoned = metas.get(AtomicPublish.deleteTableOf(table))
+        .exists(_.owners.nonEmpty)
+      val admitted =
+        if (tombstoned) Nil else AtomicPublish.pruneOwners(spark, m, where)
+      if (admitted.size < 2) Some(None) // nothing to consolidate
+      else {
+        val admittedSet = admitted.toSet
+        val keep = m.owners.filterNot(admittedSet)
+        val bytes = admitted
+          .map(segmentBytes(spark, root, table, m, _)).sum
+        val parts = partitionsFor(bytes, targetBytes)
+        val union = AtomicPublish.readTableSegments(spark, root, table,
+          parent, admitted)
+        val shaped =
+          if (m.numBuckets > 0) union // the publish path re-buckets
+          else if (m.clusterCols.nonEmpty && !m.clusterZOrder) {
+            val key = PartSpec.partitionExprs(m.partitionCols,
+              union.schema) ++ m.clusterCols.map(col)
+            union.repartitionByRange(parts, key: _*)
+              .sortWithinPartitions(key: _*)
+          } else if (m.partitionCols.isEmpty) union.repartition(parts)
+          else union.repartition(parts,
+            PartSpec.partitionExprs(m.partitionCols, union.schema): _*)
+        AtomicPublish.replaceOwners(spark, root, table, keep, shaped,
+          parent, op = s"COMPACT WHERE $table ($where)",
+          // same logical rows, new layout — CDC consumers ride through
+          dataChange = false).map(txn => Some((txn, parts)))
       }
     }
-    throw new IllegalStateException(
-      s"compactWhere lost the commit race 5 times under $root")
   }
 
   /** Rewrite `dir` into ~`targetBytes` files. Returns before/after
@@ -343,9 +334,7 @@ object Compaction {
       clusterBy: Seq[String] = Nil,
       zOrder: Boolean = false): (String, Int) = {
     import org.apache.spark.sql.functions.col
-    var attempt = 0
-    while (attempt < 5) {
-      attempt += 1
+    AtomicPublish.retryLostRace(s"compactStore under $root") {
       val parent = AtomicPublish.currentTxn(spark, root).getOrElse(
         throw new IllegalStateException(s"no published version under $root"))
       val meta = AtomicPublish.manifestMetaOf(spark, root, parent)
@@ -381,11 +370,11 @@ object Compaction {
           require(meta.partitionCols.isEmpty,
             "zOrder clustering applies to flat tables (partition dirs " +
               "already split the layout; cluster within them instead)")
-          meta.schema.foreach(s => ccols.foreach { c =>
-            require(s.fieldNames.contains(c) && s(c).dataType
-              .isInstanceOf[org.apache.spark.sql.types.NumericType],
+          ccols.foreach { c =>
+            require(meta.schema.fieldNames.contains(c) && meta.schema(c)
+              .dataType.isInstanceOf[org.apache.spark.sql.types.NumericType],
               s"zOrder column '$c' must be a numeric column of '$table'")
-          })
+          }
           // one quantile pass for ALL columns' rank boundaries
           val bs = union.stat.approxQuantile(ccols.toArray,
             ZOrder.probs, 0.001)
@@ -423,13 +412,8 @@ object Compaction {
         // the rewrite carries exactly the live rows (tombstone debt is
         // APPLIED, not a content change: killed rows were already dead
         // to every reader) — CDC consumers ride through
-        dataChange = false) match {
-        case Some(txn) => return (txn, parts)
-        case None => () // an appender committed meanwhile; re-pin, retry
-      }
+        dataChange = false).map(_ -> parts)
     }
-    throw new IllegalStateException(
-      s"compactStore lost the commit race 5 times under $root")
   }
 
   private def compactLocked(spark: SparkSession, dir: String,

@@ -354,35 +354,28 @@ final class GraftCatalog extends TableCatalog
       bucketSpec.map(s => Map(t -> s)).getOrElse(Map.empty)
     val checkLay: Map[String, Map[String, String]] =
       if (allChecks.isEmpty) Map.empty else Map(t -> allChecks)
-    var attempt = 0
-    while (attempt < GraftSource.MaxCommitAttempts) {
-      attempt += 1
+    AtomicPublish.retryLostRace(s"CREATE TABLE '${ident.name()}'") {
       AtomicPublish.currentTxn(spark, root) match {
         case None =>
-          AtomicPublish.publish(spark, root, Map(t -> empty),
+          Some(AtomicPublish.publish(spark, root, Map(t -> empty),
             partitionBy = lay(partCols), statsBy = lay(statsCols),
             bloomBy = lay(bloomCols), clusterBy = clusterLay,
-            bucketBy = bucketLay, checks = checkLay)
-          return loadTable(ident)
+            bucketBy = bucketLay, checks = checkLay))
         case Some(parent) =>
           if (AtomicPublish.manifestMetaOf(spark, root, parent)
               .contains(t))
             throw new org.apache.spark.sql.catalyst.analysis
               .TableAlreadyExistsException(ident)
           // replace-of-absent = create; carries the declared layout
-          val committed = AtomicPublish.publishDelta(spark, root,
+          AtomicPublish.publishDelta(spark, root,
             append = Map.empty, replace = Map(t -> empty),
             parent = Some(parent), partitionBy = lay(partCols),
             statsBy = lay(statsCols), bloomBy = lay(bloomCols),
             clusterBy = clusterLay, bucketBy = bucketLay,
             checks = checkLay)
-          if (committed.isDefined) return loadTable(ident)
-        // CAS lost: re-pin and retry
       }
     }
-    throw new IllegalStateException(
-      s"CREATE TABLE '${ident.name()}' lost the commit race " +
-        s"${GraftSource.MaxCommitAttempts} times")
+    loadTable(ident)
   }
 
   /** `ALTER TABLE <name> ADD COLUMNS (...)` — widening evolution
@@ -409,16 +402,13 @@ final class GraftCatalog extends TableCatalog
           s"ALTER COLUMN on '$catName' supports top-level columns " +
             s"only (got ${u.fieldNames.mkString(".")})")
         val colName = u.fieldNames()(0)
-        var attempt = 0
-        while (attempt < GraftSource.MaxCommitAttempts) {
-          attempt += 1
+        AtomicPublish.retryLostRace(
+            s"ALTER COLUMN '${ident.name()}.$colName'") {
           val parent = AtomicPublish.currentTxn(spark, root).getOrElse(
             throw new NoSuchTableException(ident))
-          val meta = AtomicPublish.manifestMetaOf(spark, root, parent)
+          val recorded = AtomicPublish.manifestMetaOf(spark, root, parent)
             .getOrElse(ident.name(), throw new NoSuchTableException(ident))
-          val recorded = meta.schema.getOrElse(
-            throw new IllegalStateException(
-              s"table '${ident.name()}' predates recorded schemas"))
+            .schema
           require(recorded.fieldNames.contains(colName),
             s"column '$colName' is not in table '${ident.name()}'")
           val cur = recorded(colName).dataType
@@ -436,15 +426,11 @@ final class GraftCatalog extends TableCatalog
             spark.sparkContext.emptyRDD[Row], widened)
           // the merge validates the pair is a lossless widening; an
           // empty append carries no data so a lost race rebases freely
-          if (AtomicPublish.publishDelta(spark, root,
-              append = Map(ident.name() -> empty),
-              parent = Some(parent), rebase = true).isDefined)
-            return loadTable(ident)
-          // CAS lost: re-pin and retry
+          AtomicPublish.publishDelta(spark, root,
+            append = Map(ident.name() -> empty),
+            parent = Some(parent), rebase = true)
         }
-        throw new IllegalStateException(
-          s"ALTER COLUMN '${ident.name()}.$colName' lost the commit " +
-            s"race ${GraftSource.MaxCommitAttempts} times")
+        return loadTable(ident)
       case List(sp: TableChange.SetProperty)
           if sp.property == "partition-spec" =>
         // `ALTER TABLE t SET TBLPROPERTIES('partition-spec' =
@@ -454,18 +440,14 @@ final class GraftCatalog extends TableCatalog
         // mirrors what DESCRIBE EXTENDED / SHOW TBLPROPERTIES report.
         val spec = sp.value.split(",").map(_.trim)
           .filter(_.nonEmpty).toSeq
-        var attempt = 0
-        while (attempt < GraftSource.MaxCommitAttempts) {
-          attempt += 1
+        AtomicPublish.retryLostRace(
+            s"ALTER TABLE '${ident.name()}' SET partition-spec") {
           val parent = AtomicPublish.currentTxn(spark, root).getOrElse(
             throw new NoSuchTableException(ident))
-          if (AtomicPublish.setPartitionSpec(spark, root, ident.name(),
-              spec, Some(parent)).isDefined)
-            return loadTable(ident)
+          AtomicPublish.setPartitionSpec(spark, root, ident.name(),
+            spec, Some(parent))
         }
-        throw new IllegalStateException(
-          s"ALTER TABLE '${ident.name()}' SET partition-spec lost the " +
-            s"commit race ${GraftSource.MaxCommitAttempts} times")
+        return loadTable(ident)
       case List(r: TableChange.RenameColumn) =>
         require(r.fieldNames.length == 1,
           s"ALTER TABLE RENAME COLUMN on '$catName' supports top-level " +
@@ -525,28 +507,21 @@ final class GraftCatalog extends TableCatalog
         }
       }
     }
-    var attempt = 0
-    while (attempt < GraftSource.MaxCommitAttempts) {
-      attempt += 1
+    AtomicPublish.retryLostRace(s"ALTER TABLE '${ident.name()}'") {
       val parent = AtomicPublish.currentTxn(spark, root).getOrElse(
         throw new NoSuchTableException(ident))
-      val meta = AtomicPublish.manifestMetaOf(spark, root, parent)
+      val recorded = AtomicPublish.manifestMetaOf(spark, root, parent)
         .getOrElse(ident.name(), throw new NoSuchTableException(ident))
-      val recorded = meta.schema.getOrElse(throw new IllegalStateException(
-        s"table '${ident.name()}' predates recorded schemas"))
+        .schema
       val widened = adds.foldLeft(recorded)((s, a) =>
         addAt(s, a.fieldNames().toSeq, a.dataType))
       val empty = spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], widened)
-      val committed = AtomicPublish.publishDelta(spark, root,
+      AtomicPublish.publishDelta(spark, root,
         append = Map(ident.name() -> empty), parent = Some(parent),
         rebase = true)
-      if (committed.isDefined) return loadTable(ident)
-      // CAS lost: re-pin and retry
     }
-    throw new IllegalStateException(
-      s"ALTER TABLE '${ident.name()}' lost the commit race " +
-        s"${GraftSource.MaxCommitAttempts} times")
+    loadTable(ident)
   }
 
   /** `ALTER TABLE … RENAME COLUMN old TO new` / `DROP COLUMN c`:
@@ -563,15 +538,12 @@ final class GraftCatalog extends TableCatalog
   private def alterColumnCow(ident: Identifier, colName: String,
       rename: Option[String]): Table = {
     val t = ident.name()
-    var attempt = 0
-    while (attempt < GraftSource.MaxCommitAttempts) {
-      attempt += 1
+    AtomicPublish.retryLostRace(s"ALTER TABLE '$t'") {
       val parent = AtomicPublish.currentTxn(spark, root).getOrElse(
         throw new NoSuchTableException(ident))
       val metas = AtomicPublish.manifestMetaOf(spark, root, parent)
       val meta = metas.getOrElse(t, throw new NoSuchTableException(ident))
-      val recorded = meta.schema.getOrElse(throw new IllegalStateException(
-        s"table '$t' predates recorded schemas"))
+      val recorded = meta.schema
       require(recorded.fieldNames.contains(colName),
         s"column '$colName' is not in table '$t'")
       rename.foreach(n => require(!recorded.fieldNames.contains(n),
@@ -581,8 +553,8 @@ final class GraftCatalog extends TableCatalog
       // the pinned delete key lives in the companion's schema — a
       // rename/drop would silently unhook every future delete
       val deleteKey = metas.get(AtomicPublish.deleteTableOf(t))
-        .flatMap(_.schema)
-        .map(_.fieldNames.toSeq.filterNot(_ == "_asof")).getOrElse(Nil)
+        .map(_.schema.fieldNames.toSeq.filterNot(_ == "_asof"))
+        .getOrElse(Nil)
       require(!deleteKey.contains(colName),
         s"column '$colName' is the pinned delete key of '$t' — " +
           "row-level delete history depends on it")
@@ -624,7 +596,7 @@ final class GraftCatalog extends TableCatalog
       }
       def lay(of: Seq[String]): Map[String, Seq[String]] =
         if (of.isEmpty) Map.empty else Map(t -> mapped(of))
-      val committed = AtomicPublish.publishDelta(spark, root,
+      AtomicPublish.publishDelta(spark, root,
         append = Map.empty, replace = Map(t -> projected),
         parent = Some(parent),
         partitionBy = if (meta.partitionCols.isEmpty) Map.empty
@@ -634,37 +606,26 @@ final class GraftCatalog extends TableCatalog
           else Map(t -> (mapped(meta.clusterCols), meta.clusterZOrder)),
         bucketBy = if (meta.numBuckets == 0) Map.empty
           else Map(t -> (mapped(meta.bucketCols), meta.numBuckets)))
-      if (committed.isDefined) return loadTable(ident)
-      // CAS lost: re-pin and retry
     }
-    throw new IllegalStateException(
-      s"ALTER TABLE '$t' lost the commit race " +
-        s"${GraftSource.MaxCommitAttempts} times")
+    loadTable(ident)
   }
 
   /** `DROP TABLE`: metadata-only removal in one CAS commit ([[
     * AtomicPublish.publishDelta]] `drop`) — O(1), no data touched;
     * pre-drop versions still time-travel, vacuum reclaims later. */
   override def dropTable(ident: Identifier): Boolean = {
-    if (!okNs(ident.namespace())) return false
-    var attempt = 0
-    while (attempt < GraftSource.MaxCommitAttempts) {
-      attempt += 1
-      AtomicPublish.currentTxn(spark, root) match {
-        case None => return false
-        case Some(parent) =>
-          if (!AtomicPublish.manifestMetaOf(spark, root, parent)
-              .contains(ident.name())) return false
-          val committed = AtomicPublish.publishDelta(spark, root,
-            append = Map.empty, drop = Seq(ident.name()),
-            parent = Some(parent))
-          if (committed.isDefined) return true
-        // CAS lost: re-pin and retry
+    okNs(ident.namespace()) &&
+      AtomicPublish.retryLostRace(s"DROP TABLE '${ident.name()}'") {
+        AtomicPublish.currentTxn(spark, root)
+          .filter(AtomicPublish.manifestMetaOf(spark, root, _)
+            .contains(ident.name())) match {
+          case None => Some(false) // no such table
+          case Some(parent) =>
+            AtomicPublish.publishDelta(spark, root,
+              append = Map.empty, drop = Seq(ident.name()),
+              parent = Some(parent)).map(_ => true)
+        }
       }
-    }
-    throw new IllegalStateException(
-      s"DROP TABLE '${ident.name()}' lost the commit race " +
-        s"${GraftSource.MaxCommitAttempts} times")
   }
 
   /** `ALTER TABLE <name> RENAME TO <new>`: one O(1) metadata commit
@@ -676,16 +637,11 @@ final class GraftCatalog extends TableCatalog
     if (!okNs(oldIdent.namespace())) throw new NoSuchTableException(oldIdent)
     if (!okNs(newIdent.namespace())) throw new NoSuchNamespaceException(
       newIdent.namespace())
-    var attempt = 0
-    while (attempt < GraftSource.MaxCommitAttempts) {
-      attempt += 1
-      if (AtomicPublish.renameTable(spark, root, oldIdent.name(),
-          newIdent.name()).isDefined) return
-      // CAS lost: re-pin and retry
+    AtomicPublish.retryLostRace(s"RENAME TABLE '${oldIdent.name()}'") {
+      AtomicPublish.renameTable(spark, root, oldIdent.name(),
+        newIdent.name())
     }
-    throw new IllegalStateException(
-      s"RENAME TABLE '${oldIdent.name()}' lost the commit race " +
-        s"${GraftSource.MaxCommitAttempts} times")
+    ()
   }
 
   /** Procedures live under the `system` namespace (the Iceberg
@@ -748,10 +704,7 @@ final class GraftTable(
   extends Table with SupportsRead with SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete {
 
-  private val recordedSchema: StructType = meta.schema.getOrElse(
-    throw new IllegalStateException(
-      s"table '$table' predates recorded schemas — read it via " +
-        "AtomicPublish.readTable"))
+  private val recordedSchema: StructType = meta.schema
 
   override def name(): String = s"$table@$txn"
 
@@ -843,9 +796,7 @@ final class GraftTable(
     // commit now LOSES the CAS and re-runs the verify at the new pin
     // (the ADVICE-r6 verify-then-commit window, closed the way the
     // MERGE/UPDATE commands already do)
-    var attempt = 0
-    while (attempt < GraftSource.MaxCommitAttempts) {
-      attempt += 1
+    AtomicPublish.retryLostRace(s"DELETE on '$table'") {
       val (pinned, metas) = AtomicPublish.currentManifestMeta(spark, root)
         .getOrElse(throw new IllegalStateException(
           s"no published version under $root"))
@@ -853,8 +804,7 @@ final class GraftTable(
       val established: Option[Seq[String]] = metas
         .get(AtomicPublish.deleteTableOf(table))
         .filter(_.owners.nonEmpty)
-        .flatMap(_.schema)
-        .map(_.fieldNames.toSeq.filterNot(_ == "_asof"))
+        .map(_.schema.fieldNames.toSeq.filterNot(_ == "_asof"))
       val keyCols = established.getOrElse(predCols)
       val live = AtomicPublish.readTableAt(spark, root, table, pinned)
       val matching = live.filter(pred)
@@ -873,13 +823,10 @@ final class GraftTable(
             "by the established columns, or compact the table to clear " +
             "its tombstones first")
       }
-      if (AtomicPublish.deleteRowsAt(spark, root, pinned,
-          Map(table -> keys)).isDefined) return
-      // CAS lost: re-pin and re-verify against the new snapshot
+      // None = CAS lost: re-pin and re-verify against the new snapshot
+      AtomicPublish.deleteRowsAt(spark, root, pinned, Map(table -> keys))
     }
-    throw new IllegalStateException(
-      s"DELETE on '$table' lost the commit race " +
-        s"${GraftSource.MaxCommitAttempts} times")
+    ()
   }
 }
 
@@ -1224,37 +1171,29 @@ private[ops] object GraftCatalogWrite {
       data: DataFrame, overwrite: Boolean, meta: TableMeta): Unit = {
     def layout(of: Seq[String]): Map[String, Seq[String]] =
       if (of.isEmpty) Map.empty else Map(table -> of)
-    var attempt = 0
-    while (attempt < GraftSource.MaxCommitAttempts) {
-      attempt += 1
+    AtomicPublish.retryLostRace(s"catalog insert into '$table'") {
       AtomicPublish.currentTxn(spark, root) match {
         case None =>
-          AtomicPublish.publish(spark, root, Map(table -> data),
+          Some(AtomicPublish.publish(spark, root, Map(table -> data),
             partitionBy = layout(meta.partitionCols),
             statsBy = layout(meta.statCols),
-            bloomBy = layout(meta.bloomCols))
-          return
+            bloomBy = layout(meta.bloomCols)))
         case Some(parent) =>
-          val committed =
-            if (overwrite)
-              AtomicPublish.publishDelta(spark, root, append = Map.empty,
-                replace = Map(table -> data), parent = Some(parent),
-                partitionBy = layout(meta.partitionCols),
-                statsBy = layout(meta.statCols),
-                bloomBy = layout(meta.bloomCols))
-            else
-              // caller-supplied rows: a lost race REBASES (the sealed
-              // segment lands on the winner's manifest, no restaging)
-              // unless a table fact moved — then the loop recomputes
-              AtomicPublish.publishDelta(spark, root,
-                append = Map(table -> data), parent = Some(parent),
-                rebase = true)
-          if (committed.isDefined) return
-        // CAS lost: re-pin and retry
+          if (overwrite)
+            AtomicPublish.publishDelta(spark, root, append = Map.empty,
+              replace = Map(table -> data), parent = Some(parent),
+              partitionBy = layout(meta.partitionCols),
+              statsBy = layout(meta.statCols),
+              bloomBy = layout(meta.bloomCols))
+          else
+            // caller-supplied rows: a lost race REBASES (the sealed
+            // segment lands on the winner's manifest, no restaging)
+            // unless a table fact moved — then the loop recomputes
+            AtomicPublish.publishDelta(spark, root,
+              append = Map(table -> data), parent = Some(parent),
+              rebase = true)
       }
     }
-    throw new IllegalStateException(
-      s"catalog insert into '$table' lost the commit race " +
-        s"${GraftSource.MaxCommitAttempts} times")
+    ()
   }
 }

@@ -96,8 +96,7 @@ object GraftDml {
     AtomicPublish.manifestMetaOf(spark, root, txn)
       .get(AtomicPublish.deleteTableOf(table))
       .filter(_.owners.nonEmpty)
-      .flatMap(_.schema)
-      .map(_.fieldNames.toSeq.filterNot(_ == "_asof"))
+      .map(_.schema.fieldNames.toSeq.filterNot(_ == "_asof"))
       .filter(_.nonEmpty)
 
   /** Fail the statement against a moved snapshot: the frames were

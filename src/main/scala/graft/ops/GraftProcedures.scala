@@ -456,28 +456,22 @@ private[ops] object GraftProcedures {
       val candidates = Seq(view, d.wmTable, d.auxTable) ++
         aggs.filter(_.fn == "count_distinct").map(d.dvTable) ++
         aggs.filter(a => a.fn == "min" || a.fn == "max").map(d.mmTable)
-      var attempt = 0
-      while (attempt < GraftSource.MaxCommitAttempts) {
-        attempt += 1
-        val parent = AtomicPublish.currentTxn(spark, root).getOrElse(
-          throw new IllegalStateException(
-            s"no published version under $root"))
-        val present = AtomicPublish.manifestMetaOf(spark, root, parent)
-          .keySet
-        val toDrop = candidates.filter(present.contains)
-        require(toDrop.contains(view),
-          s"view '$view' is not published under $root")
-        val committed = AtomicPublish.publishDelta(spark, root,
-          append = Map.empty, drop = toDrop, parent = Some(parent))
-        committed.foreach { txn =>
-          return result(out, Array(new GenericInternalRow(
-            Array[Any](utf8(txn), toDrop.size))))
+      val (txn, dropped) =
+        AtomicPublish.retryLostRace(s"drop_matview '$view'") {
+          val parent = AtomicPublish.currentTxn(spark, root).getOrElse(
+            throw new IllegalStateException(
+              s"no published version under $root"))
+          val present = AtomicPublish.manifestMetaOf(spark, root, parent)
+            .keySet
+          val toDrop = candidates.filter(present.contains)
+          require(toDrop.contains(view),
+            s"view '$view' is not published under $root")
+          AtomicPublish.publishDelta(spark, root,
+            append = Map.empty, drop = toDrop, parent = Some(parent))
+            .map(_ -> toDrop.size)
         }
-        // CAS lost: re-pin and retry
-      }
-      throw new IllegalStateException(
-        s"drop_matview '$view' lost the commit race " +
-          s"${GraftSource.MaxCommitAttempts} times")
+      result(out, Array(new GenericInternalRow(
+        Array[Any](utf8(txn), dropped))))
     }
   }
 

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Add, Alias, AttributeReference, Cast, DateAdd, DateDiff, DynamicPruningSubquery, EqualTo, Expression, Hour, IntegralDivide, Literal, Month, Multiply, Pmod, PredicateHelper, Subtract, UnixMicros, Year}
 import org.apache.spark.sql.catalyst.plans.{Inner, JoinType, LeftOuter, LeftSemi, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan, Project, SubqueryAlias}
@@ -52,20 +51,13 @@ import org.apache.spark.sql.types.{DateType, IntegerType, TimestampNTZType}
   *    aggregate-subquery fallback re-executes the dim subtree — worth
   *    it only when that subtree is cheap.
   *
-  * Runs from `spark.experimental.extraOptimizations` (registered
-  * idempotently at store-mount time — [[register]]): the LAST
-  * optimizer batch, after `CleanupDynamicPruningFilters`, so the
+  * Runs from `spark.experimental.extraOptimizations` (installed
+  * idempotently at store-mount time — [[GraftFileIndex.relationFor]]):
+  * the LAST optimizer batch, after `CleanupDynamicPruningFilters`, so the
   * inserted filter survives and the captured build plan is fully
   * optimized (stable `sameResult` for broadcast reuse).
   */
 object HiddenPartitionPruning extends Rule[LogicalPlan] with PredicateHelper {
-
-  /** Idempotently add this rule to `spark.experimental.extraOptimizations`. */
-  def register(spark: SparkSession): Unit = synchronized {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.exists(_ eq this))
-      spark.experimental.extraOptimizations = cur :+ this
-  }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (!conf.dynamicPartitionPruningEnabled) return plan

@@ -488,11 +488,9 @@ object MatView {
     * free). Retries the CAS a bounded number of times against
     * concurrent publishers. */
   def refresh(spark: SparkSession, root: String, d: ViewDef,
-      maxAttempts: Int = 5, recordDef: Boolean = false): Option[String] = {
+      recordDef: Boolean = false): Option[String] = {
     import spark.implicits._
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
+    AtomicPublish.retryLostRace(s"matview '${d.view}'") {
       val pinned = AtomicPublish.currentTxn(spark, root).getOrElse(
         throw new IllegalStateException(s"no published version under $root"))
       val wm = watermark(spark, root, d, Some(pinned))
@@ -538,7 +536,7 @@ object MatView {
       }
       val next: Option[(DataFrame, Map[String, DataFrame], Map[String, DataFrame])] =
         delta match {
-          case Unchanged => return None
+          case Unchanged => None
           case Recompute => Some(recomputeAll)
           case Incremental(plus, minus) => stateTables match {
             case Some((aux, dvs, mmsCur)) =>
@@ -571,7 +569,7 @@ object MatView {
           }
         }
       next match {
-        case None => return None
+        case None => Some(None) // already current: nothing to publish
         case Some((state0, dvs0, mms0)) =>
           // one computation feeds every published frame
           val state = state0.cache()
@@ -589,10 +587,7 @@ object MatView {
                 // whose recorded def drifted, is unrepresentable)
                 (if (recordDef) Map(d.defTable -> defFrame(spark, d))
                  else Map.empty),
-              parent = Some(pinned)) match {
-              case Some(txn) => return Some(txn)
-              case None => () // a publisher won the race: re-pin, retry
-            }
+              parent = Some(pinned)).map(Some(_))
           } finally {
             state.unpersist()
             dvs.values.foreach(_.unpersist())
@@ -600,8 +595,6 @@ object MatView {
           }
       }
     }
-    throw new IllegalStateException(
-      s"matview '${d.view}' lost the commit race $maxAttempts times")
   }
 
   /** CONTINUOUS refresh: subscribe to the store's change feed
@@ -686,13 +679,11 @@ object MatView {
   /** Drop a view AND every companion state table (aux, watermark,
     * per-aggregate distinct/min-max states, recorded def when present)
     * in one metadata commit; returns (commit txn, tables dropped). */
-  def dropAll(spark: SparkSession, root: String, d: ViewDef,
-      maxAttempts: Int = 5): (String, Int) = {
+  def dropAll(spark: SparkSession, root: String,
+      d: ViewDef): (String, Int) = {
     val candidates = Seq(d.view, d.wmTable, d.auxTable, d.defTable) ++
       d.distinctAggs.map(d.dvTable) ++ d.mmAggs.map(d.mmTable)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
+    AtomicPublish.retryLostRace(s"drop of matview '${d.view}'") {
       val parent = AtomicPublish.currentTxn(spark, root).getOrElse(
         throw new IllegalStateException(
           s"no published version under $root"))
@@ -701,13 +692,8 @@ object MatView {
       require(toDrop.contains(d.view),
         s"view '${d.view}' is not published under $root")
       AtomicPublish.publishDelta(spark, root, append = Map.empty,
-        drop = toDrop, parent = Some(parent)) match {
-        case Some(txn) => return (txn, toDrop.size)
-        case None => () // CAS lost: re-pin, retry
-      }
+        drop = toDrop, parent = Some(parent)).map(_ -> toDrop.size)
     }
-    throw new IllegalStateException(
-      s"drop of matview '${d.view}' lost the commit race $maxAttempts times")
   }
 
   /** The reference answer: the same aggregate computed from scratch

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Cast, Expression, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min}
@@ -50,13 +49,6 @@ import graft.ops.AtomicPublish.{ColStat, SegStats}
   * `spark.graft.metadataAggregates=false`.
   */
 object MetadataAggregates extends Rule[LogicalPlan] {
-
-  /** Idempotently add this rule to `spark.experimental.extraOptimizations`. */
-  def register(spark: SparkSession): Unit = synchronized {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.exists(_ eq this))
-      spark.experimental.extraOptimizations = cur :+ this
-  }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (conf.getConfString("spark.graft.metadataAggregates", "true")

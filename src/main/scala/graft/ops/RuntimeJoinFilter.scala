@@ -74,12 +74,6 @@ object RuntimeJoinFilter extends Rule[LogicalPlan] with PredicateHelper {
   /** Escape hatch for the DEFERRED variant alone (VERDICT-r11 #5). */
   val DeferredKey = "graft.runtimeJoinFilter.deferred"
 
-  def register(spark: SparkSession): Unit = synchronized {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.exists(_ eq this))
-      spark.experimental.extraOptimizations = cur :+ this
-  }
-
   private val planning = new ThreadLocal[Boolean] {
     override def initialValue(): Boolean = false
   }

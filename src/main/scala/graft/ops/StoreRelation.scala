@@ -62,10 +62,7 @@ final class GraftFileIndex(
     exposeDerived: Boolean = false)
   extends FileIndex {
 
-  private val recordedSchema: StructType = meta.schema.getOrElse(
-    throw new IllegalStateException(
-      s"table '$table' has no recorded schema — Catalyst-native reads " +
-        "need one (pre-schema manifests read via the legacy union path)"))
+  private val recordedSchema: StructType = meta.schema
 
   /** Calendar-transform entries of the CURRENT partition spec
     * ([[PartSpec]]): their ordinals live ONLY in the directory layout
@@ -492,27 +489,40 @@ object GraftFileIndex {
     }.reduce(_.unionByName(_))
   }
 
+  /** Idempotently append a store rule to the session's
+    * `experimental.extraOptimizations` — the last optimizer batch, the
+    * one install point of every rule a mount needs (the
+    * `SqlStrategy.setup` shape). */
+  private def installRule(spark: SparkSession,
+      rule: org.apache.spark.sql.catalyst.rules.Rule[
+        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]): Unit =
+    synchronized {
+      val cur = spark.experimental.extraOptimizations
+      if (!cur.exists(_ eq rule))
+        spark.experimental.extraOptimizations = cur :+ rule
+    }
+
   private def relationForClass(spark: SparkSession, root: String,
       table: String, meta: TableMeta,
       selection: Seq[(String, Option[Seq[String]])]): DataFrame = {
     val idx = new GraftFileIndex(spark, root, table, meta, selection,
       exposeDerived = true)
     // a transform-partitioned mount is dynamically prunable: make sure
-    // this session runs the hidden-partition DPP rule (idempotent)
+    // this session runs the hidden-partition DPP rule
     if (idx.prunableTransforms.nonEmpty)
-      HiddenPartitionPruning.register(spark)
+      installRule(spark, HiddenPartitionPruning)
     // a stats-covered mount can serve full-table aggregates from the
-    // manifest alone (idempotent; the rule itself re-checks coverage)
+    // manifest alone (the rule itself re-checks coverage)
     if (idx.metadataSegStats.exists(_.nonEmpty))
-      MetadataAggregates.register(spark)
+      installRule(spark, MetadataAggregates)
     // a bloom/stat-covered mount can consume build-side join keys as
-    // file-skipping IN predicates (idempotent)
+    // file-skipping IN predicates
     if (idx.bloomColumns.nonEmpty || idx.statColumns.nonEmpty)
-      RuntimeJoinFilter.register(spark)
+      installRule(spark, RuntimeJoinFilter)
     val rel = HadoopFsRelation(idx, idx.partitionSchema, idx.dataSchema,
       bucketSpecOf(meta), new ParquetFileFormat,
       Map.empty[String, String])(spark)
-    val ordered = meta.schema.get.fieldNames.toSeq
+    val ordered = meta.schema.fieldNames.toSeq
     val base = catalogStatsOf(table, meta, selection) match {
       case Some(ct) => org.apache.spark.sql.graftplan.PlanBridge
         .ofRelationWithStats(spark, rel, ct)
@@ -559,7 +569,7 @@ object GraftFileIndex {
     // segments without recorded bytes simply get no planner stats.
     if (stats.exists(_.bytes.isEmpty)) return None
     val sizeInBytes = stats.flatMap(_.bytes).sum
-    val schema = meta.schema.getOrElse(return None)
+    val schema = meta.schema
     val numericExact: Set[org.apache.spark.sql.types.DataType] = {
       import org.apache.spark.sql.types._
       Set(ByteType, ShortType, IntegerType, LongType, FloatType, DoubleType)
@@ -726,9 +736,6 @@ final class GraftSource extends RelationProvider
     val metas = AtomicPublish.manifestMetaOf(spark, root, txn)
     val meta = metas.getOrElse(table, throw new IllegalArgumentException(
       s"table '$table' is not in version $txn under $root"))
-    require(meta.schema.isDefined,
-      s"table '$table' predates recorded schemas — read it via " +
-        "AtomicPublish.readTable")
     val tombstoned = metas.get(AtomicPublish.deleteTableOf(table))
       .exists(_.owners.nonEmpty)
     require(!tombstoned ||
@@ -811,17 +818,14 @@ final class GraftSource extends RelationProvider
     val toWrite =
       if (clusterCols.isEmpty) data
       else ZOrder.cluster(data, clusterCols, zOrder)
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      attempt += 1
+    AtomicPublish.retryLostRace(s"write to '$table'") {
       AtomicPublish.currentTxn(spark, root) match {
         case None =>
           // store birth — publish itself CASes on "no parent yet"
-          AtomicPublish.publish(spark, root, Map(table -> toWrite),
+          Some(AtomicPublish.publish(spark, root, Map(table -> toWrite),
             partitionBy = layout(partCols), statsBy = layout(statsCols),
             bloomBy = layout(bloomCols), clusterBy = clusterLay,
-            bucketBy = bucketLay, checks = checkLay)
-          return schemaOnly(ctx, data.schema)
+            bucketBy = bucketLay, checks = checkLay))
         case Some(parent) =>
           val exists =
             AtomicPublish.manifestOf(spark, root, parent).contains(table)
@@ -830,37 +834,32 @@ final class GraftSource extends RelationProvider
               throw new IllegalStateException(
                 s"table '$table' already exists under $root " +
                   "(SaveMode.ErrorIfExists)")
-            case SaveMode.Ignore if exists => return schemaOnly(ctx,
-              data.schema)
+            case SaveMode.Ignore if exists => Some(parent) // nothing to write
             case _ =>
               // a new table lands via replace (= create); appends to an
               // existing table inherit its recorded layout
-              val committed =
-                if (!exists || mode == SaveMode.Overwrite)
-                  AtomicPublish.publishDelta(spark, root,
-                    append = Map.empty, replace = Map(table -> toWrite),
-                    parent = Some(parent), partitionBy = layout(partCols),
-                    statsBy = layout(statsCols), bloomBy = layout(bloomCols),
-                    clusterBy = clusterLay, bucketBy = bucketLay,
-                    checks = checkLay)
-                else {
-                  require(clusterCols.isEmpty,
-                    s"append to '$table' cannot re-declare clustering — " +
-                      "the manifest owns the recorded layout (use " +
-                      "SaveMode.Overwrite, or let compaction re-sort)")
-                  // caller-supplied rows: a lost race rebases instead
-                  // of re-staging (see publishDelta's rebase contract)
-                  AtomicPublish.publishDelta(spark, root,
-                    append = Map(table -> data), parent = Some(parent),
-                    bucketBy = bucketLay, rebase = true)
-                }
-              if (committed.isDefined) return schemaOnly(ctx, data.schema)
-            // CAS lost: re-pin the parent and retry
+              if (!exists || mode == SaveMode.Overwrite)
+                AtomicPublish.publishDelta(spark, root,
+                  append = Map.empty, replace = Map(table -> toWrite),
+                  parent = Some(parent), partitionBy = layout(partCols),
+                  statsBy = layout(statsCols), bloomBy = layout(bloomCols),
+                  clusterBy = clusterLay, bucketBy = bucketLay,
+                  checks = checkLay)
+              else {
+                require(clusterCols.isEmpty,
+                  s"append to '$table' cannot re-declare clustering — " +
+                    "the manifest owns the recorded layout (use " +
+                    "SaveMode.Overwrite, or let compaction re-sort)")
+                // caller-supplied rows: a lost race rebases instead
+                // of re-staging (see publishDelta's rebase contract)
+                AtomicPublish.publishDelta(spark, root,
+                  append = Map(table -> data), parent = Some(parent),
+                  bucketBy = bucketLay, rebase = true)
+              }
           }
       }
     }
-    throw new IllegalStateException(
-      s"write to '$table' lost the commit race $MaxCommitAttempts times")
+    schemaOnly(ctx, data.schema)
   }
 
   /** `df.writeStream.format("graft")` — the streaming SINK face
@@ -884,8 +883,6 @@ final class GraftSource extends RelationProvider
 }
 
 object GraftSource {
-  private[ops] val MaxCommitAttempts = 8
-
   private[ops] def optionCols(parameters: Map[String, String],
       key: String): Seq[String] =
     parameters.get(key).map(_.split(",").toSeq.map(_.trim)
@@ -944,8 +941,6 @@ final class GraftSink(spark: SparkSession, root: String, table: String,
       * batch-born one does. */
     bucketSpec: Option[(Seq[String], Int)] = None,
     checks: Map[String, String] = Map.empty) extends Sink {
-  import GraftSource.MaxCommitAttempts
-
   private val wmTable = s"${table}__sinkwm"
 
   override def addBatch(batchId: Long,
@@ -960,41 +955,33 @@ final class GraftSink(spark: SparkSession, root: String, table: String,
       bucketSpec.map(s => Map(table -> s)).getOrElse(Map.empty)
     val checkLay: Map[String, Map[String, String]] =
       if (checks.isEmpty) Map.empty else Map(table -> checks)
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      attempt += 1
+    AtomicPublish.retryLostRace(s"streaming sink for '$table'") {
       AtomicPublish.currentTxn(spark, root) match {
         case None =>
-          AtomicPublish.publish(spark, root,
+          Some(AtomicPublish.publish(spark, root,
             Map(table -> batch, wmTable -> wmDF),
             partitionBy = layout(partCols), statsBy = layout(statsCols),
             bloomBy = layout(bloomCols), bucketBy = bucketLay,
-            checks = checkLay)
-          return
+            checks = checkLay))
         case Some(parent) =>
           val manifest = AtomicPublish.manifestOf(spark, root, parent)
           val applied =
             if (!manifest.contains(wmTable)) -1L
             else AtomicPublish.readTableAt(spark, root, wmTable, parent)
               .head().getLong(0)
-          if (batchId <= applied) return // replayed microbatch: committed
-          val committed =
-            if (complete || !manifest.contains(table))
-              AtomicPublish.publishDelta(spark, root, append = Map.empty,
-                replace = Map(table -> batch, wmTable -> wmDF),
-                parent = Some(parent), partitionBy = layout(partCols),
-                statsBy = layout(statsCols), bloomBy = layout(bloomCols),
-                bucketBy = bucketLay, checks = checkLay)
-            else
-              AtomicPublish.publishDelta(spark, root,
-                append = Map(table -> batch),
-                replace = Map(wmTable -> wmDF), parent = Some(parent))
-          if (committed.isDefined) return
-        // CAS lost: re-pin and retry
+          if (batchId <= applied) Some(parent) // replayed: committed
+          else if (complete || !manifest.contains(table))
+            AtomicPublish.publishDelta(spark, root, append = Map.empty,
+              replace = Map(table -> batch, wmTable -> wmDF),
+              parent = Some(parent), partitionBy = layout(partCols),
+              statsBy = layout(statsCols), bloomBy = layout(bloomCols),
+              bucketBy = bucketLay, checks = checkLay)
+          else
+            AtomicPublish.publishDelta(spark, root,
+              append = Map(table -> batch),
+              replace = Map(wmTable -> wmDF), parent = Some(parent))
       }
     }
-    throw new IllegalStateException(
-      s"streaming sink for '$table' lost the commit race " +
-        s"$MaxCommitAttempts times")
+    ()
   }
 }

@@ -102,9 +102,7 @@ final class GraftChangeFeedSource(spark: SparkSession, root: String,
         s"no published version under $root"))
     val meta = metas.getOrElse(table, throw new IllegalArgumentException(
       s"table '$table' is not in version $txn under $root"))
-    meta.schema.getOrElse(
-      AtomicPublish.readTableSegments(spark, root, table, txn,
-        meta.owners).schema)
+    meta.schema
   }
 
   /** Trigger.AvailableNow freezes the drain target here — versions
@@ -163,12 +161,6 @@ final class GraftChangeFeedSource(spark: SparkSession, root: String,
             val n = math.min(m, osT.size)
             ChainOffset(n, osT(n - 1), txnT)
         }
-      case Some(so) if so.txn.isEmpty =>
-        // legacy (pre-txn) checkpoint: old positional semantics over
-        // the target chain; the offset upgrades to txn-ful from here
-        val n = maxOwnersPerTrigger.map(m => math.min(so.n + m, osT.size))
-          .getOrElse(osT.size)
-        if (n <= so.n) start else ChainOffset(n, osT(n - 1), txnT)
       case Some(so0) =>
         // a mid-staged-set position whose set is already fully served
         // (defensive: a cap change across restart) degrades to plain
@@ -276,91 +268,58 @@ final class GraftChangeFeedSource(spark: SparkSession, root: String,
 
   override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
     val endO = ChainOffset.of(end)
-    val batch: DataFrame =
-      if (endO.txn.isEmpty) legacyBatch(start, endO)
-      else {
-        val chainE = AtomicPublish.ownerChainAt(spark, root, table,
-          endO.txn)
-        require(endO.n <= chainE.size &&
-            (endO.n == 0 || chainE(endO.n - 1) == endO.last),
-          resyncMessage(table, s"version ${endO.txn} no longer serves " +
-            s"segment ${endO.n} = '${endO.last}' (vacuumed?)"))
-        start.map(ChainOffset.of) match {
-          case None if fromLatest => emptyBatch
-          case None =>
-            require(endO.cdfN < 0, resyncMessage(table,
-              "batch 0 cannot end mid-staged-change-set"))
-            AtomicPublish.appendedBetween(spark, root, table,
-              endO.txn, 0, endO.txn, endO.n).get
-          case Some(s) if s.txn.isEmpty =>
-            // legacy start offset with a txn-ful end: the old position
-            // pins the PREFIX of the end version's chain
-            require(s.n <= chainE.size &&
-                (s.n == 0 || chainE(s.n - 1) == s.last),
-              resyncMessage(table,
-                s"segment ${s.n} is no longer '${s.last}'"))
-            AtomicPublish.appendedBetween(spark, root, table,
-              endO.txn, s.n, endO.txn, endO.n).get
-          case Some(s) if s.cdfN >= 0 =>
-            // start sits mid-staged-set: serve the next file slice
-            // (to end's position when still inside the set, else to
-            // its end, plus the ordinary walk beyond the rewrite)
-            val toF =
-              if (endO.txn == s.txn && endO.cdfN >= 0) endO.cdfN
-              else stagedFileCount(s.txn)
-            val slice = stagedInsertSlice(s.txn, s.cdfN, toF)
-            if (endO.txn == s.txn) slice
-            else slice.unionByName(
-              AtomicPublish.appendedBetween(spark, root, table,
-                s.txn, s.n, endO.txn, endO.n).getOrElse(
-                throw new IllegalStateException(resyncMessage(table,
-                  s"the interval ${s.txn}..${endO.txn} rewrote the " +
-                    "table (data change)"))),
-              allowMissingColumns = true)
-          case Some(s) if endO.cdfN >= 0 =>
-            // batch ENDS mid-staged-set: ride the walk to the rewrite
-            // commit WITHOUT its staged rows, then the first slice
-            AtomicPublish.appendedBetween(spark, root, table,
-              s.txn, s.n, endO.txn, endO.n,
-              excludeStagedAt = Some(endO.txn)).getOrElse(
-              throw new IllegalStateException(resyncMessage(table,
-                s"the interval ${s.txn}..${endO.txn} rewrote the " +
-                  "table (data change)")))
-              .unionByName(stagedInsertSlice(endO.txn, 0, endO.cdfN),
-                allowMissingColumns = true)
-          case Some(s) =>
-            AtomicPublish.appendedBetween(spark, root, table,
-              s.txn, s.n, endO.txn, endO.n).getOrElse(
-              throw new IllegalStateException(resyncMessage(table,
-                s"the interval ${s.txn}..${endO.txn} rewrote the " +
-                  "table (data change)")))
-        }
-      }
+    val chainE = AtomicPublish.ownerChainAt(spark, root, table,
+      endO.txn)
+    require(endO.n <= chainE.size &&
+        (endO.n == 0 || chainE(endO.n - 1) == endO.last),
+      resyncMessage(table, s"version ${endO.txn} no longer serves " +
+        s"segment ${endO.n} = '${endO.last}' (vacuumed?)"))
+    val batch: DataFrame = start.map(ChainOffset.of) match {
+      case None if fromLatest => emptyBatch
+      case None =>
+        require(endO.cdfN < 0, resyncMessage(table,
+          "batch 0 cannot end mid-staged-change-set"))
+        AtomicPublish.appendedBetween(spark, root, table,
+          endO.txn, 0, endO.txn, endO.n).get
+      case Some(s) if s.cdfN >= 0 =>
+        // start sits mid-staged-set: serve the next file slice
+        // (to end's position when still inside the set, else to
+        // its end, plus the ordinary walk beyond the rewrite)
+        val toF =
+          if (endO.txn == s.txn && endO.cdfN >= 0) endO.cdfN
+          else stagedFileCount(s.txn)
+        val slice = stagedInsertSlice(s.txn, s.cdfN, toF)
+        if (endO.txn == s.txn) slice
+        else slice.unionByName(
+          AtomicPublish.appendedBetween(spark, root, table,
+            s.txn, s.n, endO.txn, endO.n).getOrElse(
+            throw new IllegalStateException(resyncMessage(table,
+              s"the interval ${s.txn}..${endO.txn} rewrote the " +
+                "table (data change)"))),
+          allowMissingColumns = true)
+      case Some(s) if endO.cdfN >= 0 =>
+        // batch ENDS mid-staged-set: ride the walk to the rewrite
+        // commit WITHOUT its staged rows, then the first slice
+        AtomicPublish.appendedBetween(spark, root, table,
+          s.txn, s.n, endO.txn, endO.n,
+          excludeStagedAt = Some(endO.txn)).getOrElse(
+          throw new IllegalStateException(resyncMessage(table,
+            s"the interval ${s.txn}..${endO.txn} rewrote the " +
+              "table (data change)")))
+          .unionByName(stagedInsertSlice(endO.txn, 0, endO.cdfN),
+            allowMissingColumns = true)
+      case Some(s) =>
+        AtomicPublish.appendedBetween(spark, root, table,
+          s.txn, s.n, endO.txn, endO.n).getOrElse(
+          throw new IllegalStateException(resyncMessage(table,
+            s"the interval ${s.txn}..${endO.txn} rewrote the " +
+              "table (data change)")))
+    }
     // lag registry: the NEXT batch walks from endO.txn — keep it alive
-    if (endO.txn.nonEmpty)
-      consumerId.foreach(id =>
-        AtomicPublish.recordConsumer(spark, root, id, endO.txn))
+    consumerId.foreach(id =>
+      AtomicPublish.recordConsumer(spark, root, id, endO.txn))
     org.apache.spark.sql.graftstream.StreamingBridge.asStreaming(
       conform(batch), this)
-  }
-
-  /** Pre-txn checkpoint replay: the original positional semantics
-    * against the CURRENT chain (resync on any rewrite) — bit-identical
-    * to the r8 behavior so old checkpoints keep working. */
-  private def legacyBatch(start: Option[Offset],
-      endO: ChainOffset): DataFrame = {
-    val (txn, os) = liveChain()
-    val startN = start.map(ChainOffset.of) match {
-      case None => if (fromLatest) endO.n else 0
-      case Some(s) =>
-        require(s.n <= os.size && os(s.n - 1) == s.last,
-          resyncMessage(table, s"segment ${s.n} is no longer '${s.last}'"))
-        s.n
-    }
-    require(endO.n <= os.size && os(endO.n - 1) == endO.last,
-      resyncMessage(table, s"segment ${endO.n} is no longer '${endO.last}'"))
-    AtomicPublish.readTableSegments(spark, root, table, txn,
-      os.slice(startN, endO.n))
   }
 
   override def stop(): Unit = ()
@@ -443,9 +402,7 @@ final class GraftCdcFeedSource(spark: SparkSession, root: String,
         s"no published version under $root"))
     val meta = metas.getOrElse(table, throw new IllegalArgumentException(
       s"table '$table' is not in version $txn under $root"))
-    meta.schema.getOrElse(
-      AtomicPublish.readTableSegments(spark, root, table, txn,
-        meta.owners).schema)
+    meta.schema
   }
 
   override val schema: StructType =
@@ -753,26 +710,23 @@ object GraftChangeFeedSource {
 
   /** Offset over the owner chain of the version `txn` names: `n`
     * segments consumed, the last of which is `last` — the id pins the
-    * prefix so a rewrite is detected, not silently misread. `txn`
-    * empty = a pre-r10 checkpoint (positions resolve against the
-    * CURRENT chain, the legacy semantics). `cdfN >= 0` = the offset
+    * prefix so a rewrite is detected, not silently misread. `cdfN >= 0`
+    * = the offset
     * sits MID-STAGED-CHANGE-SET of the rewrite commit `txn`
     * (VERDICT r14 #2): the rewritten chain is fully consumed
     * (`n`/`last` name its head) and `cdfN` files of the staged set
     * ([[graft.ops.AtomicPublish.cdfStagedFiles]]) have been served —
     * the admission cap paces a backfill's change rows the same way
     * it paces ordinary segments. */
-  final case class ChainOffset(n: Int, last: String, txn: String = "",
+  final case class ChainOffset(n: Int, last: String, txn: String,
       cdfN: Int = -1)
     extends Offset {
     override def json(): String =
-      if (txn.isEmpty) s"""{"n":$n,"last":"$last"}"""
-      else if (cdfN < 0) s"""{"n":$n,"last":"$last","txn":"$txn"}"""
+      if (cdfN < 0) s"""{"n":$n,"last":"$last","txn":"$txn"}"""
       else s"""{"n":$n,"last":"$last","txn":"$txn","cdf":$cdfN}"""
   }
 
   object ChainOffset {
-    private val Re = """\{"n":(\d+),"last":"([^"]*)"\}""".r
     private val ReTxn =
       """\{"n":(\d+),"last":"([^"]*)","txn":"([^"]*)"\}""".r
     private val ReCdf =
@@ -784,7 +738,6 @@ object GraftChangeFeedSource {
       case other => parse(other.json())
     }
     def parse(json: String): ChainOffset = json match {
-      case Re(n, last) => ChainOffset(n.toInt, last)
       case ReTxn(n, last, txn) => ChainOffset(n.toInt, last, txn)
       case ReCdf(n, last, txn, k) =>
         ChainOffset(n.toInt, last, txn, k.toInt)

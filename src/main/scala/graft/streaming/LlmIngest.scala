@@ -187,9 +187,7 @@ object LlmIngest {
         LlmPrep.dedupStage(LlmPrep.cleanStage(docs))
           .withColumn("fingerprint", LlmPrep.fingerprintCol)).cache()
       try {
-        var attempt = 0
-        while (attempt < MaxAttempts) {
-          attempt += 1
+        AtomicPublish.retryLostRace(s"recrawl '$runName'") {
           val parent = AtomicPublish.currentTxn(spark, root).get
           val published = AtomicPublish
             .readTableAt(spark, root, KeptTable, parent)
@@ -204,14 +202,11 @@ object LlmIngest {
               new java.sql.Timestamp(System.currentTimeMillis()),
               inputCount = nIn, outputCount = nChanged,
               errorsJson = "[]", dagJson = "{}")
-            if (nChanged == 0) {
+            if (nChanged == 0)
               AtomicPublish.publishDelta(spark, root,
                 append = Map(RunsTable -> run.repartition(1)),
-                parent = Some(parent)) match {
-                case Some(_) => return 0
-                case None => ()
-              }
-            } else {
+                parent = Some(parent)).map(_ => 0L)
+            else {
               // cross-doc content dedup, same barrier ingestBatch
               // enforces: a changed doc whose NEW content equals some
               // OTHER doc's content (in the pinned snapshot) is not
@@ -236,23 +231,16 @@ object LlmIngest {
                   KeptTable -> AtomicPublish.Upsert(
                     unique.select(col("doc_id"), col("fingerprint"))
                       .repartition(1), ids)),
-                extraAppend = Map(RunsTable -> run.repartition(1))) match {
-                case Some(txn) =>
-                  autoCompact(spark, root, txn)
-                  return nChanged
-                case None => () // lost the race: re-pin, recompute
+                extraAppend = Map(RunsTable -> run.repartition(1))).map { txn =>
+                autoCompact(spark, root, txn)
+                nChanged
               }
             }
           } finally { changed.unpersist(); () }
         }
-        throw new IllegalStateException(
-          s"recrawl '$runName' lost the commit race $MaxAttempts times")
       } finally { staged.unpersist(); () }
     } finally { docs.unpersist(); () }
   }
-
-  /** Retries when a concurrent committer wins the pointer race. */
-  private val MaxAttempts = 5
 
   /** Target bytes per written file — every corpus-sized write derives
     * its partition count from bytes/this (the Compaction contract), so
@@ -307,9 +295,7 @@ object LlmIngest {
     val docs = batch.select(col("doc_id"), col("text")).cache()
     try {
       val nIn = docs.count()
-      var attempt = 0
-      while (true) {
-        attempt += 1
+      AtomicPublish.retryLostRace(s"ingest '$runName'") {
         val parent = AtomicPublish.currentTxn(spark, root) // pinned ONCE
         val novel = LlmPrep.qualityStage(
           LlmPrep.dedupStage(LlmPrep.cleanStage(docs))
@@ -357,20 +343,15 @@ object LlmIngest {
             else Map.empty
           AtomicPublish.publishDelta(spark, root,
             append = tables, parent = parent, statsBy = statsBy,
-            bloomBy = statsBy) match {
-            case Some(txn) =>
-              autoCompact(spark, root, txn)
-              return nNew
-            case None if attempt < MaxAttempts => () // lost the race: retry
-            case None => throw new IllegalStateException(
-              s"ingest '$runName' lost the commit race $MaxAttempts times")
+            bloomBy = statsBy).map { txn =>
+            autoCompact(spark, root, txn)
+            nNew
           }
         } finally {
           novel.unpersist()
           ()
         }
       }
-      0L // unreachable
     } finally {
       docs.unpersist()
       ()
@@ -402,9 +383,7 @@ object LlmIngest {
   def maintain(spark: SparkSession, root: String,
       targetFileBytes: Long = TargetFileBytes): (Long, String) = {
     import spark.implicits._
-    var attempt = 0
-    while (attempt < 5) {
-      attempt += 1
+    AtomicPublish.retryLostRace(s"maintain under $root") {
       val parent = AtomicPublish.currentTxn(spark, root).getOrElse(
         throw new IllegalStateException(s"no published store under $root"))
       // the LIVE corpus: earlier incremental rounds' tombstones must not
@@ -472,17 +451,13 @@ object LlmIngest {
               .agg(sort_array(collect_set(col("h"))).as("gs"))
               .repartition(parts),
             CoveredTable -> Seq(txn).toDF("owner").repartition(1)),
-          parent = Some(parent), txnId = Some(txn)) match {
-          case Some(t) => return (nBefore - nAfter, t)
-          case None => () // an appender won; re-pin and retry
-        }
+          parent = Some(parent), txnId = Some(txn))
+          .map(t => (nBefore - nAfter, t))
       } finally {
         watcher.close(); kept.unpersist()
         ()
       }
     }
-    throw new IllegalStateException(
-      s"maintain lost the commit race 5 times under $root")
   }
 
   /** What ONE incremental maintenance round at `parent` would examine
@@ -574,13 +549,11 @@ object LlmIngest {
     * Returns (docs dropped, committing txn). */
   def maintainIncremental(spark: SparkSession, root: String): (Long, String) = {
     import spark.implicits._
-    var attempt = 0
-    while (attempt < 5) {
-      attempt += 1
+    AtomicPublish.retryLostRace(s"maintainIncremental under $root") {
       val parent = AtomicPublish.currentTxn(spark, root).getOrElse(
         throw new IllegalStateException(s"no published store under $root"))
       judgeNew(spark, root, parent) match {
-        case None => return (0L, parent)
+        case None => Some((0L, parent))
         case Some(j) =>
           val newDocs = j.newDocs.cache()
           val drops = j.drops.cache()
@@ -607,18 +580,13 @@ object LlmIngest {
               if (nDrops == 0) base
               else base + (TombstonesTable -> drops.repartition(1))
             AtomicPublish.publishDelta(spark, root, append = tables,
-              parent = Some(parent)) match {
-              case Some(txn) => return (nDrops, txn)
-              case None => () // an appender won; re-pin and retry
-            }
+              parent = Some(parent)).map(nDrops -> _)
           } finally {
             newDocs.unpersist(); drops.unpersist()
             ()
           }
       }
     }
-    throw new IllegalStateException(
-      s"maintainIncremental lost the commit race 5 times under $root")
   }
 
   /** Bind a raw-document stream to the store: one atomic delta publish

@@ -51,9 +51,7 @@ object VecIngest {
       .select(col("vec_id"), col("v"))
       .dropDuplicates("vec_id")
       .withColumn("nrm", sqrt(VectorFunctions.dot(col("v"), col("v"))))
-    var attempt = 0
-    while (attempt < 5) {
-      attempt += 1
+    AtomicPublish.retryLostRace(s"indexBatch under $indexRoot") {
       val parent = AtomicPublish.currentTxn(spark, indexRoot)
       val hasTable = parent.exists(p =>
         AtomicPublish.manifestMetaOf(spark, indexRoot, p).contains(IndexTable))
@@ -71,28 +69,26 @@ object VecIngest {
         .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
         .cache()
       try {
-        if (assigned.isEmpty) return None // replay: no empty segment
-        val layout: Map[String, Seq[String]] =
-          if (hasTable) Map.empty else Map(IndexTable -> Seq("cell"))
-        AtomicPublish.publishDelta(spark, indexRoot,
-          append = Map(IndexTable -> assigned), parent = parent,
-          partitionBy = layout) match {
-          case Some(txn) =>
+        if (assigned.isEmpty) Some(None) // replay: no empty segment
+        else {
+          val layout: Map[String, Seq[String]] =
+            if (hasTable) Map.empty else Map(IndexTable -> Seq("cell"))
+          AtomicPublish.publishDelta(spark, indexRoot,
+            append = Map(IndexTable -> assigned), parent = parent,
+            partitionBy = layout).map { txn =>
             // cell-partitioned layout survives consolidation
             // (compaction inherits and repartitions by the recorded
             // spec — StoreLayoutSpec), so pruning is unaffected
             graft.ops.Compaction.autoCompact(spark, indexRoot, txn,
               AutoCompactOwners, TargetFileBytes)
-            return Some(txn)
-          case None => () // concurrent appender won; re-pin and retry
+            Some(txn)
+          }
         }
       } finally {
         assigned.unpersist()
         ()
       }
     }
-    throw new IllegalStateException(
-      s"indexBatch lost the commit race 5 times under $indexRoot")
   }
 
   /** RE-EMBED upsert: vectors arriving for EXISTING vec_ids — the
@@ -127,41 +123,38 @@ object VecIngest {
       .select(col("vec_id"), col("v"))
       .dropDuplicates("vec_id")
       .withColumn("nrm", sqrt(VectorFunctions.dot(col("v"), col("v"))))
-    var attempt = 0
-    while (attempt < 5) {
-      attempt += 1
+    AtomicPublish.retryLostRace(s"reembedBatch under $indexRoot") {
       val parent = AtomicPublish.currentTxn(spark, indexRoot)
       val hasTable = parent.exists(p =>
         AtomicPublish.manifestMetaOf(spark, indexRoot, p).contains(IndexTable))
-      if (!hasTable) return indexBatch(spark, indexRoot, batch, centroids)
-      val published = AtomicPublish
-        .readTableAt(spark, indexRoot, IndexTable, parent.get)
-        .select(col("vec_id"), col("v"))
-      // unchanged (vec_id, vector) pairs drop out — the replay barrier;
-      // vector equality joins exactly (arrays compare element-wise)
-      val changed = SimilarityOps
-        .assignCells(withNorm.join(published, Seq("vec_id", "v"),
-          "left_anti"), centroids)
-        .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
-        .cache()
-      try {
-        if (changed.isEmpty) return None
-        AtomicPublish.upsertManyAt(spark, indexRoot, parent.get,
-          Map(IndexTable -> AtomicPublish.Upsert(changed,
-            changed.select(col("vec_id")).distinct()))) match {
-          case Some(txn) =>
-            graft.ops.Compaction.autoCompact(spark, indexRoot, txn,
-              AutoCompactOwners, TargetFileBytes)
-            return Some(txn)
-          case None => () // lost the race: re-pin, recompute
+      if (!hasTable) Some(indexBatch(spark, indexRoot, batch, centroids))
+      else {
+        val published = AtomicPublish
+          .readTableAt(spark, indexRoot, IndexTable, parent.get)
+          .select(col("vec_id"), col("v"))
+        // unchanged (vec_id, vector) pairs drop out — the replay barrier;
+        // vector equality joins exactly (arrays compare element-wise)
+        val changed = SimilarityOps
+          .assignCells(withNorm.join(published, Seq("vec_id", "v"),
+            "left_anti"), centroids)
+          .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
+          .cache()
+        try {
+          if (changed.isEmpty) Some(None)
+          else
+            AtomicPublish.upsertManyAt(spark, indexRoot, parent.get,
+              Map(IndexTable -> AtomicPublish.Upsert(changed,
+                changed.select(col("vec_id")).distinct()))).map { txn =>
+              graft.ops.Compaction.autoCompact(spark, indexRoot, txn,
+                AutoCompactOwners, TargetFileBytes)
+              Some(txn)
+            }
+        } finally {
+          changed.unpersist()
+          ()
         }
-      } finally {
-        changed.unpersist()
-        ()
       }
     }
-    throw new IllegalStateException(
-      s"reembedBatch lost the commit race 5 times under $indexRoot")
   }
 
   /** Bind a vector stream to the index store: one atomic delta per

@@ -47,7 +47,8 @@ class PatientIngestionPropSpec extends SparkSuite {
   }
 
   test("valid + invalid partition the batch; consented is a subset of valid") {
-    run(forAll(genBatch) { rows =>
+    // the empty batch is half the draws: its stage counts must be 0
+    run(forAll(Gen.oneOf(Gen.const(List.empty[Row]), genBatch)) { rows =>
       val df = PatientIngestion.batchFromRows(spark, rows)
       val res = PatientIngestion.ingest(df)
       val c = res.counts

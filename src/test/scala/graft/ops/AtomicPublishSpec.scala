@@ -23,26 +23,88 @@ class AtomicPublishSpec extends SparkSuite {
   }
 
   test("crash between table writes leaves the published version unchanged") {
-    val root = freshRoot()
-    val v1 = AtomicPublish.publish(spark, root, Map(
-      "patients" -> Seq((1L, "a")).toDF("id", "name"),
-      "consents" -> Seq((1L, true)).toDF("patient_id", "granted")))
-    // second publish: first table writes clean, second table's job fails
-    // mid-write (raise_error fires per-row during the parquet write)
-    val boom = spark.range(10).select(
+    // `rows(n)` writes ids 0..n-1 and fails mid-write (raise_error fires
+    // per row during the parquet write) once n > 5
+    def rows(n: Long) = spark.range(n).select(
       when(col("id") < 5, col("id"))
         .otherwise(raise_error(lit("disk on fire"))).as("id"))
-    intercept[Exception] {
+    def leftovers(root: String): Seq[String] =
+      Option(new java.io.File(root).list()).toSeq.flatten.filter(n =>
+        n.startsWith(".staging_") || n.startsWith("._current_"))
+    // every entry point that stages data: (name, the call failing
+    // mid-write, the same call without the failing input); each runs
+    // against its own store holding v1 = {patients, consents}
+    val cases: Seq[(String, String => (() => Any, () => Any))] = Seq(
+      "publish" -> { root =>
+        def call(n: Long) = () => AtomicPublish.publish(spark, root, Map(
+          "patients" -> Seq((9L, "z")).toDF("id", "name"),
+          "consents" -> rows(n)))
+        (call(10), call(5))
+      },
+      "publishDelta" -> { root =>
+        def call(n: Long) = () => AtomicPublish.publishDelta(spark, root,
+          append = Map("consents" -> rows(n)),
+          parent = AtomicPublish.currentTxn(spark, root)).get
+        (call(10), call(5))
+      },
+      // no stats: every owner is admitted, so the rewrite is a
+      // replaceOwners commit staging the table and its change set
+      "overwriteWhere" -> { root =>
+        def call(n: Long) = () => AtomicPublish.overwriteWhere(spark, root,
+          "consents", rows(n), "id >= 0")
+        (call(10), call(5))
+      },
+      // a restore stages only rows it reads back from the store, so its
+      // failing input is a damaged segment file of the live version
+      "restoreTable(stageCdf)" -> { root =>
+        val v1 = AtomicPublish.currentTxn(spark, root).get
+        val v2 = AtomicPublish.publishDelta(spark, root,
+          append = Map("consents" -> rows(2)), parent = Some(v1)).get
+        val seg = new java.io.File(root, s"v_$v2/consents").listFiles()
+          .filter(_.getName.endsWith(".parquet"))
+        val original = seg.map(f => java.nio.file.Files.readAllBytes(f.toPath))
+        def call() = AtomicPublish.restoreTable(spark, root, "consents", v1,
+          stageCdf = true).get
+        (() => {
+          seg.zip(original).foreach { case (f, b) =>
+            java.nio.file.Files.write(f.toPath, new Array[Byte](b.length)) }
+          call()
+        }, () => {
+          seg.zip(original).foreach { case (f, b) =>
+            java.nio.file.Files.write(f.toPath, b) }
+          call()
+        })
+      })
+    cases.foreach { case (name, mk) =>
+      val root = freshRoot()
       AtomicPublish.publish(spark, root, Map(
-        "patients" -> Seq((9L, "z")).toDF("id", "name"),
-        "consents" -> boom))
+        "patients" -> Seq((1L, "a")).toDF("id", "name"),
+        "consents" -> rows(3)))
+      val (fail, ok) = mk(root)
+      val before = AtomicPublish.currentTxn(spark, root)
+      intercept[Exception](fail())
+      // the transaction observable: pointer and data intact, and the
+      // shared abort path left no scratch dir or tmp pointer behind
+      assert(AtomicPublish.currentTxn(spark, root) == before, name)
+      assert(leftovers(root).isEmpty, s"$name: ${leftovers(root)}")
+      assert(AtomicPublish.readTable(spark, root, "patients")
+        .as[(Long, String)].collect().toSet == Set((1L, "a")), name)
+      ok()
+      assert(AtomicPublish.currentTxn(spark, root) != before, name)
+      assert(leftovers(root).isEmpty, s"$name: ${leftovers(root)}")
     }
-    // the transaction observable: pointer, data, and table SET all intact
-    assert(AtomicPublish.currentTxn(spark, root).contains(v1))
-    val pat = AtomicPublish.readTable(spark, root, "patients")
-      .as[(Long, String)].collect().toSet
-    assert(pat == Set((1L, "a")))
-    assert(AtomicPublish.readTable(spark, root, "consents").count() == 1)
+  }
+
+  test("a manifest without a schema record is refused by name") {
+    val root = freshRoot()
+    val v1 = AtomicPublish.publish(spark, root,
+      Map("t" -> Seq(1L).toDF("id")))
+    ManifestRewrite(root)(_.linesIterator
+      .filterNot(_.startsWith("#schema:")).mkString("\n"))
+    val e = intercept[IllegalStateException](
+      AtomicPublish.readTable(spark, root, "t"))
+    assert(e.getMessage.contains(v1) && e.getMessage.contains("'t'"),
+      e.getMessage)
   }
 
   test("no torn state before the first publish: failure leaves root unreadable") {

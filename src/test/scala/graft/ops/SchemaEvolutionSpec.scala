@@ -45,7 +45,7 @@ class SchemaEvolutionSpec extends SparkSuite {
       parent = Some(v1))
     val txn = AtomicPublish.currentTxn(spark, root).get
     val recorded = AtomicPublish.manifestMetaOf(spark, root, txn)("t")
-      .schema.get
+      .schema
     assert(recorded("id").dataType ==
       org.apache.spark.sql.types.LongType)
     // both segments read under the WIDER type — the int32 files promote
@@ -101,7 +101,7 @@ class SchemaEvolutionSpec extends SparkSuite {
       parent = Some(v1))
     val txn = AtomicPublish.currentTxn(spark, root).get
     assert(AtomicPublish.manifestMetaOf(spark, root, txn)("t")
-      .schema.get("x").dataType == org.apache.spark.sql.types.DoubleType)
+      .schema("x").dataType == org.apache.spark.sql.types.DoubleType)
     val hits = AtomicPublish.readTableWhere(spark, root, "t",
       "x >= 0.30000001").collect()
     assert(hits.map(_.getLong(0)).toSet == Set(1L, 3L),
@@ -219,7 +219,7 @@ class SchemaEvolutionSpec extends SparkSuite {
     val cat = mount(root)
     spark.sql(s"ALTER TABLE $cat.docs RENAME COLUMN words TO n_words")
     val meta = AtomicPublish.currentManifestMeta(spark, root).get._2("docs")
-    assert(meta.schema.get.fieldNames.toSeq ==
+    assert(meta.schema.fieldNames.toSeq ==
       Seq("doc_id", "lang", "n_words"))
     assert(meta.statCols == Seq("n_words"), "stat layout did not follow")
     assert(meta.numBuckets == 4 && meta.bucketCols == Seq("doc_id"))
@@ -256,7 +256,7 @@ class SchemaEvolutionSpec extends SparkSuite {
       "name => 'pos')").collect()
     spark.sql(s"ALTER TABLE $cat.docs DROP COLUMN words")
     val meta = AtomicPublish.currentManifestMeta(spark, root).get._2("docs")
-    assert(meta.schema.get.fieldNames.toSeq == Seq("doc_id", "lang"))
+    assert(meta.schema.fieldNames.toSeq == Seq("doc_id", "lang"))
     assert(spark.sql(s"SELECT count(*) FROM $cat.docs")
       .head().getLong(0) == 49) // the rewrite consumed the tombstone
     // RENAME of the delete key is refused too

@@ -290,7 +290,7 @@ class StoreDmlSpec extends SparkSuite {
     assert(owners(root, "c").size == before.size + 1)
     // the tombstone companion pinned the two-column key
     val delSchema = AtomicPublish.currentManifestMeta(spark, root).get
-      ._2(AtomicPublish.deleteTableOf("c")).schema.get
+      ._2(AtomicPublish.deleteTableOf("c")).schema
     assert(delSchema.fieldNames.toSet == Set("a", "b", "_asof"))
   }
 
@@ -305,7 +305,7 @@ class StoreDmlSpec extends SparkSuite {
     assert(got.size == 19)
     assert(owners(root, "c") == before, "O(keys) delete: no rewrite")
     val delSchema = AtomicPublish.currentManifestMeta(spark, root).get
-      ._2(AtomicPublish.deleteTableOf("c")).schema.get
+      ._2(AtomicPublish.deleteTableOf("c")).schema
     assert(delSchema.fieldNames.toSet == Set("a", "b", "_asof"))
     // a later delete keyed by a DIFFERENT single column projects its
     // matching rows onto the established composite key — exact here

@@ -50,7 +50,7 @@ class StoreLayoutSpec extends SparkSuite {
     // recorded meta round-trips
     val meta = AtomicPublish.manifestMetaOf(spark, root, txn)("idx")
     assert(meta.partitionCols == Seq("cell"))
-    assert(meta.schema.get.fieldNames.toSeq == Seq("id", "payload", "cell"))
+    assert(meta.schema.fieldNames.toSeq == Seq("id", "payload", "cell"))
   }
 
   /** Executed-plan file count of the (non-AQE) store scan — the
@@ -100,7 +100,7 @@ class StoreLayoutSpec extends SparkSuite {
     assert(one.count() == 1 && scannedFiles(one) == 1)
     val meta = AtomicPublish.manifestMetaOf(spark, root, txn)("ev")
     assert(meta.partitionCols == Seq("days(ts)"))
-    assert(meta.schema.get.fieldNames.toSeq == Seq("id", "ts", "payload"))
+    assert(meta.schema.fieldNames.toSeq == Seq("id", "ts", "payload"))
   }
 
   test("TIMESTAMP_NTZ source (ADVICE-r8): days()/hours() derive " +
@@ -227,7 +227,7 @@ class StoreLayoutSpec extends SparkSuite {
     spark.sql(s"ALTER TABLE $cat.t ALTER COLUMN id TYPE BIGINT")
     spark.sql(s"ALTER TABLE $cat.t ALTER COLUMN x TYPE DOUBLE")
     val recorded = AtomicPublish.currentManifestMeta(spark, root)
-      .get._2("t").schema.get
+      .get._2("t").schema
     assert(recorded("id").dataType == org.apache.spark.sql.types.LongType)
     assert(recorded("x").dataType == org.apache.spark.sql.types.DoubleType)
     // the pre-widen int/float files read promoted; new wide rows land
@@ -450,7 +450,7 @@ class StoreLayoutSpec extends SparkSuite {
     val (ctxn, _) = Compaction.compactStore(spark, root, "t")
     val meta = AtomicPublish.manifestMetaOf(spark, root, ctxn)("t")
     assert(meta.owners == Seq(ctxn))
-    assert(meta.schema.get.fieldNames.toSeq == Seq("id", "name", "score"))
+    assert(meta.schema.fieldNames.toSeq == Seq("id", "name", "score"))
     assert(AtomicPublish.readTable(spark, root, "t").count() == 4)
   }
 

@@ -25,27 +25,6 @@ class StoreStatsSpec extends SparkSuite {
   private val binRe = s"\\[$numRe,$numRe,$numRe\\]"
   private val histRe = s",\\[$numRe,\\[$binRe(?:,$binRe)*\\]\\]"
 
-  /** Rewrite every manifest copy (per-version `_MANIFEST` AND the root
-    * `_CURRENT`, which carries the same content) under `storeRoot`,
-    * dropping Hadoop's checksum sidecars so local-FS reads don't fail
-    * on ChecksumException. */
-  private def rewriteManifests(storeRoot: String)(f: String => String)
-      : Unit = {
-    val rootDir = new java.io.File(storeRoot)
-    val files = (Option(rootDir.listFiles).getOrElse(Array.empty)
-      .filter(_.isDirectory).map(d => new java.io.File(d, "_MANIFEST")) :+
-      new java.io.File(rootDir, "_CURRENT")).filter(_.isFile)
-    assert(files.nonEmpty)
-    files.foreach { file =>
-      val txt = new String(
-        java.nio.file.Files.readAllBytes(file.toPath), "UTF-8")
-      java.nio.file.Files.write(file.toPath, f(txt).getBytes("UTF-8"))
-      val crc = new java.io.File(file.getParentFile, "." + file.getName +
-        ".crc")
-      if (crc.isFile) { crc.delete(); () }
-    }
-  }
-
   private lazy val root: String = {
     val tmp = java.nio.file.Files.createTempDirectory("graft-statspec")
     sys.addShutdownHook {
@@ -228,7 +207,7 @@ class StoreStatsSpec extends SparkSuite {
       }
     }
     copyDir(JPath.of(r), JPath.of(rCtl))
-    rewriteManifests(rCtl)(_.replaceAll(s"($histRe)\\]", "]"))
+    ManifestRewrite(rCtl)(_.replaceAll(s"($histRe)\\]", "]"))
     val ctlMeta = AtomicPublish.manifestMetaOf(spark, rCtl,
       AtomicPublish.currentTxn(spark, rCtl).get)("dim")
     val ctlStats = ctlMeta.owners.flatMap(ctlMeta.segStats.get)
@@ -329,7 +308,7 @@ class StoreStatsSpec extends SparkSuite {
       }
     }
     copyDir(JPath.of(r), JPath.of(rCtl))
-    rewriteManifests(rCtl)(_.replaceAll(s"($histRe)\\]", "]"))
+    ManifestRewrite(rCtl)(_.replaceAll(s"($histRe)\\]", "]"))
 
     def join1(at: String): DataFrame =
       AtomicPublish.readTable(spark, at, "fact")
@@ -801,7 +780,7 @@ class StoreStatsSpec extends SparkSuite {
     // the r12 tail first (histograms ride behind NDV positionally),
     // then the r11 tail — landing on the r10 3-entry grammar
     val pat = """(\[(?:"(?:[^"\\]|\\.)*"|null),(?:"(?:[^"\\]|\\.)*"|null),\d+),\d+\]""".r
-    rewriteManifests(root) { txt =>
+    ManifestRewrite(root) { txt =>
       val noHist = txt.replaceAll(s"($histRe)\\]", "]")
       pat.replaceAllIn(noHist, m => java.util.regex.Matcher
         .quoteReplacement(m.group(1) + "]"))

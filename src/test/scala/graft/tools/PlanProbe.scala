@@ -1,34 +1,34 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
-/** Scratch plan probe (test scope, not shipped): prints exchange /
-  * reuse / scan counts for the plans under restructuring study. */
+/** Plan probe (test scope, not shipped): prints the optimized and the
+  * physical plan of every declared query ([[graft.SparkEntry.queries]])
+  * whose name starts with a prefix, in name order — run it on two
+  * checkouts and diff the output to show a change left the plans alone.
+  *
+  * {{{
+  * sbt "Test/runMain graft.tools.PlanProbe <data dir> <name prefix>"
+  * }}} */
 object PlanProbe {
   def main(args: Array[String]): Unit = {
+    require(args.length == 2,
+      "usage: PlanProbe <data dir> <query-name prefix>")
+    val Array(dir, prefix) = args
     val spark = SparkSession.builder()
       .master("local[8]")
       .config("spark.sql.shuffle.partitions", 8)
       .config("spark.ui.enabled", false)
       .getOrCreate()
-    val dir = "/root/testdata/sf0.001"
-    for ((name, df) <- Seq(
-        "sp9" -> graft.analytics.TextOps.sp9DsirSelect(spark, dir),
-        "n11" -> graft.analytics.DedupOps.n11DupSpans(spark, dir))) {
-      df.collect()
-      val p = df.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case o => o
-      }
-      val s = p.toString
+    val selected = graft.SparkEntry.queries.toSeq
+      .filter(_._1.startsWith(prefix)).sortBy(_._1)
+    for ((name, query) <- selected) {
+      val qe = query(spark, dir).queryExecution
       println(s"=== $name ===")
-      println("exchanges: " +
-        "Exchange (hash|range|SinglePartition)".r.findAllIn(s).length)
-      println("reused:    " + "ReusedExchange".r.findAllIn(s).length)
-      println("scans:     " + "Scan parquet".r.findAllIn(s).length)
-      println("generates: " + "Generate ".r.findAllIn(s).length)
-      println(s)
+      println("--- optimized ---")
+      println(qe.optimizedPlan)
+      println("--- physical ---")
+      println(qe.executedPlan)
     }
     spark.stop()
   }
