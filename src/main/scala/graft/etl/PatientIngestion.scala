@@ -21,8 +21,13 @@ import graft.ops.{AesCodec, Crypto, Validation}
   *  2. `ingest(...)`: the set-oriented scale path — ONE annotated lineage;
   *     the valid/consented/transformed splits are filters over it and all
   *     five stage counts come from a single aggregate pass (map-side
-  *     partial agg), so a 100 TB ingest does one scan + one count-agg +
-  *     one write, no driver-side loops.
+  *     partial agg), with no driver-side loops. The splits are lazy, so
+  *     the count aggregate and every output written from this lineage
+  *     re-read and re-validate the raw batch: a bulk batch committed as
+  *     patients, quarantine, audit_log and pipeline_runs runs 11 Spark
+  *     jobs and reads the raw batch 4 times (the count aggregate, then
+  *     the patients, quarantine and audit_log writes). Taking the counts
+  *     from the write pass instead is ROADMAP.md Open item 2.
   *
   * Stage semantics preserved from the reference:
   *  - validation quarantines, never halts (pipeline.py:44-61);

@@ -1045,6 +1045,9 @@ object AtomicPublish {
     * abort removed it. */
   private def awaitTasks(sc: org.apache.spark.SparkContext,
       tag: String): Unit = {
+    // the tracker lags the scheduler: without the drain, a tagged job or
+    // a sibling task that started before the failure can read as absent
+    org.apache.spark.sql.graftplan.PlanBridge.drainListenerBus(sc, 30000L)
     val st = sc.statusTracker
     val stages = st.getJobIdsForTag(tag).toSeq
       .flatMap(st.getJobInfo(_)).flatMap(_.stageIds())

@@ -29,48 +29,75 @@ import org.apache.spark.sql.functions.udf
   * The UDFs are `asNondeterministic` — a fresh random IV per call means
   * Catalyst must not constant-fold, common-subexpression-eliminate, or
   * re-execute them assuming stable output. Never in `oracleSql` queries.
+  *
+  * Per-value cost: the UDF runs once per PHI value (about two million
+  * values per million-record batch), so nothing is built per value. The
+  * `SecretKeySpec` is built once per codec instance (transient: the closure
+  * Spark ships carries only the key bytes), and each thread keeps one
+  * `Cipher` and one CSPRNG (`AesCodec.cipher`, `AesCodec.rng`), re-keyed
+  * and re-IV'd by `init` on every call. A thread-confined `Cipher` is never
+  * shared; a per-thread DRBG instead of the default `NativePRNG` keeps task
+  * threads from serializing on that provider's one global lock.
+  *
+  * Key lifetime: with 96-bit random IVs, NIST SP 800-38D §8.3 caps one key
+  * at about 2^32 encryptions (IV-collision probability ≤ 2^-32). A store
+  * that outgrows that under one key rotates to per-batch data keys with
+  * [[EnvelopeCrypto]], which gives each write batch a fresh key.
   */
 final case class AesCodec(keyBytes: Array[Byte]) extends Serializable {
   require(Set(16, 24, 32).contains(keyBytes.length),
     s"AES key must be 16/24/32 bytes, got ${keyBytes.length}")
 
-  private val GcmTagBits = 128
-  private val IvLen = 12
+  import AesCodec.{GcmTagBits, IvLen, TagLen}
+
+  @transient private lazy val key = new SecretKeySpec(keyBytes, "AES")
 
   def encrypt(plaintext: String): String =
     if (plaintext == null || plaintext.isEmpty) plaintext
     else {
-      val iv = new Array[Byte](IvLen)
-      // ThreadLocal SecureRandom: Cipher init is per-call; executors run
-      // many task threads.
-      AesCodec.rng.get().nextBytes(iv)
-      val cipher = Cipher.getInstance("AES/GCM/NoPadding")
-      cipher.init(Cipher.ENCRYPT_MODE, new SecretKeySpec(keyBytes, "AES"),
-        new GCMParameterSpec(GcmTagBits, iv))
-      val ct = cipher.doFinal(plaintext.getBytes(UTF_8))
-      Base64.getEncoder.encodeToString(iv ++ ct)
+      val pt = plaintext.getBytes(UTF_8)
+      val iv = AesCodec.randomBytes(IvLen)
+      val cipher = AesCodec.cipher.get()
+      cipher.init(Cipher.ENCRYPT_MODE, key, new GCMParameterSpec(GcmTagBits, iv))
+      // iv ‖ ciphertext ‖ tag in one buffer
+      val out = new Array[Byte](IvLen + pt.length + TagLen)
+      System.arraycopy(iv, 0, out, 0, IvLen)
+      cipher.doFinal(pt, 0, pt.length, out, IvLen)
+      Base64.getEncoder.encodeToString(out)
     }
 
   def decrypt(ciphertext: String): String =
     if (ciphertext == null || ciphertext.isEmpty) ciphertext
     else {
       val raw = Base64.getDecoder.decode(ciphertext)
-      val cipher = Cipher.getInstance("AES/GCM/NoPadding")
-      cipher.init(Cipher.DECRYPT_MODE, new SecretKeySpec(keyBytes, "AES"),
-        new GCMParameterSpec(GcmTagBits, raw.take(IvLen)))
-      new String(cipher.doFinal(raw.drop(IvLen)), UTF_8)
+      val cipher = AesCodec.cipher.get()
+      cipher.init(Cipher.DECRYPT_MODE, key,
+        new GCMParameterSpec(GcmTagBits, raw, 0, IvLen))
+      new String(cipher.doFinal(raw, IvLen, raw.length - IvLen), UTF_8)
     }
 }
 
 object AesCodec {
-  private val rng = ThreadLocal.withInitial[SecureRandom](() => new SecureRandom())
+  private val GcmTagBits = 128
+  private val TagLen = GcmTagBits / 8
+  private val IvLen = 12
+
+  private val cipher =
+    ThreadLocal.withInitial[Cipher](() => Cipher.getInstance("AES/GCM/NoPadding"))
+  private val rng =
+    ThreadLocal.withInitial[SecureRandom](() => SecureRandom.getInstance("DRBG"))
+
+  /** `n` bytes from this thread's CSPRNG: the one source of every IV and
+    * generated key in this file. */
+  private[ops] def randomBytes(n: Int): Array[Byte] = {
+    val b = new Array[Byte](n); rng.get().nextBytes(b); b
+  }
 
   /** Env-sourced key or generated dev key (reference encryption.py:18-26). */
   def fromEnv(): AesCodec =
     sys.env.get("PHI_ENCRYPTION_KEY").filter(_.nonEmpty) match {
       case Some(b64) => AesCodec(Base64.getDecoder.decode(b64))
-      case None =>
-        val k = new Array[Byte](32); rng.get().nextBytes(k); AesCodec(k)
+      case None => AesCodec(randomBytes(32))
     }
 }
 
@@ -110,8 +137,7 @@ object EnvelopeCrypto {
 
   /** Fresh data key + its wrapped form under `master`. */
   def newEnvelope(master: AesCodec): (Envelope, AesCodec) = {
-    val dk = new Array[Byte](32)
-    new SecureRandom().nextBytes(dk)
+    val dk = AesCodec.randomBytes(32)
     val wrapped = master.encrypt(Base64.getEncoder.encodeToString(dk))
     (Envelope(java.util.UUID.randomUUID().toString, wrapped), AesCodec(dk))
   }

@@ -27,4 +27,12 @@ object PlanBridge {
       .copy(catalogTable = Some(table))
     ofRows(spark, lr)
   }
+
+  /** Block (bounded) until every listener event posted so far has been
+    * delivered, so `SparkStatusTracker` (fed from those events) knows
+    * every job and task started before this call. The listener bus is
+    * `private[spark]`. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext, timeoutMs: Long): Unit =
+    try sc.listenerBus.waitUntilEmpty(timeoutMs)
+    catch { case _: java.util.concurrent.TimeoutException => () }
 }
