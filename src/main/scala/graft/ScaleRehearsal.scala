@@ -171,26 +171,42 @@ object ScaleRehearsal {
       (1 to reps).map(_ => timed(f)._2).min
     val totalFiles = AtomicPublish.readTable(spark, root, "docs")
       .inputFiles.length
+    // files the EXECUTED scans read (after `df` ran), through AQE stages
+    def scannedFilesOf(df: DataFrame): Long = {
+      def go(p: org.apache.spark.sql.execution.SparkPlan): Long =
+        p.collect {
+          case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+            f.metrics("numFiles").value
+          case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+            go(q.plan)
+        }.sum
+      df.queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive
+            .AdaptiveSparkPlanExec => go(a.executedPlan)
+        case p => go(p)
+      }
+    }
     val pointIds = Seq(n / 7, n / 3, (9L * n) / 10)
     val pointSec = minOf {
       pointIds.foreach { id =>
-        val q = AtomicPublish.readTableWhere(spark, root, "docs",
-          s"rid = $id")
-        require(q.inputFiles.length <= 2,
-          s"point read planned ${q.inputFiles.length} of $totalFiles files")
-        require(q.count() == 1, s"point read rid=$id lost its row")
+        val q = AtomicPublish.readTable(spark, root, "docs")
+          .where(s"rid = $id")
+        require(q.collect().length == 1, s"point read rid=$id lost its row")
+        val files = scannedFilesOf(q)
+        require(files <= 2, s"point read read $files of $totalFiles files")
       }
     }
     val lo = n / 2; val hi = lo + n / 100
     val rangeSec = minOf {
-      val q = AtomicPublish.readTableWhere(spark, root, "docs",
-        s"rid >= $lo AND rid < $hi")
-      require(q.inputFiles.length * 20 <= totalFiles,
-        s"1% range read planned ${q.inputFiles.length} of $totalFiles files")
-      require(q.count() == hi - lo, "range read row count off")
+      val q = AtomicPublish.readTable(spark, root, "docs")
+        .where(s"rid >= $lo AND rid < $hi")
+      require(q.collect().length == hi - lo, "range read row count off")
+      val files = scannedFilesOf(q)
+      require(files * 20 <= totalFiles,
+        s"1% range read read $files of $totalFiles files")
     }
     // --- the CATALOG face at the same history: a three-part-name SQL
-    // point read must prune exactly like the side-channel above (the
+    // point read must prune exactly like the DataFrame read above (the
     // probe exposes the inner plan's listed-file count — at a
     // 1000-segment history an unpruned catalog read would be ~500×
     // this work, so the assertion IS the scale claim)
@@ -219,20 +235,6 @@ object ScaleRehearsal {
     // with ZERO files read ([[graft.ops.MetadataAggregates]]); the
     // identical aggregate with the rewrite disabled really scans —
     // equal answers required, the wall-clock gap is the claim
-    def scannedFilesOf(df: DataFrame): Long = {
-      def go(p: org.apache.spark.sql.execution.SparkPlan): Long =
-        p.collect {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-            f.metrics("numFiles").value
-          case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-            go(q.plan)
-        }.sum
-      df.queryExecution.executedPlan match {
-        case a: org.apache.spark.sql.execution.adaptive
-            .AdaptiveSparkPlanExec => go(a.executedPlan)
-        case p => go(p)
-      }
-    }
     def totalsDf(): DataFrame = AtomicPublish.readTable(spark, root, "docs")
       .agg(count(lit(1)).as("c"), min(col("rid")).as("mn"),
         max(col("rid")).as("mx"))

@@ -675,9 +675,9 @@ object AdvancedQueries {
     * three INTERLEAVED segments (each spans the full id range: blooms,
     * not ranges, separate them) of two range-files each (file-level
     * zone maps active), with a deterministic id slice DELETED via
-    * merge-on-read tombstones; the query is a `readTableWhere` range
-    * read with every skipping layer + the tombstone anti-join in the
-    * plan. The DuckDB oracle never sees the store — it filters the
+    * merge-on-read tombstones; the query is a `readTable(...).where`
+    * range read with every skipping layer + the tombstone anti-join in
+    * the plan. The DuckDB oracle never sees the store — it filters the
     * SOURCE table — so the hash-match proves the whole
     * stage → publish → delete → pruned-read lifecycle is lossless.
     * Staging is memoized on the source fingerprint (set3's pattern);
@@ -687,8 +687,8 @@ object AdvancedQueries {
     val root = Tables.memoFresh(store1Cache, spark, dir, "documents") {
       stageStore1(spark, dir)
     }
-    AtomicPublish.readTableWhere(spark, root, "documents",
-      "doc_id BETWEEN 12 AND 340")
+    AtomicPublish.readTable(spark, root, "documents")
+      .where("doc_id BETWEEN 12 AND 340")
       .select(col("doc_id"), col("lang"),
         length(col("text")).cast("long").as("n_chars"))
       .orderBy(col("doc_id"))
@@ -698,11 +698,10 @@ object AdvancedQueries {
     * the query goes through [[graft.ops.AtomicPublish.registerViews]]
     * and a plain SQL `WHERE`, so the predicate reaches the skipping
     * layers via Catalyst pushdown into [[graft.ops.GraftFileIndex]]
-    * (segment zone maps, file maps, blooms, tombstone anti-join — no
-    * `readTableWhere` side-channel anywhere). Same oracle posture as
-    * store1: DuckDB filters the SOURCE table, so a hash match proves
-    * the lazy pushdown path is lossless too. File-subset equivalence
-    * of this path vs the eager one is pinned in StoreConnectorSpec. */
+    * (segment zone maps, file maps, blooms, tombstone anti-join). Same
+    * oracle posture as store1: DuckDB filters the SOURCE table, so a
+    * hash match proves the SQL face is lossless too. The files this
+    * face reads are pinned in StoreConnectorSpec. */
   def store2SqlPushdown(spark: SparkSession, dir: String): DataFrame = {
     import graft.ops.AtomicPublish
     val root = Tables.memoFresh(store1Cache, spark, dir, "documents") {

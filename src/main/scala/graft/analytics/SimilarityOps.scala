@@ -51,21 +51,14 @@ object SimilarityOps {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", norm(col("v")))
 
-  /** Corpus-keyed [[Tables.memoFresh]] (fingerprint of the embeddings
-    * table decides freshness — a corpus rewritten in place invalidates
-    * the memoized codebook instead of silently serving a model trained
-    * on the old data). */
-  private def memoFresh[V](cache: scala.collection.concurrent.TrieMap[String, (String, V)],
-      spark: SparkSession, dir: String)(compute: => V): V =
-    Tables.memoFresh(cache, spark, dir, "embeddings")(compute)
-
   /** Corpus row count per directory, memoized (fingerprint-fresh) — one
     * metadata-cheap count job per corpus generation per JVM suffices
     * (n3b and n5 in the same session share it). */
   private val countCache =
     scala.collection.concurrent.TrieMap.empty[String, (String, Long)]
   private def corpusCount(spark: SparkSession, dir: String): Long =
-    memoFresh(countCache, spark, dir)(Tables.embeddings(spark, dir).count())
+    Tables.memoFresh(countCache, spark, dir, "embeddings")(
+      Tables.embeddings(spark, dir).count())
 
   /** N3: exact cosine top-10 neighbors for each query vector
     * (vec_id < 32), ties broken by neighbor id. */
@@ -419,7 +412,7 @@ object SimilarityOps {
     .empty[String, (String, Seq[(Int, Seq[Double])])]
   private def trainedCentroidRows(spark: SparkSession,
       dir: String): Seq[(Int, Seq[Double])] =
-    memoFresh(centCache, spark, dir) {
+    Tables.memoFresh(centCache, spark, dir, "embeddings") {
       val n = corpusCount(spark, dir)
       val cells = ivfCellsFor(n)
       ivfCentroidsCapped(corpus(spark, dir), cells, ivfLloydStride(n, cells))
@@ -575,7 +568,7 @@ object SimilarityOps {
     .empty[String, (String, (Seq[(Int, Seq[Double])], Seq[(Int, Int)]))]
   private def trainedSupercellRows(spark: SparkSession, dir: String)
       : (Seq[(Int, Seq[Double])], Seq[(Int, Int)]) =
-    memoFresh(supercellCache, spark, dir) {
+    Tables.memoFresh(supercellCache, spark, dir, "embeddings") {
       val (superCents, cellMap) = ivfSupercells(trainedCentroids(spark, dir))
       (superCents.collect().map(r => (r.getInt(0), r.getSeq[Double](1)))
         .sortBy(_._1).toSeq,
@@ -686,7 +679,7 @@ object SimilarityOps {
   private val splitCache =
     scala.collection.concurrent.TrieMap.empty[String, (String, Long)]
   def ivfSplitPoint(spark: SparkSession, dir: String): Long =
-    memoFresh(splitCache, spark, dir) {
+    Tables.memoFresh(splitCache, spark, dir, "embeddings") {
       corpus(spark, dir)
         .agg(floor(max(col("vec_id")) / 2).cast("long")).head().getLong(0)
     }
@@ -700,7 +693,7 @@ object SimilarityOps {
     .empty[String, (String, Seq[(Int, Seq[Double])])]
   private def publishedCentroidRows(spark: SparkSession,
       dir: String): Seq[(Int, Seq[Double])] =
-    memoFresh(pubCentCache, spark, dir) {
+    Tables.memoFresh(pubCentCache, spark, dir, "embeddings") {
       val split = ivfSplitPoint(spark, dir)
       val pub = corpus(spark, dir).filter(col("vec_id") < split)
       val n = pub.count()
@@ -755,7 +748,7 @@ object SimilarityOps {
   private val storeCache =
     scala.collection.concurrent.TrieMap.empty[String, (String, String)]
   def publishedIndexRoot(spark: SparkSession, dir: String): String =
-    memoFresh(storeCache, spark, dir) {
+    Tables.memoFresh(storeCache, spark, dir, "embeddings") {
       val split = ivfSplitPoint(spark, dir)
       val cents = publishedCentroids(spark, dir)
       val pub = corpus(spark, dir).filter(col("vec_id") < split)
@@ -925,7 +918,7 @@ object SimilarityOps {
     .empty[String, (String, Seq[(Int, Int, Seq[Double], Double)])]
   def trainedPqCodebookRows(spark: SparkSession,
       dir: String): Seq[(Int, Int, Seq[Double], Double)] =
-    memoFresh(pqBookCache, spark, dir) {
+    Tables.memoFresh(pqBookCache, spark, dir, "embeddings") {
       val n = corpusCount(spark, dir)
       val cells = ivfCellsFor(n)
       pqCodebooks(corpus(spark, dir), ivfLloydStride(n, cells))
@@ -947,7 +940,7 @@ object SimilarityOps {
   private val pqStoreCache =
     scala.collection.concurrent.TrieMap.empty[String, (String, String)]
   def publishedPqRoot(spark: SparkSession, dir: String): String =
-    memoFresh(pqStoreCache, spark, dir) {
+    Tables.memoFresh(pqStoreCache, spark, dir, "embeddings") {
       val books = trainedPqCodebooks(spark, dir)
       val assigned = ivfAssignments(spark, dir)
       val coded = pqEncode(corpus(spark, dir), books)

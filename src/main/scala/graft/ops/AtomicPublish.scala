@@ -1172,20 +1172,14 @@ object AtomicPublish {
     commitInfoOf(spark, root, txn).flatMap(_.op)
 
   /** The commit chain from `sinceTxn` (EXCLUSIVE) to `at` (inclusive),
-    * oldest first, each txn with its dataChange flag — walked BACKWARD
-    * via the `parent=` links commit markers record. None when a link
-    * is missing (a pre-link marker, or the best-effort marker write
-    * failed) or the walk does not reach `sinceTxn`: callers fall back
-    * to the endpoint-diff behavior (resync on a rewrite). O(interval)
-    * marker reads, no manifest or data access. */
-  private[ops] def chainBetween(spark: SparkSession, root: String,
-      sinceTxn: String, at: String): Option[Seq[(String, Boolean)]] =
-    chainInfos(spark, root, sinceTxn, at)
-      .map(_.map { case (t, ci) => (t, ci.dataChange) })
-
-  /** [[chainBetween]] carrying each commit's FULL marker info — the
-    * change feeds need `cdfTables` alongside the dataChange flag to
-    * ride staged rewrites. */
+    * oldest first, each txn with its FULL marker info (the change feeds
+    * need `cdfTables` alongside the dataChange flag to ride staged
+    * rewrites) — walked BACKWARD via the `parent=` links commit markers
+    * record. None when a link is missing (a pre-link marker, or the
+    * best-effort marker write failed) or the walk does not reach
+    * `sinceTxn`: callers fall back to the endpoint-diff behavior
+    * (resync on a rewrite). O(interval) marker reads, no manifest or
+    * data access. */
   private[ops] def chainInfos(spark: SparkSession, root: String,
       sinceTxn: String, at: String)
       : Option[Seq[(String, CommitInfo)]] = {
@@ -2083,12 +2077,6 @@ object AtomicPublish {
     * whose filter reports mightContain(v) false for EVERY candidate
     * cannot hold a matching row. ~1% false-positive rate means ~1% of
     * history segments are read needlessly — never skipped wrongly. */
-  private def pruneOwnersBloom(spark: SparkSession, root: String,
-      table: String, meta: TableMeta, keep: Seq[String],
-      where: String): Seq[String] =
-    pruneOwnersBloomExpr(spark, root, table, meta, keep,
-      spark.sessionState.sqlParser.parseExpression(where))
-
   private[ops] def pruneOwnersBloomExpr(spark: SparkSession, root: String,
       table: String, meta: TableMeta, keep: Seq[String],
       pred: org.apache.spark.sql.catalyst.expressions.Expression)
@@ -3683,12 +3671,12 @@ object AtomicPublish {
     * [[GraftFileIndex]]-backed relation per partition-layout class (not
     * a per-segment union): any filter Catalyst later pushes down reaches
     * [[GraftFileIndex.listFiles]], where partition pruning, segment/file
-    * zone maps and bloom sidecars all fire — `readTable(...).filter`
-    * and the SQL face skip exactly like [[readTableWhere]]. */
+    * zone maps and bloom sidecars all fire — `readTable(...).where(w)`
+    * and the SQL face decide their files there, once, at scan
+    * planning. */
   private def readSegments(spark: SparkSession, root: String, table: String,
       meta: TableMeta, owners: Seq[String]): DataFrame =
-    GraftFileIndex.relationFor(spark, root, table, meta,
-      owners.map(_ -> None))
+    GraftFileIndex.relationFor(spark, root, table, meta, owners)
 
   // --- row-level deletes (merge-on-read tombstones) ----------------------------
 
@@ -4016,14 +4004,22 @@ object AtomicPublish {
       // can carry millions of keys: size the frame from the plan's
       // byte estimate (the Compaction.partitionsFor rule) instead of
       // funnelling through one task, clamped so the usual tiny frame
-      // still lands as a single file
-      val estBytes = u.keys.queryExecution.optimizedPlan.stats
-        .sizeInBytes.min(BigInt(Long.MaxValue)).toLong
-      val keyParts = math.min(256,
-        Compaction.partitionsFor(estBytes, 64L * 1024 * 1024))
-      deleteTableOf(t) -> u.keys
-        .withColumn(TombAsofCol, lit(meta.owners.size))
-        .repartition(keyParts)
+      // still lands as a single file. A plan over a source Spark cannot
+      // size (an RDD-built batch) reports the session default for that
+      // leaf — no estimate at all — and the frame keeps its own
+      // partitioning (capped by coalescing, no shuffle): at most as
+      // many files as the key frame has partitions, instead of a
+      // 256-way split of a 1,000-key API batch
+      val maxParts = 256
+      val plan = u.keys.queryExecution.optimizedPlan
+      val unsized = plan.collectLeaves().exists(_.stats.sizeInBytes >=
+        spark.sessionState.conf.defaultSizeInBytes)
+      val stamped = u.keys.withColumn(TombAsofCol, lit(meta.owners.size))
+      deleteTableOf(t) -> (
+        if (unsized) stamped.coalesce(maxParts)
+        else stamped.repartition(math.min(maxParts, Compaction.partitionsFor(
+          plan.stats.sizeInBytes.min(BigInt(Long.MaxValue)).toLong,
+          64L * 1024 * 1024))))
     }
     publishDelta(spark, root,
       append = upserts.map { case (t, u) => t -> u.rows } ++ tombs ++
@@ -4032,14 +4028,6 @@ object AtomicPublish {
       opLabel = opLabel.orElse(
         Some("UPSERT " + upserts.keys.toSeq.sorted.mkString(","))))
   }
-
-  /** Single-table [[upsertMany]]: keys derived from the slice itself.
-    * Keys should be unique within `rows` (duplicates all survive, like
-    * any append). */
-  def upsertRows(spark: SparkSession, root: String, table: String,
-      rows: DataFrame, keyCol: String): String =
-    upsertMany(spark, root,
-      Map(table -> Upsert(rows, rows.select(keyCol).distinct())))
 
   /** Read a table from the CURRENT version — the only resolution path
     * readers use, so partially-published data is unreachable. A reader
@@ -4243,10 +4231,10 @@ object AtomicPublish {
     pruneOwnersExpr(spark, meta, meta.owners,
       spark.sessionState.sqlParser.parseExpression(where))
 
-  /** [[pruneOwners]] over an explicit candidate set and an already-parsed
-    * (or Catalyst-pushed, resolved) predicate — the entry point
-    * [[GraftFileIndex.listFiles]] uses, so DataFrame/SQL filter pushdown
-    * and the eager string API share ONE pruning engine. */
+  /** [[pruneOwners]] over an explicit candidate set and a
+    * Catalyst-pushed, resolved predicate — the segment layer of
+    * [[GraftFileIndex.listFiles]], the one place a store read decides
+    * its files. */
   private[ops] def pruneOwnersExpr(spark: SparkSession, meta: TableMeta,
       candidates: Seq[String],
       pred: org.apache.spark.sql.catalyst.expressions.Expression)
@@ -4255,6 +4243,10 @@ object AtomicPublish {
     pruneEntries(spark, meta.schema, meta.statCols,
       candidates.map(o => o -> meta.segStats.get(o)), pred)
   }
+
+  /** Separator between owner and relative file path in composite
+    * file-pruning keys — NUL cannot appear in a filesystem path. */
+  private val FileKeySep = "\u0000"
 
   /** File-level zone-map pruning for every owner of `owners` that
     * carries a non-empty per-file map: owner → surviving relative paths
@@ -4321,70 +4313,6 @@ object AtomicPublish {
       typed.map(c => c -> schema(c).dataType).toMap)
     decoded.filter(canMatch).select("__owner").collect().map(_.getString(0))
       .toSeq
-  }
-
-  /** [[readTable]] with ZONE-MAP SEGMENT SKIPPING: resolves the live
-    * manifest, drops every owner segment whose recorded min/max/null
-    * stats prove it cannot satisfy `where` (a SQL boolean expression
-    * over the table's columns), reads only the survivors and applies
-    * the full predicate to them. Semantically identical to
-    * `readTable(...).where(where)` — the zone map only removes whole
-    * segments the predicate provably rejects, the way a time-ordered
-    * ingest history answers a recency or key-range query by touching a
-    * handful of its thousands of segments. */
-  def readTableWhere(spark: SparkSession, root: String, table: String,
-      where: String): DataFrame = {
-    val (txn, metas) = currentManifestMeta(spark, root).getOrElse(
-      throw new IllegalStateException(s"no published version under $root"))
-    val meta = metas.getOrElse(table,
-      throw new IllegalArgumentException(
-        s"table '$table' is not in version $txn under $root"))
-    applyTombstones(spark, root, table, metas,
-      readSegmentsWhere(spark, root, table, meta, where))
-  }
-
-  /** [[readTableAt]] with zone-map segment skipping — see
-    * [[readTableWhere]]. */
-  def readTableAtWhere(spark: SparkSession, root: String, table: String,
-      txn: String, where: String): DataFrame = {
-    val metas = manifestMetaOf(spark, root, txn)
-    val meta = metas.getOrElse(table,
-      throw new IllegalArgumentException(
-        s"table '$table' is not in version $txn under $root"))
-    applyTombstones(spark, root, table, metas,
-      readSegmentsWhere(spark, root, table, meta, where))
-  }
-
-  /** Separator between owner and relative file path in composite
-    * file-pruning keys — NUL cannot appear in a filesystem path. */
-  private val FileKeySep = "\u0000"
-
-  private def readSegmentsWhere(spark: SparkSession, root: String,
-      table: String, meta: TableMeta, where: String): DataFrame = {
-    val pred = spark.sessionState.sqlParser.parseExpression(where)
-    val keep = pruneOwnersBloomExpr(spark, root, table, meta,
-      pruneOwnersExpr(spark, meta, meta.owners, pred), pred)
-    // second granularity: within surviving owners that carry
-    // COMPLETE per-file maps, drop every file the predicate provably
-    // rejects; owners without file maps read whole, conservatively.
-    // Survivors mount as ONE eagerly RESTRICTED relation: the file
-    // set is decided here (so `inputFiles` reflects it — the
-    // spec-pinned contract), and [[GraftFileIndex.listFiles]]
-    // re-applies the same conservative layers to whatever Catalyst
-    // pushes down at planning — one pruning engine, two entry
-    // points.
-    val fileKeep = pruneFilesExpr(spark, meta, keep, pred)
-    val selection = keep.flatMap { o =>
-      fileKeep.get(o) match {
-        case None => Some(o -> None) // no file map: whole segment
-        case Some(fs) if fs.isEmpty => None // provably empty owner
-        case Some(fs) if fs.size == meta.fileStats(o).size =>
-          Some(o -> None) // nothing pruned: whole-dir read
-        case Some(fs) => Some(o -> Some(fs))
-      }
-    }
-    GraftFileIndex.relationFor(spark, root, table, meta, selection)
-      .where(where)
   }
 
   /** CHANGE FEED between two versions: the owner segments `table`
@@ -4612,17 +4540,12 @@ object AtomicPublish {
     }
   }
 
-  /** Public face of the commit-chain walk for the streaming sources:
-    * txns from `sinceTxn` (exclusive) to `at` (inclusive), oldest
-    * first, each with its dataChange flag; None when the chain cannot
-    * be walked (pre-link markers, vacuumed intermediates). */
-  def commitChainBetween(spark: SparkSession, root: String,
-      sinceTxn: String, at: String): Option[Seq[(String, Boolean)]] =
-    chainBetween(spark, root, sinceTxn, at)
-
-  /** [[commitChainBetween]] with each commit's full marker info —
-    * the streaming offset walk needs [[CommitInfo.cdfTables]] to ride
-    * a staged rewrite instead of resyncing. */
+  /** The commit-chain walk for the streaming sources: txns from
+    * `sinceTxn` (exclusive) to `at` (inclusive), oldest first, each
+    * with its full marker info — the streaming offset walk needs
+    * [[CommitInfo.cdfTables]] to ride a staged rewrite instead of
+    * resyncing. None when the chain cannot be walked (pre-link
+    * markers, vacuumed intermediates). */
   def commitChainInfos(spark: SparkSession, root: String,
       sinceTxn: String, at: String): Option[Seq[(String, CommitInfo)]] =
     chainInfos(spark, root, sinceTxn, at)
@@ -5006,37 +4929,6 @@ object AtomicPublish {
     pinned
   }
 
-  /** One-shot migration for stores published before `_COMMITTED`
-    * markers existed: stamp EVERY existing version dir as committed so
-    * `keepLast`/`minAgeMs` retention ranks them again. Markers are
-    * back-dated to each dir's mtime, so ranking approximates the
-    * original publish order instead of the migration instant. Run it
-    * only while no publisher is mid-flight against this root — it
-    * cannot distinguish a pre-marker published version from another
-    * process's sealed-but-uncommitted one (both are marker-less by
-    * definition). Intended strictly for pre-marker stores, which also
-    * predate `publishDelta` and therefore contain no CAS-loser dirs; on
-    * a post-delta store this would stamp losers as committed and let
-    * them claim retention slots. */
-  def adoptCommitted(spark: SparkSession, root: String): Seq[String] = {
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(rootPath)) return Nil
-    commitLock(spark, root).synchronized {
-      fs.listStatus(rootPath).toSeq
-        .filter(st => st.getPath.getName.startsWith("v_") &&
-          !fs.exists(new Path(st.getPath, CommitMarker)))
-        .map { st =>
-          val txn = st.getPath.getName.stripPrefix("v_")
-          markCommitted(spark, root, txn)
-          try fs.setTimes(new Path(st.getPath, CommitMarker),
-            st.getModificationTime, -1)
-          catch { case _: Throwable => () }
-          txn
-        }
-    }
-  }
-
   /** Drop unreferenced version and scratch dirs, subject to a retention
     * policy so [[readTableAt]] time travel and vacuum are safe to use
     * together:
@@ -5084,10 +4976,9 @@ object AtomicPublish {
     * version whose marker write failed (crash in the post-swap window)
     * degrades to the marker-less case: protected while live or young,
     * reclaimable once aged — never able to brick the live store. The
-    * live version self-heals its marker BEFORE retention is computed
-    * (so a pre-marker store's first vacuum ranks it rather than
-    * under-retaining); for bulk migration of OLD versions run
-    * [[adoptCommitted]] once. */
+    * live version self-heals its marker BEFORE retention is computed,
+    * so a crash after the pointer swap cannot leave the live version
+    * unranked. */
   def vacuum(spark: SparkSession, root: String, keepLast: Int = 1,
       minAgeMs: Long = 0L, graceMs: Long = 3600L * 1000,
       /** How long a [[recordConsumer]] registration protects its

@@ -894,7 +894,7 @@ final class GraftV1Scan(root: String, table: String, txn: String,
     val size =
       try java.util.OptionalLong.of(
         new GraftFileIndex(SparkSession.active, root, table, meta,
-          meta.owners.map(_ -> None)).sizeInBytes)
+          meta.owners).sizeInBytes)
       catch { case scala.util.control.NonFatal(_) =>
         java.util.OptionalLong.empty() }
     // manifest row count (tombstones included — the safe over-estimate)

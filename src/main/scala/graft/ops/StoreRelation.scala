@@ -25,7 +25,9 @@ import graft.ops.AtomicPublish.TableMeta
   * predicates through Catalyst's FileSourceStrategy into
   * [[GraftFileIndex.listFiles]], where ALL the store's skipping layers
   * fire: partition-directory pruning, segment zone maps, per-file zone
-  * maps, and bloom sidecars. This is the architecture Delta Lake used
+  * maps, and bloom sidecars. That is the ONE place a store read
+  * decides its files: nothing pre-prunes a mount, which always covers
+  * whole owner segments. This is the architecture Delta Lake used
   * for years (a log-backed `TahoeFileIndex` under `HadoopFsRelation`)
   * and it is deliberately NOT a DataSource V2 `PartitionReaderFactory`:
   * reusing Spark's file-source scan keeps the vectorized parquet
@@ -45,10 +47,9 @@ final class GraftFileIndex(
     root: String,
     table: String,
     meta: TableMeta,
-    /** Candidate owners, each optionally restricted to an explicit
-      * relative-path subset (the eager `readTableWhere` pre-prune).
-      * None = every data file of the segment. */
-    selection: Seq[(String, Option[Seq[String]])],
+    /** Candidate owner segments, read whole unless [[listFiles]]
+      * prunes them. */
+    selection: Seq[String],
     /** Expose derived calendar-transform ordinals (`ts__day`) as
       * partition columns so DYNAMIC pruning can evaluate them against
       * [[PartitionDirectory]] values at runtime
@@ -97,7 +98,7 @@ final class GraftFileIndex(
     * predicates, exactly as before). */
   private[ops] val exposedDerived: Boolean =
     exposeDerived && transforms.nonEmpty &&
-      selection.forall(s => meta.partsOf(s._1) == meta.partitionCols)
+      selection.forall(o => meta.partsOf(o) == meta.partitionCols)
 
   /** Transforms that dynamic pruning may key on ([[HiddenPartitionPruning]]):
     * the current spec's, iff their ordinals are exposed. */
@@ -106,14 +107,12 @@ final class GraftFileIndex(
 
   /** Inputs for METADATA-ONLY aggregates ([[MetadataAggregates]]):
     * one [[AtomicPublish.SegStats]] per selected owner, available only
-    * when this mount covers WHOLE owners (no eager file subset — a
-    * `readTableWhere` pre-prune would make segment totals overcount)
-    * and every owner carries recorded stats. Zero owners = Some(Nil):
-    * an empty table metadata-counts to 0. */
+    * when every owner carries recorded stats (a mount always covers
+    * whole owners, so segment totals are the table's). Zero owners =
+    * Some(Nil): an empty table metadata-counts to 0. */
   private[ops] def metadataSegStats: Option[Seq[AtomicPublish.SegStats]] =
-    if (selection.forall(s =>
-        s._2.isEmpty && meta.segStats.contains(s._1)))
-      Some(selection.map(s => meta.segStats(s._1)))
+    if (selection.forall(meta.segStats.contains))
+      Some(selection.map(meta.segStats))
     else None
 
   /** The columns whose per-owner min/max/null stats are recorded. */
@@ -185,7 +184,7 @@ final class GraftFileIndex(
   private def segDir(o: String): Path =
     new Path(new Path(root, s"v_$o"), meta.dirOf(o, table))
 
-  override def rootPaths: Seq[Path] = selection.map(s => segDir(s._1))
+  override def rootPaths: Seq[Path] = selection.map(segDir)
 
   /** A data file: not a dot/underscore sidecar (`_MANIFEST`,
     * `_bloom_*.bin`, `_SUCCESS`, checksums). */
@@ -334,27 +333,23 @@ final class GraftFileIndex(
     }
     if (resolved.exists(admitsNothing)) return Nil
     val pred = resolved.reduceOption(And)
-    val candidates = selection.map(_._1)
     val keep = pred match {
-      case None => candidates
+      case None => selection
       case Some(p) =>
         AtomicPublish.pruneOwnersBloomExpr(spark, root, table, meta,
-          AtomicPublish.pruneOwnersExpr(spark, meta, candidates, p), p)
+          AtomicPublish.pruneOwnersExpr(spark, meta, selection, p), p)
     }
     val fileKeep = pred match {
       case None => Map.empty[String, Seq[String]]
       case Some(p) => AtomicPublish.pruneFilesExpr(spark, meta, keep, p)
     }
-    val restrict = selection.toMap
     // files keep their OWNER: each owner's paths parse and prune under
     // the spec that owner was written with (spec evolution)
     val files: Seq[(Layout, String, FileStatus)] = keep.flatMap { o =>
-      var fs = ownerFiles(o)
-      restrict.getOrElse(o, None).foreach { sub =>
-        val s = sub.toSet; fs = fs.filter(x => s.contains(x._1))
-      }
-      fileKeep.get(o).foreach { sub =>
-        val s = sub.toSet; fs = fs.filter(x => s.contains(x._1))
+      val fs = fileKeep.get(o) match {
+        case None => ownerFiles(o)
+        case Some(sub) =>
+          val s = sub.toSet; ownerFiles(o).filter(x => s.contains(x._1))
       }
       val lay = layoutOf(o)
       fs.map { case (rel, st) => (lay, rel, st) }
@@ -426,22 +421,12 @@ final class GraftFileIndex(
   }
 
   override def inputFiles: Array[String] =
-    selection.flatMap { case (o, sub) =>
-      var fs = ownerFiles(o)
-      sub.foreach { s => val set = s.toSet
-        fs = fs.filter(x => set.contains(x._1)) }
-      fs.map(_._2.getPath.toString)
-    }.toArray
+    selection.flatMap(ownerFiles(_).map(_._2.getPath.toString)).toArray
 
   override def refresh(): Unit = () // snapshot-pinned: immutable
 
   override lazy val sizeInBytes: Long =
-    selection.flatMap { case (o, sub) =>
-      var fs = ownerFiles(o)
-      sub.foreach { s => val set = s.toSet
-        fs = fs.filter(x => set.contains(x._1)) }
-      fs.map(_._2.getLen)
-    }.sum
+    selection.flatMap(ownerFiles(_).map(_._2.getLen)).sum
 }
 
 object GraftFileIndex {
@@ -473,10 +458,9 @@ object GraftFileIndex {
     * path — every table that never identity-evolved — stays the ONE
     * scan node it always was). */
   private[ops] def relationFor(spark: SparkSession, root: String,
-      table: String, meta: TableMeta,
-      selection: Seq[(String, Option[Seq[String]])]): DataFrame = {
+      table: String, meta: TableMeta, selection: Seq[String]): DataFrame = {
     val classes = selection
-      .groupBy(s => PartSpec.identityCols(meta.partsOf(s._1)).toSet)
+      .groupBy(o => PartSpec.identityCols(meta.partsOf(o)).toSet)
       .values.toSeq
     if (classes.size <= 1)
       relationForClass(spark, root, table, meta, selection)
@@ -485,7 +469,7 @@ object GraftFileIndex {
       // any member's spec exposes the right identity columns (member
       // TRANSFORMS may still differ — per-owner layouts handle those)
       relationForClass(spark, root, table,
-        meta.copy(partitionCols = meta.partsOf(sel.head._1)), sel)
+        meta.copy(partitionCols = meta.partsOf(sel.head)), sel)
     }.reduce(_.unionByName(_))
   }
 
@@ -503,8 +487,7 @@ object GraftFileIndex {
     }
 
   private def relationForClass(spark: SparkSession, root: String,
-      table: String, meta: TableMeta,
-      selection: Seq[(String, Option[Seq[String]])]): DataFrame = {
+      table: String, meta: TableMeta, selection: Seq[String]): DataFrame = {
     val idx = new GraftFileIndex(spark, root, table, meta, selection,
       exposeDerived = true)
     // a transform-partitioned mount is dynamically prunable: make sure
@@ -538,7 +521,7 @@ object GraftFileIndex {
     * here reads data files. Estimation posture, documented:
     *
     *  - rows include merge-on-read tombstoned rows and ignore file
-    *    subsets — an OVER-estimate, the direction that can only miss a
+    *    skipping — an OVER-estimate, the direction that can only miss a
     *    broadcast, never OOM one;
     *  - table NDV = min(Σ per-owner NDV, rows) — an upper bound (owners
     *    may share values). Equality selectivity 1/ndv therefore
@@ -552,12 +535,12 @@ object GraftFileIndex {
     * None when any selected owner lacks segment stats (no lying with
     * partial sums); CBO then falls back to pure size heuristics. */
   private def catalogStatsOf(table: String,
-      meta: TableMeta, selection: Seq[(String, Option[Seq[String]])])
+      meta: TableMeta, selection: Seq[String])
       : Option[org.apache.spark.sql.catalyst.catalog.CatalogTable] = {
     import org.apache.spark.sql.catalyst.catalog.{CatalogColumnStat,
       CatalogStatistics, CatalogStorageFormat, CatalogTable,
       CatalogTableType}
-    val perOwner = selection.map(s => meta.segStats.get(s._1))
+    val perOwner = selection.map(meta.segStats.get)
     if (perOwner.isEmpty || perOwner.exists(_.isEmpty)) return None
     val stats = perOwner.flatten
     val rows = stats.map(_.rows).sum
@@ -755,8 +738,7 @@ final class GraftSource extends RelationProvider
         "directory layouts and data files. Read it with " +
         "AtomicPublish.readTable / registerViews, or compact to " +
         "normalize the layout")
-    val idx = new GraftFileIndex(spark, root, table, meta,
-      meta.owners.map(_ -> None))
+    val idx = new GraftFileIndex(spark, root, table, meta, meta.owners)
     HadoopFsRelation(idx, idx.partitionSchema, idx.dataSchema,
       GraftFileIndex.bucketSpecOf(meta), new ParquetFileFormat,
       Map.empty[String, String])(spark)

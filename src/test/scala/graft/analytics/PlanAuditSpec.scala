@@ -231,6 +231,20 @@ class PlanAuditSpec extends SparkSuite {
     assert(p.toLowerCase.contains("dynamicpruning"), p)
   }
 
+  test("store1: the range read's one documents scan reads 6 of the " +
+      "staged 6 files") {
+    // the gate query's oracle sees only rows; this pins how many of the
+    // staged documents table's files its one data scan reads. At this
+    // scale `doc_id BETWEEN 12 AND 340` overlaps both range-files of
+    // each of the three segments, so file skipping keeps all six
+    val scans = graft.ops.ScanFiles.scans(
+      AdvancedQueries.store1PrunedScan(spark, dir), Some("documents"))
+    assert(scans.size == 1)
+    val read = scans.head.metrics("numFiles").value
+    val total = scans.head.relation.location.inputFiles.length
+    assert((read, total) == ((6L, 6)), s"read $read of $total")
+  }
+
   test("store19: metadata aggregates plan with NO file scan at all") {
     // the whole point of graft.ops.MetadataAggregates: the gate query
     // collapses to a LocalRelation of manifest totals — a FileSourceScan

@@ -56,10 +56,10 @@ class CloneSpec extends SparkSuite {
     val m = AtomicPublish.manifestMetaOf(spark, root, txn)("fork")
     assert(m.owners.forall(o => m.dirOf(o, "fork") == "src"))
     // zone maps / skipping survive: a point read on the clone prunes
-    val q = AtomicPublish.readTableWhere(spark, root, "fork",
-      "doc_id = 42")
+    val q = AtomicPublish.readTable(spark, root, "fork")
+      .where("doc_id = 42")
+    assert(ScanFiles(q) == 2)
     assert(q.count() == 1)
-    assert(q.inputFiles.length <= 2)
   }
 
   test("clone diverges copy-on-write in both directions; compaction " +

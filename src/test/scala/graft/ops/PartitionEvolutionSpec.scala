@@ -24,18 +24,6 @@ class PartitionEvolutionSpec extends SparkSuite {
   private def freshRoot(): String =
     Files.createTempDirectory("part-evolution").resolve("store").toString
 
-  private def scannedFiles(df: DataFrame): Long = {
-    df.collect()
-    val plan = df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    plan.collect {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-        s.metrics("numFiles").value
-    }.sum
-  }
-
   /** 4 rows per UTC day (6-hour steps), days 0..(n/4 - 1). */
   private def tsDf(ids: Range): DataFrame =
     ids.map(i => (i.toLong,
@@ -102,9 +90,9 @@ class PartitionEvolutionSpec extends SparkSuite {
     assert(scans.size == 1, s"evolved chain forked into ${scans.size}")
     // 3 day files + 1 month file (Feb); the conservative boundary
     // admits at most one extra dir per layout
-    assert(scannedFiles(pruned) <= 5,
-      s"cross-layout pruning regressed: ${scannedFiles(pruned)} files")
-    assert(scannedFiles(pruned) < scannedFiles(all))
+    assert(ScanFiles(pruned) <= 5,
+      s"cross-layout pruning regressed: ${ScanFiles(pruned)} files")
+    assert(ScanFiles(pruned) < ScanFiles(all))
     // time travel to the pre-evolution version still reads day layout
     assert(AtomicPublish.readTableAt(spark, root, "ev", vA).count() == 40)
   }
@@ -148,7 +136,7 @@ class PartitionEvolutionSpec extends SparkSuite {
     val pruned = all.filter(
       col("ts") >= lit("1970-01-08 00:00:00").cast("timestamp"))
     assert(pruned.count() == 20)
-    assert(scannedFiles(pruned) < scannedFiles(all),
+    assert(ScanFiles(pruned) < ScanFiles(all),
       "evolved-away day dirs stopped pruning")
   }
 
@@ -213,7 +201,7 @@ class PartitionEvolutionSpec extends SparkSuite {
     val pruned = all.filter(
       col("ts") >= lit("1970-01-02 00:00:00").cast("timestamp"))
     assert(pruned.count() == 12)
-    assert(scannedFiles(pruned) < scannedFiles(all))
+    assert(ScanFiles(pruned) < ScanFiles(all))
   }
 
   test("refusals: no-op spec, unknown source column, bucketed tables " +
@@ -267,22 +255,22 @@ class PartitionEvolutionSpec extends SparkSuite {
       parent = AtomicPublish.currentTxn(spark, root))
     // point read on id: segment zone maps + blooms drop the other
     // owner entirely — layout evolution never blunts value skipping
-    val pointA = AtomicPublish.readTableWhere(spark, root, "ev", "id = 7")
+    val ev = AtomicPublish.readTable(spark, root, "ev")
+    val pointA = ev.where("id = 7")
+    assert(ScanFiles(pointA) == 1, "id=7 read B's month files")
     assert(pointA.count() == 1)
-    assert(pointA.inputFiles.length <= 10, "id=7 read B's month files")
-    val pointB = AtomicPublish.readTableWhere(spark, root, "ev",
-      "id = 107")
+    val pointB = ev.where("id = 107")
+    val readB = ScanFiles(pointB)
+    assert(readB == 1,
+      s"id=107 should prune to B's single month file, read $readB")
     assert(pointB.count() == 1)
-    assert(pointB.inputFiles.length <= 1,
-      s"id=107 should prune to B's single month file, " +
-        s"read ${pointB.inputFiles.length}")
     // combined: id range (zone map → owner A only) AND raw ts range
     // (day dirs within A) — both layers fire on one query
     val both = AtomicPublish.readTable(spark, root, "ev")
       .filter(col("id") < 40L &&
         col("ts") >= lit("1970-01-08 00:00:00").cast("timestamp"))
     assert(both.count() == 12)
-    assert(scannedFiles(both) == 3,
+    assert(ScanFiles(both) == 3,
       "zone-map owner pruning + day-dir pruning did not compose")
   }
 

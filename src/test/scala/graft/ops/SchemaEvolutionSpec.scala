@@ -56,7 +56,7 @@ class SchemaEvolutionSpec extends SparkSuite {
       .getLong(0) == (0L until 20L).sum)
     // zone maps stay sound across the widen: an id-range read over the
     // NARROW segment's range still finds its rows
-    assert(AtomicPublish.readTableWhere(spark, root, "t", "id <= 3")
+    assert(AtomicPublish.readTable(spark, root, "t").where("id <= 3")
       .count() == 4)
     // a narrow (int) append AFTER the widen also lands and promotes
     val narrow2 = (20 until 25).map(i => (i, s"p$i")).toDF("id", "payload")
@@ -78,10 +78,11 @@ class SchemaEvolutionSpec extends SparkSuite {
     assert(total >= 3, s"expected >=3 segment files, got $total")
     Seq(5L -> "narrow-era", 15L -> "wide-era", 22L -> "post-widen-narrow")
       .foreach { case (id, era) =>
-        val q = AtomicPublish.readTableWhere(spark, root, "t",
-          s"id = $id")
-        assert(q.inputFiles.length <= 1,
-          s"$era point lookup id=$id planned ${q.inputFiles.length} " +
+        val q = AtomicPublish.readTable(spark, root, "t")
+          .where(s"id = $id")
+        val read = ScanFiles(q)
+        assert(read == 1,
+          s"$era point lookup id=$id read $read " +
             s"of $total files — the widened zone maps are not pruning")
         assert(q.count() == 1, s"$era point lookup id=$id lost its row")
       }
@@ -102,12 +103,12 @@ class SchemaEvolutionSpec extends SparkSuite {
     val txn = AtomicPublish.currentTxn(spark, root).get
     assert(AtomicPublish.manifestMetaOf(spark, root, txn)("t")
       .schema("x").dataType == org.apache.spark.sql.types.DoubleType)
-    val hits = AtomicPublish.readTableWhere(spark, root, "t",
-      "x >= 0.30000001").collect()
+    val hits = AtomicPublish.readTable(spark, root, "t")
+      .where("x >= 0.30000001").collect()
     assert(hits.map(_.getLong(0)).toSet == Set(1L, 3L),
       s"float-era row lost to an unsound zone map: ${hits.toSeq}")
     // and the skipping layer still PRUNES where sound: nothing above 1
-    assert(AtomicPublish.readTableWhere(spark, root, "t", "x > 1.0")
+    assert(AtomicPublish.readTable(spark, root, "t").where("x > 1.0")
       .count() == 0)
     // a float slice appended AFTER the widen re-encodes its stats too
     AtomicPublish.publishDelta(spark, root,
@@ -115,8 +116,8 @@ class SchemaEvolutionSpec extends SparkSuite {
       parent = Some(txn))
     // (double)0.7f = 0.699999988…; the untranslated "0.7" decodes to
     // 0.7d, whose min-envelope would wrongly prune this upper bound
-    assert(AtomicPublish.readTableWhere(spark, root, "t",
-      "x >= 0.69999998 AND x <= 0.69999999").collect()
+    assert(AtomicPublish.readTable(spark, root, "t")
+      .where("x >= 0.69999998 AND x <= 0.69999999").collect()
       .map(_.getLong(0)).toSet == Set(4L))
   }
 
@@ -140,17 +141,23 @@ class SchemaEvolutionSpec extends SparkSuite {
     AtomicPublish.publishDelta(spark, root, append = Map("t" -> seg3),
       parent = AtomicPublish.currentTxn(spark, root))
     val plain = AtomicPublish.readTable(spark, root, "t")
+    // the oracle: every row materialized first, so no predicate can
+    // reach the skipping layers
+    val unpruned = plain.localCheckpoint()
     // predicates probe float-exact boundaries, ranges and equality on
-    // BOTH the int-chain and the float-chain widened columns
-    val xs = plain.select("x").collect().map(_.getDouble(0))
+    // BOTH the int-chain and the float-chain widened columns, each with
+    // the files it reads out of 12
+    val xs = plain.orderBy("id").select("x").collect().map(_.getDouble(0))
     val preds = Seq(
-      "id <= 10", "id > 100", "id BETWEEN 35 AND 45",
-      s"x >= ${xs(7)}", s"x <= ${xs(53)}", s"x = ${xs(17)}",
-      s"x > ${xs(99)} AND id >= 80", "x > 10.0", "x < 0.0")
-    for (p <- preds) {
-      val viaMaps = AtomicPublish.readTableWhere(spark, root, "t", p)
-        .select("id").collect().map(_.getLong(0)).toSet
-      val viaFilter = plain.where(p)
+      "id <= 10" -> 2, "id > 100" -> 2, "id BETWEEN 35 AND 45" -> 2,
+      s"x >= ${xs(7)}" -> 12, s"x <= ${xs(53)}" -> 12,
+      s"x = ${xs(17)}" -> 12, s"x > ${xs(99)} AND id >= 80" -> 4,
+      "x > 10.0" -> 0, "x < 0.0" -> 0)
+    for ((p, files) <- preds) {
+      val pruned = plain.where(p).select("id")
+      assert(ScanFiles(pruned) == files, p)
+      val viaMaps = pruned.collect().map(_.getLong(0)).toSet
+      val viaFilter = unpruned.where(p)
         .select("id").collect().map(_.getLong(0)).toSet
       assert(viaMaps == viaFilter, s"predicate '$p': " +
         s"maps=${viaMaps.size} filter=${viaFilter.size} " +
@@ -403,12 +410,16 @@ class SchemaEvolutionSpec extends SparkSuite {
     AtomicPublish.publishDelta(spark, root,
       append = Map("t" -> slice(80 until 120, withScore = true)),
       parent = AtomicPublish.currentTxn(spark, root)).get
-    for (w <- Seq("doc_id < 25", "doc_id BETWEEN 45 AND 90",
-        "doc_id >= 100", "doc_id = 7 OR doc_id = 113")) {
-      val pruned = AtomicPublish.readTableWhere(spark, root, "t", w)
-        .select("doc_id").as[Long].collect().toSet
-      val full = AtomicPublish.readTable(spark, root, "t")
-        .where(w).select("doc_id").as[Long].collect().toSet
+    val plain = AtomicPublish.readTable(spark, root, "t")
+    val unpruned = plain.localCheckpoint()
+    // each predicate with the files it reads out of 12
+    for ((w, files) <- Seq("doc_id < 25" -> 3,
+        "doc_id BETWEEN 45 AND 90" -> 6, "doc_id >= 100" -> 2,
+        "doc_id = 7 OR doc_id = 113" -> 2)) {
+      val read = plain.where(w).select("doc_id")
+      assert(ScanFiles(read) == files, w)
+      val pruned = read.as[Long].collect().toSet
+      val full = unpruned.where(w).select("doc_id").as[Long].collect().toSet
       assert(pruned == full, s"pruned ≠ full for '$w'")
     }
   }

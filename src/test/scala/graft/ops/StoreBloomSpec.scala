@@ -39,26 +39,31 @@ class StoreBloomSpec extends SparkSuite {
     Seq(v1, v2, v3)
   }
 
-  private def segmentsRead(df: DataFrame): Set[String] =
-    df.inputFiles.flatMap(_.split("/").find(_.startsWith("v_"))).toSet
+  /** Executes `df`: the segments of the files it read, and how many
+    * files that was. */
+  private def segmentsRead(df: DataFrame): (Set[String], Int) = {
+    val read = ScanFiles.paths(df)
+    (read.flatMap(_.split("/").find(_.startsWith("v_"))).toSet, read.size)
+  }
+
+  private def docsWhere(root: String, w: String): DataFrame =
+    AtomicPublish.readTable(spark, root, "docs").where(w)
 
   test("point lookup reads only the bloom-admitting segment") {
     val root = freshRoot()
     val Seq(v1, v2, v3) = interleaved(root, 0 until 900)
     // 400 ≡ 1 (mod 3) → only v2 can hold it; zone maps cannot know that
-    val q = AtomicPublish.readTableWhere(spark, root, "docs",
-      "doc_id = 400")
-    assert(segmentsRead(q) == Set(s"v_$v2"))
+    val q = docsWhere(root, "doc_id = 400")
+    assert(segmentsRead(q) == ((Set(s"v_$v2"), 1)))
     assert(q.collect().toSeq ==
       Seq(org.apache.spark.sql.Row(400L, "p-400")))
     // an absent key reads (almost surely) nothing at 1% fpp × 3 segs
-    val miss = AtomicPublish.readTableWhere(spark, root, "docs",
-      "doc_id = 123456789")
+    val miss = docsWhere(root, "doc_id = 123456789")
+    assert(ScanFiles(miss) == 0)
     assert(miss.count() == 0)
     // IN-list across two residue classes admits exactly those segments
-    val in = AtomicPublish.readTableWhere(spark, root, "docs",
-      "doc_id IN (30, 31)")
-    assert(segmentsRead(in) == Set(s"v_$v1", s"v_$v2"))
+    val in = docsWhere(root, "doc_id IN (30, 31)")
+    assert(segmentsRead(in) == ((Set(s"v_$v1", s"v_$v2"), 2)))
     assert(in.count() == 2)
   }
 
@@ -72,23 +77,25 @@ class StoreBloomSpec extends SparkSuite {
     val v2 = AtomicPublish.publishDelta(spark, root,
       append = Map("t" -> seg("beta", 50 until 100)),
       parent = Some(v1)).get
-    val q = AtomicPublish.readTableWhere(spark, root, "t",
-      "name = 'beta-60'")
-    assert(segmentsRead(q) == Set(s"v_$v2"))
+    val q = AtomicPublish.readTable(spark, root, "t")
+      .where("name = 'beta-60'")
+    assert(segmentsRead(q) == ((Set(s"v_$v2"), 4)))
     assert(q.count() == 1)
   }
 
   test("bloom never drops a matching segment (randomized soundness)") {
     val root = freshRoot()
     interleaved(root, 0 until 600)
-    val full = AtomicPublish.readTable(spark, root, "docs")
+    // the oracle: every row materialized first, nothing skipped
+    val full = AtomicPublish.readTable(spark, root, "docs").localCheckpoint()
     val rnd = new scala.util.Random(7)
     (1 to 40).foreach { _ =>
       val id = rnd.nextInt(700) // some present, some absent
       val p = s"doc_id = $id"
-      val pruned = AtomicPublish.readTableWhere(spark, root, "docs", p)
-        .collect().toSet
-      assert(pruned == full.where(p).collect().toSet,
+      val q = docsWhere(root, p)
+      // a present key reads its one file; these absent ones read none
+      assert(ScanFiles(q) == (if (id < 600) 1 else 0), p)
+      assert(q.collect().toSet == full.where(p).collect().toSet,
         s"bloom soundness violated for: $p")
     }
   }
@@ -97,13 +104,12 @@ class StoreBloomSpec extends SparkSuite {
     val root = freshRoot()
     val Seq(v1, v2, v3) = interleaved(root, 0 until 300)
     // OR at top level: blooms must not prune either side
-    val or = AtomicPublish.readTableWhere(spark, root, "docs",
-      "doc_id = 30 OR doc_id = 31")
+    val or = docsWhere(root, "doc_id = 30 OR doc_id = 31")
+    assert(segmentsRead(or) == ((Set(s"v_$v1", s"v_$v2", s"v_$v3"), 3)))
     assert(or.count() == 2)
-    assert(segmentsRead(or) == Set(s"v_$v1", s"v_$v2", s"v_$v3"))
     // a range is not an equality probe
-    val range = AtomicPublish.readTableWhere(spark, root, "docs",
-      "doc_id >= 100 AND doc_id < 103")
+    val range = docsWhere(root, "doc_id >= 100 AND doc_id < 103")
+    assert(ScanFiles(range) == 3)
     assert(range.count() == 3)
   }
 
@@ -115,8 +121,8 @@ class StoreBloomSpec extends SparkSuite {
       s"$root/v_$v1/docs/_bloom_doc_id.bin")
     sidecar.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(sidecar, false)
-    val q = AtomicPublish.readTableWhere(spark, root, "docs",
-      "doc_id = 0") // lives in v1
+    val q = docsWhere(root, "doc_id = 0") // lives in v1
+    assert(ScanFiles(q) == 1)
     assert(q.count() == 1)
     // compaction consolidates and REBUILDS the sidecar for the new
     // owner (bloom cols inherited through the replace)
@@ -126,23 +132,23 @@ class StoreBloomSpec extends SparkSuite {
     val fs = sidecar.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.exists(new org.apache.hadoop.fs.Path(
       s"$root/v_$ctxn/docs/_bloom_doc_id.bin")))
-    assert(AtomicPublish.readTableWhere(spark, root, "docs",
-      "doc_id = 0").count() == 1)
+    val compacted = docsWhere(root, "doc_id = 0")
+    assert(ScanFiles(compacted) == 1)
+    assert(compacted.count() == 1)
   }
 
   test("corrupt sidecar only disables skipping for its segment (NonFatal)") {
     val root = freshRoot()
-    val Seq(v1, _, _) = interleaved(root, 0 until 90)
+    val Seq(v1, v2, _) = interleaved(root, 0 until 90)
     // truncate/garbage the first segment's sidecar: BloomFilter.readFrom
     // throws a FORMAT error (not IOException) on this — the read must
     // degrade to keeping the segment, never fail
     val sidecar = java.nio.file.Paths.get(root, s"v_$v1", "docs",
       "_bloom_doc_id.bin")
     java.nio.file.Files.write(sidecar, Array[Byte](1, 2, 3))
-    val q = AtomicPublish.readTableWhere(spark, root, "docs",
-      "doc_id = 1") // 1 ≡ 1 (mod 3): lives in v2
+    val q = docsWhere(root, "doc_id = 1") // 1 ≡ 1 (mod 3): lives in v2
     // v1's damaged bloom keeps v1 conservatively; v2 admits; v3 skips
-    assert(segmentsRead(q).contains(s"v_$v1"))
+    assert(segmentsRead(q) == ((Set(s"v_$v1", s"v_$v2"), 2)))
     assert(q.collect().toSeq ==
       Seq(org.apache.spark.sql.Row(1L, "p-1")))
   }

@@ -55,10 +55,10 @@ class StoreCatalogSpec extends SparkSuite {
     assert(!spark.catalog.tableExists(s"$cat.nope"))
   }
 
-  /** The catalog read must prune exactly like the eager
-    * `readTableWhere` path: same predicate → same file subset (the
-    * VERDICT-r5 "done" pin, moved onto the catalog face). */
-  test("catalog WHERE prunes to readTableWhere's file subset") {
+  /** The catalog read must prune exactly like the DataFrame read: same
+    * predicate → same file subset (the VERDICT-r5 "done" pin, moved
+    * onto the catalog face). */
+  test("catalog WHERE reads the same files as readTable().where") {
     val root = freshRoot()
     // three interleaved segments so blooms (not ranges) separate them
     def seg(k: Int) = docs(0 until 300, "en")
@@ -72,33 +72,25 @@ class StoreCatalogSpec extends SparkSuite {
       append = Map("docs" -> seg(2)), parent = Some(v2))
     val cat = mount(root)
 
-    def filesRead(df: DataFrame): Long = {
-      df.collect()
-      df.queryExecution.executedPlan.collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.metrics("numFiles").value
-      }.sum
-    }
-
     GraftCatalogRead.probeEnabled = true // opt-in inner-plan probe
     val sqlDf = spark.sql(
       s"SELECT doc_id FROM $cat.docs WHERE doc_id = 42")
     val sqlRows = sqlDf.collect().map(_.getLong(0)).toSeq
     assert(sqlRows == Seq(42L))
     // the files the catalog's INNER V1 plan listed (test probe): must
-    // match the eager side-channel pruner on the same predicate
+    // match the DataFrame read of the same predicate — one file
     val innerFiles = GraftCatalogRead.lastInnerScan.get.queryExecution
       .executedPlan.collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec =>
           f.metrics("numFiles").value
       }.sum
-    val eagerFiles = filesRead(
-      AtomicPublish.readTableWhere(spark, root, "docs", "doc_id = 42"))
-    val allFiles = filesRead(AtomicPublish.readTable(spark, root, "docs"))
-    assert(innerFiles == eagerFiles,
-      s"lazy pushdown read $innerFiles files, eager read $eagerFiles")
+    val dfFiles = ScanFiles(
+      AtomicPublish.readTable(spark, root, "docs").where("doc_id = 42"))
+    val allFiles = ScanFiles(AtomicPublish.readTable(spark, root, "docs"))
+    assert(innerFiles == 1 && dfFiles == 1,
+      s"catalog read $innerFiles files, DataFrame read $dfFiles")
     // and the bloom actually bit: fewer files than the full scan
-    assert(innerFiles > 0 && innerFiles < allFiles)
+    assert(allFiles == 12)
   }
 
   test("catalog read is delete-aware (tombstone anti-join applies)") {
@@ -252,8 +244,10 @@ class StoreCatalogSpec extends SparkSuite {
       spark.sql(s"ALTER TABLE $cat.docs ADD COLUMNS (must STRING NOT NULL)")
     }
     // stats/bloom skipping still fires after the schema commit
-    assert(AtomicPublish.readTableWhere(spark, root, "docs", "doc_id = 3")
-      .count() == 1)
+    val point = AtomicPublish.readTable(spark, root, "docs")
+      .where("doc_id = 3")
+    assert(ScanFiles(point) == 1)
+    assert(point.count() == 1)
   }
 
   test("SQL DELETE FROM: exact tombstone delete, refusal, truncate") {

@@ -3,9 +3,6 @@ package graft.ops
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
@@ -15,10 +12,10 @@ import graft.SparkSuite
   * temp view queried in SQL, `spark.read.format("graft")` — now routes
   * predicates through Catalyst into [[GraftFileIndex.listFiles]], so
   * partition pruning, segment zone maps, per-FILE zone maps and bloom
-  * sidecars fire on ALL of them, not just the eager `readTableWhere`
-  * side-channel. Pins are on the EXECUTED plan's scan metrics
-  * (`numFiles`) — the file set the physical scan actually selected —
-  * and every pinned read is also checked for result equivalence. */
+  * sidecars fire on ALL of them, decided once at scan planning. Pins
+  * are on the EXECUTED plan's scan metrics ([[ScanFiles]]: `numFiles`
+  * — the file set the physical scan actually selected) — and every
+  * pinned read is also checked for result equivalence. */
 class StoreConnectorSpec extends SparkSuite {
   import spark.implicits._
 
@@ -27,25 +24,6 @@ class StoreConnectorSpec extends SparkSuite {
 
   private def sliceDf(ids: Range): DataFrame =
     ids.map(i => (i.toLong, s"payload-$i")).toDF("doc_id", "text")
-
-  /** All [[FileSourceScanExec]] nodes of the EXECUTED plan, descending
-    * through AQE wrappers — the physical truth of what was scanned. */
-  private def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-    case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-    case s: QueryStageExec => scans(s.plan)
-    case r: ReusedExchangeExec => scans(r.child)
-    case f: FileSourceScanExec => Seq(f)
-    case o => o.children.flatMap(scans)
-  }
-
-  /** Execute `df` and return the number of files its scans of `table`
-    * selected (tombstone-table scans excluded by name). */
-  private def filesRead(df: DataFrame, table: String): Long = {
-    df.collect()
-    scans(df.queryExecution.executedPlan)
-      .filter(_.relation.location.rootPaths.exists(_.getName == table))
-      .map(_.metrics("numFiles").value).sum
-  }
 
   /** Three segments with DISJOINT doc_id ranges (zone maps separate
     * them), two range-files each (file-level maps separate those). */
@@ -76,25 +54,25 @@ class StoreConnectorSpec extends SparkSuite {
     Seq(v1, v2, v3)
   }
 
-  test("readTable().filter prunes files exactly like readTableWhere") {
+  test("readTable().where reads the pinned file count for each predicate") {
     val root = freshRoot()
     rangeStore(root)
-    for (w <- Seq("doc_id = 150", "doc_id BETWEEN 12 AND 40",
-        "doc_id >= 280", "doc_id < 0")) {
-      val eager = AtomicPublish.readTableWhere(spark, root, "docs", w)
+    for ((w, files, ids) <- Seq(("doc_id = 150", 1, 150 to 150),
+        ("doc_id BETWEEN 12 AND 40", 1, 12 to 40),
+        ("doc_id >= 280", 1, 280 until 300), ("doc_id < 0", 0, 0 until 0))) {
       val lazyRead = AtomicPublish.readTable(spark, root, "docs").where(w)
-      assert(filesRead(lazyRead, "docs") == eager.inputFiles.length,
-        s"lazy pushdown selected a different file set for: $w")
+      assert(ScanFiles(lazyRead, Some("docs")) == files,
+        s"pushdown selected a different file set for: $w")
       assert(lazyRead.collect().map(_.getLong(0)).sorted.toSeq ==
-        eager.collect().map(_.getLong(0)).sorted.toSeq, w)
+        ids.map(_.toLong), w)
     }
     // the pins above are meaningful only if pruning actually bites
     val total = AtomicPublish.readTable(spark, root, "docs")
       .inputFiles.length
     assert(total == 6)
-    assert(filesRead(
+    assert(ScanFiles(
       AtomicPublish.readTable(spark, root, "docs")
-        .where("doc_id = 150"), "docs") == 1)
+        .where("doc_id = 150"), Some("docs")) == 1)
   }
 
   test("SQL face: WHERE over a registered view skips segments and files") {
@@ -104,7 +82,7 @@ class StoreConnectorSpec extends SparkSuite {
     val q = spark.sql(
       "SELECT doc_id, text FROM conn_docs WHERE doc_id BETWEEN 120 AND 149")
     // one admitting segment, one admitting range-file within it
-    assert(filesRead(q, "docs") == 1)
+    assert(ScanFiles(q, Some("docs")) == 1)
     assert(q.collect().length == 30)
     // an unselective query still sees everything (no over-pruning)
     assert(spark.sql("SELECT count(*) FROM conn_docs").head.getLong(0)
@@ -114,14 +92,13 @@ class StoreConnectorSpec extends SparkSuite {
   test("bloom sidecars fire on lazily pushed point lookups") {
     val root = freshRoot()
     bloomStore(root)
-    val eager = AtomicPublish.readTableWhere(spark, root, "docs",
-      "doc_id = 7")
     val lazyRead = AtomicPublish.readTable(spark, root, "docs")
       .where("doc_id = 7")
-    // blooms admit only segment k=1 (7 mod 3): one segment's files
-    assert(eager.inputFiles.length <
-      AtomicPublish.readTable(spark, root, "docs").inputFiles.length)
-    assert(filesRead(lazyRead, "docs") == eager.inputFiles.length)
+    // blooms admit only segment k=1 (7 mod 3): one of its files out of
+    // the three segments' 12
+    assert(AtomicPublish.readTable(spark, root, "docs")
+      .inputFiles.length == 12)
+    assert(ScanFiles(lazyRead, Some("docs")) == 1)
     assert(lazyRead.head.getLong(0) == 7L)
   }
 
@@ -131,9 +108,9 @@ class StoreConnectorSpec extends SparkSuite {
     val fmt = spark.read.format("graft")
       .option("root", root).option("table", "docs").load()
     assert(fmt.count() == 300)
-    assert(filesRead(fmt.where("doc_id = 42"), "docs") == 1)
+    assert(ScanFiles(fmt.where("doc_id = 42"), Some("docs")) == 1)
     // parquet footer pushdown is alive through the connector
-    val scan = scans(fmt.where("doc_id = 42").queryExecution.executedPlan)
+    val scan = ScanFiles.scans(fmt.where("doc_id = 42"))
     assert(scan.exists(_.metadata.get("PushedFilters")
       .exists(_.contains("EqualTo(doc_id,42)"))))
     // time travel: the first version only
@@ -164,10 +141,8 @@ class StoreConnectorSpec extends SparkSuite {
       "SELECT doc_id FROM del_docs WHERE doc_id BETWEEN 120 AND 149")
     // the filter still pushed through the tombstone anti-join into the
     // base scan: one admitting range-file of one admitting segment.
-    // (filesRead must be the FIRST execution of q: a re-executed AQE
-    // plan re-stages with fresh metric instances, and the inspected
-    // executedPlan no longer carries the numbers that actually ran)
-    assert(filesRead(q, "docs") == 1)
+    // (ScanFiles must see the FIRST execution of q)
+    assert(ScanFiles(q, Some("docs")) == 1)
     val got = q.collect().map(_.getLong(0)).sorted.toSeq
     assert(got == (120L to 149L).filterNot(Set(130L, 135L)).toSeq)
   }
@@ -184,8 +159,8 @@ class StoreConnectorSpec extends SparkSuite {
       parent = Some(v1))
     val all = AtomicPublish.readTable(spark, root, "parts")
     val one = all.where("grp = 'g1'")
-    assert(filesRead(one, "parts") * 3 == filesRead(
-      AtomicPublish.readTable(spark, root, "parts"), "parts"))
+    assert(ScanFiles(one, Some("parts")) * 3 == ScanFiles(
+      AtomicPublish.readTable(spark, root, "parts"), Some("parts")))
     assert(one.count() == 200)
     // partition value round-trips with the recorded type and order
     assert(all.columns.toSeq == Seq("id", "grp", "payload"))
@@ -193,9 +168,9 @@ class StoreConnectorSpec extends SparkSuite {
     // ids 1,4,…,97 (i%3==1, i<100): the delta's ids all sit ≥ 300
     val combined = all.where("grp = 'g1' AND id < 100")
     assert(combined.count() == 33)
-    assert(filesRead(all.where("grp = 'g1' AND id < 100"), "parts") <
-      filesRead(AtomicPublish.readTable(spark, root, "parts")
-        .where("grp = 'g1'"), "parts"))
+    assert(ScanFiles(all.where("grp = 'g1' AND id < 100"),
+      Some("parts")) < ScanFiles(AtomicPublish.readTable(spark, root,
+      "parts").where("grp = 'g1'"), Some("parts")))
   }
 
   test("schema evolution: early segments serve nulls through the connector") {

@@ -22,6 +22,11 @@ class StoreDeleteSpec extends SparkSuite {
   private def docs(ids: Range): DataFrame =
     ids.map(i => (i.toLong, s"text-$i")).toDF("doc_id", "text")
 
+  /** Upsert `rows` into `table`, keyed by the slice's own `doc_id`s. */
+  private def upsert(root: String, table: String, rows: DataFrame): String =
+    AtomicPublish.upsertMany(spark, root, Map(table ->
+      AtomicPublish.Upsert(rows, rows.select("doc_id").distinct())))
+
   test("delete excludes rows from every read path; history untouched") {
     val root = freshRoot()
     val v1 = AtomicPublish.publish(spark, root,
@@ -37,8 +42,9 @@ class StoreDeleteSpec extends SparkSuite {
     assert(live.count() == 97)
     assert(live.filter(col("doc_id").isin(3L, 7L, 50L)).count() == 0)
     // pruned read excludes them too (tombstones after skipping)
-    val zoned = AtomicPublish.readTableWhere(spark, root, "docs",
-      "doc_id < 10")
+    val zoned = AtomicPublish.readTable(spark, root, "docs")
+      .where("doc_id < 10")
+    assert(ScanFiles(zoned, Some("docs")) == 1)
     assert(zoned.select("doc_id").as[Long].collect().toSet ==
       (0L until 10L).toSet -- Set(3L, 7L))
     // time travel BEFORE the delete still serves the rows
@@ -248,8 +254,8 @@ class StoreDeleteSpec extends SparkSuite {
     val v1 = AtomicPublish.publish(spark, root,
       Map("docs" -> Seq((1L, "a"), (2L, "b"), (3L, "c"))
         .toDF("doc_id", "text")))
-    val utxn = AtomicPublish.upsertRows(spark, root, "docs",
-      Seq((2L, "B"), (4L, "D")).toDF("doc_id", "text"), "doc_id")
+    val utxn = upsert(root, "docs",
+      Seq((2L, "B"), (4L, "D")).toDF("doc_id", "text"))
     // data slice and tombstones landed in the SAME txn
     val m = AtomicPublish.manifestOf(spark, root, utxn)
     assert(m("docs").last == utxn)
@@ -258,8 +264,7 @@ class StoreDeleteSpec extends SparkSuite {
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(now == Map(1L -> "a", 2L -> "B", 3L -> "c", 4L -> "D"))
     // chained upsert: latest wins again
-    AtomicPublish.upsertRows(spark, root, "docs",
-      Seq((2L, "BB")).toDF("doc_id", "text"), "doc_id")
+    upsert(root, "docs", Seq((2L, "BB")).toDF("doc_id", "text"))
     assert(AtomicPublish.readTable(spark, root, "docs")
       .where("doc_id = 2").head().getString(1) == "BB")
     // time travel is unscathed
@@ -389,9 +394,8 @@ class StoreDeleteSpec extends SparkSuite {
     AtomicPublish.deleteRows(spark, root,
       Map("t" -> (1 to 30).map(_ => rnd.nextInt(280).toLong)
         .distinct.toDF("doc_id")))
-    AtomicPublish.upsertRows(spark, root, "t",
-      Seq((50L, "upserted", 99L), (300L, "fresh", 99L))
-        .toDF("doc_id", "s", "x"), "doc_id")
+    upsert(root, "t", Seq((50L, "upserted", 99L), (300L, "fresh", 99L))
+      .toDF("doc_id", "s", "x"))
     val full = AtomicPublish.readTable(spark, root, "t").cache()
     val preds = Seq(
       "doc_id = 50", "doc_id = 7", "doc_id IN (3, 99, 260, 300)",
@@ -403,15 +407,43 @@ class StoreDeleteSpec extends SparkSuite {
         case 1 => s"doc_id BETWEEN ${rnd.nextInt(280)} AND ${rnd.nextInt(320)}"
         case 2 => s"x = ${rnd.nextInt(15)} AND doc_id >= ${rnd.nextInt(300)}"
       })
-    preds.foreach { p =>
-      val pruned = AtomicPublish.readTableWhere(spark, root, "t", p)
-        .collect().toSet
+    // the data files each predicate reads, of 11 (tombstones aside)
+    val files = Seq(2, 1, 5, 3, 2, 11, 11, 1, 3, 5, 0, 8, 1, 8, 0, 0, 0,
+      1, 8, 2, 1, 5, 1, 10, 5, 1, 2, 9, 10, 0, 7, 11, 2, 4, 0)
+    preds.zip(files).foreach { case (p, n) =>
+      val q = AtomicPublish.readTable(spark, root, "t").where(p)
+      assert(ScanFiles(q, Some("t")) == n, p)
       val expect = full.where(p).collect().toSet
-      assert(pruned == expect, s"composition fuzz mismatch for: $p")
+      assert(q.collect().toSet == expect, s"composition fuzz mismatch for: $p")
     }
     full.unpersist()
     // and the upserted row won
     assert(full.where("doc_id = 50").head().getString(1) == "upserted")
+  }
+
+  test("an upsert batch with no size estimate writes at most its key " +
+      "frame's partitions as tombstone files") {
+    import org.apache.spark.sql.Row
+    val root = freshRoot()
+    // an API batch: RDD-built, so Spark has no size estimate for it
+    def batch(ids: Range): DataFrame = graft.etl.PatientIngestion
+      .batchFromRows(spark, ids.map(i => Row("Patient", f"MRN$i%06d",
+        s"name-$i", "1980-01-01", "female", null,
+        Map("data_sharing" -> true))))
+    AtomicPublish.publish(spark, root, Map("patients" -> batch(0 until 1)))
+    val rows = batch(0 until 1000)
+    val keys = rows.select("mrn")
+    val keyParts = keys.rdd.getNumPartitions
+    val utxn = AtomicPublish.upsertMany(spark, root,
+      Map("patients" -> AtomicPublish.Upsert(rows, keys)))
+    val tombDir = new java.io.File(
+      s"$root/v_$utxn/${AtomicPublish.deleteTableOf("patients")}")
+    val tombFiles = tombDir.listFiles().count(f =>
+      f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+    assert(keyParts == 2)
+    assert(tombFiles >= 1 && tombFiles <= keyParts,
+      s"$tombFiles tombstone files for a $keyParts-partition key frame")
+    assert(AtomicPublish.readTable(spark, root, "patients").count() == 1000)
   }
 
   test("tombstone read plans a broadcast HASH anti-join (never BNLJ)") {

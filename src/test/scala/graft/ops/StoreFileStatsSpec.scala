@@ -14,7 +14,7 @@ import graft.SparkSuite
   * `compactStore(clusterBy = …)`'s range-cluster rewrite) keep point
   * and range reads pruning at file granularity. Equivalence with the
   * unpruned read is the invariant; pruning is pinned by the exact file
-  * set (`inputFiles`) the query plans. */
+  * set the executed scan reads ([[ScanFiles]]). */
 class StoreFileStatsSpec extends SparkSuite {
   import spark.implicits._
 
@@ -25,8 +25,10 @@ class StoreFileStatsSpec extends SparkSuite {
     ids.map(i => (i.toLong, s"payload-$i")).toDF("doc_id", "text")
       .repartitionByRange(files, col("doc_id"))
 
-  private def filesRead(df: DataFrame): Seq[String] =
-    df.inputFiles.toSeq
+  private def filesRead(df: DataFrame): Seq[String] = ScanFiles.paths(df)
+
+  private def docsWhere(root: String, w: String): DataFrame =
+    AtomicPublish.readTable(spark, root, "docs").where(w)
 
   test("per-file maps recorded at publish; a point read plans one file") {
     val root = freshRoot()
@@ -43,8 +45,7 @@ class StoreFileStatsSpec extends SparkSuite {
     assert(seg.rows == 400)
     assert(seg.cols("doc_id").min.contains("0"))
     assert(seg.cols("doc_id").max.contains("399"))
-    val point = AtomicPublish.readTableWhere(spark, root, "docs",
-      "doc_id = 7")
+    val point = docsWhere(root, "doc_id = 7")
     assert(filesRead(point).size == 1)
     assert(point.collect().toSeq == Seq(
       org.apache.spark.sql.Row(7L, "payload-7")))
@@ -59,15 +60,14 @@ class StoreFileStatsSpec extends SparkSuite {
       append = Map("docs" -> rangedDf(400 until 800, 4)),
       parent = Some(v1)).get
     // the predicate admits only segment v2, and within it a file subset
-    val q = AtomicPublish.readTableWhere(spark, root, "docs",
-      "doc_id BETWEEN 450 AND 460")
+    val q = docsWhere(root, "doc_id BETWEEN 450 AND 460")
     val read = filesRead(q)
     assert(read.forall(_.contains(s"v_$v2")))
-    assert(read.size < 4, s"expected a strict file subset, read $read")
+    assert(read.size == 1, s"expected one file of v2's 4, read $read")
     assert(q.count() == 11)
     // equivalence with the unpruned read
     val full = AtomicPublish.readTable(spark, root, "docs")
-      .where("doc_id BETWEEN 450 AND 460")
+      .localCheckpoint().where("doc_id BETWEEN 450 AND 460")
     assert(q.collect().toSet == full.collect().toSet)
   }
 
@@ -84,8 +84,7 @@ class StoreFileStatsSpec extends SparkSuite {
       .toDF("doc_id", "text")
     AtomicPublish.publish(spark, root, Map("docs" -> gapped),
       statsBy = Map("docs" -> Seq("doc_id")))
-    val q = AtomicPublish.readTableWhere(spark, root, "docs",
-      "doc_id = 150")
+    val q = docsWhere(root, "doc_id = 150")
     assert(filesRead(q).isEmpty)
     assert(q.count() == 0)
   }
@@ -106,10 +105,8 @@ class StoreFileStatsSpec extends SparkSuite {
     AtomicPublish.publishDelta(spark, root,
       append = Map("docs" -> shuffled(3)), parent = Some(v2))
     val before = AtomicPublish.readTable(spark, root, "docs").collect()
-    val preFiles =
-      filesRead(AtomicPublish.readTableWhere(spark, root, "docs",
-        "doc_id = 77"))
-    assert(preFiles.size > 3, s"unclustered layout should not file-prune " +
+    val preFiles = filesRead(docsWhere(root, "doc_id = 77"))
+    assert(preFiles.size == 9, s"unclustered layout should not file-prune " +
       s"a mid-range point read, got ${preFiles.size}")
     // tiny target forces multiple output files; clusterBy makes each
     // carry a tight disjoint doc_id range
@@ -119,8 +116,7 @@ class StoreFileStatsSpec extends SparkSuite {
     val meta = AtomicPublish.manifestMetaOf(spark, root, ctxn)("docs")
     assert(meta.owners == Seq(ctxn))
     assert(meta.fileStats(ctxn).size > 1)
-    val post = AtomicPublish.readTableWhere(spark, root, "docs",
-      "doc_id = 77")
+    val post = docsWhere(root, "doc_id = 77")
     assert(filesRead(post).size == 1)
     assert(post.count() == 3) // one per original append
     // content is untouched by the clustering rewrite
@@ -141,17 +137,14 @@ class StoreFileStatsSpec extends SparkSuite {
     AtomicPublish.publish(spark, root, Map("docs" -> df),
       partitionBy = Map("docs" -> Seq("cell")),
       statsBy = Map("docs" -> Seq("doc_id")))
-    val q = AtomicPublish.readTableWhere(spark, root, "docs",
-      "cell = 1 AND doc_id < 30")
-    // doc_id < 30 file-prunes to the [0,49] file of EACH cell ('cell'
-    // is a partition column, not a stat column — its pruning happens at
-    // the scan as a PartitionFilter, which inputFiles does not reflect)
+    val q = docsWhere(root, "cell = 1 AND doc_id < 30")
+    // doc_id < 30 file-prunes to the [0,49] file of each cell, and the
+    // PartitionFilter on 'cell' (a partition column, not a stat column)
+    // drops cell=2's: one file read
     val read = filesRead(q)
-    assert(read.size == 2, s"expected the low-range file per cell, $read")
+    assert(read.size == 1, s"expected cell=1's low-range file, $read")
     assert(read.count(_.contains("cell=1")) == 1)
-    assert(read.count(_.contains("cell=2")) == 1)
-    // partition values survive the explicit-file read (basePath), and
-    // the cell=2 branch is pruned at the scan
+    // partition values survive the pruned read
     val rows = q.select("doc_id", "cell").collect()
     assert(rows.length == 30 && rows.forall(_.getInt(1) == 1))
   }
@@ -196,7 +189,7 @@ class StoreFileStatsSpec extends SparkSuite {
     val v1 = AtomicPublish.publish(spark, root,
       Map("docs" -> rangedDf(0 until 100, 1)),
       statsBy = Map("docs" -> Seq("doc_id")))
-    val q = AtomicPublish.readTableWhere(spark, root, "docs", "doc_id = 5")
+    val q = docsWhere(root, "doc_id = 5")
     assert(filesRead(q).size == 1)
     assert(q.count() == 1)
     // and a schema-evolving append backfills file maps too: the new
@@ -206,9 +199,9 @@ class StoreFileStatsSpec extends SparkSuite {
         (i.toLong, s"p-$i", i * 2L)).toDF("doc_id", "text", "extra")
         .coalesce(1)),
       parent = Some(v1), statsBy = Map("docs" -> Seq("doc_id", "extra"))).get
-    val nn = AtomicPublish.readTableWhere(spark, root, "docs",
-      "extra IS NOT NULL")
-    assert(filesRead(nn).forall(_.contains(s"v_$v2")))
+    val nn = docsWhere(root, "extra IS NOT NULL")
+    val nnRead = filesRead(nn)
+    assert(nnRead.size == 1 && nnRead.forall(_.contains(s"v_$v2")))
     assert(nn.count() == 100)
   }
 }

@@ -56,18 +56,6 @@ class StoreLayoutSpec extends SparkSuite {
   /** Executed-plan file count of the (non-AQE) store scan — the
     * transform-pruning observable: fewer files than dirs proves the
     * raw-column predicate reached the directory layout. */
-  private def scannedFiles(df: DataFrame): Long = {
-    df.collect()
-    val plan = df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    plan.collect {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-        s.metrics("numFiles").value
-    }.sum
-  }
-
   private def tsDf(ids: Range): DataFrame =
     ids.map(i => (i.toLong,
       java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(
@@ -92,12 +80,12 @@ class StoreLayoutSpec extends SparkSuite {
     val pruned = AtomicPublish.readTable(spark, root, "ev")
       .filter(col("ts") >= lit("1970-01-08 00:00:00").cast("timestamp"))
     assert(pruned.count() == 12)
-    assert(scannedFiles(pruned) == 3,
+    assert(ScanFiles(pruned) == 3,
       "expected 3 of 10 day-dirs scanned")
     // equality on a timestamp inside one day prunes to that day
     val one = AtomicPublish.readTable(spark, root, "ev")
       .filter(col("ts") === lit("1970-01-03 06:00:00").cast("timestamp"))
-    assert(one.count() == 1 && scannedFiles(one) == 1)
+    assert(one.count() == 1 && ScanFiles(one) == 1)
     val meta = AtomicPublish.manifestMetaOf(spark, root, txn)("ev")
     assert(meta.partitionCols == Seq("days(ts)"))
     assert(meta.schema.fieldNames.toSeq == Seq("id", "ts", "payload"))
@@ -137,7 +125,7 @@ class StoreLayoutSpec extends SparkSuite {
       val pruned = all.filter(
         col("ts") >= lit("1970-01-08 00:00:00").cast("timestamp_ntz"))
       assert(pruned.count() == 12)
-      assert(scannedFiles(pruned) == 3, "expected 3 of 10 day-dirs scanned")
+      assert(ScanFiles(pruned) == 3, "expected 3 of 10 day-dirs scanned")
       // hours(ts): 40 distinct 6-hour ordinals; a half-open wall range
       // keeps exactly its hours
       val segH = new java.io.File(s"$root/v_$txn/evh")
@@ -150,7 +138,7 @@ class StoreLayoutSpec extends SparkSuite {
         col("ts") >= lit("1970-01-02 00:00:00").cast("timestamp_ntz") &&
         col("ts") < lit("1970-01-02 23:00:00").cast("timestamp_ntz"))
       assert(prunedH.count() == 4)
-      assert(scannedFiles(prunedH) == 4, "expected 4 of 40 hour-dirs scanned")
+      assert(ScanFiles(prunedH) == 4, "expected 4 of 40 hour-dirs scanned")
       // exact row identity through the layout round-trip
       val got = all.filter(col("id") === 11).select("ts")
         .as[java.time.LocalDateTime].head()
@@ -174,7 +162,7 @@ class StoreLayoutSpec extends SparkSuite {
     val pruned = AtomicPublish.readTable(spark, root, "ev")
       .filter(col("ts") >= lit("1970-03-01 00:00:00").cast("timestamp"))
     assert(pruned.count() == 20) // months 3 and 4
-    assert(scannedFiles(pruned) == 4, "2 month-dirs × 2 owners")
+    assert(ScanFiles(pruned) == 4, "2 month-dirs × 2 owners")
     // compaction rewrites under the same layout and still prunes
     Compaction.compactStore(spark, root, "ev", targetBytes = 1L << 30)
     val txn2 = AtomicPublish.currentTxn(spark, root).get
@@ -183,8 +171,8 @@ class StoreLayoutSpec extends SparkSuite {
     val pruned2 = AtomicPublish.readTable(spark, root, "ev")
       .filter(col("ts") < lit("1970-02-01 00:00:00").cast("timestamp"))
     assert(pruned2.count() == 10)
-    val total2 = scannedFiles(AtomicPublish.readTable(spark, root, "ev"))
-    assert(scannedFiles(pruned2) < total2,
+    val total2 = ScanFiles(AtomicPublish.readTable(spark, root, "ev"))
+    assert(ScanFiles(pruned2) < total2,
       "post-compaction read must still prune month dirs")
   }
 
@@ -198,7 +186,7 @@ class StoreLayoutSpec extends SparkSuite {
     val hPruned = AtomicPublish.readTable(spark, root, "ev")
       .filter(col("ts") >= lit("1970-01-09 12:00:00").cast("timestamp"))
     assert(hPruned.count() == 6)
-    assert(scannedFiles(hPruned) == 6, "one hour-dir per row")
+    assert(ScanFiles(hPruned) == 6, "one hour-dir per row")
     // years: 1970..1973, 10 rows each
     val root2 = freshRoot()
     def yearDf(ids: Range) = ids.map(i => (i.toLong,
@@ -213,7 +201,7 @@ class StoreLayoutSpec extends SparkSuite {
     val yPruned = AtomicPublish.readTable(spark, root2, "ev")
       .filter(col("ts") < lit("1971-12-31 00:00:00").cast("timestamp"))
     assert(yPruned.count() == 20)
-    assert(scannedFiles(yPruned) == 2, "2 of 4 year-dirs")
+    assert(ScanFiles(yPruned) == 2, "2 of 4 year-dirs")
   }
 
   test("ALTER TABLE ALTER COLUMN TYPE: O(1) SQL widening; narrowing " +
@@ -289,7 +277,7 @@ class StoreLayoutSpec extends SparkSuite {
     val pruned = df.filter(
       col("ts") >= lit("1970-01-08 00:00:00").cast("timestamp"))
     assert(pruned.count() == 12)
-    assert(scannedFiles(pruned) == 3, "format-face pruning regressed")
+    assert(ScanFiles(pruned) == 3, "format-face pruning regressed")
     // the catalog face agrees (relationFor already reprojected; now
     // the leaf itself never exposes the internal column)
     val viaApi = AtomicPublish.readTable(spark, root, "ev")
@@ -317,10 +305,10 @@ class StoreLayoutSpec extends SparkSuite {
     assert(meta.segStats.values.forall(_.cols.contains("id")))
     // point read: blooms + zone maps prune to ONE segment, day dirs
     // prune within it
-    val one = AtomicPublish.readTableWhere(spark, root, "ev", "id = 5")
+    val one = AtomicPublish.readTable(spark, root, "ev").where("id = 5")
+    val read = ScanFiles(one)
+    assert(read == 1, s"expected segment+day pruning, read $read")
     assert(one.count() == 1)
-    assert(one.inputFiles.length <= 2,
-      s"expected segment+day pruning, read ${one.inputFiles.length}")
     // combined predicate: zone map on id AND day dirs on raw ts —
     // Jan 17 is epoch day 16, so ids 64..79 match (16 rows); the id
     // zone map drops segment 1 entirely and day dirs 16..19 of
@@ -329,7 +317,7 @@ class StoreLayoutSpec extends SparkSuite {
       .filter(col("id") >= 60L &&
         col("ts") >= lit("1970-01-17 00:00:00").cast("timestamp"))
     assert(both.count() == 16)
-    assert(scannedFiles(both) <= 4)
+    assert(ScanFiles(both) <= 4)
   }
 
   test("streaming sink into a days(ts)-partitioned table: microbatches " +
@@ -355,7 +343,7 @@ class StoreLayoutSpec extends SparkSuite {
     val pruned = AtomicPublish.readTable(spark, root, "ev")
       .filter(col("ts") >= lit("1970-01-04 00:00:00").cast("timestamp"))
     assert(pruned.count() == 12)
-    assert(scannedFiles(pruned) < scannedFiles(
+    assert(ScanFiles(pruned) < ScanFiles(
       AtomicPublish.readTable(spark, root, "ev")),
       "stream-fed transform table is not pruning")
   }

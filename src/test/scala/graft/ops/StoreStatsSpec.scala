@@ -77,8 +77,7 @@ class StoreStatsSpec extends SparkSuite {
     def tableBytes(t: String): Long = {
       val meta = AtomicPublish.manifestMetaOf(spark, root,
         AtomicPublish.currentTxn(spark, root).get)(t)
-      new GraftFileIndex(spark, root, t, meta,
-        meta.owners.map(_ -> None)).sizeInBytes
+      new GraftFileIndex(spark, root, t, meta, meta.owners).sizeInBytes
     }
     // BOTH sides are size-INELIGIBLE: only an estimator that sees the
     // dim filter's 1/ndv(grp) selectivity can elect a broadcast. The
@@ -644,8 +643,7 @@ class StoreStatsSpec extends SparkSuite {
     def tableBytes(t: String): Long = {
       val meta = AtomicPublish.manifestMetaOf(spark, r,
         AtomicPublish.currentTxn(spark, r).get)(t)
-      new GraftFileIndex(spark, r, t, meta,
-        meta.owners.map(_ -> None)).sizeInBytes
+      new GraftFileIndex(spark, r, t, meta, meta.owners).sizeInBytes
     }
     val threshold = math.max(1024L,
       math.min(tableBytes("dim"), tableBytes("fact")) / 4)

@@ -168,10 +168,16 @@ class StoreWriteSpec extends SparkSuite {
     // recorded into the manifest by the WRITE — no compactStore call
     val meta = AtomicPublish.currentManifestMeta(spark, root).get._2("t")
     assert(meta.clusterCols == Seq("x", "y") && meta.clusterZOrder)
-    def files(pred: String): Int =
-      AtomicPublish.readTableWhere(spark, root, "t", pred)
-        .inputFiles.length
+    def files(pred: String): Int = ScanFiles(
+      AtomicPublish.readTable(spark, root, "t").where(pred)).toInt
+    // each point read lands exactly on the files its recorded zone map
+    // admits (ScanFiles.zoneAdmits: the geometry is sampler-seeded)
+    def pinned(c: String): Unit =
+      assert(files(s"$c = 30") == ScanFiles.zoneAdmits(spark, root, "t",
+        c, 30), s"$c = 30 read files its zone map rejects")
     val total = files("x >= 0 OR x < 0")
+    assert(total == meta.fileStats(meta.owners.head).size)
+    pinned("x"); pinned("y")
     // the DECLARING write already prunes on both dimensions
     if (total >= 4) {
       assert(files("x = 30") < total, "x should prune on the fresh write")
@@ -206,6 +212,7 @@ class StoreWriteSpec extends SparkSuite {
     // SPEC surviving the write-face → auto-compaction path, not about
     // re-proving the curve's constants.
     val totalAfter = after.fileStats(after.owners.head).size
+    pinned("x"); pinned("y")
     if (totalAfter >= 4) {
       assert(files("x = 30") < totalAfter, "x stopped pruning entirely")
       assert(files("y = 30") < totalAfter, "y stopped pruning entirely")

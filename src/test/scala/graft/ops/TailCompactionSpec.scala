@@ -103,8 +103,10 @@ class TailCompactionSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
       .toSet
     assert(afterRows == beforeRows)
-    assert(AtomicPublish.readTableWhere(spark, root, "docs",
-      "doc_id < 100").count() == 100)
+    val head = AtomicPublish.readTable(spark, root, "docs")
+      .where("doc_id < 100")
+    assert(ScanFiles(head) == 2)
+    assert(head.count() == 100)
     // nothing admits twice-compacted: a disjoint scope over ONE owner
     assert(Compaction.compactWhere(spark, root, "docs",
       "doc_id > 1900", targetBytes = 1L << 30).isEmpty,

@@ -14,6 +14,13 @@ import graft.SparkSuite
 class ZOrderSpec extends SparkSuite {
   import spark.implicits._
 
+  /** Files a point read `c = v` reads, after execution. */
+  private def files(root: String, pred: String): Int =
+    ScanFiles(AtomicPublish.readTable(spark, root, "t").where(pred)).toInt
+
+  private def admitting(root: String, c: String, v: Long): Int =
+    ScanFiles.zoneAdmits(spark, root, "t", c, v)
+
   test("morton interleave arithmetic: hand-computed keys") {
     // buckets (3, 5): 3 = 011b contributes bits at positions 0 and 2,
     // 5 = 101b at positions 1 and 5 → z = 1 + 4 + 2 + 32 = 39
@@ -56,27 +63,26 @@ class ZOrderSpec extends SparkSuite {
     val (_, lparts) = Compaction.compactStore(spark, lroot, "t",
       targetBytes = target, clusterBy = Seq("x", "y"))
     assert(zparts >= 8 && lparts >= 8)
-    def files(root: String, pred: String): Int =
-      AtomicPublish.readTableWhere(spark, root, "t", pred)
-        .inputFiles.length
     val zTotal = AtomicPublish.manifestMetaOf(spark, zroot, ztxn)("t")
       .fileStats(ztxn).size
     // z-order: BOTH dimensions prune to a strict subset
     val zx = files(zroot, "x = 40"); val zy = files(zroot, "y = 40")
     assert(zx < zTotal && zx <= zTotal / 2, s"x: $zx of $zTotal")
     assert(zy < zTotal && zy <= zTotal / 2, s"y: $zy of $zTotal")
+    assert(zx == admitting(zroot, "x", 40) && zy == admitting(zroot, "y", 40))
     // lexicographic: the leading column prunes hard, the trailing one
     // cannot prune at all (every file spans the full y range)
     val lTotal = files(lroot, "x >= 0 OR x < 0") // tautology: all files
     val lx = files(lroot, "x = 40"); val ly = files(lroot, "y = 40")
     assert(lx <= 2)
     assert(ly == lTotal, s"lexicographic y should read all: $ly != $lTotal")
+    assert(lx == admitting(lroot, "x", 40) &&
+      ly == admitting(lroot, "y", 40))
     assert(zy < ly, "z-order must beat lexicographic on the trailing dim")
-    // equivalence on both layouts
+    // equivalence on both layouts, against the unstored source
+    val want = grid.where("y = 40").collect().toSet
     Seq(zroot, lroot).foreach { r =>
-      val got = AtomicPublish.readTableWhere(spark, r, "t", "y = 40")
-        .collect().toSet
-      val want = AtomicPublish.readTable(spark, r, "t").where("y = 40")
+      val got = AtomicPublish.readTable(spark, r, "t").where("y = 40")
         .collect().toSet
       assert(got == want && got.size == 80)
     }
@@ -98,10 +104,9 @@ class ZOrderSpec extends SparkSuite {
     val cur = AtomicPublish.currentManifestMeta(spark, root).get
     assert(cur._2("t").clusterCols == Seq("x", "y") &&
       cur._2("t").clusterZOrder)
-    def files(pred: String): Int =
-      AtomicPublish.readTableWhere(spark, root, "t", pred)
-        .inputFiles.length
-    val freshX = files("x = 40"); val freshY = files("y = 40")
+    val freshX = files(root, "x = 40"); val freshY = files(root, "y = 40")
+    assert(freshX == admitting(root, "x", 40) &&
+      freshY == admitting(root, "y", 40))
     // a 20-trigger ingest appends unclustered slices and inherits the
     // declared layout without re-declaring anything
     (0 until 20).foreach { i =>
@@ -130,7 +135,8 @@ class ZOrderSpec extends SparkSuite {
     // previous line is the regression detector, this one only guards
     // against wholesale locality loss
     val totalAfter = after._2("t").fileStats(after._2("t").owners.head).size
-    val ax = files("x = 40"); val ay = files("y = 40")
+    val ax = files(root, "x = 40"); val ay = files(root, "y = 40")
+    assert(ax == admitting(root, "x", 40) && ay == admitting(root, "y", 40))
     assert(ax * 3 <= totalAfter * 2 && ax <= freshX + 5,
       s"x: $ax of $totalAfter (fresh $freshX)")
     assert(ay * 3 <= totalAfter * 2 && ay <= freshY + 5,

@@ -274,10 +274,11 @@ class LlmIngestStreamSpec extends SparkSuite {
     // the second segment is the one whose zone map starts at 100
     val seg2 = meta.segStats.collectFirst {
       case (o, s) if s.cols("doc_id").min.contains("100") => o }.get
-    val hit = AtomicPublish.readTableWhere(spark, root,
-      LlmIngest.DocsTable, "doc_id >= 100")
-    assert(hit.inputFiles.nonEmpty &&
-      hit.inputFiles.forall(_.contains(s"v_$seg2")), hit.inputFiles.toSeq)
+    val hit = AtomicPublish.readTable(spark, root, LlmIngest.DocsTable)
+      .where("doc_id >= 100")
+    val hitFiles = graft.ops.ScanFiles.paths(hit)
+    assert(hitFiles.size == 1 && hitFiles.forall(_.contains(s"v_$seg2")),
+      hitFiles)
     assert(hit.select("doc_id").as[Long].collect().toSet ==
       (100L to 104L).toSet)
     // chunks carry the same stats; maintain-style replace would inherit
@@ -294,9 +295,10 @@ class LlmIngestStreamSpec extends SparkSuite {
         s"$root/v_$o/${LlmIngest.DocsTable}/_bloom_doc_id.bin")),
         s"missing bloom sidecar for owner $o")
     }
-    val point = AtomicPublish.readTableWhere(spark, root,
-      LlmIngest.DocsTable, "doc_id = 103")
-    assert(point.inputFiles.forall(_.contains(s"v_$seg2")))
+    val point = AtomicPublish.readTable(spark, root, LlmIngest.DocsTable)
+      .where("doc_id = 103")
+    val pointFiles = graft.ops.ScanFiles.paths(point)
+    assert(pointFiles.size == 1 && pointFiles.forall(_.contains(s"v_$seg2")))
     assert(point.count() == 1)
   }
 

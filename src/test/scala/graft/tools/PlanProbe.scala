@@ -4,8 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** Plan probe (test scope, not shipped): prints the optimized and the
   * physical plan of every declared query ([[graft.SparkEntry.queries]])
-  * whose name starts with a prefix, in name order — run it on two
-  * checkouts and diff the output to show a change left the plans alone.
+  * whose name starts with a prefix, in name order, then runs the query
+  * once as a `noop` write and prints the files each of its scans read
+  * ([[graft.ops.ScanFiles]]) — run it on two checkouts and diff the
+  * output to show a change left the plans and the files read alone.
   *
   * {{{
   * sbt "Test/runMain graft.tools.PlanProbe <data dir> <name prefix>"
@@ -20,15 +22,42 @@ object PlanProbe {
       .config("spark.sql.shuffle.partitions", 8)
       .config("spark.ui.enabled", false)
       .getOrCreate()
+    // the noop write runs under its own QueryExecution: catch it
+    val written = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.QueryExecution]()
+    spark.listenerManager.register(
+      new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            ns: Long): Unit = { written.add(qe); () }
+        def onFailure(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            e: Exception): Unit = ()
+      })
     val selected = graft.SparkEntry.queries.toSeq
       .filter(_._1.startsWith(prefix)).sortBy(_._1)
     for ((name, query) <- selected) {
-      val qe = query(spark, dir).queryExecution
+      val df = query(spark, dir)
+      val qe = df.queryExecution
       println(s"=== $name ===")
       println("--- optimized ---")
       println(qe.optimizedPlan)
       println("--- physical ---")
       println(qe.executedPlan)
+      written.clear()
+      df.write.format("noop").mode("overwrite").save()
+      org.apache.spark.sql.graftplan.PlanBridge
+        .drainListenerBus(spark.sparkContext, 30000L)
+      println("--- files read ---")
+      val scans = written.toArray(Array.empty[org.apache.spark.sql
+          .execution.QueryExecution]).toSeq
+        .flatMap(w => graft.ops.ScanFiles.scansOf(w.executedPlan))
+      if (scans.isEmpty) println("(no file-source scan)")
+      scans.foreach { s =>
+        val table = s.relation.location.rootPaths.headOption
+          .map(_.getName).getOrElse("?")
+        println(s"$table: ${s.metrics("numFiles").value} files")
+      }
     }
     spark.stop()
   }
