@@ -574,12 +574,6 @@ object SimilarityOps {
         .sortBy(_._1).toSeq,
         cellMap.collect().map(r => (r.getInt(0), r.getInt(1))).toSeq)
     }
-  private def trainedSupercells(spark: SparkSession,
-      dir: String): (DataFrame, DataFrame) = {
-    val (sc, cm) = trainedSupercellRows(spark, dir)
-    import spark.implicits._
-    (sc.toDF("scell", "c"), cm.toDF("cell", "scell"))
-  }
 
   /** Build-path assignment for PAST the broadcast clamp: nearest
     * supercell first (broadcast, √cells rows), then nearest cell WITHIN

@@ -1,8 +1,9 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 import graft.core.Pipeline
 import graft.ops.{AesCodec, Crypto, Validation}
@@ -15,19 +16,14 @@ import graft.ops.{AesCodec, Crypto, Validation}
   *
   *  1. `pipeline(...)`: the 5-stage control-plane DAG with the reference's
   *     observable per-stage results (`*_count`, quarantine sides). Counts
-  *     are actions, so this mode caches the annotated batch once — right
-  *     for the reference's ≤1000-record API batches.
+  *     are actions, so this mode materializes the raw and the annotated
+  *     batch once each — right for the reference's ≤1000-record batches.
   *
-  *  2. `ingest(...)`: the set-oriented scale path — ONE annotated lineage;
-  *     the valid/consented/transformed splits are filters over it and all
-  *     five stage counts come from a single aggregate pass (map-side
-  *     partial agg), with no driver-side loops. The splits are lazy, so
-  *     the count aggregate and every output written from this lineage
-  *     re-read and re-validate the raw batch: a bulk batch committed as
-  *     patients, quarantine, audit_log and pipeline_runs runs 11 Spark
-  *     jobs and reads the raw batch 4 times (the count aggregate, then
-  *     the patients, quarantine and audit_log writes). Taking the counts
-  *     from the write pass instead is ROADMAP.md Open item 2.
+  *  2. `ingest(...)`: the set-oriented scale path — one job materializes
+  *     the annotated batch and observes the stage counts; the
+  *     valid/consented/transformed splits are filters over its rows. A
+  *     bulk batch committed as patients, quarantine, audit_log and
+  *     pipeline_runs runs 7 Spark jobs and reads the raw batch once.
   *
   * Stage semantics preserved from the reference:
   *  - validation quarantines, never halts (pipeline.py:44-61);
@@ -85,49 +81,58 @@ object PatientIngestion {
       extract: Long, valid: Long, consented: Long, transformed: Long,
       loaded: Long)
 
-  /** Scale path: one lineage, one counting pass (SURVEY.md §2.4 A1 as a
-    * single agg instead of five `.count()` jobs). */
+  /** Scale path: the caller's lineage plus `errors` and `consented` runs
+    * once, in one [[materialize]] job that observes the stage counts;
+    * every output reads its rows, never the raw batch. Encryption stays
+    * lazy in `loaded`. `transformed`/`loaded` copy `consented` (1:1). */
   def ingest(raw: DataFrame, codec: AesCodec = Crypto.default): IngestResult = {
-    val annotated = Validation.withErrors(raw, Validation.fhirPatientRules)
+    val isValid = size(col("errors")) === 0
+    val obs = Observation()
+    // a sum over an empty batch is null, hence the coalesce
+    val annotated = materialize(Validation.withErrors(raw, Validation.fhirPatientRules)
       .withColumn("consented", consentGate)
-    val valid = annotated.filter(size(col("errors")) === 0)
-    val invalid = annotated.filter(size(col("errors")) > 0)
+      .observe(obs,
+        count(lit(1)).as("extract"),
+        coalesce(sum(when(isValid, 1L).otherwise(0L)), lit(0L)).as("valid"),
+        coalesce(sum(when(isValid && col("consented"), 1L).otherwise(0L)),
+          lit(0L)).as("consented")))
+    def n(k: String) = obs.get(k).asInstanceOf[Long]
+    val invalid = annotated.filter(!isValid)
       .select((raw.columns.toIndexedSeq.map(col) :+ col("errors")): _*)
+    val valid = annotated.filter(isValid)
     val blocked = valid.filter(!col("consented"))
       .select(col("mrn"), lit("no data_sharing consent").as("reason"))
-    val consented = valid.filter(col("consented")).drop("errors", "consented")
-    val loaded = transformProjection(consented, codec)
-
-    // one aggregate pass for every stage count (a sum over an empty
-    // batch is null, hence the coalesce)
-    val c = annotated.agg(
-      count(lit(1)).as("extract"),
-      coalesce(sum(when(size(col("errors")) === 0, 1L).otherwise(0L)),
-        lit(0L)).as("valid"),
-      coalesce(sum(when(size(col("errors")) === 0 && col("consented"), 1L)
-        .otherwise(0L)), lit(0L)).as("consented")).head()
-    val counts = IngestCounts(c.getLong(0), c.getLong(1), c.getLong(2),
-      c.getLong(2), c.getLong(2))
-    IngestResult(loaded, invalid, blocked, counts)
+    val loaded = transformProjection(
+      valid.filter(col("consented")).drop("errors", "consented"), codec)
+    IngestResult(loaded, invalid, blocked, IngestCounts(n("extract"),
+      n("valid"), n("consented"), n("consented"), n("consented")))
   }
+
+  /** Run `df` once, now, and rebind it over the written rows, on disk (a
+    * heap level would hold a bulk batch's 1M rows live while it
+    * publishes). Lifetime and fault caveats as for `checkpointFresh` in
+    * `StreamingBridge`: at deployment scale, a reliable staging write. */
+  private def materialize(df: DataFrame): DataFrame =
+    df.localCheckpoint(eager = true, StorageLevel.DISK_ONLY)
 
   /** Parity path: the reference's exact 5-stage DAG shape
     * (pipeline.py:135-143) over the control-plane runner, with each
-    * stage's observable result map. The raw batch is cached once because
-    * per-stage counts are actions (reference batches are ≤1000 rows;
-    * for the 100 TB path use `ingest`). */
+    * stage's observable result map. The raw and the annotated batch are
+    * each materialized once because per-stage counts are actions
+    * (reference batches are ≤1000 rows; for the 100 TB path use
+    * `ingest`). */
   def pipeline(codec: AesCodec = Crypto.default): Pipeline = {
     def df(ctx: Pipeline.Context, key: String): DataFrame =
       ctx(key).asInstanceOf[DataFrame]
 
     Pipeline("patient_ingestion")
       .addStage("extract", ctx => {
-        val raw = df(ctx, "raw_records").cache()
+        val raw = materialize(df(ctx, "raw_records"))
         Map("extracted_records" -> raw, "extract_count" -> raw.count())
       })
       .addStage("validate", ctx => {
-        val recs = df(ctx, "extracted_records")
-        val annotated = Validation.withErrors(recs, Validation.fhirPatientRules).cache()
+        val annotated = materialize(Validation.withErrors(
+          df(ctx, "extracted_records"), Validation.fhirPatientRules))
         val valid = annotated.filter(size(col("errors")) === 0).drop("errors")
         val invalid = annotated.filter(size(col("errors")) > 0)
         Map("valid_records" -> valid, "validation_errors" -> invalid,

@@ -71,9 +71,6 @@ object Sinks {
       detailJson(resourceIds).as("detail"),
       current_timestamp().as("timestamp"))
 
-  def appendAudit(df: DataFrame, path: String): Unit =
-    df.write.mode("append").parquet(path)
-
   /** S7: one pipeline_runs row per run (routes.py:137-148). Counts stored
     * as strings — the reference's VARCHAR(16) quirk, kept at this edge. */
   def pipelineRunRow(spark: SparkSession, pipelineName: String, status: String,

@@ -107,9 +107,9 @@ object StreamingBridge {
     * (ADVICE r14 #1: each BPE round would pin another round's blocks).
     * So the walk descends each leaf RDD's DEPENDENCY chain to the
     * ancestors whose storage level is set and unpersists those. Safe
-    * for checkpointFresh results because their lineage below the leaf
-    * is exactly (map layers → the localCheckpoint RDD) — nothing
-    * shared; the frame must not be executed again after. */
+    * for checkpointFresh results (below the leaf, map layers → the
+    * localCheckpoint RDD, nothing shared) and for frames over a plain
+    * `localCheckpoint`; the frame must not be executed again after. */
   def unpersistCheckpoint(df: Dataset[Row]): Unit =
     df.queryExecution.analyzed.foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftstream.StreamingBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
@@ -284,14 +285,17 @@ object StreamingOps {
   /** The patient-ingestion pipeline bound to a stream via foreachBatch —
     * the reference's HTTP-bounded micro-batch (§3.1) re-expressed: each
     * micro-batch runs the full validate→consent→transform flow and the
-    * caller's sink sees the per-batch IngestResult. */
+    * caller's sink sees the per-batch IngestResult, which must not be
+    * used after `onBatch` returns: its rows are released then. */
   def ingestEachBatch(stream: DataFrame)
                      (onBatch: (PatientIngestion.IngestResult, Long) => Unit): StreamingQuery =
     stream.writeStream
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        onBatch(PatientIngestion.ingest(batch), id)
+        val result = PatientIngestion.ingest(batch)
+        try onBatch(result, id)
+        finally StreamingBridge.unpersistCheckpoint(result.validationErrors)
       }
       .start()
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
-import graft.ops.{AtomicPublish, Crypto, Sinks}
+import graft.ops.{AtomicPublish, Crypto, ScanFiles, Sinks}
 
 /** The reference USER JOURNEY end-to-end — what `POST /ingest` +
   * `GET /patients` do (/root/reference/app/api/routes.py:68-199), as one
@@ -116,5 +116,76 @@ class IngestJourneySpec extends SparkSuite {
       Set("MRN-1", "MRN-2", "MRN-9"))
     assert(AtomicPublish.readTableAt(spark, root, "patients", txn)
       .count() == 2)
+  }
+
+  /** Record `i` of a landing batch, cycling six kinds: valid with ssn,
+    * valid without, missing name (quarantined), no consent (blocked), bad
+    * date (quarantined), and a later duplicate of record `i - 5`'s mrn
+    * (a conflict: "Zed" sorts after the first copy's name). */
+  private def landed(i: Int): (Row, Int) = i % 6 match {
+    case 0 => (patient(f"MRN-$i%04d", ssn = "123-45-6789"), 0)
+    case 1 => (patient(f"MRN-$i%04d"), 1)
+    case 2 => (Row("Patient", f"MRN-$i%04d", null, null, null, null, null), 2)
+    case 3 => (patient(f"MRN-$i%04d", consent = false), 3)
+    case 4 => (Row("Patient", f"MRN-$i%04d", "Jane Doe", "01/15/1990",
+      "female", null, Map("data_sharing" -> true)), 4)
+    case _ => (patient(f"MRN-${i - 5}%04d", name = "Zed Dup"), 5)
+  }
+
+  test("one pass: the landing file is scanned by exactly one executed plan") {
+    val dir = java.nio.file.Files.createTempDirectory("journey-landing")
+    val landing = dir.resolve("landing.parquet").toString
+    val n = 300
+    val kinds = (0 until n).map(landed(_)._2)
+    spark.createDataFrame(
+      spark.sparkContext.parallelize((0 until n).map(landed(_)._1), 3),
+      PatientIngestion.inputSchema).write.parquet(landing)
+    val root = dir.resolve("store").toString
+
+    val (result, executed) = ScanFiles.executedDuring(spark) {
+      val raw = spark.read.schema(PatientIngestion.inputSchema).parquet(landing)
+      val split = Sinks.detectConflicts(raw,
+        existing = Seq.empty[String].toDF("mrn"), key = "mrn",
+        orderBy = Seq(col("name")))
+      val result = PatientIngestion.ingest(split.insertable)
+      AtomicPublish.publish(spark, root, Map(
+        "patients" -> result.loaded,
+        "quarantine" -> result.validationErrors.select(col("mrn"), col("errors")),
+        "audit_log" -> Sinks.auditEntries("ingestion_api", "create",
+          "patient", result.loaded, "mrn"),
+        "pipeline_runs" -> Sinks.pipelineRunRow(spark, "patient_ingestion",
+          "completed", java.sql.Timestamp.valueOf("2026-01-01 00:00:00"),
+          java.sql.Timestamp.valueOf("2026-01-01 00:00:05"),
+          inputCount = n.toLong, outputCount = result.counts.loaded,
+          errorsJson = "[]", dagJson = "{}")))
+      result
+    }
+    // only ingest's materializing job reads the raw batch; the
+    // patients, quarantine and audit_log writes read its rows
+    assert(executed.count(qe => ScanFiles.scansOf(qe.executedPlan).exists(
+      _.relation.location.rootPaths.exists(_.getName == "landing.parquet"))) == 1)
+
+    def of(k: Int*) = kinds.count(k.contains).toLong
+    assert(result.counts == PatientIngestion.IngestCounts(
+      extract = of(0, 1, 2, 3, 4), valid = of(0, 1, 3),
+      consented = of(0, 1), transformed = of(0, 1), loaded = of(0, 1)))
+    def rows(t: String) = AtomicPublish.readTable(spark, root, t).count()
+    assert(rows("patients") == of(0, 1))
+    assert(rows("quarantine") == of(2, 4))
+    assert(rows("audit_log") == of(0, 1))
+    assert(rows("pipeline_runs") == 1L)
+  }
+
+  test("a zero-partition batch observes all-zero counts") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.global
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      PatientIngestion.inputSchema)
+    // a missing observation would block `ingest` forever: bound the wait
+    val counts = Await.result(
+      Future(PatientIngestion.ingest(empty).counts), 2.minutes)
+    assert(counts == PatientIngestion.IngestCounts(0L, 0L, 0L, 0L, 0L))
   }
 }

@@ -84,6 +84,41 @@ class PatientIngestionSpec extends SparkSuite {
     assert(r.consentBlocked.collect().map(_.getString(0)).toSeq == Seq("MRN-2"))
   }
 
+  test("ingest's observed counts and splits equal the parity DAG's on the FIXTURES A2 corpus") {
+    // all six A2 variants in one batch, one distinct mrn per record
+    val rows = Seq(
+      Row("Patient", "MRN-BAD", null, null, null, null, null), // missing name
+      patient(mrn = "MRN-NC", consentSharing = false),         // no consent
+      patient(mrn = "MRN-1", consentSharing = true),           // mixed batch
+      patient(mrn = "MRN-2", consentSharing = false),
+      Row("Patient", "MRN-3", null, null, null, null, null),
+      Row("Patient", "MRN-DATE", "Jane", "01/15/1990", null, null, null),
+      Row("Patient", "MRN-GENDER", "Jane", null, "invalid_value", null, null),
+      Row("Patient", null, null, null, null, null, null))      // missing required
+    val r = PatientIngestion.ingest(batch(rows: _*))
+    val p = PatientIngestion.pipeline().run(Map("raw_records" -> batch(rows: _*)))
+    def stage(s: String, k: String) = p(s).result(k)
+    def mrns(df: Any) = df.asInstanceOf[DataFrame].select("mrn").collect()
+      .map(x => Option(x.getString(0))).toSet
+    assert(p.status == "completed")
+    assert(r.counts.extract == stage("extract", "extract_count"))
+    assert(r.counts.valid == stage("validate", "valid_count"))
+    assert(r.counts.consented == stage("check_consent", "consented_count"))
+    assert((r.counts.extract, r.counts.valid, r.counts.consented) == ((8L, 3L, 1L)))
+    assert(mrns(r.loaded) == mrns(stage("load", "loaded_records")))
+    assert(mrns(r.consentBlocked) == mrns(stage("check_consent", "consent_blocked")))
+    assert(mrns(r.validationErrors) == mrns(stage("validate", "validation_errors")))
+    assert(mrns(r.loaded) == Set(Some("MRN-1")))
+    assert(mrns(r.consentBlocked) == Set(Some("MRN-NC"), Some("MRN-2")))
+  }
+
+  test("a pipeline run leaves nothing in the session's cache") {
+    spark.catalog.clearCache()
+    PatientIngestion.pipeline().run(Map("raw_records" -> batch(patient())))
+    assert(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty)
+  }
+
   test("null consent map blocks (strict `is True` gate)") {
     val noConsentMap = Row("Patient", "MRN-NC", "A B", null, null, null, null)
     val r = PatientIngestion.ingest(batch(noConsentMap))

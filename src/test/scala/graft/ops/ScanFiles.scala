@@ -1,9 +1,12 @@
 package graft.ops
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.FileScanRDD
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Test-side scan audit: execute a DataFrame once, then report what
   * each [[FileSourceScanExec]] of its executed plan read — the file set
@@ -22,6 +25,27 @@ object ScanFiles {
     case s: QueryStageExec => scansOf(s.plan)
     case f: FileSourceScanExec => Seq(f)
     case o => o.children.flatMap(scansOf)
+  }
+
+  /** Run `body`; with its value, the query executions that completed
+    * during it (each action, write and checkpoint runs under its own),
+    * once the listener bus has delivered them. */
+  def executedDuring[T](spark: SparkSession)(body: => T)
+      : (T, Seq[QueryExecution]) = {
+    val done = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        done.add(qe); ()
+      }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val v = body
+      org.apache.spark.sql.graftplan.PlanBridge
+        .drainListenerBus(spark.sparkContext, 30000L)
+      (v, done.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
   }
 
   /** Execute `df`; its scans, restricted to those of `table` when given

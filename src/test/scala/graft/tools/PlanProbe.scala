@@ -22,18 +22,6 @@ object PlanProbe {
       .config("spark.sql.shuffle.partitions", 8)
       .config("spark.ui.enabled", false)
       .getOrCreate()
-    // the noop write runs under its own QueryExecution: catch it
-    val written = new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.sql.execution.QueryExecution]()
-    spark.listenerManager.register(
-      new org.apache.spark.sql.util.QueryExecutionListener {
-        def onSuccess(f: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            ns: Long): Unit = { written.add(qe); () }
-        def onFailure(f: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            e: Exception): Unit = ()
-      })
     val selected = graft.SparkEntry.queries.toSeq
       .filter(_._1.startsWith(prefix)).sortBy(_._1)
     for ((name, query) <- selected) {
@@ -44,14 +32,11 @@ object PlanProbe {
       println(qe.optimizedPlan)
       println("--- physical ---")
       println(qe.executedPlan)
-      written.clear()
-      df.write.format("noop").mode("overwrite").save()
-      org.apache.spark.sql.graftplan.PlanBridge
-        .drainListenerBus(spark.sparkContext, 30000L)
+      // the noop write runs under its own QueryExecution: catch it
+      val (_, written) = graft.ops.ScanFiles.executedDuring(spark)(
+        df.write.format("noop").mode("overwrite").save())
       println("--- files read ---")
-      val scans = written.toArray(Array.empty[org.apache.spark.sql
-          .execution.QueryExecution]).toSeq
-        .flatMap(w => graft.ops.ScanFiles.scansOf(w.executedPlan))
+      val scans = written.flatMap(w => graft.ops.ScanFiles.scansOf(w.executedPlan))
       if (scans.isEmpty) println("(no file-source scan)")
       scans.foreach { s =>
         val table = s.relation.location.rootPaths.headOption
