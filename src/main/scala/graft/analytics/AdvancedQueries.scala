@@ -2032,9 +2032,9 @@ object AdvancedQueries {
 
   /** store17 — CDC-TRANSPARENT COMPACTION end to end (VERDICT-r9 ask
     * #1): a downstream MIRROR store is maintained purely from the CDC
-    * stream (`withDeletes`) of a source table whose un-drained window
-    * holds an append, row deletes, a FULL COMPACTION (the tombstone
-    * debt applied physically — a reorganization commit,
+    * stream (`readStream.format("graft")`) of a source table whose
+    * un-drained window holds an append, row deletes, a FULL COMPACTION
+    * (the tombstone debt applied physically — a reorganization commit,
     * dataChange=false), and a post-compaction append. Pre-r10 the
     * compaction forced `GRAFT_RESYNC_REQUIRED` on the stream; now the
     * commit chain's dataChange markers let the interval diff ride
@@ -2071,8 +2071,7 @@ object AdvancedQueries {
       .repartition(2)
     def drain(): Unit = {
       val q = spark.readStream.format("graft")
-        .option("root", srcRoot).option("table", "documents")
-        .option("withDeletes", "true").load()
+        .option("root", srcRoot).option("table", "documents").load()
         .writeStream.option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .foreachBatch { (df: DataFrame, _: Long) =>

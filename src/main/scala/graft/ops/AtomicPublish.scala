@@ -2381,11 +2381,6 @@ object AtomicPublish {
       s"cdf stages the change set of a rewrite — '$t' is not replaced " +
         "by this delta (appends and drops are already feed-exact)"))
     cdf.foreach { case (t, (ins, del)) => requireNoCdfCol(t, ins, del) }
-    // delete rows FIRST: union preserves partition order into the
-    // staged files, so the CDC pacer's delete phase (low file
-    // positions) reads mostly-delete files instead of draining empty
-    // slices over insert files (r15 — ordering is a pacing
-    // optimization only; the feeds filter by tag either way)
     val cdfAppend: Map[String, DataFrame] = cdf.map { case (t, (ins, del)) =>
       cdfTableOf(t) -> del.withColumn(CdfTypeCol, lit("delete"))
         .unionByName(ins.withColumn(CdfTypeCol, lit("insert")),
@@ -3696,7 +3691,7 @@ object AtomicPublish {
     * [[CdfTypeCol]] — as ONE appended owner of this companion, in the
     * SAME CAS commit as the rewrite, and records `cdf=<table>` in the
     * commit marker. The change feeds ([[changesWithDeletes]],
-    * [[appendedBetween]] and both streaming sources) then serve the
+    * [[changesSince]] and the streaming CDC source) then serve the
     * staged rows ACROSS the rewrite instead of failing with
     * RESYNC_REQUIRED — a routine backfill no longer kills every live
     * downstream consumer. The companion is append-only (one owner per
@@ -3707,8 +3702,7 @@ object AtomicPublish {
   def cdfTableOf(table: String): String = s"${table}__cdf"
 
   /** Discriminator column of the staged change set: `insert` |
-    * `delete` (two-valued on disk; the CDC stream's optional
-    * update-image classification refines it at read time).
+    * `delete`.
     * RESERVED for tables that stage CDF (like the `__del` / `__cdf`
     * name suffixes): staging tags rows `withColumn(CdfTypeCol, …)`
     * and the feeds `drop` it on serve, so a user column of this name
@@ -3731,54 +3725,6 @@ object AtomicPublish {
         "a user column of that name would be overwritten). Rename " +
         "the column, or rewrite without CDF staging (stageCdf=false " +
         "/ no cdf entry) and let downstream consumers resync."))
-
-  /** Sorted data-file paths of the staged change set of `table` at
-    * rewrite commit `rewriteTxn` — the PACING AXIS for draining a
-    * backfill's change rows across microbatches (VERDICT r14 #2): the
-    * cdf companion stages ONE owner per rewrite, but that owner can
-    * hold a 100 TB table's 1% restatement, so the streaming sources'
-    * admission cap slices it by FILES (comparable granularity to the
-    * owner segments the cap bounds elsewhere). Segments are immutable,
-    * so the sorted listing is a stable coordinate system a
-    * checkpointed offset can safely carry across restarts. */
-  def cdfStagedFiles(spark: SparkSession, root: String, table: String,
-      rewriteTxn: String): Seq[String] = {
-    val cdfT = cdfTableOf(table)
-    val m = manifestMetaOf(spark, root, rewriteTxn).getOrElse(cdfT,
-      throw new IllegalStateException(
-        s"commit $rewriteTxn staged no change set for '$table'"))
-    require(m.owners.contains(rewriteTxn),
-      s"commit $rewriteTxn's manifest lost its own staged change set " +
-        s"for '$table'")
-    val seg = new Path(new Path(root, s"v_$rewriteTxn"),
-      m.dirOf(rewriteTxn, cdfT))
-    val fs = seg.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val it = fs.listFiles(seg, true)
-    while (it.hasNext) {
-      val f = it.next()
-      val nm = f.getPath.getName
-      if (!nm.startsWith("_") && !nm.startsWith("."))
-        out += f.getPath.toString
-    }
-    out.sorted.toSeq
-  }
-
-  /** Files `[fromF, toF)` of the staged change set (still carrying
-    * [[CdfTypeCol]]), read under the companion's recorded schema —
-    * the union of all slices equals the whole staged owner. An empty
-    * range yields an empty frame of the recorded shape. */
-  def readCdfStagedSlice(spark: SparkSession, root: String,
-      table: String, rewriteTxn: String, fromF: Int, toF: Int)
-      : DataFrame = {
-    val cdfT = cdfTableOf(table)
-    val m = manifestMetaOf(spark, root, rewriteTxn)(cdfT)
-    val files = cdfStagedFiles(spark, root, table, rewriteTxn)
-      .slice(fromF, toF)
-    if (files.isEmpty)
-      readSegments(spark, root, cdfT, m, Seq(rewriteTxn)).limit(0)
-    else spark.read.schema(m.schema).parquet(files: _*)
-  }
 
   /** Tombstone scope column: a tombstone with `_asof = n` applies to
     * the data table's owner segments at positions BELOW n in its owner
@@ -4396,20 +4342,10 @@ object AtomicPublish {
     * contribute nothing and re-base the bookkeeping. A rewrite that
     * STAGED its change set (`cdf=` marker, r14) re-bases the
     * bookkeeping the same way and contributes its staged INSERT rows
-    * — the plain change feed's contract is "rows the table gained",
-    * and the staged insert side is exactly that. */
+    * — [[changesSince]]'s contract is "rows the table gained", and the
+    * staged insert side is exactly that. */
   private def walkAppendedOwners(spark: SparkSession, root: String,
-      table: String, sinceTxn: String, chain: Seq[(String, CommitInfo)],
-      /** Cap the named version's chain at this position — the
-        * streaming face paces batches to offsets that may cover only a
-        * PREFIX of the end version's chain. */
-      endCap: Option[(String, Int)] = None,
-      /** Skip the staged change set OF THIS COMMIT (ride its rewrite
-        * without contributing the staged rows) — the streaming face
-        * paces a giant staged set by files and serves the slices
-        * itself, so a batch ENDING mid-staged-set must not also get
-        * the whole set from the walk. */
-      excludeStagedAt: Option[String] = None)
+      table: String, sinceTxn: String, chain: Seq[(String, CommitInfo)])
       : Option[Seq[AppendedPart]] = {
     val memo = scala.collection.mutable.Map.empty[String, Seq[String]]
     val metaMemo =
@@ -4417,14 +4353,8 @@ object AtomicPublish {
     def metasAt(t: String): Map[String, TableMeta] =
       metaMemo.getOrElseUpdate(t, manifestMetaOf(spark, root, t))
     def metaAt(t: String): Option[TableMeta] = metasAt(t).get(table)
-    def ownersAt(t: String): Seq[String] = {
-      val full = memo.getOrElseUpdate(t,
-        metaAt(t).map(_.owners).getOrElse(Nil))
-      endCap match {
-        case Some((ct, n)) if ct == t => full.take(n)
-        case _ => full
-      }
-    }
+    def ownersAt(t: String): Seq[String] =
+      memo.getOrElseUpdate(t, metaAt(t).map(_.owners).getOrElse(Nil))
     val out = scala.collection.mutable.ListBuffer.empty[AppendedPart]
     // consecutive append steps coalesce into one run, read with the
     // run-END version's meta (its chain holds every owner of the run,
@@ -4447,12 +4377,11 @@ object AtomicPublish {
         // staged rewrite: its gained rows come from the cdf owner,
         // never from chain arithmetic (the chain was rewritten)
         flush()
-        if (!excludeStagedAt.contains(txn))
-          metasAt(txn).get(cdfTableOf(table))
-            .filter(_.owners.contains(txn)) match {
-            case Some(dm) => out += CdfInsertsPart(dm, txn)
-            case None => return None // marker says staged, manifest lost it
-          }
+        metasAt(txn).get(cdfTableOf(table))
+          .filter(_.owners.contains(txn)) match {
+          case Some(dm) => out += CdfInsertsPart(dm, txn)
+          case None => return None // marker says staged, manifest lost it
+        }
       } else if (b.startsWith(a)) {
         runAdded ++= b.drop(a.size)
         if (runAdded.nonEmpty) runMeta = metaAt(txn)
@@ -4470,136 +4399,13 @@ object AtomicPublish {
     Some(out.toList)
   }
 
-  /** The owner chain of `table` at version `txn` (empty when the
-    * table is absent) — the streaming face's offset arithmetic. */
+  /** The owner chain of `table` at version `txn` — its segment ids in
+    * append order (empty when the table is absent). Specs read it to
+    * check which segments a commit kept, replaced or appended. */
   def ownerChainAt(spark: SparkSession, root: String, table: String,
       txn: String): Seq[String] =
     manifestMetaOf(spark, root, txn).get(table).map(_.owners)
       .getOrElse(Nil)
-
-  /** A CONTIGUOUS slice `[fromN, toN)` of `table`'s owner chain at
-    * `txn`, read delete-aware (merge-on-read tombstones applied, asof
-    * scopes exact) — the paced-snapshot batch of the CDC stream: the
-    * union of all slices of a version equals [[readTableAt]] of it. */
-  def readTableSlice(spark: SparkSession, root: String, table: String,
-      txn: String, fromN: Int, toN: Int): DataFrame = {
-    val metas = manifestMetaOf(spark, root, txn)
-    val m = metas.getOrElse(table, throw new IllegalArgumentException(
-      s"table '$table' is not in version $txn under $root"))
-    applyTombstones(spark, root, table, metas,
-      readSegments(spark, root, table, m, m.owners.slice(fromN, toN)))
-  }
-
-  /** The rows `table` GAINED between chain position `fromN` of
-    * `fromTxn` and position `toN` of `toTxn` — the plain change feed's
-    * batch, riding through reorganization commits (dataChange=false):
-    * owners appended before a reorg are served from their ORIGINAL
-    * segments (still on disk under the retention contract), the reorg
-    * itself contributes nothing. None when the interval holds a
-    * data-changing rewrite or the commit chain cannot be walked — the
-    * caller resyncs, exactly like [[changesSince]]. The result is
-    * conformed to `toTxn`'s recorded schema. */
-  def appendedBetween(spark: SparkSession, root: String, table: String,
-      fromTxn: String, fromN: Int, toTxn: String, toN: Int,
-      /** See [[walkAppendedOwners]] — a batch ending mid-staged-set
-        * serves its own file slices of that commit's change set. */
-      excludeStagedAt: Option[String] = None)
-      : Option[DataFrame] = {
-    val mTo = manifestMetaOf(spark, root, toTxn).getOrElse(table,
-      throw new IllegalArgumentException(
-        s"table '$table' is not in version $toTxn under $root"))
-    def emptyLike = spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      mTo.schema)
-    if (fromTxn == toTxn)
-      Some(
-        if (fromN >= toN) emptyLike
-        else readSegments(spark, root, table, mTo,
-          mTo.owners.slice(fromN, toN)))
-    else {
-      val mFrom = manifestMetaOf(spark, root, fromTxn).get(table)
-      val chainA = mFrom.map(_.owners).getOrElse(Nil)
-      chainInfos(spark, root, fromTxn, toTxn).flatMap { chain =>
-        walkAppendedOwners(spark, root, table, fromTxn, chain,
-          endCap = Some((toTxn, toN)),
-          excludeStagedAt = excludeStagedAt).map { walked =>
-          // un-consumed backlog at the START version first, read at its
-          // own meta — a later reorg may have rewritten those owners,
-          // but their version's segments persist
-          val backlog: Seq[AppendedPart] =
-            if (fromN < chainA.size)
-              Seq(OwnersPart(mFrom.get, chainA.drop(fromN)))
-            else Nil
-          val parts = backlog ++ walked
-          val frames =
-            parts.map(readAppendedPart(spark, root, table, _))
-          if (frames.isEmpty) emptyLike
-          else alignFrames(frames, mTo.schema)
-        }
-      }
-    }
-  }
-
-  /** The commit-chain walk for the streaming sources: txns from
-    * `sinceTxn` (exclusive) to `at` (inclusive), oldest first, each
-    * with its full marker info — the streaming offset walk needs
-    * [[CommitInfo.cdfTables]] to ride a staged rewrite instead of
-    * resyncing. None when the chain cannot be walked (pre-link
-    * markers, vacuumed intermediates). */
-  def commitChainInfos(spark: SparkSession, root: String,
-      sinceTxn: String, at: String): Option[Seq[(String, CommitInfo)]] =
-    chainInfos(spark, root, sinceTxn, at)
-
-  /** COMMIT-INTERVAL PACING for the CDC stream: the txn on the chain
-    * from `fromTxn` to `toTxn` that admits at most ~`maxOwners` newly
-    * appended owner segments of `table` (and its tombstone companion —
-    * delete work is paced too), always at least one commit so the
-    * stream makes progress. A commit that STAGED a change set
-    * (commit-time CDF) weighs its doubled file axis `2F` (delete
-    * phase + insert phase, [[graft.streaming.GraftChangeFeedSource
-    * .TxnOffset]]): when that exceeds the remaining budget the pacer
-    * first CLOSES the ordinary interval before the rewrite, then —
-    * as the next batch — returns the rewrite txn with the first
-    * slice position in `_2`, from which the source drains the staged
-    * set file-wise (VERDICT r14 #2: a 1 TB backfill diff no longer
-    * lands in one batch regardless of the cap). `(toTxn, None)` when
-    * the chain cannot be walked (the unpaced behavior — the diff
-    * then resyncs if it must). */
-  def paceCommits(spark: SparkSession, root: String, table: String,
-      fromTxn: String, toTxn: String, maxOwners: Int)
-      : (String, Option[Int]) =
-    chainInfos(spark, root, fromTxn, toTxn) match {
-      case None => (toTxn, None)
-      case Some(chain) =>
-        val dt = deleteTableOf(table)
-        def size(t: String): Int = {
-          val m = manifestMetaOf(spark, root, t)
-          m.get(table).map(_.owners.size).getOrElse(0) +
-            m.get(dt).map(_.owners.size).getOrElse(0)
-        }
-        var budget = maxOwners
-        var last = fromTxn
-        var prev = size(fromTxn)
-        for ((t, ci) <- chain) {
-          if (ci.cdfTables.contains(table) && ci.dataChange) {
-            val axis =
-              2 * cdfStagedFiles(spark, root, table, t).size
-            if (axis > budget) {
-              return if (last != fromTxn) (last, None)
-              else (t, Some(math.min(maxOwners, axis)))
-            }
-            budget -= axis
-            last = t; prev = size(t)
-          } else {
-            val s = size(t)
-            val added = math.max(0, s - prev) // reorgs shrink chains → 0
-            if (last != fromTxn && added > budget) return (last, None)
-            budget -= added
-            last = t; prev = s
-          }
-        }
-        (last, None)
-    }
 
   /** Union frames whose schemas may differ by mid-interval evolution
     * (columns added/widened), conformed to `want` — the schema the
@@ -4646,17 +4452,6 @@ object AtomicPublish {
     * carry one of the interval's tombstone keys, so that key set (when
     * small) is pushed as an `IN` filter and blooms/zone maps prune the
     * scan to the files that can match. */
-  /** The recorded delete-key columns of `table` at version `at` (the
-    * tombstone companion's schema minus the internal scope column), or
-    * None when the table has never recorded a delete key. The CDC
-    * update-image classification keys on this
-    * ([[graft.streaming.GraftCdcFeedSource]]). */
-  def deleteKeyColsAt(spark: SparkSession, root: String, table: String,
-      at: String): Option[Seq[String]] =
-    manifestMetaOf(spark, root, at).get(deleteTableOf(table))
-      .map(_.schema.fieldNames.toSeq.filterNot(_ == TombAsofCol))
-      .filter(_.nonEmpty)
-
   def changesWithDeletes(spark: SparkSession, root: String, table: String,
       sinceTxn: String, atTxn: Option[String] = None)
       : Option[(DataFrame, DataFrame)] = {
@@ -5064,13 +4859,11 @@ object AtomicPublish {
           // reading every INTERMEDIATE version's manifest on the way
           // (ride-through bookkeeping). Protecting only the held
           // version + closure let vacuum reclaim intermediates and
-          // turn a pure-append catch-up into a spurious resync (the
-          // CDC feed masked this behind its prefix fast path; the
-          // plain feed and any spanning interval hit it). So every
-          // version committed at-or-after the OLDEST held version
-          // survives — the Kafka shape: retention keeps the suffix
-          // past the laggard, and an abandoned checkpoint stops
-          // holding it once its registration outlives the TTL.
+          // turn a catch-up spanning a reorganization into a spurious
+          // resync. So every version committed at-or-after the OLDEST
+          // held version survives — the Kafka shape: retention keeps
+          // the suffix past the laggard, and an abandoned checkpoint
+          // stops holding it once its registration outlives the TTL.
           val floor = held.flatMap(committedAt.get)
           if (floor.isEmpty) held
           else {

@@ -944,7 +944,7 @@ final class GraftV1Relation(ctx: SQLContext, root: String, table: String,
 private[graft] object GraftCatalogRead {
 
   /** Opt-in switch for [[lastInnerScan]]: production catalog reads
-    * retain nothing unless a spec/rehearsal flips this on (VERDICT-r6
+    * retain nothing unless a spec flips this on (VERDICT-r6
     * ADVICE — an always-on global retained the last query's plan and
     * raced under concurrent reads). */
   @volatile private[graft] var probeEnabled = false
@@ -953,10 +953,8 @@ private[graft] object GraftCatalogRead {
     * inner scan a catalog read built. The outer plan shows a single
     * row-source leaf, so a spec pinning "the catalog pruned to the
     * same file subset the side-channel does" needs the inner plan's
-    * `numFiles` metric — this is the only way to reach it from outside
-    * ([[graft.ScaleRehearsal]] uses it too, to assert catalog point
-    * reads prune at a 1000-segment history). Never read by production
-    * code. */
+    * `numFiles` metric — this is the only way to reach it from
+    * outside. Never read by production code. */
   @volatile private[graft] var lastInnerScan: Option[DataFrame] = None
 
   /** Conservative `sources.Filter` → `Column` translation: `None` for

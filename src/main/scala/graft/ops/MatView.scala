@@ -597,42 +597,6 @@ object MatView {
     }
   }
 
-  /** CONTINUOUS refresh: subscribe to the store's change feed
-    * (`readStream.format("graft")` over every source table of the
-    * view — a join view wakes on commits to EITHER side) and bring
-    * the view current once per commit interval — the event-driven
-    * replacement for a caller-scheduled polling loop. The microbatch
-    * frame itself is only the wake-up signal; [[refresh]] re-reads the
-    * store under its own pinned txn and CAS, so delivery semantics
-    * (at-least-once foreachBatch) cannot corrupt the view. If a
-    * source is compacted/replaced mid-stream the query fails with
-    * [[graft.streaming.GraftChangeFeedSource.ResyncRequired]]; the
-    * caller's supervision loop runs one batch [[refresh]] (which
-    * handles the replace by recompute) and restarts from a fresh
-    * checkpoint. */
-  def streamRefresh(spark: SparkSession, root: String, d: ViewDef,
-      checkpoint: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val sources = d match {
-      case s: Def => Seq(s.src)
-      case j: JoinDef => Seq(j.left, j.right)
-    }
-    sources.map { t =>
-      spark.readStream.format("graft")
-        .option("root", root).option("table", t).load()
-        .select(lit(1L).as("__wake"))
-    }.reduce(_ unionByName _)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (_: DataFrame, _: Long) =>
-        refresh(spark, root, d); ()
-      }
-      .start()
-  }
-
   /** The recorded definition as a one-row frame ([[ViewDef.defTable]]):
     * plain strings so a SQL user can read their own catalog back. */
   private def defFrame(spark: SparkSession, d: ViewDef): DataFrame = {

@@ -618,7 +618,12 @@ object GraftFileIndex {
   * refuses a non-raw format read (resurrecting deleted rows silently is
   * the compliance failure) and points at [[AtomicPublish.readTable]] /
   * [[AtomicPublish.registerViews]], which wrap the same pruned relation
-  * with the anti-join. */
+  * with the anti-join.
+  *
+  * `readStream.format("graft")` with the same `root`/`table` options is
+  * the store's signed-row change feed
+  * ([[graft.streaming.GraftCdcFeedSource]]); `writeStream` is the
+  * exactly-once sink ([[GraftSink]]). */
 final class GraftSource extends RelationProvider
     with CreatableRelationProvider with StreamSourceProvider
     with StreamSinkProvider with DataSourceRegister {
@@ -637,38 +642,16 @@ final class GraftSource extends RelationProvider
     (root, table)
   }
 
-  private def withDeletes(parameters: Map[String, String]): Boolean =
-    parameters.get("withDeletes").exists(_.equalsIgnoreCase("true"))
-
-  /** `option("startingOffsets", "latest"|"earliest")` — Kafka's option
-    * vocabulary. `earliest` (default) re-delivers the full current
-    * snapshot as a fresh checkpoint's first batch (the resync
-    * semantics); `latest` starts the feed at the version current when
-    * the stream starts, for go-forward consumers that only want new
-    * commits. */
-  private def fromLatest(parameters: Map[String, String]): Boolean =
-    parameters.get("startingOffsets").map(_.toLowerCase) match {
-      case None | Some("earliest") => false
-      case Some("latest") => true
-      case Some(other) => throw new IllegalArgumentException(
-        s"startingOffsets must be 'earliest' or 'latest', not '$other'")
-    }
-
-  /** `spark.readStream.format("graft")` — the microbatch change-feed
-    * face ([[graft.streaming.GraftChangeFeedSource]]); with
-    * `option("withDeletes","true")`, the signed-row CDC feed
-    * ([[graft.streaming.GraftCdcFeedSource]] — deletes advance the
-    * stream as `_change_type = delete` rows). */
+  /** `spark.readStream.format("graft")` — the store's change feed
+    * ([[graft.streaming.GraftCdcFeedSource]]): signed rows, deletes
+    * advance the stream as `_change_type = delete` rows. */
   override def sourceSchema(ctx: SQLContext, schema: Option[StructType],
       providerName: String,
       parameters: Map[String, String]): (String, StructType) = {
     val (root, table) = streamParams(parameters)
     (shortName(), schema.getOrElse(
-      if (withDeletes(parameters))
-        new graft.streaming.GraftCdcFeedSource(ctx.sparkSession, root,
-          table, consumerId = "schema-probe").schema
-      else new graft.streaming.GraftChangeFeedSource(
-        ctx.sparkSession, root, table).schema))
+      new graft.streaming.GraftCdcFeedSource(ctx.sparkSession, root,
+        table, consumerId = "schema-probe").schema))
   }
 
   override def createSource(ctx: SQLContext, metadataPath: String,
@@ -676,31 +659,13 @@ final class GraftSource extends RelationProvider
       parameters: Map[String, String])
       : org.apache.spark.sql.execution.streaming.Source = {
     val (root, table) = streamParams(parameters)
-    val cap = parameters.get("maxOwnersPerTrigger").map { v =>
-      try v.trim.toInt
-      catch { case _: NumberFormatException =>
-        throw new IllegalArgumentException(
-          s"maxOwnersPerTrigger must be an integer, got '$v'")
-      }
-    }
     // consumer id = digest of the checkpoint's metadata path: stable
     // across restarts of the same stream, distinct across streams
     val consumerId = java.security.MessageDigest
       .getInstance("MD5").digest(metadataPath.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
-    if (withDeletes(parameters))
-      new graft.streaming.GraftCdcFeedSource(ctx.sparkSession, root,
-        table, consumerId = consumerId,
-        fromLatest = fromLatest(parameters),
-        updateImages = parameters.get("updateImages")
-          .exists(_.equalsIgnoreCase("true")),
-        maxOwnersPerTrigger = cap)
-    else
-      // the plain feed registers lag too (r15): a lagging appended-rows
-      // stream raced vacuum exactly like a CDC one
-      new graft.streaming.GraftChangeFeedSource(ctx.sparkSession, root,
-        table, fromLatest = fromLatest(parameters),
-        maxOwnersPerTrigger = cap, consumerId = Some(consumerId))
+    new graft.streaming.GraftCdcFeedSource(ctx.sparkSession, root,
+      table, consumerId = consumerId)
   }
 
   override def createRelation(ctx: SQLContext,

@@ -5,364 +5,42 @@ import org.apache.spark.sql.connector.read.streaming.{ReadLimit, SupportsTrigger
 import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.execution.streaming.runtime.SerializedOffset
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructType}
 
 import graft.ops.AtomicPublish
 
-/** STREAMING FACE OF THE STORE'S CHANGE FEED: a microbatch
-  * `readStream` source over the owner-segment model of
-  * [[AtomicPublish.appendedBetween]], so a downstream consumer (a
-  * continuously maintained MatView, a sync job) subscribes to commits
-  * instead of scheduling its own polling loop. Mounted through the
-  * same `format("graft")` face as batch reads:
+/** STREAMING FACE OF THE STORE: the change feed a downstream consumer
+  * (a sync job, a mirror store) subscribes to instead of scheduling its
+  * own polling loop. Mounted through the same `format("graft")` face as
+  * batch reads; `root` and `table` are its only options:
   *
   * {{{
   * spark.readStream.format("graft")
   *   .option("root", storeRoot).option("table", "docs").load()
   * }}}
   *
-  * Offsets are (owner-count, last-owner-id, txn) triples: a position
-  * in the named VERSION's owner chain (plus, while a staged change
-  * set drains paced, a file position inside it — see below). Versions are immutable, so a
-  * batch is replay-deterministic, and because the offset pins its own
-  * version, the feed RIDES THROUGH reorganization commits
-  * (dataChange=false — compaction, clustering): owners appended
-  * before a compaction are served from their ORIGINAL segments (the
-  * retention contract keeps them), the rewrite itself contributes
-  * nothing, and the offset re-bases. A data-changing rewrite that
-  * STAGED its per-row change set in its own commit (r14 commit-time
-  * CDF — [[AtomicPublish.cdfTableOf]]: `overwriteWhere`, the SQL
-  * UPDATE/MERGE copy-on-write routes) also rides through: the stream
-  * serves the staged INSERT rows (its contract is the rows the table
-  * GAINED) and re-bases onto the rewritten chain. Only an UNSTAGED
-  * data-changing rewrite (a raw `publishDelta(replace=…)`) still
-  * fails the stream with
-  * [[GraftChangeFeedSource.ResyncRequired]] naming the fallback:
-  * refresh downstream state from a batch read and restart from a
-  * fresh checkpoint. Deletes ([[AtomicPublish.deleteRows]]) add
-  * tombstones, not owners: they do not advance this feed (its
-  * contract is the APPENDED rows, like a log's); delete-aware
-  * consumers use the CDC feed ([[GraftCdcFeedSource]]).
+  * Each microbatch carries the rows the table GAINED and the rows it
+  * LOST in the commit interval as SIGNED rows (`_change_type` ∈
+  * insert|delete), computed by the batch CDC feed
+  * [[AtomicPublish.changesWithDeletes]] — so deletes advance the stream
+  * and a stream-maintained mirror (apply the batch's deletes, then its
+  * inserts) stays exact.
   *
-  * The source implements [[SupportsTriggerAvailableNow]] /
-  * admission control, so the ENGINE hands every `latestOffset` call
-  * the prior end offset — no source-side offset tracking that a
-  * checkpointed restart could observe half-seeded (the r9
-  * `maxOwnersPerTrigger` design carried that flaw: an AvailableNow
-  * capture could race the restart replay and regress the offset) —
-  * and `Trigger.AvailableNow` drains the WHOLE backlog as paced
-  * batches toward a target frozen at trigger start, instead of one
-  * cap's worth.
-  *
-  * Retention contract: vacuum must keep every version a lagging
-  * consumer's next offset still references (the standard
-  * log-compaction/consumer-lag tradeoff).
-  */
-final class GraftChangeFeedSource(spark: SparkSession, root: String,
-    table: String, fromLatest: Boolean = false,
-    /** BACKLOG ADMISSION CONTROL (`option("maxOwnersPerTrigger", n)`
-      * — Kafka's `maxOffsetsPerTrigger` / Delta's `maxFilesPerTrigger`
-      * shape): cap each microbatch at `n` owner segments, so a fresh
-      * checkpoint over a deep ingest history (1000 commits of
-      * micro-batch appends) drains as a paced sequence of bounded
-      * batches instead of one giant snapshot read — at 100 TB the
-      * difference between a stream that starts and one that OOMs its
-      * first trigger. The cap also paces a STAGED CHANGE SET (r15,
-      * VERDICT r14 #2): riding a backfill, its insert rows drain as
-      * `n`-file slices ([[AtomicPublish.cdfStagedFiles]]) across
-      * triggers instead of one batch carrying the whole restatement.
-      * None = unbounded (the prior behavior). */
-    maxOwnersPerTrigger: Option[Int] = None,
-    /** CONSUMER-LAG REGISTRY (r15 — the CDC feed has had this since
-      * r12; a lagging PLAIN stream raced vacuum the same way): when
-      * set (the provider derives it from the checkpoint path, stable
-      * across restarts), each batch records its end txn under
-      * `_consumers/<id>` and [[AtomicPublish.vacuum]] protects that
-      * version (and its reference closure) while younger than the
-      * consumer TTL — so a lagging stream's next offset stays
-      * readable instead of being reclaimed under it. */
-    consumerId: Option[String] = None)
-  extends Source with SupportsTriggerAvailableNow {
-
-  import GraftChangeFeedSource._
-
-  maxOwnersPerTrigger.foreach(m => require(m >= 1,
-    s"maxOwnersPerTrigger must be >= 1, got $m"))
-
-  // `startingOffsets=latest` contract: batch 0 (start = None) delivers
-  // NOTHING — the stream begins AT its first observed offset, and
-  // later batches carry only go-forward commits (the Kafka `latest`
-  // shape). Batch 0 must be a pure function of (None, end): a
-  // checkpoint restart REPLAYS it with start = None, so any state
-  // captured at (re)construction time would make the replay diverge.
-
-  override val schema: StructType = {
-    val (txn, metas) = AtomicPublish.currentManifestMeta(spark, root)
-      .getOrElse(throw new IllegalStateException(
-        s"no published version under $root"))
-    val meta = metas.getOrElse(table, throw new IllegalArgumentException(
-      s"table '$table' is not in version $txn under $root"))
-    meta.schema
-  }
-
-  /** Trigger.AvailableNow freezes the drain target here — versions
-    * are immutable, so the frozen (txn, chain) stays valid however
-    * long the drain takes. */
-  @volatile private var frozenTarget: Option[(String, Seq[String])] = None
-
-  override def prepareForTriggerAvailableNow(): Unit =
-    frozenTarget = Some(liveChain())
-
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
-
-  private def liveChain(): (String, Seq[String]) = {
-    val (txn, metas) = AtomicPublish.currentManifestMeta(spark, root)
-      .getOrElse(throw new IllegalStateException(
-        s"no published version under $root"))
-    txn -> metas.get(table).map(_.owners).getOrElse(Nil)
-  }
-
-  private def targetChain(): (String, Seq[String]) =
-    frozenTarget.getOrElse(liveChain())
-
-  /** File count of the staged change set at a rewrite commit —
-    * memoized (segments are immutable) so offset arithmetic does one
-    * listing per rewrite, not one per trigger. */
-  private val stagedFiles =
-    scala.collection.concurrent.TrieMap.empty[String, Int]
-
-  private def stagedFileCount(rewriteTxn: String): Int =
-    stagedFiles.getOrElseUpdate(rewriteTxn,
-      AtomicPublish.cdfStagedFiles(spark, root, table, rewriteTxn).size)
-
-  /** The INSERT rows of staged-set files `[fromF, toF)` — the rows
-    * the table gained, the plain feed's contract. */
-  private def stagedInsertSlice(rewriteTxn: String, fromF: Int,
-      toF: Int): DataFrame =
-    AtomicPublish.readCdfStagedSlice(spark, root, table, rewriteTxn,
-      fromF, toF)
-      .filter(col(AtomicPublish.CdfTypeCol) === "insert")
-      .drop(AtomicPublish.CdfTypeCol)
-
-  /** The engine's offset advance (admission-control protocol: `start`
-    * is the PRIOR end offset, null before the first batch). */
-  override def latestOffset(start: OffsetV2, limit: ReadLimit): OffsetV2 = {
-    val (txnT, osT) = targetChain()
-    def terminal: OffsetV2 =
-      if (osT.isEmpty) null
-      else ChainOffset(osT.size, osT.last, txnT)
-    Option(start).map(ChainOffset.of) match {
-      case None =>
-        if (osT.isEmpty) null
-        else if (fromLatest) terminal // batch 0 delivers nothing
-        else maxOwnersPerTrigger match {
-          case None => terminal
-          case Some(m) =>
-            val n = math.min(m, osT.size)
-            ChainOffset(n, osT(n - 1), txnT)
-        }
-      case Some(so0) =>
-        // a mid-staged-set position whose set is already fully served
-        // (defensive: a cap change across restart) degrades to plain
-        val so =
-          if (so0.cdfN >= 0 && so0.cdfN >= stagedFileCount(so0.txn))
-            so0.copy(cdfN = -1)
-          else so0
-        if (so.cdfN >= 0) {
-          // drain the staged change set as file slices under the cap;
-          // the final slice emits the PLAIN offset at the rewritten
-          // chain's head, from which the ordinary walk resumes
-          val files = stagedFileCount(so.txn)
-          val m = maxOwnersPerTrigger.getOrElse(files)
-          if (so.cdfN + m >= files) ChainOffset(so.n, so.last, so.txn)
-          else ChainOffset(so.n, so.last, so.txn, so.cdfN + m)
-        } else maxOwnersPerTrigger match {
-          case None =>
-            // one batch to the head: getBatch's chain walk rides
-            // through reorganizations and resyncs on real rewrites
-            if (so.txn == txnT && so.n == osT.size) start else terminal
-          case Some(m) => paceFrom(so, m, txnT, osT)
-        }
-    }
-  }
-
-  /** Capped pacing: drain backlog WITHIN the offset's pinned version
-    * first (old versions stay readable), then advance version by
-    * version — positions carry over append commits, re-base over
-    * reorganizations. Each batch stays within one version's chain. */
-  private def paceFrom(so: ChainOffset, cap: Int, txnT: String,
-      osT: Seq[String]): OffsetV2 = {
-    def ownersAt(t: String): Seq[String] =
-      if (t == txnT) osT
-      else AtomicPublish.ownerChainAt(spark, root, table, t)
-    var curTxn = so.txn
-    var curN = so.n
-    val steps: Iterator[(String, AtomicPublish.CommitInfo)] =
-      if (curTxn == txnT) Iterator.empty
-      else AtomicPublish.commitChainInfos(spark, root, curTxn, txnT)
-        .getOrElse(
-          // unwalkable chain: emit the terminal offset — getBatch then
-          // decides (and resyncs with the documented error if it must)
-          return ChainOffset(osT.size,
-            if (osT.isEmpty) "" else osT.last, txnT))
-        .iterator
-    while (true) {
-      val chainCur = ownersAt(curTxn)
-      if (curN < chainCur.size) {
-        val n = math.min(curN + cap, chainCur.size)
-        return ChainOffset(n, chainCur(n - 1), curTxn)
-      }
-      if (!steps.hasNext)
-        return ChainOffset(curN,
-          if (curN == 0) "" else chainCur(curN - 1), curTxn)
-      val (t1, ci) = steps.next()
-      val chainNext = ownersAt(t1)
-      if (chainNext.startsWith(chainCur)) {
-        curTxn = t1 // append (or unrelated) commit: positions carry
-      } else if (ci.cdfTables.contains(table) && ci.dataChange) {
-        // a rewrite that STAGED its change set (r14 commit-time CDF):
-        // ride to the rewritten chain's head, and PACE the staged
-        // rows under the same cap that bounds chain segments
-        // (VERDICT r14 #2 closed the exemption): a set larger than
-        // the cap drains as file slices across triggers; a small one
-        // forms this batch whole. Either way the batch returns here,
-        // so no batch mixes a staged set with later backlog.
-        val files = stagedFileCount(t1)
-        val head = if (chainNext.isEmpty) "" else chainNext.last
-        return (
-          if (files > cap) ChainOffset(chainNext.size, head, t1, cap)
-          else ChainOffset(chainNext.size, head, t1))
-      } else if (!ci.dataChange) {
-        // reorganization (content-equivalent): same rows, new chain —
-        // nothing appended; ride to the rewritten chain's head
-        curTxn = t1
-        curN = chainNext.size
-      } else {
-        // unstaged data-changing rewrite: not rideable — surface the
-        // terminal offset; getBatch fails with the documented resync
-        return ChainOffset(osT.size,
-          if (osT.isEmpty) "" else osT.last, txnT)
-      }
-    }
-    null // unreachable
-  }
-
-  override def getOffset: Option[Offset] = {
-    // legacy V1 entry point — the engine dispatches admission-control
-    // sources through latestOffset, so this is unreached there; kept
-    // total (unpaced head offset) for any exotic caller
-    val (txn, os) = targetChain()
-    if (os.isEmpty) None else Some(ChainOffset(os.size, os.last, txn))
-  }
-
-  private def emptyBatch: DataFrame = spark.createDataFrame(
-    java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-
-  /** Conform a batch to the stream's declared schema (mid-stream
-    * schema evolution may have widened the version the batch reads). */
-  private def conform(df: DataFrame): DataFrame =
-    if (df.schema == schema) df
-    else df.select(schema.fields.toIndexedSeq.map(f =>
-      (if (df.columns.contains(f.name)) col(f.name)
-       else lit(null)).cast(f.dataType).as(f.name)): _*)
-
-  override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
-    val endO = ChainOffset.of(end)
-    val chainE = AtomicPublish.ownerChainAt(spark, root, table,
-      endO.txn)
-    require(endO.n <= chainE.size &&
-        (endO.n == 0 || chainE(endO.n - 1) == endO.last),
-      resyncMessage(table, s"version ${endO.txn} no longer serves " +
-        s"segment ${endO.n} = '${endO.last}' (vacuumed?)"))
-    val batch: DataFrame = start.map(ChainOffset.of) match {
-      case None if fromLatest => emptyBatch
-      case None =>
-        require(endO.cdfN < 0, resyncMessage(table,
-          "batch 0 cannot end mid-staged-change-set"))
-        AtomicPublish.appendedBetween(spark, root, table,
-          endO.txn, 0, endO.txn, endO.n).get
-      case Some(s) if s.cdfN >= 0 =>
-        // start sits mid-staged-set: serve the next file slice
-        // (to end's position when still inside the set, else to
-        // its end, plus the ordinary walk beyond the rewrite)
-        val toF =
-          if (endO.txn == s.txn && endO.cdfN >= 0) endO.cdfN
-          else stagedFileCount(s.txn)
-        val slice = stagedInsertSlice(s.txn, s.cdfN, toF)
-        if (endO.txn == s.txn) slice
-        else slice.unionByName(
-          AtomicPublish.appendedBetween(spark, root, table,
-            s.txn, s.n, endO.txn, endO.n).getOrElse(
-            throw new IllegalStateException(resyncMessage(table,
-              s"the interval ${s.txn}..${endO.txn} rewrote the " +
-                "table (data change)"))),
-          allowMissingColumns = true)
-      case Some(s) if endO.cdfN >= 0 =>
-        // batch ENDS mid-staged-set: ride the walk to the rewrite
-        // commit WITHOUT its staged rows, then the first slice
-        AtomicPublish.appendedBetween(spark, root, table,
-          s.txn, s.n, endO.txn, endO.n,
-          excludeStagedAt = Some(endO.txn)).getOrElse(
-          throw new IllegalStateException(resyncMessage(table,
-            s"the interval ${s.txn}..${endO.txn} rewrote the " +
-              "table (data change)")))
-          .unionByName(stagedInsertSlice(endO.txn, 0, endO.cdfN),
-            allowMissingColumns = true)
-      case Some(s) =>
-        AtomicPublish.appendedBetween(spark, root, table,
-          s.txn, s.n, endO.txn, endO.n).getOrElse(
-          throw new IllegalStateException(resyncMessage(table,
-            s"the interval ${s.txn}..${endO.txn} rewrote the " +
-              "table (data change)")))
-    }
-    // lag registry: the NEXT batch walks from endO.txn — keep it alive
-    consumerId.foreach(id =>
-      AtomicPublish.recordConsumer(spark, root, id, endO.txn))
-    org.apache.spark.sql.graftstream.StreamingBridge.asStreaming(
-      conform(batch), this)
-  }
-
-  override def stop(): Unit = ()
-}
-
-/** STREAMING CDC FACE: `readStream.format("graft")` with
-  * `option("withDeletes", "true")` — each microbatch carries the rows
-  * the table GAINED and the rows it LOST in the commit interval as
-  * SIGNED rows (`_change_type` ∈ insert|delete), computed by the batch
-  * CDC feed [[AtomicPublish.changesWithDeletes]] — so DELETES advance
-  * the stream and a stream-maintained downstream mirror stays exact,
-  * where the plain change feed (appends only) would silently retain
-  * deleted rows.
-  *
-  * Offsets are COMMIT TXN IDS (plus a snapshot position while the
-  * initial snapshot drains — see below): published versions are
-  * immutable, so `getBatch(start, end)` is replay-deterministic, and
-  * the interval diff inherits every exactness property of the batch
-  * feed (asof scoping, skipping-layer-pruned delete reads). The first
-  * batch of a fresh checkpoint is the full snapshot at the pinned
-  * txn, all `insert` — the resync semantics. REORGANIZATION commits
+  * Offsets are COMMIT TXN IDS: published versions are immutable, so
+  * `getBatch(start, end)` is replay-deterministic, and the interval
+  * diff inherits every exactness property of the batch feed (asof
+  * scoping, skipping-layer-pruned delete reads). The first batch of a
+  * fresh checkpoint is the full snapshot at the pinned txn, all
+  * `insert` — the resync semantics. REORGANIZATION commits
   * (compaction/clustering, dataChange=false) stream through as empty
   * intervals — the batch feed diffs across them exactly; a rewrite
-  * that staged its change set (r14 commit-time CDF) streams through
-  * as that staged insert/delete batch; only an UNSTAGED data-changing
-  * rewrite, or a `start` version already vacuumed, fails the stream
-  * with [[GraftChangeFeedSource.ResyncRequired]] BEFORE emitting
-  * anything — never a partial batch.
-  *
-  * ADMISSION CONTROL (`option("maxOwnersPerTrigger", n)`): the
-  * initial snapshot drains as PACED owner-slices (offsets carry a
-  * `snap` position while it runs, each slice read delete-aware),
-  * catch-up intervals are paced by COMMITS admitting ~n appended
-  * owners per trigger, and a STAGED CHANGE SET larger than the cap
-  * drains as file slices on a doubled axis — delete phase first,
-  * then inserts (offsets carry a `cdf` position, r15) — so the
-  * per-batch mirror recipe composes exactly across the paced drain;
-  * the trade is that a sliced set's update-image pairs may arrive in
-  * different batches as plain delete + insert. A fresh checkpoint
-  * against a 100 TB deep-history table starts instead of OOMing its
-  * first trigger, and a 1% backfill of that table streams as
-  * bounded batches instead of one ~TB diff.
-  * Unset = unpaced (the prior behavior).
+  * that staged its change set (commit-time CDF,
+  * [[AtomicPublish.cdfTableOf]]) streams through as that staged
+  * insert/delete batch; only an UNSTAGED data-changing rewrite, or a
+  * `start` version already vacuumed, fails the stream with
+  * [[GraftCdcFeedSource.ResyncRequired]] BEFORE emitting anything —
+  * never a partial batch. `Trigger.AvailableNow` drains to the version
+  * current when the trigger starts.
   *
   * Consumer-lag registry: after resolving each batch the source
   * records its end txn under `_consumers/<checkpoint-id>` at the store
@@ -371,203 +49,52 @@ final class GraftChangeFeedSource(spark: SparkSession, root: String,
   * LAGGING stream's next `sinceTxn` manifest survives retention
   * instead of being reclaimed under the stream. */
 final class GraftCdcFeedSource(spark: SparkSession, root: String,
-    table: String, consumerId: String, fromLatest: Boolean = false,
-    /** `option("updateImages", "true")` — Delta CDF's four-valued
-      * `_change_type` vocabulary: within each commit interval, a
-      * delete and an insert sharing the table's recorded delete-key
-      * tuple classify as `update_preimage` / `update_postimage`
-      * instead of plain delete/insert — so a MERGE's updated rows
-      * arrive as updates, the way a downstream auditor or
-      * slowly-changing-dimension sync wants them. Keys with a NULL
-      * component keep the plain tags (the classification join is
-      * equi, like SQL's); a table that never recorded a delete key
-      * has nothing to classify by and streams the two-valued feed. */
-    updateImages: Boolean = false,
-    maxOwnersPerTrigger: Option[Int] = None)
+    table: String, consumerId: String)
   extends Source with SupportsTriggerAvailableNow {
 
-  import GraftChangeFeedSource._
+  import GraftCdcFeedSource._
 
-  maxOwnersPerTrigger.foreach(m => require(m >= 1,
-    s"maxOwnersPerTrigger must be >= 1, got $m"))
-
-  // `startingOffsets=latest`: batch 0 is EMPTY instead of the
-  // full-snapshot resync batch — see the replay-determinism note on
-  // [[GraftChangeFeedSource]] (batch 0 must be a pure function of
-  // (None, end); the stream then carries only post-start commits).
-
-  private val baseSchema: StructType = {
+  override val schema: StructType = {
     val (txn, metas) = AtomicPublish.currentManifestMeta(spark, root)
       .getOrElse(throw new IllegalStateException(
         s"no published version under $root"))
     val meta = metas.getOrElse(table, throw new IllegalArgumentException(
       s"table '$table' is not in version $txn under $root"))
-    meta.schema
+    meta.schema.add(ChangeTypeCol, StringType)
   }
 
-  override val schema: StructType =
-    baseSchema.add(ChangeTypeCol, org.apache.spark.sql.types.StringType)
-
+  /** Trigger.AvailableNow freezes the drain target here — versions
+    * are immutable, so the frozen txn stays valid however long the
+    * drain takes. */
   @volatile private var frozenTxn: Option[String] = None
 
   override def prepareForTriggerAvailableNow(): Unit =
     frozenTxn = AtomicPublish.currentTxn(spark, root)
 
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
-
   private def targetTxn: Option[String] =
     frozenTxn.orElse(AtomicPublish.currentTxn(spark, root))
 
-  private def chainLen(txn: String): Int =
-    AtomicPublish.ownerChainAt(spark, root, table, txn).size
-
-  /** Doubled file axis of a rewrite's staged change set: positions
-    * `[0, F)` are its DELETE phase, `[F, 2F)` its INSERT phase —
-    * memoized, segments are immutable. */
-  private val stagedFiles =
-    scala.collection.concurrent.TrieMap.empty[String, Int]
-
-  private def stagedAxis(rewriteTxn: String): Int =
-    2 * stagedFiles.getOrElseUpdate(rewriteTxn,
-      AtomicPublish.cdfStagedFiles(spark, root, table, rewriteTxn).size)
-
-  /** Signed rows of staged-set axis positions `[a, b)` at the rewrite
-    * commit: delete-phase rows strictly precede insert-phase rows
-    * across the slice sequence, so the standard per-batch mirror
-    * recipe (apply deletes, then inserts) composes exactly across
-    * paced batches. Rows keep their on-disk [[AtomicPublish
-    * .CdfTypeCol]] tag (== [[GraftChangeFeedSource.ChangeTypeCol]]).
-    * Pacing trades the OPTIONAL update-image refinement for
-    * boundedness inside a sliced set (a pre/post pair may land in
-    * different batches and arrives as plain delete + insert — still
-    * mirror-exact); unpaced streams keep full classification. */
-  private def stagedSlice(rewriteTxn: String, a: Int, b: Int)
-      : DataFrame = {
-    val f = stagedAxis(rewriteTxn) / 2
-    val del = AtomicPublish.readCdfStagedSlice(spark, root, table,
-      rewriteTxn, math.min(a, f), math.min(b, f))
-      .filter(col(ChangeTypeCol) === "delete")
-    val ins = AtomicPublish.readCdfStagedSlice(spark, root, table,
-      rewriteTxn, math.max(a - f, 0), math.max(b - f, 0))
-      .filter(col(ChangeTypeCol) === "insert")
-    del.unionByName(ins, allowMissingColumns = true)
-  }
-
-  override def latestOffset(start: OffsetV2, limit: ReadLimit): OffsetV2 = {
-    val txnT = targetTxn.getOrElse(return null)
-    Option(start).map(TxnOffset.of) match {
-      case None =>
-        if (fromLatest) TxnOffset(txnT)
-        else maxOwnersPerTrigger match {
-          case None => TxnOffset(txnT) // single-snapshot batch 0
-          case Some(m) =>
-            val len = chainLen(txnT)
-            if (len <= m) TxnOffset(txnT)
-            else TxnOffset(txnT, Some(m)) // paced snapshot begins
-        }
-      case Some(so) =>
-        (so.snap, so.cdf) match {
-          case (Some(k), _) =>
-            val len = chainLen(so.txn)
-            if (k < len) {
-              val m = maxOwnersPerTrigger.getOrElse(len)
-              if (k + m >= len) TxnOffset(so.txn) // snapshot completes
-              else TxnOffset(so.txn, Some(k + m))
-            } else cdcAdvance(so.txn, txnT, start)
-          case (None, Some(k)) =>
-            // draining a staged change set: advance along its doubled
-            // file axis; the final slice emits the PLAIN txn offset,
-            // from which commit pacing resumes
-            val axis = stagedAxis(so.txn)
-            if (k >= axis) cdcAdvance(so.txn, txnT, start) // defensive
-            else {
-              val m = maxOwnersPerTrigger.getOrElse(axis)
-              if (k + m >= axis) TxnOffset(so.txn)
-              else TxnOffset(so.txn, None, Some(k + m))
-            }
-          case (None, None) => cdcAdvance(so.txn, txnT, start)
-        }
-    }
-  }
-
-  private def cdcAdvance(from: String, txnT: String,
-      start: OffsetV2): OffsetV2 =
-    if (from == txnT) start // caught up — no batch
-    else maxOwnersPerTrigger match {
-      case None => TxnOffset(txnT)
-      case Some(m) =>
-        val (t, slice) = AtomicPublish.paceCommits(spark, root, table,
-          from, txnT, m)
-        TxnOffset(t, None, slice)
+  /** The engine's offset advance (`start` is the PRIOR end offset,
+    * null before the first batch): one batch to the target version,
+    * none once caught up. */
+  override def latestOffset(start: OffsetV2, limit: ReadLimit): OffsetV2 =
+    targetTxn match {
+      case None => null
+      case Some(t) if start != null && TxnOffset.of(start).txn == t => start
+      case Some(t) => TxnOffset(t)
     }
 
   override def getOffset: Option[Offset] =
     targetTxn.map(TxnOffset(_)) // legacy entry point, unreached
 
   override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
-    val endO = TxnOffset.of(end)
-    val endTxn = endO.txn
-    def tagged(df: DataFrame, t: String): DataFrame =
-      df.withColumn(ChangeTypeCol, lit(t))
-    def snapshotSlice(txn: String, fromN: Int, toN: Int): DataFrame =
-      tagged(AtomicPublish.readTableSlice(spark, root, table, txn,
-        fromN, toN), "insert")
-    val batch = start.map(TxnOffset.of) match {
-      case None if fromLatest =>
-        tagged(AtomicPublish.readTableAt(spark, root, table, endTxn)
-          .limit(0), "insert")
-      case None =>
-        endO.snap match {
-          // fresh checkpoint: the full snapshot at the pinned txn —
-          // paced to its first `snap` owners when admission control is
-          // on (each slice delete-aware, their union IS the snapshot)
-          case None =>
-            tagged(AtomicPublish.readTableAt(spark, root, table, endTxn),
-              "insert")
-          case Some(k) => snapshotSlice(endTxn, 0, k)
-        }
-      case Some(s) if s.cdf.isDefined || endO.cdf.isDefined =>
-        // paced drain of a staged change set (VERDICT r14 #2): the
-        // pacer closes the ordinary interval BEFORE the rewrite, so
-        // an interval ending inside the set carries nothing else
-        (s.cdf, endO.cdf) match {
-          case (Some(a), Some(b)) =>
-            require(s.txn == endTxn, resyncMessage(table,
-              s"staged-set offsets span commits ${s.txn}..$endTxn"))
-            stagedSlice(endTxn, a, b)
-          case (Some(a), None) =>
-            val rest = stagedSlice(s.txn, a, stagedAxis(s.txn))
-            if (s.txn == endTxn) rest
-            else rest.unionByName(diffBatch(s.txn, endTxn),
-              allowMissingColumns = true) // defensive: unpaced restart
-          case (None, Some(b)) =>
-            stagedSlice(endTxn, 0, b)
-          case (None, None) => throw new IllegalStateException(
-            s"invalid CDC offset interval: ${s.json()} .. ${endO.json()}")
-        }
-      case Some(s) =>
-        (s.snap, endO.snap) match {
-          case (Some(k), Some(k2)) =>
-            require(s.txn == endTxn, resyncMessage(table,
-              s"snapshot offsets span versions ${s.txn}..$endTxn"))
-            snapshotSlice(endTxn, k, k2)
-          case (Some(k), None) if s.txn == endTxn =>
-            // final snapshot slice (the pacer only then moves to txns)
-            snapshotSlice(endTxn, k, chainLen(endTxn))
-          case (Some(k), None) =>
-            // defensive: close the snapshot at its own version, then
-            // diff the commits — one batch, same union
-            snapshotSlice(s.txn, k, chainLen(s.txn))
-              .unionByName(diffBatch(s.txn, endTxn),
-                allowMissingColumns = true) // widen-spanning interval
-          case (None, Some(_)) => throw new IllegalStateException(
-            s"invalid CDC offset interval: ${s.json()} .. ${endO.json()}")
-          case (None, None) =>
-            if (s.txn == endTxn)
-              tagged(AtomicPublish.readTableAt(spark, root, table, endTxn)
-                .limit(0), "insert")
-            else diffBatch(s.txn, endTxn)
-        }
+    val endTxn = TxnOffset.of(end).txn
+    def snapshot = AtomicPublish.readTableAt(spark, root, table, endTxn)
+      .withColumn(ChangeTypeCol, lit("insert"))
+    val batch = start.map(TxnOffset.of(_).txn) match {
+      case None => snapshot // fresh checkpoint: the full snapshot
+      case Some(s) if s == endTxn => snapshot.limit(0)
+      case Some(s) => diffBatch(s, endTxn)
     }
     // lag registry: the NEXT batch diffs from endTxn — keep it alive
     AtomicPublish.recordConsumer(spark, root, consumerId, endTxn)
@@ -581,18 +108,16 @@ final class GraftCdcFeedSource(spark: SparkSession, root: String,
     * widening append (top-level or nested ADD COLUMN) makes later
     * intervals read a wider recorded schema than the stream resolved
     * at start — the running consumer keeps its start-of-stream shape
-    * (new columns dropped, exactly the plain source's contract);
-    * restarting the stream adopts the widened schema. Without this the
-    * microbatch's row shape silently diverges from what the sink
-    * planned against. */
+    * (new columns dropped); restarting the stream adopts the widened
+    * schema. Without this the microbatch's row shape silently diverges
+    * from what the sink planned against. */
   private def conform(df: DataFrame): DataFrame =
     if (df.schema == schema) df
     else df.select(schema.fields.toIndexedSeq.map(f =>
       (if (df.columns.contains(f.name)) col(f.name)
        else lit(null)).cast(f.dataType).as(f.name)): _*)
 
-  /** The signed diff of one commit interval — the batch CDC feed plus
-    * the optional update-image classification. */
+  /** The signed diff of one commit interval. */
   private def diffBatch(sinceTxn: String, endTxn: String): DataFrame = {
     val diff =
       try AtomicPublish.changesWithDeletes(spark, root, table,
@@ -601,52 +126,22 @@ final class GraftCdcFeedSource(spark: SparkSession, root: String,
         throw new IllegalStateException(resyncMessage(table,
           s"version $sinceTxn is no longer readable (vacuumed?)"), e)
       }
-    diff match {
-      case None => throw new IllegalStateException(resyncMessage(
-        table, s"the interval $sinceTxn..$endTxn rewrote the table " +
-          "(data change)"))
-      case Some((ins, del)) =>
-        val keyCols =
-          if (!updateImages) None
-          else AtomicPublish.deleteKeyColsAt(spark, root, table, endTxn)
-        keyCols match {
-          case None =>
-            // allowMissingColumns: an interval SPANNING a widening
-            // append reads its insert side under the widened schema
-            // while the killed rows come from pre-widen segments — the
-            // missing column is null there, which is exactly its value
-            ins.withColumn(ChangeTypeCol, lit("insert"))
-              .unionByName(del.withColumn(ChangeTypeCol,
-                lit("delete")), allowMissingColumns = true)
-          case Some(keys) =>
-            import org.apache.spark.sql.functions.when
-            // keys present on BOTH sides of the interval are
-            // updates. The key set is distinct tuples — usually
-            // tiny next to the rows, and the planner/AQE broadcasts
-            // it when it is; no forced broadcast hint, because a
-            // snapshot-sized upsert interval can legitimately carry
-            // millions of keys and must be allowed to shuffle
-            val kc = keys.map(col)
-            val updKeys = del.select(kc: _*).distinct()
-              .join(ins.select(kc: _*).distinct(), keys, "left_semi")
-            def tag(side: DataFrame, hit: String, miss: String) =
-              side.join(updKeys.withColumn("__g_upd", lit(true)),
-                keys, "left")
-                .withColumn(ChangeTypeCol,
-                  when(col("__g_upd").isNotNull, hit)
-                    .otherwise(miss))
-                .drop("__g_upd")
-            tag(ins, "update_postimage", "insert")
-              .unionByName(tag(del, "update_preimage", "delete"),
-                allowMissingColumns = true) // widen-spanning interval
-        }
-    }
+    val (ins, del) = diff.getOrElse(throw new IllegalStateException(
+      resyncMessage(table, s"the interval $sinceTxn..$endTxn rewrote " +
+        "the table (data change)")))
+    // allowMissingColumns: an interval SPANNING a widening append reads
+    // its insert side under the widened schema while the killed rows
+    // come from pre-widen segments — the missing column is null there,
+    // which is exactly its value
+    ins.withColumn(ChangeTypeCol, lit("insert"))
+      .unionByName(del.withColumn(ChangeTypeCol, lit("delete")),
+        allowMissingColumns = true)
   }
 
   override def stop(): Unit = ()
 }
 
-object GraftChangeFeedSource {
+object GraftCdcFeedSource {
 
   /** The signed-row discriminator column of the CDC feed. */
   val ChangeTypeCol = "_change_type"
@@ -668,81 +163,24 @@ object GraftChangeFeedSource {
       "the stream from a FRESH checkpoint (its first batch re-delivers " +
       "the full current snapshot)."
 
-  /** CDC offset: the commit txn the stream has consumed through;
-    * while the initial snapshot drains under admission control,
-    * `snap` carries the owner position reached inside that pinned
-    * version. `cdf` carries the position reached inside the STAGED
-    * CHANGE SET of the rewrite commit `txn` (VERDICT r14 #2) on the
-    * doubled file axis `[0, 2F)` — positions below F are the DELETE
-    * phase, F and above the INSERT phase, so a paced mirror applies
-    * every removed row before any gained one and lands exactly on
-    * the post-backfill table even when a (delete, insert) pair of
-    * the same key splits across slices. Versions are immutable, so
-    * the offset alone replay-determines the batch. */
-  final case class TxnOffset(txn: String, snap: Option[Int] = None,
-      cdf: Option[Int] = None)
-    extends Offset {
-    override def json(): String = (snap, cdf) match {
-      case (None, None) => s"""{"txn":"$txn"}"""
-      case (Some(k), _) => s"""{"txn":"$txn","snap":$k}"""
-      case (None, Some(k)) => s"""{"txn":"$txn","cdf":$k}"""
-    }
+  /** CDC offset: the commit txn the stream has consumed through.
+    * Versions are immutable, so the offset alone replay-determines the
+    * batch. */
+  final case class TxnOffset(txn: String) extends Offset {
+    override def json(): String = s"""{"txn":"$txn"}"""
   }
 
   object TxnOffset {
     private val Re = """\{"txn":"([^"]*)"\}""".r
-    private val ReSnap = """\{"txn":"([^"]*)","snap":(\d+)\}""".r
-    private val ReCdf = """\{"txn":"([^"]*)","cdf":(\d+)\}""".r
-    def of(o: org.apache.spark.sql.connector.read.streaming.Offset)
-        : TxnOffset = o match {
+    def of(o: OffsetV2): TxnOffset = o match {
       case t: TxnOffset => t
       case s: SerializedOffset => parse(s.json)
       case other => parse(other.json())
     }
     def parse(json: String): TxnOffset = json match {
       case Re(t) => TxnOffset(t)
-      case ReSnap(t, k) => TxnOffset(t, Some(k.toInt))
-      case ReCdf(t, k) => TxnOffset(t, None, Some(k.toInt))
       case _ => throw new IllegalArgumentException(
         s"not a graft CDC offset: $json")
-    }
-  }
-
-  /** Offset over the owner chain of the version `txn` names: `n`
-    * segments consumed, the last of which is `last` — the id pins the
-    * prefix so a rewrite is detected, not silently misread. `cdfN >= 0`
-    * = the offset
-    * sits MID-STAGED-CHANGE-SET of the rewrite commit `txn`
-    * (VERDICT r14 #2): the rewritten chain is fully consumed
-    * (`n`/`last` name its head) and `cdfN` files of the staged set
-    * ([[graft.ops.AtomicPublish.cdfStagedFiles]]) have been served —
-    * the admission cap paces a backfill's change rows the same way
-    * it paces ordinary segments. */
-  final case class ChainOffset(n: Int, last: String, txn: String,
-      cdfN: Int = -1)
-    extends Offset {
-    override def json(): String =
-      if (cdfN < 0) s"""{"n":$n,"last":"$last","txn":"$txn"}"""
-      else s"""{"n":$n,"last":"$last","txn":"$txn","cdf":$cdfN}"""
-  }
-
-  object ChainOffset {
-    private val ReTxn =
-      """\{"n":(\d+),"last":"([^"]*)","txn":"([^"]*)"\}""".r
-    private val ReCdf =
-      """\{"n":(\d+),"last":"([^"]*)","txn":"([^"]*)","cdf":(\d+)\}""".r
-    def of(o: org.apache.spark.sql.connector.read.streaming.Offset)
-        : ChainOffset = o match {
-      case c: ChainOffset => c
-      case s: SerializedOffset => parse(s.json)
-      case other => parse(other.json())
-    }
-    def parse(json: String): ChainOffset = json match {
-      case ReTxn(n, last, txn) => ChainOffset(n.toInt, last, txn)
-      case ReCdf(n, last, txn, k) =>
-        ChainOffset(n.toInt, last, txn, k.toInt)
-      case _ => throw new IllegalArgumentException(
-        s"not a graft change-feed offset: $json")
     }
   }
 }

@@ -2,45 +2,23 @@ package org.apache.spark.sql.graftstream
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.classic
-import org.apache.spark.sql.connector.read.streaming.SparkDataStream
-import org.apache.spark.sql.execution.datasources.LogicalRelation
 
-/** Batch→streaming DataFrame bridge for the store's change-feed
-  * source: a V1 `Source.getBatch` must return a frame whose leaf
-  * relations carry `isStreaming = true` (MicroBatchExecution asserts
-  * it), but the store's read stack produces ordinary batch relations.
-  * Re-tagging the analyzed plan's [[LogicalRelation]] leaves — exactly
-  * what Spark's own file stream source and the log-backed lakehouse
-  * sources do — keeps the whole batch scan machinery (recorded schema,
-  * one relation, pruning) under the streaming execution. `ofRows` and
-  * the relation internals are private[sql], so the bridge lives in
+/** Batch↔streaming DataFrame bridges for the store's change-feed
+  * source and streaming sink, plus iteration-safe checkpoints.
+  * `internalCreateDataFrame` is private[sql], so the bridge lives in
   * this package (the established third-party-source pattern). */
 object StreamingBridge {
-  def asStreaming(df: Dataset[Row], source: SparkDataStream): DataFrame = {
-    val plan = df.queryExecution.analyzed.transform {
-      case lr: LogicalRelation if !lr.isStreaming =>
-        lr.copy(isStreaming = true, stream = Some(source))
-      case loc: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-          if !loc.isStreaming =>
-        // an empty interval's batch is a LocalRelation leaf
-        loc.copy(isStreaming = true)
-    }
-    // a batch whose plan carries leaves the re-tag can't reach (the
-    // ride-through feed unions segment reads across versions) executes
-    // as one streaming leaf instead — same rows, batch machinery kept
-    // inside the RDD
-    if (plan.collectLeaves().exists(!_.isStreaming)) asStreamingLeaf(df)
-    else classic.Dataset.ofRows(
-      df.sparkSession.asInstanceOf[classic.SparkSession], plan)
-  }
 
-  /** Batch plan → ONE streaming leaf: executes the whole batch
+  /** Batch plan → ONE streaming leaf: a V1 `Source.getBatch` must
+    * return a frame whose leaves carry `isStreaming = true`
+    * (MicroBatchExecution asserts it), but the store's read stack
+    * produces ordinary batch relations. This executes the whole batch
     * computation inside an RDD and mounts it as a streaming-tagged
-    * `LogicalRDD`. For batch plans [[asStreaming]]'s leaf re-tagging
-    * cannot carry — the CDC feed's tombstone anti-join would otherwise
-    * plan as a streaming join (which forbids LeftAnti). The inner plan
-    * keeps its full batch machinery (skipping layers, joins); the
-    * streaming side sees a single row source. */
+    * `LogicalRDD` — re-tagging the plan's leaves instead would plan the
+    * CDC feed's tombstone anti-join as a streaming join (which forbids
+    * LeftAnti). The inner plan keeps its full batch machinery
+    * (skipping layers, joins); the streaming side sees a single row
+    * source. */
   def asStreamingLeaf(df: Dataset[Row]): DataFrame = {
     val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
     spark.internalCreateDataFrame(df.queryExecution.toRdd, df.schema,

@@ -31,4 +31,17 @@ class SparkEntrySpec extends SparkSuite {
     }
     assert(failures.isEmpty, failures.mkString("\n"))
   }
+
+  test("store17: the mirror the CDC stream maintains equals its oracle " +
+      "SQL at sf0.001") {
+    // the one declared query that reads readStream.format("graft")
+    core.Tables.documents(spark, dir).createOrReplaceTempView("documents")
+    try {
+      val got = analytics.AdvancedQueries.store17CdcCompaction(spark, dir)
+        .collect().toSeq
+      val want = spark.sql(analytics.AdvancedQueries.store17CdcCompactionSql)
+        .collect().toSeq
+      assert(got.nonEmpty && got == want, s"stream $got vs oracle $want")
+    } finally { spark.catalog.dropTempView("documents"); () }
+  }
 }

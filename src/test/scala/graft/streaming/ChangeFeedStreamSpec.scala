@@ -4,17 +4,17 @@ import java.nio.file.Files
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, Trigger}
 
 import graft.SparkSuite
-import graft.ops.{AtomicPublish, Compaction, MatView}
+import graft.ops.{AtomicPublish, Compaction}
 
 /** The store's streaming change feed (`readStream.format("graft")`):
-  * one microbatch per commit interval carrying exactly the appended
-  * rows, checkpoint-exact restarts, replace detection with the
-  * documented full-resync fallback, and the continuously-maintained
-  * MatView it exists for. */
+  * one signed microbatch per commit interval, checkpoint-exact
+  * restarts, deletes advancing the stream, ride-through of
+  * reorganizations and widening appends, consumer-lag retention, and
+  * replace detection with the documented full-resync fallback. */
 class ChangeFeedStreamSpec extends SparkSuite {
   import spark.implicits._
 
@@ -38,20 +38,26 @@ class ChangeFeedStreamSpec extends SparkSuite {
     q.awaitTermination(); ()
   }
 
+  private def hasResync(t: Throwable): Boolean = t != null &&
+    (Option(t.getMessage).exists(
+      _.contains(GraftCdcFeedSource.ResyncRequired)) ||
+      hasResync(t.getCause))
+
   test("one microbatch per commit interval; restart resumes exactly") {
     val root = freshRoot()
     val ckpt = Files.createTempDirectory("cfeed-ck").toString
     AtomicPublish.publish(spark, root, Map("docs" -> slice(0 until 10, "en")))
-    val seen = mutable.ArrayBuffer.empty[(Long, Set[Long])]
-    def run(): Unit = drain(startFeed(root, ckpt) { (df, id) =>
-      seen += id -> df.select("doc_id").collect().map(_.getLong(0)).toSet
+    val seen = mutable.ArrayBuffer.empty[Set[(String, Long)]]
+    def run(): Unit = drain(startFeed(root, ckpt) { (df, _) =>
+      seen += df.collect().map(r => r.getString(3) -> r.getLong(0)).toSet
       ()
     })
     // batch 0 of a fresh checkpoint: the full current snapshot
     run()
-    assert(seen.map(_._2) == Seq((0L until 10L).toSet))
+    assert(seen == Seq((0L until 10L).map("insert" -> _).toSet))
     // three commits while the stream is DOWN, then restart on the SAME
-    // checkpoint: the missed segments arrive (no re-delivery of batch 0)
+    // checkpoint: the missed segments arrive in one batch (no
+    // re-delivery of batch 0)
     (1 to 3).foreach { k =>
       AtomicPublish.publishDelta(spark, root,
         append = Map("docs" -> slice(k * 10 until (k + 1) * 10, "en")),
@@ -59,57 +65,18 @@ class ChangeFeedStreamSpec extends SparkSuite {
     }
     seen.clear()
     run()
-    assert(seen.flatMap(_._2).toSet == (10L until 40L).toSet)
-    assert(seen.forall(_._2.nonEmpty))
-    // a DELETE commit adds tombstones, not owners: the append feed
-    // stays quiet (delete-aware consumers use changesWithDeletes)
+    assert(seen == Seq((10L until 40L).map("insert" -> _).toSet))
+    // a DELETE commit adds tombstones, not owners: it still advances
+    // the feed, as one signed delete row
     AtomicPublish.deleteRows(spark, root,
       Map("docs" -> Seq(5L).toDF("doc_id")))
     seen.clear()
     run()
-    assert(seen.flatMap(_._2).isEmpty)
-  }
-
-  test("vacuum honors a lagging PLAIN consumer too (r15 — the append " +
-      "feed registers lag like the CDC feed): the held version " +
-      "survives an aggressive vacuum and the stream continues exactly") {
-    val root = freshRoot()
-    val ckpt = Files.createTempDirectory("plain-lag-ck").toString
-    // v1 hosts docs' first segment; churn an UNRELATED table so the
-    // consumer-held intermediate version holds only replaced-away
-    // segments — reclaimable but for the registration
-    AtomicPublish.publish(spark, root, Map(
-      "docs" -> slice(0 until 10, "en"),
-      "aux" -> Seq((1L, "a")).toDF("k", "v")))
-    AtomicPublish.publishDelta(spark, root, append = Map.empty,
-      replace = Map("aux" -> Seq((2L, "b")).toDF("k", "v")),
-      parent = AtomicPublish.currentTxn(spark, root))
-    val seen = mutable.ArrayBuffer.empty[Long]
-    def run(): Unit = drain(startFeed(root, ckpt) { (df, _) =>
-      seen ++= df.select("doc_id").collect().map(_.getLong(0)); ()
-    })
-    run() // reads through the aux-replace version and registers it
-    val consumerTxn = AtomicPublish.currentTxn(spark, root).get
-    assert(AtomicPublish.registeredConsumers(spark, root)
-      .exists(_._2 == consumerTxn),
-      "plain feed did not register its lag")
-    assert(seen.toSet == (0L until 10L).toSet)
-    // churn while the stream lags, then an aggressive vacuum
-    (0 until 2).foreach { i =>
-      AtomicPublish.publishDelta(spark, root, append = Map.empty,
-        replace = Map("aux" -> Seq((10L + i, "x")).toDF("k", "v")),
-        parent = AtomicPublish.currentTxn(spark, root))
-    }
-    AtomicPublish.publishDelta(spark, root,
-      append = Map("docs" -> slice(10 until 15, "fr")),
-      parent = AtomicPublish.currentTxn(spark, root))
-    AtomicPublish.vacuum(spark, root, keepLast = 1, graceMs = 0)
-    assert(new java.io.File(root, s"v_$consumerTxn").exists,
-      "plain consumer-held version was reclaimed")
-    // the lagging stream continues exactly — the missed append arrives
+    assert(seen == Seq(Set("delete" -> 5L)))
+    // caught up: no batch at all
     seen.clear()
     run()
-    assert(seen.toSet == (10L until 15L).toSet)
+    assert(seen.isEmpty)
   }
 
   /** CDC feed plumbing: a doc_id-keyed mirror maintained purely from
@@ -117,29 +84,22 @@ class ChangeFeedStreamSpec extends SparkSuite {
     * the interval semantics of [[AtomicPublish.changesWithDeletes]]). */
   private def startCdc(root: String, checkpoint: String,
       mirror: mutable.Map[Long, (String, Long)]): StreamingQuery =
-    spark.readStream.format("graft")
-      .option("root", root).option("table", "docs")
-      .option("withDeletes", "true").load()
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        val rows = df.collect()
-        rows.filter(_.getString(3) == "delete")
-          .foreach(r => mirror.remove(r.getLong(0)))
-        rows.filter(_.getString(3) == "insert")
-          .foreach(r => mirror.put(r.getLong(0),
-            (r.getString(1), r.getLong(2))))
-        ()
-      }
-      .start()
+    startFeed(root, checkpoint) { (df, _) =>
+      val rows = df.collect()
+      rows.filter(_.getString(3) == "delete")
+        .foreach(r => mirror.remove(r.getLong(0)))
+      rows.filter(_.getString(3) == "insert")
+        .foreach(r => mirror.put(r.getLong(0),
+          (r.getString(1), r.getLong(2))))
+      ()
+    }
 
   private def batchMirror(root: String): Map[Long, (String, Long)] =
     AtomicPublish.readTable(spark, root, "docs").collect()
       .map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
 
-  test("CDC feed (withDeletes): deletes advance the stream and a " +
-      "stream-maintained mirror equals the delete-aware batch read") {
+  test("CDC feed: deletes advance the stream and a stream-maintained " +
+      "mirror equals the delete-aware batch read") {
     val root = freshRoot()
     val ckpt = Files.createTempDirectory("cdc-ck").toString
     AtomicPublish.publish(spark, root, Map("docs" -> slice(0 until 20, "en")))
@@ -158,8 +118,7 @@ class ChangeFeedStreamSpec extends SparkSuite {
     run()
     assert(mirror == batchMirror(root))
     assert(!mirror.contains(3L) && !mirror.contains(7L))
-    // a DELETE-ONLY commit advances this feed (the plain feed stays
-    // quiet on it — that contrast is the r6 gap this closes)
+    // a DELETE-ONLY commit advances the feed
     AtomicPublish.deleteRows(spark, root,
       Map("docs" -> Seq(11L, 25L).toDF("doc_id")))
     run()
@@ -231,217 +190,13 @@ class ChangeFeedStreamSpec extends SparkSuite {
     val e = intercept[StreamingQueryException] {
       drain(startCdc(root, ckpt, mirror))
     }
-    def hasResync(t: Throwable): Boolean = t != null &&
-      (Option(t.getMessage).exists(
-        _.contains(GraftChangeFeedSource.ResyncRequired)) ||
-        hasResync(t.getCause))
     assert(hasResync(e))
     assert(mirror.toMap == before)
   }
 
-  test("startingOffsets=latest: fresh checkpoints skip the backlog on " +
-      "both feeds, then stream exactly the go-forward commits") {
-    val root = freshRoot()
-    AtomicPublish.publish(spark, root, Map("docs" -> slice(0 until 10, "en")))
-    // plain change feed: batch 0 from a fresh checkpoint is EMPTY (the
-    // backlog is skipped), later commits arrive exactly
-    val ckpt = Files.createTempDirectory("cfeed-latest-ck").toString
-    val seen = mutable.ArrayBuffer.empty[Set[Long]]
-    def run(): Unit = drain(
-      spark.readStream.format("graft")
-        .option("root", root).option("table", "docs")
-        .option("startingOffsets", "latest").load()
-        .writeStream.option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          seen += df.select("doc_id").collect().map(_.getLong(0)).toSet
-          ()
-        }.start())
-    run()
-    assert(seen.flatten.isEmpty, "latest start re-delivered the backlog")
-    AtomicPublish.publishDelta(spark, root,
-      append = Map("docs" -> slice(10 until 15, "fr")),
-      parent = AtomicPublish.currentTxn(spark, root))
-    seen.clear()
-    run()
-    assert(seen.flatten.toSet == (10L until 15L).toSet)
-    // CDC feed: same contract, and a go-forward DELETE still arrives
-    // as signed rows (only rows committed after stream start flow)
-    val cdcCk = Files.createTempDirectory("cdc-latest-ck").toString
-    val got = mutable.ArrayBuffer.empty[(String, Long)]
-    def runCdc(): Unit = drain(
-      spark.readStream.format("graft")
-        .option("root", root).option("table", "docs")
-        .option("withDeletes", "true")
-        .option("startingOffsets", "latest").load()
-        .writeStream.option("checkpointLocation", cdcCk)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          got ++= df.collect().map(r => r.getString(3) -> r.getLong(0))
-          ()
-        }.start())
-    runCdc()
-    assert(got.isEmpty, "latest CDC start re-delivered the snapshot")
-    AtomicPublish.publishDelta(spark, root,
-      append = Map("docs" -> slice(15 until 18, "de")),
-      parent = AtomicPublish.currentTxn(spark, root))
-    AtomicPublish.deleteRows(spark, root,
-      Map("docs" -> Seq(2L).toDF("doc_id")))
-    runCdc()
-    assert(got.toSet == Set("insert" -> 15L, "insert" -> 16L,
-      "insert" -> 17L, "delete" -> 2L))
-  }
-
-  test("CDC updateImages (Delta CDF vocabulary): an upsert's changed " +
-      "keys stream as update_preimage/update_postimage pairs; fresh " +
-      "keys stay insert, pure deletes stay delete") {
-    val root = freshRoot()
-    AtomicPublish.publish(spark, root, Map("docs" -> slice(0 until 10, "en")))
-    val ckpt = Files.createTempDirectory("cdc-upd-ck").toString
-    val got = mutable.ArrayBuffer.empty[(String, Long, Long)]
-    def run(): Unit = drain(
-      spark.readStream.format("graft")
-        .option("root", root).option("table", "docs")
-        .option("withDeletes", "true")
-        .option("updateImages", "true").load()
-        .writeStream.option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          got ++= df.collect().map(r =>
-            (r.getString(3), r.getLong(0), r.getLong(2)))
-          ()
-        }.start())
-    run() // fresh checkpoint: the snapshot batch is all insert
-    assert(got.size == 10 && got.forall(_._1 == "insert"))
-    // ONE upsert commit: keys 2,3 get new values, keys 10,11 are fresh
-    val up = Seq((2L, "en", 2000L), (3L, "en", 3000L),
-      (10L, "en", 100L), (11L, "en", 110L))
-      .toDF("doc_id", "lang", "words")
-    AtomicPublish.upsertMany(spark, root,
-      Map("docs" -> AtomicPublish.Upsert(up, up.select("doc_id"))))
-    got.clear(); run()
-    val byType = got.groupBy(_._1).view
-      .mapValues(_.map(x => (x._2, x._3)).toSet).toMap
-    assert(byType.get("update_preimage").contains(Set((2L, 20L), (3L, 30L))),
-      byType)
-    assert(byType.get("update_postimage")
-      .contains(Set((2L, 2000L), (3L, 3000L))), byType)
-    assert(byType.get("insert").contains(Set((10L, 100L), (11L, 110L))),
-      byType)
-    assert(!byType.contains("delete"), byType)
-    // a pure delete (no matching insert in the interval) stays delete
-    AtomicPublish.deleteRows(spark, root,
-      Map("docs" -> Seq(5L).toDF("doc_id")))
-    got.clear(); run()
-    assert(got.toSet == Set(("delete", 5L, 50L)), got)
-  }
-
-  test("SQL MERGE INTO feeds updateImages: the full CDF journey — a " +
-      "catalog MERGE's updated keys stream as pre/post pairs") {
-    val root = freshRoot()
-    AtomicPublish.publish(spark, root, Map("docs" -> slice(0 until 10, "en")))
-    // MERGE INTO needs the DML-rewrite extensions: a second session
-    // over the shared context (the StoreDmlSpec pattern); the stream
-    // keeps running on the plain session — same store, same commits
-    import org.apache.spark.sql.SparkSession
-    val prev = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2: SparkSession =
-      try SparkSession.builder()
-        .config("spark.sql.shuffle.partitions", "4")
-        .withExtensions(
-          new org.apache.spark.sql.graftvec.GraftSqlExtensions()(_))
-        .getOrCreate()
-      finally {
-        SparkSession.setActiveSession(prev)
-        SparkSession.setDefaultSession(prev)
-      }
-    val cat = "cdcmerge"
-    s2.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.ops.GraftCatalog].getName)
-    s2.conf.set(s"spark.sql.catalog.$cat.root", root)
-    val ckpt = Files.createTempDirectory("cdc-merge-ck").toString
-    val got = mutable.ArrayBuffer.empty[(String, Long, Long)]
-    def run(): Unit = drain(
-      spark.readStream.format("graft")
-        .option("root", root).option("table", "docs")
-        .option("withDeletes", "true")
-        .option("updateImages", "true").load()
-        .writeStream.option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          got ++= df.collect().map(r =>
-            (r.getString(3), r.getLong(0), r.getLong(2)))
-          ()
-        }.start())
-    run() // snapshot
-    assert(got.size == 10 && got.forall(_._1 == "insert"))
-    // one SQL MERGE: key 2 updates, key 20 is fresh — the merge-on-read
-    // upsert commit (tombstone + append) classifies in the feed
-    val prevActive = SparkSession.getActiveSession
-    SparkSession.setActiveSession(s2)
-    try s2.sql(
-      s"""MERGE INTO $cat.docs t
-         |USING (SELECT col1 AS doc_id, col2 AS lang, col3 AS words
-         |       FROM VALUES (2L, 'xx', 999L), (20L, 'xx', 200L)) s
-         |ON t.doc_id = s.doc_id
-         |WHEN MATCHED THEN UPDATE SET *
-         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-    finally prevActive.foreach(SparkSession.setActiveSession)
-    got.clear(); run()
-    val byType = got.groupBy(_._1).view
-      .mapValues(_.map(x => (x._2, x._3)).toSet).toMap
-    assert(byType.get("update_preimage").contains(Set((2L, 20L))), byType)
-    assert(byType.get("update_postimage").contains(Set((2L, 999L))), byType)
-    assert(byType.get("insert").contains(Set((20L, 200L))), byType)
-    assert(!byType.contains("delete"), byType)
-  }
-
-  test("CDC updateImages over a COMPOSITE delete key: classification " +
-      "matches the full tuple — a sibling chunk of the same doc is " +
-      "not misread as updated") {
-    val root = freshRoot()
-    // (doc_id, chunk_no)-keyed chunks: doc_id alone is NOT unique
-    val chunks = Seq((1L, 0L, "a0"), (1L, 1L, "a1"), (2L, 0L, "b0"))
-      .toDF("doc_id", "chunk_no", "text")
-    AtomicPublish.publish(spark, root, Map("chunks" -> chunks))
-    val ckpt = Files.createTempDirectory("cdc-comp-ck").toString
-    val got = mutable.ArrayBuffer.empty[(String, Long, Long, String)]
-    def run(): Unit = drain(
-      spark.readStream.format("graft")
-        .option("root", root).option("table", "chunks")
-        .option("withDeletes", "true")
-        .option("updateImages", "true").load()
-        .writeStream.option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          got ++= df.collect().map(r =>
-            (r.getString(3), r.getLong(0), r.getLong(1), r.getString(2)))
-          ()
-        }.start())
-    run()
-    assert(got.size == 3 && got.forall(_._1 == "insert"))
-    // ONE upsert keyed by the TUPLE: only (1,1) changes; (1,0) — same
-    // doc_id, different chunk — must stay untouched and untagged
-    val up = Seq((1L, 1L, "a1-fixed"), (3L, 0L, "c0"))
-      .toDF("doc_id", "chunk_no", "text")
-    AtomicPublish.upsertMany(spark, root, Map("chunks" ->
-      AtomicPublish.Upsert(up, up.select("doc_id", "chunk_no"))))
-    got.clear(); run()
-    val byType = got.groupBy(_._1).view
-      .mapValues(_.map(x => (x._2, x._3, x._4)).toSet).toMap
-    assert(byType.get("update_preimage")
-      .contains(Set((1L, 1L, "a1"))), byType)
-    assert(byType.get("update_postimage")
-      .contains(Set((1L, 1L, "a1-fixed"))), byType)
-    assert(byType.get("insert").contains(Set((3L, 0L, "c0"))), byType)
-    assert(!byType.contains("delete"), byType)
-  }
-
   test("CDC stream rides through a mid-stream WIDENING append: the " +
       "running consumer keeps its start-of-stream shape (new column " +
-      "dropped, like the plain source); a fresh stream adopts it") {
+      "dropped); a fresh stream adopts it") {
     val root = freshRoot()
     AtomicPublish.publish(spark, root, Map("docs" -> slice(0 until 5, "en")))
     val ckpt = Files.createTempDirectory("cdc-widen-ck").toString
@@ -450,9 +205,7 @@ class ChangeFeedStreamSpec extends SparkSuite {
     // fresh source legitimately re-resolves the widened schema): the
     // widen lands while this query holds its start-of-stream schema
     val q = spark.readStream.format("graft")
-      .option("root", root).option("table", "docs")
-      .option("withDeletes", "true")
-      .option("updateImages", "true").load()
+      .option("root", root).option("table", "docs").load()
       .writeStream.option("checkpointLocation", ckpt)
       .trigger(Trigger.ProcessingTime("50 milliseconds"))
       .foreachBatch { (df: DataFrame, _: Long) =>
@@ -485,161 +238,40 @@ class ChangeFeedStreamSpec extends SparkSuite {
     val later = got.drop(5)
     assert(later.forall(_._3 == 4),
       s"running stream leaked the widened schema: $later")
+    // the upserted key arrives as a delete of its old row plus an
+    // insert of its new one
     val byType = later.groupBy(_._1).view
       .mapValues(_.map(_._2).toSet).toMap
-    assert(byType.get("insert").contains(Set(5L, 6L)), byType)
-    assert(byType.get("update_preimage").contains(Set(2L)), byType)
-    assert(byType.get("update_postimage").contains(Set(2L)), byType)
+    assert(byType == Map("insert" -> Set(2L, 5L, 6L),
+      "delete" -> Set(2L)), byType)
     // a FRESH stream (new checkpoint) resolves the widened schema and
     // serves score — null for pre-widen rows, values for new ones
     val ckpt2 = Files.createTempDirectory("cdc-widen-ck2").toString
     val snap = mutable.ArrayBuffer.empty[(Long, Option[Double])]
-    drain(spark.readStream.format("graft")
-      .option("root", root).option("table", "docs")
-      .option("withDeletes", "true").load()
-      .writeStream.option("checkpointLocation", ckpt2)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        assert(df.columns.contains("score"), df.columns.mkString(","))
-        snap ++= df.collect().map(r => (r.getLong(0),
-          if (r.isNullAt(3)) None else Some(r.getDouble(3))))
-        ()
-      }.start())
+    drain(startFeed(root, ckpt2) { (df, _) =>
+      assert(df.columns.contains("score"), df.columns.mkString(","))
+      snap ++= df.collect().map(r => (r.getLong(0),
+        if (r.isNullAt(3)) None else Some(r.getDouble(3))))
+      ()
+    })
     val byId = snap.toMap
     assert(byId(5L).contains(0.5) && byId(2L).contains(0.2), byId)
     assert(byId(0L).isEmpty && byId(4L).isEmpty, byId)
   }
 
-  test("CDC updateImages with NULL key components (mixed commit): the " +
-      "null-keyed update keeps plain delete/insert tags (equi-join " +
-      "semantics, like SQL), the non-null update classifies as a " +
-      "pre/post pair, and a tuple-keyed mirror still equals the " +
-      "delete-aware batch read") {
-    val root = freshRoot()
-    // (doc_id, variant)-keyed rows; variant is NULLABLE — the
-    // null-safe tombstone join (<=>) deletes null-keyed rows, but the
-    // updateImages classification join is deliberately EQUI (a null
-    // component never pairs), so those rows keep the plain two-valued
-    // tags. This pins that asymmetry end to end.
-    val base = Seq((1L, "a", "v1"), (2L, null, "v2"), (3L, "c", "v3"))
-      .toDF("doc_id", "variant", "text")
-    AtomicPublish.publish(spark, root, Map("docs" -> base))
-    val ckpt = Files.createTempDirectory("cdc-nullkey-ck").toString
-    val got = mutable.ArrayBuffer
-      .empty[(String, Long, Option[String], String)]
-    val mirror = mutable.Map.empty[(Long, Option[String]), String]
-    def run(): Unit = drain(
-      spark.readStream.format("graft")
-        .option("root", root).option("table", "docs")
-        .option("withDeletes", "true")
-        .option("updateImages", "true").load()
-        .writeStream.option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          val rows = df.collect().map(r => (r.getString(3), r.getLong(0),
-            Option(r.getString(1)), r.getString(2)))
-          got ++= rows
-          // interval semantics: removals (delete/preimage) first,
-          // then arrivals (insert/postimage)
-          rows.filter(x => x._1 == "delete" || x._1 == "update_preimage")
-            .foreach(x => mirror.remove((x._2, x._3)))
-          rows.filter(x => x._1 == "insert" || x._1 == "update_postimage")
-            .foreach(x => mirror.put((x._2, x._3), x._4))
-          ()
-        }.start())
-    run()
-    assert(got.size == 3 && got.forall(_._1 == "insert"))
-    // ONE mixed upsert commit: (1,'a') and (2,NULL) both replaced,
-    // (4,NULL) fresh
-    val up = Seq((1L, "a", "v1-new"), (2L, null, "v2-new"),
-      (4L, null, "v4")).toDF("doc_id", "variant", "text")
-    AtomicPublish.upsertMany(spark, root, Map("docs" ->
-      AtomicPublish.Upsert(up, up.select("doc_id", "variant"))))
-    got.clear(); run()
-    val byType = got.groupBy(_._1).view
-      .mapValues(_.map(x => (x._2, x._3, x._4)).toSet).toMap
-    // the non-null tuple classifies
-    assert(byType.get("update_preimage")
-      .contains(Set((1L, Some("a"), "v1"))), byType)
-    assert(byType.get("update_postimage")
-      .contains(Set((1L, Some("a"), "v1-new"))), byType)
-    // the NULL-component tuple keeps plain tags — but the null-safe
-    // tombstone really deleted the old row, so the two tags carry the
-    // complete story and no row is lost or duplicated
-    assert(byType.get("delete").contains(Set((2L, None, "v2"))), byType)
-    assert(byType.get("insert")
-      .contains(Set((2L, None, "v2-new"), (4L, None, "v4"))), byType)
-    // mirror parity with the delete-aware batch read
-    val batch = AtomicPublish.readTable(spark, root, "docs").collect()
-      .map(r => (r.getLong(0), Option(r.getString(1))) -> r.getString(2))
-      .toMap
-    assert(mirror.toMap == batch && batch.size == 4, s"$mirror vs $batch")
-  }
-
-  test("maxOwnersPerTrigger (ADMISSION CONTROL): a deep backlog drains " +
-      "as bounded paced batches — no batch exceeds the cap, nothing " +
-      "lost, nothing duplicated, restart resumes exactly") {
-    val root = freshRoot()
-    // 6-owner ingest history, 10 rows per owner
-    AtomicPublish.publish(spark, root, Map("docs" -> slice(0 until 10, "en")))
-    (1 until 6).foreach { k =>
-      AtomicPublish.publishDelta(spark, root,
-        append = Map("docs" -> slice(k * 10 until (k + 1) * 10, "en")),
-        parent = AtomicPublish.currentTxn(spark, root))
-    }
-    val ckpt = Files.createTempDirectory("cfeed-paced-ck").toString
-    val batches = mutable.ArrayBuffer.empty[Seq[Long]]
-    def run(): Unit = {
-      val q = spark.readStream.format("graft")
-        .option("root", root).option("table", "docs")
-        .option("maxOwnersPerTrigger", "2").load()
-        .writeStream.option("checkpointLocation", ckpt)
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          batches += df.select("doc_id").collect().map(_.getLong(0)).toSeq
-          ()
-        }.start()
-      q.processAllAvailable(); q.stop()
-    }
-    run()
-    val delivered = batches.flatten
-    assert(delivered.toSet == (0L until 60L).toSet, "lost or phantom rows")
-    assert(delivered.size == 60, "duplicated rows inside the drain")
-    assert(batches.forall(_.size <= 20),
-      s"a batch exceeded the 2-owner cap: ${batches.map(_.size)}")
-    assert(batches.count(_.nonEmpty) >= 3,
-      s"backlog was not paced: ${batches.map(_.size)}")
-    // two more commits while the stream is DOWN; the SAME checkpoint
-    // resumes under the cap with no re-delivery and no gap
-    (6 until 8).foreach { k =>
-      AtomicPublish.publishDelta(spark, root,
-        append = Map("docs" -> slice(k * 10 until (k + 1) * 10, "en")),
-        parent = AtomicPublish.currentTxn(spark, root))
-    }
-    batches.clear()
-    run()
-    val resumed = batches.flatten
-    assert(resumed.toSet == (60L until 80L).toSet,
-      s"restart under the cap lost/re-delivered rows: ${resumed.sorted}")
-    assert(resumed.size == 20)
-    assert(batches.forall(_.size <= 20))
-  }
-
-  test("REORGANIZATION TRANSPARENCY (r10): plain and CDC streams ride " +
+  test("REORGANIZATION TRANSPARENCY (r10): the CDC stream rides " +
       "through tail and full compaction on the SAME checkpoint with " +
       "zero spurious rows; a data-changing replace still resyncs") {
     val root = freshRoot()
-    val ckpt = Files.createTempDirectory("cfeed-reorg-ck").toString
     val cdcCk = Files.createTempDirectory("cdc-reorg-ck").toString
     AtomicPublish.publish(spark, root, Map("docs" -> slice(0 until 10, "en")))
-    val plainSeen = mutable.ArrayBuffer.empty[Long]
-    def runPlain(): Unit = drain(startFeed(root, ckpt) { (df, _) =>
-      plainSeen ++= df.select("doc_id").collect().map(_.getLong(0))
-      ()
-    })
     val mirror = mutable.Map.empty[Long, (String, Long)]
+    val seen = mutable.ArrayBuffer.empty[(String, Long)]
     def runCdc(): Unit = drain(startCdc(root, cdcCk, mirror))
-    runPlain(); runCdc() // snapshots
-    plainSeen.clear()
+    def runSeen(): Unit = drain(startFeed(root, cdcCk) { (df, _) =>
+      seen ++= df.collect().map(r => r.getString(3) -> r.getLong(0)); ()
+    })
+    runCdc() // snapshot
     // two small appends, then a TAIL compaction (reorg commit)
     AtomicPublish.publishDelta(spark, root,
       append = Map("docs" -> slice(10 until 15, "de")),
@@ -649,161 +281,33 @@ class ChangeFeedStreamSpec extends SparkSuite {
       parent = AtomicPublish.currentTxn(spark, root))
     assert(Compaction.compactTail(spark, root, "docs",
       minSegs = 2).isDefined, "tail compaction did not trigger")
-    runPlain(); runCdc()
-    assert(plainSeen.sorted == (10L until 20L),
-      s"plain feed across tail compaction delivered ${plainSeen.sorted}")
+    runCdc()
     assert(mirror == batchMirror(root))
+    assert(mirror.keySet == (0L until 20L).toSet)
     // deletes, then a FULL compaction (applies the tombstone debt —
     // still a reorg: live rows unchanged)
-    plainSeen.clear()
     AtomicPublish.deleteRows(spark, root,
       Map("docs" -> Seq(2L, 12L).toDF("doc_id")))
     Compaction.compactStore(spark, root, "docs")
     AtomicPublish.publishDelta(spark, root,
       append = Map("docs" -> slice(20 until 23, "fr")),
       parent = AtomicPublish.currentTxn(spark, root))
-    runPlain(); runCdc()
-    assert(plainSeen.sorted == (20L until 23L),
-      s"plain feed across full compaction delivered ${plainSeen.sorted}")
+    runCdc()
     assert(mirror == batchMirror(root))
     assert(!mirror.contains(2L) && !mirror.contains(12L))
-    // an interval that is ONLY a compaction: both feeds stay quiet
-    plainSeen.clear()
+    // an interval that is ONLY a compaction: the feed stays quiet
     Compaction.compactStore(spark, root, "docs")
-    runPlain(); runCdc()
-    assert(plainSeen.isEmpty,
-      s"a pure reorganization emitted rows: ${plainSeen.sorted}")
-    assert(mirror == batchMirror(root))
-    // a DATA-CHANGING replace still fails both streams by name
+    runSeen()
+    assert(seen.isEmpty,
+      s"a pure reorganization emitted rows: ${seen.sorted}")
+    // a DATA-CHANGING replace fails the stream by name, before any
+    // partial batch reaches the mirror
     AtomicPublish.publishDelta(spark, root, append = Map.empty,
       replace = Map("docs" -> slice(500 until 505, "pt")),
       parent = AtomicPublish.currentTxn(spark, root))
-    def hasResync(t: Throwable): Boolean = t != null &&
-      (Option(t.getMessage).exists(
-        _.contains(GraftChangeFeedSource.ResyncRequired)) ||
-        hasResync(t.getCause))
-    assert(hasResync(intercept[StreamingQueryException] { runPlain() }))
     val mirrorBefore = mirror.toMap
     assert(hasResync(intercept[StreamingQueryException] { runCdc() }))
     assert(mirror.toMap == mirrorBefore,
       "resync path applied a partial CDC batch")
-  }
-
-  test("CDC admission control (r10): the initial snapshot drains as " +
-      "bounded delete-aware slices and catch-up is commit-paced — " +
-      "exact mirror, no batch over the cap") {
-    val root = freshRoot()
-    // 6-owner history with tombstones: 6 commits à 10 rows, 2 deletes
-    AtomicPublish.publish(spark, root, Map("docs" -> slice(0 until 10, "en")))
-    (1 until 6).foreach { k =>
-      AtomicPublish.publishDelta(spark, root,
-        append = Map("docs" -> slice(k * 10 until (k + 1) * 10, "en")),
-        parent = AtomicPublish.currentTxn(spark, root))
-    }
-    AtomicPublish.deleteRows(spark, root,
-      Map("docs" -> Seq(4L, 44L).toDF("doc_id")))
-    val ckpt = Files.createTempDirectory("cdc-paced-ck").toString
-    val mirror = mutable.Map.empty[Long, (String, Long)]
-    val batchSizes = mutable.ArrayBuffer.empty[Int]
-    def run(): Unit = drain(
-      spark.readStream.format("graft")
-        .option("root", root).option("table", "docs")
-        .option("withDeletes", "true")
-        .option("maxOwnersPerTrigger", "2").load()
-        .writeStream.option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          val rows = df.collect()
-          batchSizes += rows.length
-          rows.filter(_.getString(3) == "delete")
-            .foreach(r => mirror.remove(r.getLong(0)))
-          rows.filter(_.getString(3) == "insert")
-            .foreach(r => mirror.put(r.getLong(0),
-              (r.getString(1), r.getLong(2))))
-          ()
-        }.start())
-    run()
-    assert(mirror == batchMirror(root))
-    assert(!mirror.contains(4L) && !mirror.contains(44L))
-    assert(batchSizes.forall(_ <= 20),
-      s"a snapshot slice exceeded the 2-owner cap: $batchSizes")
-    assert(batchSizes.count(_ > 0) >= 3,
-      s"snapshot was not paced: $batchSizes")
-    // catch-up: 4 more commits while the stream is down → paced drain,
-    // exact mirror, no re-delivery
-    batchSizes.clear()
-    (6 until 9).foreach { k =>
-      AtomicPublish.publishDelta(spark, root,
-        append = Map("docs" -> slice(k * 10 until (k + 1) * 10, "fr")),
-        parent = AtomicPublish.currentTxn(spark, root))
-    }
-    AtomicPublish.deleteRows(spark, root,
-      Map("docs" -> Seq(61L).toDF("doc_id")))
-    run()
-    assert(mirror == batchMirror(root))
-    assert(!mirror.contains(61L))
-    assert(batchSizes.count(_ > 0) >= 2,
-      s"catch-up was not commit-paced: $batchSizes")
-  }
-
-  test("streaming matview: commits drive refreshes; compaction rides " +
-      "through (r10); a data-changing replace falls back") {
-    val root = freshRoot()
-    val ckpt = Files.createTempDirectory("cfeed-mv-ck").toString
-    val d = MatView.Def("docs", "lang_counts", Seq("lang"),
-      Seq(MatView.Agg("count", "doc_id", "n"),
-        MatView.Agg("sum", "words", "w")))
-    AtomicPublish.publish(spark, root, Map("docs" -> slice(0 until 20, "en")))
-    def expect(): Set[Row] = MatView.recomputed(spark, root, d,
-      AtomicPublish.currentTxn(spark, root).get).collect().toSet
-    def view(): Set[Row] = AtomicPublish.readTable(spark, root, "lang_counts")
-      .collect().toSet
-    def run(ck: String): Unit = drain(MatView.streamRefresh(
-      spark, root, d, ck, Trigger.AvailableNow()))
-    // three commits → three intervals → the view tracks each
-    run(ckpt)
-    (1 to 2).foreach { k =>
-      AtomicPublish.publishDelta(spark, root,
-        append = Map("docs" -> slice(20 + k * 5 until 25 + k * 5, "de")),
-        parent = AtomicPublish.currentTxn(spark, root))
-      run(ckpt)
-    }
-    assert(view() == expect())
-    // equivalence with a plain batch refresh (already current → no-op)
-    assert(MatView.refresh(spark, root, d).isEmpty)
-    // COMPACTION mid-stream is a REORGANIZATION commit (r10,
-    // dataChange=false): the streaming matview RIDES THROUGH it on the
-    // SAME checkpoint — the next drain applies exactly the
-    // post-compaction appends, no resync, no spurious rows
-    Compaction.compactStore(spark, root, "docs")
-    AtomicPublish.publishDelta(spark, root,
-      append = Map("docs" -> slice(100 until 105, "fr")),
-      parent = AtomicPublish.currentTxn(spark, root))
-    run(ckpt)
-    assert(view() == expect(),
-      "stream-maintained view diverged across a compaction")
-    // a DATA-CHANGING replace is NOT rideable: the next drain fails
-    // with the documented resync signal…
-    AtomicPublish.publishDelta(spark, root, append = Map.empty,
-      replace = Map("docs" -> slice(300 until 310, "pt")),
-      parent = AtomicPublish.currentTxn(spark, root))
-    val e = intercept[StreamingQueryException] {
-      drain(startFeed(root, ckpt) { (_, _) => () })
-    }
-    assert(e.getMessage.contains(GraftChangeFeedSource.ResyncRequired) ||
-      Option(e.getCause).exists(
-        _.getMessage.contains(GraftChangeFeedSource.ResyncRequired)))
-    // …the fallback is a batch refresh (handles the replace by full
-    // recompute) plus a FRESH checkpoint, whose first batch re-delivers
-    // the snapshot and the feed continues
-    assert(MatView.refresh(spark, root, d).isDefined)
-    assert(view() == expect())
-    val ckpt2 = Files.createTempDirectory("cfeed-mv-ck2").toString
-    run(ckpt2)
-    AtomicPublish.publishDelta(spark, root,
-      append = Map("docs" -> slice(200 until 203, "es")),
-      parent = AtomicPublish.currentTxn(spark, root))
-    run(ckpt2)
-    assert(view() == expect())
   }
 }
