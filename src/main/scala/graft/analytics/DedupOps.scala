@@ -966,10 +966,8 @@ object DedupOps {
   /** N2c: INCREMENTAL near-dup IN THE GATE (VERDICT r13 #6) — the
     * day-two maintenance face of n2 as a hash-proven query: docs with
     * `doc_id % 3 = 0` play the NEW batch, the rest the published
-    * survivors (their signature frame standing in for the store's
-    * signature table — same [[shingleSets]] schema; production wires
-    * the real store read, never a re-shingle:
-    * [[graft.streaming.LlmIngest]] `maintainIncremental`). The oracle
+    * survivors (their signature frame standing in for a stored
+    * signature table — same [[shingleSets]] schema). The oracle
     * recomputes the FULL n2 pair set and restricts it to pairs
     * TOUCHING the batch — exactly the incremental judge's contract
     * (in a real cycle the published survivors are pairwise < θ, so

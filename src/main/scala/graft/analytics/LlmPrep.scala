@@ -47,9 +47,9 @@ object LlmPrep {
   private def quarCol: Column =
     col("text").isNull || size(words) < MinWords
   /** THE canonical content fingerprint on `text` — the dedup partition
-    * key, the published kept_docs column, and the streaming anti-join
-    * key must all be this one expression (LlmIngest and the specs reuse
-    * it; divergence would silently break replay-stability). */
+    * key and the published kept_docs column must be this one
+    * expression (the specs reuse it; divergence would silently break
+    * replay-stability). */
   def fingerprintCol: Column = md5(col("text").cast("binary"))
   private def fpCol: Column = fingerprintCol
   private def evalSliceCol: Column =
@@ -138,10 +138,8 @@ object LlmPrep {
     * rewrites the anti-join to a pass-through and erases the cap
     * metric nodes from the final plan — the counter is then absent
     * from [[counts]] (never wrongly zero, absent). A run that must
-    * see the counter unconditionally is the maintenance shape:
-    * [[graft.streaming.LlmIngest.maintain]] excludes
-    * `AQEPropagateEmptyRelation` around its materializing action and
-    * reports the counters in its own `maint_runs` row. */
+    * see the counter unconditionally must exclude
+    * `AQEPropagateEmptyRelation` around its materializing action. */
   final class JourneyRun(val chunks: DataFrame,
       observations: Seq[Observation],
       watcher: DedupOps.DropsWatcher) {

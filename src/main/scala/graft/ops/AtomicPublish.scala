@@ -407,7 +407,7 @@ object AtomicPublish {
       bloomCols: Seq[String] = Nil,
       /** Declared clustering layout ([[graft.ops.Compaction
         * .compactStore]] `clusterBy`), RECORDED so maintenance
-        * re-applies it: without this, the next auto-compaction would
+        * re-applies it: without this, the next bare compaction would
         * consolidate with an unclustered rewrite and silently destroy
         * the file-level locality a z-order/cluster rewrite bought. */
       clusterCols: Seq[String] = Nil,
@@ -1830,50 +1830,16 @@ object AtomicPublish {
     if (missing.isEmpty) guarded else guarded.drop(missing.map(_.name): _*)
   }
 
-  /** Scan-based verification that EXISTING data satisfies a
-    * constraint — the `setCheck`/`CALL add_check` contract (a
-    * constraint is a guarantee over the whole table): one column-pruned
-    * scan with a limit-1 early exit. Write paths do NOT use this —
-    * they enforce per-row inside the staging job ([[checkGuarded]]). */
-  private def verifyChecksScan(spark: SparkSession, name: String,
-      df: DataFrame, meta: TableMeta): Unit = {
-    if (meta.checks.isEmpty) return
-    val have = df.columns.toSet
-    val evalFrame =
-      meta.schema.fields.filterNot(f => have.contains(f.name)).foldLeft(df) {
-        (d, f) => d.withColumn(f.name, lit(null).cast(f.dataType))
-      }
-    meta.checks.toSeq.sortBy(_._1).foreach { case (cn, predSql) =>
-      val pred =
-        try org.apache.spark.sql.functions.expr(predSql)
-        catch { case scala.util.control.NonFatal(e) =>
-          throw new IllegalArgumentException(
-            s"check '$cn' of table '$name' does not parse: $predSql", e)
-        }
-      val violated =
-        try evalFrame.filter(pred <=> lit(false)).limit(1).count() > 0
-        catch { case scala.util.control.NonFatal(e) =>
-          throw new IllegalArgumentException(
-            s"check '$cn' of table '$name' cannot be evaluated over " +
-              s"the existing data: $predSql", e)
-        }
-      require(!violated,
-        s"$CheckViolation: constraint '$cn' of table '$name' " +
-          s"($predSql) is violated by the existing data — add the " +
-          "constraint after repairing it (no partial state)")
-    }
-  }
-
-  /** A staging failure whose cause chain carries a raised CHECK
-    * violation surfaces as the violation itself (an
-    * IllegalArgumentException with the named constraint), not as the
-    * write job's generic abort wrapper. */
   /** Row-guard violation markers whose raise unwraps to a named
     * IllegalArgumentException (CHECK constraints and the
     * overwrite-containment guard share the fused-raise machinery). */
   private val ViolationMarkers =
     Seq(CheckViolation, "GRAFT_OVERWRITE_OUTSIDE_PREDICATE")
 
+  /** A staging failure whose cause chain carries a raised CHECK
+    * violation surfaces as the violation itself (an
+    * IllegalArgumentException with the named constraint), not as the
+    * write job's generic abort wrapper. */
   private def unwrapViolation(e: Throwable): Throwable = {
     var t: Throwable = e
     var hops = 0
@@ -2334,8 +2300,7 @@ object AtomicPublish {
       /** Declare (or clear, with an empty map) a replaced table's CHECK
         * constraints ([[TableMeta.checks]]). Absent = inherit the
         * parent's; appends always inherit and are ENFORCED against the
-        * slice. Live-table constraint evolution goes through
-        * [[setCheck]] (which validates existing data). */
+        * slice. */
       checks: Map[String, Map[String, String]] = Map.empty,
       /** Operation label for the commit marker (`CALL history`'s
         * `operation` column). None = derived from the delta's shape
@@ -2410,8 +2375,7 @@ object AtomicPublish {
     checks.foreach { case (n, cs) =>
       require(replace.contains(n),
         s"checks names a table '$n' this delta does not replace " +
-          "(declare constraints at (re)definition; evolve a live " +
-          "table's constraints via setCheck)")
+          "(declare constraints at (re)definition)")
       validateChecks(n, cs)
     }
     withTxn(spark, root, txnId) { txn =>
@@ -3545,84 +3509,6 @@ object AtomicPublish {
     }
   }
 
-  /** Evolve a LIVE table's CHECK constraints: `predicate = Some(sql)`
-    * adds (or redefines) the named constraint — after verifying the
-    * EXISTING data satisfies it (one full delete-aware scan at the
-    * pinned snapshot, the Delta `ADD CONSTRAINT` contract: a
-    * constraint is a guarantee over the whole table, not just future
-    * writes); `predicate = None` drops it. Metadata-only CAS commit —
-    * O(1) on disk, history time-travels to the pre-change rules.
-    * Returns the new txn, or None on a lost race. */
-  def setCheck(spark: SparkSession, root: String, table: String,
-      name: String, predicate: Option[String],
-      parent: Option[String] = None): Option[String] =
-    withTxn(spark, root) { txn =>
-      val (p, parentMeta) = pinParent(spark, root, parent)
-      val meta = parentMeta.getOrElse(table,
-        throw new IllegalArgumentException(
-          s"table '$table' is not in version $p under $root"))
-      val newMeta = predicate match {
-        case Some(pred) =>
-          validateChecks(table, Map(name -> pred))
-          val candidate = meta.copy(checks = meta.checks + (name -> pred))
-          // the whole EXISTING table must already satisfy the rule
-          verifyChecksScan(spark, table,
-            readTableAt(spark, root, table, p),
-            candidate.copy(checks = Map(name -> pred)))
-          candidate
-        case None =>
-          require(meta.checks.contains(name),
-            s"table '$table' has no check constraint '$name' " +
-              s"(has: ${meta.checks.keys.toSeq.sorted.mkString(", ")})")
-          meta.copy(checks = meta.checks - name)
-      }
-      commit(spark, root, txn, Map.empty, parentMeta + (table -> newMeta),
-        Some(p), op = (if (predicate.isDefined) "ADD CHECK "
-          else "DROP CHECK ") + s"$table.$name")
-    }
-
-  /** CDF RETENTION — trim a table's change-data companion
-    * ([[cdfTableOf]]) to its newest `keepLast` staged change sets, in
-    * one METADATA-ONLY CAS commit (the `setCheck` shape): the cdf
-    * chain is append-only (one owner per rewrite, chain order = commit
-    * order), so the trim just drops the oldest owners from the LIVE
-    * manifest. Without this the live manifest references every change
-    * set ever staged and vacuum can never reclaim them — the
-    * log-retention half of the commit-time CDF story (Delta ages
-    * change files out with its log; here they age out with versions
-    * once unreferenced). Historical reads are untouched (a lagging
-    * stream diffs through the interval's OWN manifests, which still
-    * reference the trimmed owners until vacuum reclaims those
-    * versions — and vacuum's consumer registry protects registered
-    * laggards); a consumer older than both trim and vacuum gets the
-    * documented resync error, never wrong rows. No-op (None, nothing
-    * committed) when the companion is absent or already within
-    * budget; Some(txn) on commit; retry on a lost race. */
-  def trimCdf(spark: SparkSession, root: String, table: String,
-      keepLast: Int, parent: Option[String] = None): Option[String] = {
-    require(keepLast >= 0, s"keepLast must be >= 0, got $keepLast")
-    withTxn(spark, root) { txn =>
-      val (p, parentMeta) = pinParent(spark, root, parent)
-      require(parentMeta.contains(table),
-        s"table '$table' is not in version $p under $root")
-      val cdfT = cdfTableOf(table)
-      parentMeta.get(cdfT).filter(_.owners.size > keepLast).flatMap { m =>
-        val dropped = m.owners.dropRight(keepLast).toSet
-        val newMeta = m.copy(
-          owners = m.owners.takeRight(keepLast),
-          segStats = m.segStats.filterNot(kv => dropped(kv._1)),
-          fileStats = m.fileStats.filterNot(kv => dropped(kv._1)),
-          ownerDirs = m.ownerDirs.filterNot(kv => dropped(kv._1)),
-          ownerParts = m.ownerParts.filterNot(kv => dropped(kv._1)))
-        commit(spark, root, txn, Map.empty, parentMeta + (cdfT -> newMeta),
-          Some(p), op = s"TRIM CDF $table (keep $keepLast)",
-          // dropping cdf owners changes no table CONTENT: change-feed
-          // consumers ride through it like any reorganization
-          dataChange = false)
-      }
-    }
-  }
-
   /** The live (txn, table→metadata) in ONE `_CURRENT` read, or None
     * before the first successful publish — `_CURRENT` carries the full
     * manifest, so resolving the live version never needs the second
@@ -3648,13 +3534,6 @@ object AtomicPublish {
       Some(txn -> parseManifestMeta(txn, lines.drop(1)))
     }
   }
-
-  /** The live (txn, table→owning versions) in ONE `_CURRENT` read. */
-  def currentManifest(spark: SparkSession,
-      root: String): Option[(String, Map[String, Seq[String]])] =
-    currentManifestMeta(spark, root).map { case (txn, meta) =>
-      txn -> meta.map { case (n, m) => n -> m.owners }
-    }
 
   /** The live txn id, or None before the first successful publish. */
   def currentTxn(spark: SparkSession, root: String): Option[String] =

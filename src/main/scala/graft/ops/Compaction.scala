@@ -4,10 +4,10 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Small-file compaction — the table-maintenance op every long-lived
-  * parquet table needs: streaming sinks, per-micro-batch publishes, and
-  * incremental appends all accrete files far smaller than the ideal
-  * scan unit, and at 100 TB the resulting task-per-tiny-file overhead
-  * (plus NameNode/listing pressure) dominates read cost.
+  * parquet table needs: per-batch publishes and incremental appends
+  * all accrete files far smaller than the ideal scan unit, and at
+  * 100 TB the resulting task-per-tiny-file overhead (plus
+  * NameNode/listing pressure) dominates read cost.
   *
   * The partition count is derived from the table's ACTUAL on-disk bytes
   * (FS listing — metadata only, no data read), not row counts, so the
@@ -56,9 +56,9 @@ object Compaction {
 
   /** ⌈bytes / targetBytes⌉, floored at 1 — the byte-derived output
     * partition count every corpus-sized rewrite in the engine uses
-    * (compaction here, store maintenance in LlmIngest): sizing from
-    * ACTUAL bytes instead of a fixed count is what keeps a 100 TB
-    * rewrite from funnelling through one task. */
+    * (compaction here, upsert tombstone frames in AtomicPublish):
+    * sizing from ACTUAL bytes instead of a fixed count is what keeps a
+    * 100 TB rewrite from funnelling through one task. */
   def partitionsFor(bytes: Long, targetBytes: Long): Int =
     math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
 
@@ -260,58 +260,9 @@ object Compaction {
     * pre-evolution segment lacked them). Readers never see a partial
     * state (the swap is the store's atomic commit), and a concurrent
     * appender losing or winning the CAS is handled by retrying against
-    * the new current. Returns (txn, partitions) of the commit. */
-  /** Post-commit compaction POLICY, shared by every continuous
-    * appender (doc ingest, vector-index ingest): after `txn` landed,
-    * consolidate any table whose owner-segment list exceeded
-    * `maxOwners` — without a trigger like this, a long-running
-    * per-micro-batch appender accrues one owner dir per trigger and
-    * the union read's plan grows a relation per segment (a
-    * 1000-trigger run = a 1000-branch union). A BASE table also
-    * compacts under TOMBSTONE PRESSURE: a delete-heavy table whose
-    * `<t>__del` chain exceeds `maxOwners` commits gets its
-    * merge-on-read debt applied physically (the replace consumes the
-    * tombstones and empties `<t>__del` in the same atomic commit) even
-    * if no append ever pushes the base chain over the threshold —
-    * otherwise every read pays a growing anti-join forever. Bounded
-    * work: each consolidation rewrites one table's live union once per
-    * ~maxOwners triggers; the superseded chain becomes
-    * vacuum-reclaimable. Failure is non-fatal — the triggering commit
-    * has already landed, and the next trigger retries. */
-  def autoCompact(spark: SparkSession, root: String, txn: String,
-      maxOwners: Int, targetFileBytes: Long): Unit =
-    try {
-      val metas = AtomicPublish.manifestMetaOf(spark, root, txn)
-      metas.foreach { case (table, m) =>
-        val tombOwners =
-          if (table.endsWith("__del")) 0
-          else metas.get(AtomicPublish.deleteTableOf(table))
-            .map(_.owners.size).getOrElse(0)
-        if (tombOwners > maxOwners) {
-          // tombstone pressure: the FULL rewrite is the point — it
-          // applies the merge-on-read debt physically
-          compactStore(spark, root, table, targetFileBytes)
-          ()
-        } else if (m.owners.size > maxOwners) {
-          // append pressure: O(tail) minor compaction first — the
-          // consolidated head is carried by reference. A table with
-          // RECORDED CLUSTERING keeps the full rewrite: re-applying
-          // the declared layout over the whole table IS its
-          // maintenance contract (the ZOrderSpec pin), and a merged
-          // unsorted tail would quietly erode file locality. Fall back
-          // to the full rewrite too when there is no mergeable small
-          // tail (or tombstones block the suffix renumbering).
-          val minorDone = m.clusterCols.isEmpty &&
-            compactTail(spark, root, table, targetFileBytes).isDefined
-          if (!minorDone) {
-            compactStore(spark, root, table, targetFileBytes)
-            ()
-          }
-        }
-      }
-    } catch { case scala.util.control.NonFatal(_) => () }
-
-  /** `clusterBy` turns the rewrite into data CLUSTERING (the
+    * the new current. Returns (txn, partitions) of the commit.
+    *
+    * `clusterBy` turns the rewrite into data CLUSTERING (the
     * `OPTIMIZE … ZORDER`-shaped maintenance move): rows are
     * range-partitioned and sorted by the given columns, so each output
     * file carries a tight disjoint value range — exactly what makes the
@@ -343,10 +294,10 @@ object Compaction {
       val bytes = storeTableBytes(spark, root, table, parent)
       val parts = partitionsFor(bytes, targetBytes)
       // the layout to apply: an explicit clusterBy overrides (and is
-      // RECORDED into the manifest); a bare compactStore — including
-      // every autoCompact — re-applies the table's recorded clustering,
-      // so consolidation never silently destroys file-level locality a
-      // z-order/cluster rewrite bought
+      // RECORDED into the manifest); a bare compactStore re-applies
+      // the table's recorded clustering, so consolidation never
+      // silently destroys file-level locality a z-order/cluster
+      // rewrite bought
       val (ccols, cz) =
         if (clusterBy.nonEmpty) (clusterBy, zOrder)
         else (meta.clusterCols, meta.clusterZOrder)

@@ -85,10 +85,9 @@ import graft.ops.AtomicPublish.TableMeta
   *
   * Maintenance and operations are SQL too: the catalog is a
   * [[org.apache.spark.sql.connector.catalog.ProcedureCatalog]] —
-  * `CALL <cat>.system.compact/vacuum/history/consumers/restore/clone/
-  * detail/add_check/drop_check/matview/drop_matview(...)` run the
-  * store's maintenance, rollback, forking, constraint and
-  * materialized-view operations and return their summary rows
+  * `CALL <cat>.system.compact/vacuum/analyze/history/restore/clone/
+  * set_partition_spec(...)` run the store's maintenance, statistics,
+  * rollback, forking and layout operations and return their summary rows
   * ([[GraftProcedures]]) — a SQL-only session operates the store end
   * to end.
   */
@@ -534,7 +533,7 @@ final class GraftCatalog extends TableCatalog
     * time-travels to the old shape. Refused when the column is the
     * table's pinned delete key (the tombstone companion's schema names
     * it) or is referenced by a CHECK constraint (predicate SQL cannot
-    * be rewritten safely) — drop the constraint first. */
+    * be rewritten safely). */
   private def alterColumnCow(ident: Identifier, colName: String,
       rename: Option[String]): Table = {
     val t = ident.name()
@@ -569,7 +568,7 @@ final class GraftCatalog extends TableCatalog
           }
         require(!refs.exists(_.equalsIgnoreCase(colName)),
           s"column '$colName' is referenced by check constraint '$cn' " +
-            s"($pred) — CALL drop_check first")
+            s"($pred)")
       }
       def mapped(cols: Seq[String]): Seq[String] = rename match {
         case Some(n) => cols.map(c => if (c == colName) n else c)

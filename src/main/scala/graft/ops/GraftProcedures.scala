@@ -10,8 +10,9 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** SQL stored procedures for store MAINTENANCE — the `CALL` face of the
   * operations a lakehouse operator runs on a schedule: compaction
-  * (with optional re-clustering), retention vacuum, commit history and
-  * the streaming-consumer registry. Spark 4's `ProcedureCatalog` +
+  * (with optional re-clustering), retention vacuum, statistics,
+  * commit history, restore, clone and partition-spec evolution.
+  * Spark 4's `ProcedureCatalog` +
   * `CALL <cat>.system.<proc>(...)` machinery (SPARK-44167) invokes
   * these during analysis and surfaces each one's summary row as the
   * statement's result set — so a SQL-only session can not only create,
@@ -33,26 +34,18 @@ import org.apache.spark.unsafe.types.UTF8String
 private[ops] object GraftProcedures {
 
   val names: Seq[String] =
-    Seq("add_check", "analyze", "clone", "compact", "consumers", "detail",
-      "drop_check", "drop_matview", "history", "matview", "restore",
-      "set_partition_spec", "trim_cdf", "vacuum")
+    Seq("analyze", "clone", "compact", "history", "restore",
+      "set_partition_spec", "vacuum")
 
   def load(root: String, name: String): Option[UnboundProcedure] =
     name match {
       case "compact" => Some(new CompactProc(root))
       case "vacuum" => Some(new VacuumProc(root))
       case "history" => Some(new HistoryProc(root))
-      case "consumers" => Some(new ConsumersProc(root))
       case "restore" => Some(new RestoreProc(root))
-      case "add_check" => Some(new SetCheckProc(root, add = true))
-      case "drop_check" => Some(new SetCheckProc(root, add = false))
-      case "detail" => Some(new DetailProc(root))
       case "clone" => Some(new CloneProc(root))
-      case "matview" => Some(new MatViewProc(root))
-      case "drop_matview" => Some(new DropMatViewProc(root))
       case "set_partition_spec" => Some(new SetPartitionSpecProc(root))
       case "analyze" => Some(new AnalyzeProc(root))
-      case "trim_cdf" => Some(new TrimCdfProc(root))
       case _ => None
     }
 
@@ -261,53 +254,6 @@ private[ops] object GraftProcedures {
     }
   }
 
-  /** `CALL system.trim_cdf(table => 't', keep_last => n)` — drop all
-    * but the newest `n` staged change sets from a table's CDF
-    * companion in one metadata-only commit
-    * ([[AtomicPublish.trimCdf]]): the log-retention half of
-    * commit-time CDF — trimmed change segments then age out with
-    * their versions under the ordinary vacuum contract. Returns the
-    * committed version (or the current one on a no-op) and the owner
-    * counts before/after. */
-  private final class TrimCdfProc(root: String)
-    extends GraftProc("trim_cdf") {
-
-    override def description(): String =
-      "trim a table's staged change sets (commit-time CDF) to the " +
-        "newest keep_last, metadata-only"
-
-    override def parameters(): Array[ProcedureParameter] = Array(
-      param("table", StringType),
-      param("keep_last", IntegerType))
-
-    private val out = new StructType()
-      .add("version", StringType, nullable = false)
-      .add("owners_before", IntegerType, nullable = false)
-      .add("owners_after", IntegerType, nullable = false)
-
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val table = input.getUTF8String(0).toString
-      val keepLast = input.getInt(1)
-      val parent = AtomicPublish.currentTxn(spark, root).getOrElse(
-        throw new IllegalStateException(
-          s"no published version under $root"))
-      def ownersAt(at: String): Int =
-        AtomicPublish.manifestMetaOf(spark, root, at)
-          .get(AtomicPublish.cdfTableOf(table)).map(_.owners.size)
-          .getOrElse(0)
-      val before = ownersAt(parent)
-      val txn = AtomicPublish.trimCdf(spark, root, table, keepLast,
-        Some(parent)) match {
-        case Some(t) => t
-        case None if before <= keepLast => parent // already within budget
-        case None => throw new IllegalStateException(
-          s"trim_cdf('$table') lost its commit race — retry the CALL")
-      }
-      result(out, Array(new GenericInternalRow(Array[Any](
-        utf8(txn), before, ownersAt(txn)))))
-    }
-  }
-
   /** `CALL system.analyze(table => 't' [, for_columns => 'a,b'])` —
     * restate a table's column statistics over its live
     * (tombstone-applied) rows without rewriting data: the
@@ -362,119 +308,6 @@ private[ops] object GraftProcedures {
     }
   }
 
-  // --- matview / drop_matview ------------------------------------------------
-
-  /** `'fn:col:as[,fn:col:as…]'` → [[MatView.Agg]]s. */
-  private def parseAggs(s: String): Seq[MatView.Agg] =
-    s.split(",").toSeq.map(_.trim).filter(_.nonEmpty).map { a =>
-      a.split(":") match {
-        case Array(fn, c, as) => MatView.Agg(fn.trim, c.trim, as.trim)
-        case _ => throw new IllegalArgumentException(
-          s"aggs entries must be 'fn:col:as', got '$a'")
-      }
-    }
-
-  private def colList(s: String): Seq[String] =
-    s.split(",").toSeq.map(_.trim).filter(_.nonEmpty)
-
-  /** `CALL <cat>.system.matview(view => 'mv', source => 't',
-    * aggs => 'count:id:n,sum:v:total' [, group_by => 'k1,k2']
-    * [, join_right => 'u', join_on => 'id'])` — create-or-refresh an
-    * INCREMENTALLY MAINTAINED aggregate view ([[MatView.refresh]]):
-    * the first call computes and publishes the view (plus its
-    * mergeable aux state); later calls apply only the commit interval
-    * (append deltas, signed-merge deletes, bounded min/max value
-    * state), falling back to a recompute exactly where incrementality
-    * is impossible. With `join_right`/`join_on` the view aggregates
-    * the inner equi-join source⋈right (Δ(A⋈B) maintenance). The view
-    * is an ordinary table: `SELECT * FROM <cat>.<view>` — so a
-    * SQL-only session now owns the full matview lifecycle. */
-  private final class MatViewProc(root: String) extends GraftProc("matview") {
-
-    override def description(): String =
-      "create-or-refresh an incrementally maintained aggregate view"
-
-    override def parameters(): Array[ProcedureParameter] = Array(
-      param("view", StringType),
-      param("source", StringType),
-      param("aggs", StringType),
-      param("group_by", StringType, "''"),
-      param("join_right", StringType, "''"),
-      param("join_on", StringType, "''"))
-
-    private val out = new StructType()
-      .add("view", StringType, nullable = false)
-      .add("version", StringType, nullable = true)
-      .add("action", StringType, nullable = false)
-
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val view = input.getUTF8String(0).toString
-      val source = input.getUTF8String(1).toString
-      val aggs = parseAggs(input.getUTF8String(2).toString)
-      val keys =
-        if (input.isNullAt(3)) Nil else colList(input.getUTF8String(3).toString)
-      val right =
-        if (input.isNullAt(4)) "" else input.getUTF8String(4).toString.trim
-      val on =
-        if (input.isNullAt(5)) Nil else colList(input.getUTF8String(5).toString)
-      val d: MatView.ViewDef =
-        if (right.isEmpty) MatView.Def(source, view, keys, aggs)
-        else MatView.JoinDef(source, right, on, view, keys, aggs)
-      MatView.refresh(spark, root, d) match {
-        case Some(txn) => result(out, Array(new GenericInternalRow(
-          Array[Any](utf8(view), utf8(txn), utf8("refreshed")))))
-        case None => result(out, Array(new GenericInternalRow(
-          Array[Any](utf8(view), null, utf8("current")))))
-      }
-    }
-  }
-
-  /** `CALL <cat>.system.drop_matview(view => 'mv',
-    * aggs => 'count:id:n,…')` — drop the view AND its aux state
-    * tables (`<view>_aux`, per-aggregate distinct-value and min/max
-    * states) in one metadata commit; `aggs` re-states the definition
-    * so the exact aux names are enumerated instead of pattern-matched
-    * (a prefix scan could catch an unrelated user table). */
-  private final class DropMatViewProc(root: String)
-    extends GraftProc("drop_matview") {
-
-    override def description(): String =
-      "drop a materialized view and its aux state tables"
-
-    override def parameters(): Array[ProcedureParameter] = Array(
-      param("view", StringType),
-      param("aggs", StringType))
-
-    private val out = new StructType()
-      .add("version", StringType, nullable = false)
-      .add("dropped", IntegerType, nullable = false)
-
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val view = input.getUTF8String(0).toString
-      val aggs = parseAggs(input.getUTF8String(1).toString)
-      val d = MatView.Def("ignored_src", view, Nil, aggs)
-      val candidates = Seq(view, d.wmTable, d.auxTable) ++
-        aggs.filter(_.fn == "count_distinct").map(d.dvTable) ++
-        aggs.filter(a => a.fn == "min" || a.fn == "max").map(d.mmTable)
-      val (txn, dropped) =
-        AtomicPublish.retryLostRace(s"drop_matview '$view'") {
-          val parent = AtomicPublish.currentTxn(spark, root).getOrElse(
-            throw new IllegalStateException(
-              s"no published version under $root"))
-          val present = AtomicPublish.manifestMetaOf(spark, root, parent)
-            .keySet
-          val toDrop = candidates.filter(present.contains)
-          require(toDrop.contains(view),
-            s"view '$view' is not published under $root")
-          AtomicPublish.publishDelta(spark, root,
-            append = Map.empty, drop = toDrop, parent = Some(parent))
-            .map(_ -> toDrop.size)
-        }
-      result(out, Array(new GenericInternalRow(
-        Array[Any](utf8(txn), dropped))))
-    }
-  }
-
   // --- clone -----------------------------------------------------------------
 
   /** `CALL <cat>.system.clone(source => 's', target => 't'
@@ -511,162 +344,6 @@ private[ops] object GraftProcedures {
         .get(target).map(_.owners.size).getOrElse(0)
       result(out, Array(new GenericInternalRow(Array[Any](
         utf8(txn), utf8(at.getOrElse(source)), owners))))
-    }
-  }
-
-  // --- detail ----------------------------------------------------------------
-
-  /** `CALL <cat>.system.detail(table => 't')` — one row of operator
-    * observability for a table (the `DESCRIBE DETAIL` analog): live
-    * version, owner-chain length, file/byte footprint (FS listing,
-    * no data read), raw pre-tombstone row count when every owner
-    * carries recorded segment stats (null otherwise), the declared
-    * layout (partition /
-    * bucket / cluster specs), the CHECK constraints, and the pending
-    * merge-on-read tombstone debt (companion owner count — what
-    * `CALL compact` would consume). */
-  private final class DetailProc(root: String) extends GraftProc("detail") {
-
-    override def description(): String =
-      "one-row table summary: version, footprint, layout, constraints, " +
-        "tombstone debt"
-
-    override def parameters(): Array[ProcedureParameter] =
-      Array(param("table", StringType))
-
-    private val out = new StructType()
-      .add("table", StringType, nullable = false)
-      .add("version", StringType, nullable = false)
-      .add("owners", IntegerType, nullable = false)
-      .add("files", IntegerType, nullable = false)
-      .add("bytes", LongType, nullable = false)
-      .add("rows", LongType, nullable = true)
-      .add("partitioned_by", StringType, nullable = false)
-      .add("buckets", StringType, nullable = false)
-      .add("clustered_by", StringType, nullable = false)
-      .add("checks", StringType, nullable = false)
-      .add("tombstone_owners", IntegerType, nullable = false)
-      .add("evolved_owners", IntegerType, nullable = false)
-      .add("column_ndv", StringType, nullable = false)
-      .add("column_hist", StringType, nullable = false)
-
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val table = input.getUTF8String(0).toString
-      val (txn, metas) = AtomicPublish.currentManifestMeta(spark, root)
-        .getOrElse(throw new IllegalStateException(
-          s"no published version under $root"))
-      val m = metas.getOrElse(table, throw new IllegalArgumentException(
-        s"table '$table' is not in version $txn under $root"))
-      var files = 0; var bytes = 0L
-      val conf = spark.sparkContext.hadoopConfiguration
-      m.owners.foreach { o =>
-        val dir = new org.apache.hadoop.fs.Path(root,
-          s"v_$o/${m.dirOf(o, table)}")
-        val fs = dir.getFileSystem(conf)
-        if (fs.exists(dir)) {
-          val it = fs.listFiles(dir, true)
-          while (it.hasNext) {
-            val st = it.next()
-            val nm = st.getPath.getName
-            if (!nm.startsWith("_") && !nm.startsWith(".")) {
-              files += 1; bytes += st.getLen
-            }
-          }
-        }
-      }
-      val rows: Any =
-        if (m.owners.forall(m.segStats.contains))
-          m.owners.map(o => m.segStats(o).rows).sum
-        else null
-      val bucketStr =
-        if (m.numBuckets > 0) s"${m.numBuckets}:${m.bucketCols.mkString(",")}"
-        else ""
-      val clusterStr =
-        if (m.clusterCols.isEmpty) ""
-        else (if (m.clusterZOrder) "zorder:" else "lex:") +
-          m.clusterCols.mkString(",")
-      val checkStr = m.checks.toSeq.sortBy(_._1)
-        .map { case (n, p) => s"$n: $p" }.mkString("; ")
-      val tombOwners = metas.get(AtomicPublish.deleteTableOf(table))
-        .map(_.owners.size).getOrElse(0)
-      // what the PLANNER sees (VERDICT-r11 #8): the merged NDV per
-      // stat column (summed across owners, capped at rows — exactly
-      // the CatalogStatistics derivation) and each column's merged
-      // equi-height histogram rendered as bins + value span. Columns
-      // some owner lacks stats for are shown with '?' — the planner
-      // refuses partial sums the same way.
-      val perOwner = m.owners.map(m.segStats.get)
-      val rowsAll: Option[Long] =
-        if (perOwner.forall(_.isDefined)) Some(rows.asInstanceOf[Long])
-        else None
-      def statStr(render: Seq[AtomicPublish.ColStat] => Option[String])
-          : String =
-        m.statCols.flatMap { c =>
-          val cs = perOwner.map(_.flatMap(_.cols.get(c)))
-          val body =
-            if (cs.exists(_.isEmpty)) Some("?")
-            else render(cs.flatten)
-          body.map(b => s"$c=$b")
-        }.mkString(",")
-      val ndvStr = statStr { cs =>
-        if (cs.exists(_.ndv.isEmpty)) Some("?")
-        else Some(rowsAll.map(r =>
-          math.min(cs.flatMap(_.ndv).sum, r)).getOrElse(
-          cs.flatMap(_.ndv).sum).toString)
-      }
-      val histStr = statStr { cs =>
-        if (cs.exists(_.hist.isEmpty)) None
-        else AtomicPublish.mergeHists(cs.flatMap(_.hist)).map(h =>
-          s"${h.bins.size}bins[${h.bins.head.lo}..${h.bins.last.hi}]" +
-            s"@h=${math.round(h.height)}")
-      }
-      result(out, Array(new GenericInternalRow(Array[Any](
-        utf8(table), utf8(txn), m.owners.size, files, bytes, rows,
-        utf8(m.partitionCols.mkString(",")), utf8(bucketStr),
-        utf8(clusterStr), utf8(checkStr), tombOwners,
-        // owners still laid out under a PREVIOUS partition spec
-        // (partition-spec evolution bookkeeping; 0 = uniform layout)
-        m.ownerParts.size, utf8(ndvStr), utf8(histStr)))))
-    }
-  }
-
-  // --- add_check / drop_check ------------------------------------------------
-
-  /** `CALL <cat>.system.add_check(table => 't', name => 'c',
-    * predicate => 'v > 0')` / `CALL drop_check(table, name)` — evolve a
-    * live table's CHECK constraints ([[AtomicPublish.setCheck]]):
-    * adding VERIFIES the existing data first (one delete-aware scan,
-    * the Delta `ADD CONSTRAINT` contract), dropping is metadata-only;
-    * both are O(1) CAS commits and every later write on every face
-    * enforces the new rule set. */
-  private final class SetCheckProc(root: String, add: Boolean)
-    extends GraftProc(if (add) "add_check" else "drop_check") {
-
-    override def description(): String =
-      if (add) "add a CHECK constraint (verifies existing data first)"
-      else "drop a CHECK constraint"
-
-    override def parameters(): Array[ProcedureParameter] =
-      if (add) Array(param("table", StringType), param("name", StringType),
-        param("predicate", StringType))
-      else Array(param("table", StringType), param("name", StringType))
-
-    private val out = new StructType()
-      .add("version", StringType, nullable = false)
-      .add("n_checks", IntegerType, nullable = false)
-
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val table = input.getUTF8String(0).toString
-      val name = input.getUTF8String(1).toString
-      val pred = if (add) Some(input.getUTF8String(2).toString) else None
-      val txn = AtomicPublish.setCheck(spark, root, table, name, pred)
-        .getOrElse(throw new IllegalStateException(
-          s"constraint change on '$table' lost its commit race — " +
-            "a concurrent writer moved the store; retry the CALL"))
-      val n = AtomicPublish.manifestMetaOf(spark, root, txn)
-        .get(table).map(_.checks.size).getOrElse(0)
-      result(out, Array(new GenericInternalRow(
-        Array[Any](utf8(txn), n))))
     }
   }
 
@@ -740,42 +417,6 @@ private[ops] object GraftProcedures {
             .map(utf8).orNull
           new GenericInternalRow(Array[Any](
             utf8(txn), ts, live.contains(txn), op)): InternalRow
-        }
-      result(out, rows.toArray)
-    }
-  }
-
-  // --- consumers -------------------------------------------------------------
-
-  /** `CALL <cat>.system.consumers()` — the streaming-consumer registry
-    * ([[AtomicPublish.recordConsumer]]): one row per registered CDC
-    * checkpoint with the version its next batch diffs from and how many
-    * commits behind the live pointer it lags (null when its version has
-    * already left history — that stream will resync on restart). The
-    * observability half of consumer-lag-aware vacuum. */
-  private final class ConsumersProc(root: String)
-    extends GraftProc("consumers") {
-
-    override def description(): String =
-      "registered streaming consumers with per-checkpoint lag"
-
-    override def parameters(): Array[ProcedureParameter] = Array.empty
-
-    private val out = new StructType()
-      .add("consumer_id", StringType, nullable = false)
-      .add("next_from_version", StringType, nullable = false)
-      .add("registered_at_ms", LongType, nullable = false)
-      .add("commits_behind", IntegerType, nullable = true)
-
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val versions = AtomicPublish.committedVersions(spark, root).map(_._1)
-      val index = versions.zipWithIndex.toMap
-      val rows = AtomicPublish.registeredConsumers(spark, root)
-        .sortBy(_._1).map { case (id, txn, at) =>
-          val behind: Any = index.get(txn)
-            .map(i => versions.size - 1 - i).orNull
-          new GenericInternalRow(Array[Any](
-            utf8(id), utf8(txn), at, behind)): InternalRow
         }
       result(out, rows.toArray)
     }

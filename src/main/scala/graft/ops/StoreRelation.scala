@@ -10,9 +10,7 @@ import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BaseP
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.execution.streaming.Sink
-import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, RelationProvider, StreamSinkProvider, StreamSourceProvider}
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, RelationProvider, StreamSourceProvider}
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -622,11 +620,10 @@ object GraftFileIndex {
   *
   * `readStream.format("graft")` with the same `root`/`table` options is
   * the store's signed-row change feed
-  * ([[graft.streaming.GraftCdcFeedSource]]); `writeStream` is the
-  * exactly-once sink ([[GraftSink]]). */
+  * ([[graft.streaming.GraftCdcFeedSource]]). */
 final class GraftSource extends RelationProvider
     with CreatableRelationProvider with StreamSourceProvider
-    with StreamSinkProvider with DataSourceRegister {
+    with DataSourceRegister {
 
   import GraftSource._
 
@@ -727,7 +724,7 @@ final class GraftSource extends RelationProvider
     * table's recorded clustering: the written data is sorted
     * (lexicographically or z-order, [[ZOrder]]) before the commit so
     * file-level zone maps are tight from birth, and the recorded spec
-    * makes every later auto-compaction re-apply the same layout —
+    * makes every later bare compaction re-apply the same layout —
     * the writer declares once, maintenance preserves forever. */
   override def createRelation(ctx: SQLContext, mode: SaveMode,
       parameters: Map[String, String], data: DataFrame): BaseRelation = {
@@ -808,25 +805,6 @@ final class GraftSource extends RelationProvider
     }
     schemaOnly(ctx, data.schema)
   }
-
-  /** `df.writeStream.format("graft")` — the streaming SINK face
-    * ([[GraftSink]]): per-microbatch atomic commits with exactly-once
-    * replay protection. Append mode appends each batch; Complete mode
-    * replaces the table with each batch (the streaming-aggregate
-    * shape). */
-  override def createSink(ctx: SQLContext, parameters: Map[String, String],
-      partitionColumns: Seq[String], outputMode: OutputMode): Sink = {
-    val (root, table) = streamParams(parameters)
-    require(outputMode == OutputMode.Append() ||
-      outputMode == OutputMode.Complete(),
-      s"writeStream.format(\"graft\") supports Append and Complete " +
-        s"output modes, not $outputMode")
-    new GraftSink(ctx.sparkSession, root, table,
-      partitionColumns ++ optionCols(parameters, "partitionByCols"),
-      optionCols(parameters, "statsBy"), optionCols(parameters, "bloomBy"),
-      complete = outputMode == OutputMode.Complete(),
-      bucketSpec = bucketOpt(parameters), checks = checksOpt(parameters))
-  }
 }
 
 object GraftSource {
@@ -867,68 +845,5 @@ object GraftSource {
       dfSchema: StructType): BaseRelation = new BaseRelation {
     override def sqlContext: SQLContext = ctx
     override def schema: StructType = dfSchema
-  }
-}
-
-/** The store's streaming sink: one CAS commit per microbatch, carrying
-  * BOTH the batch rows and the sink's replay watermark
-  * (`<table>__sinkwm`, the highest applied batch id) — so at-least-once
-  * microbatch redelivery after a checkpoint restart is filtered
-  * exactly (a replayed `addBatch` sees `batchId <= watermark` in the
-  * SAME snapshot it would commit against and no-ops; the torn state
-  * "rows applied, watermark stale" is unrepresentable). Append mode
-  * appends each batch; Complete mode replaces the table per batch. */
-final class GraftSink(spark: SparkSession, root: String, table: String,
-    partCols: Seq[String], statsCols: Seq[String], bloomCols: Seq[String],
-    complete: Boolean,
-    /** Declared-at-birth layout/invariants for the streamed table:
-      * bucketing and CHECK constraints land with the FIRST commit (or
-      * each Complete-mode replace) and appends inherit — so a
-      * stream-fed table gets the same co-location and enforcement a
-      * batch-born one does. */
-    bucketSpec: Option[(Seq[String], Int)] = None,
-    checks: Map[String, String] = Map.empty) extends Sink {
-  private val wmTable = s"${table}__sinkwm"
-
-  override def addBatch(batchId: Long,
-      data: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row]): Unit = {
-    import spark.implicits._
-    val batch = org.apache.spark.sql.graftstream.StreamingBridge
-      .asBatch(data)
-    def wmDF = Seq(batchId).toDF("batch_id")
-    def layout(of: Seq[String]): Map[String, Seq[String]] =
-      if (of.isEmpty) Map.empty else Map(table -> of)
-    val bucketLay: Map[String, (Seq[String], Int)] =
-      bucketSpec.map(s => Map(table -> s)).getOrElse(Map.empty)
-    val checkLay: Map[String, Map[String, String]] =
-      if (checks.isEmpty) Map.empty else Map(table -> checks)
-    AtomicPublish.retryLostRace(s"streaming sink for '$table'") {
-      AtomicPublish.currentTxn(spark, root) match {
-        case None =>
-          Some(AtomicPublish.publish(spark, root,
-            Map(table -> batch, wmTable -> wmDF),
-            partitionBy = layout(partCols), statsBy = layout(statsCols),
-            bloomBy = layout(bloomCols), bucketBy = bucketLay,
-            checks = checkLay))
-        case Some(parent) =>
-          val manifest = AtomicPublish.manifestOf(spark, root, parent)
-          val applied =
-            if (!manifest.contains(wmTable)) -1L
-            else AtomicPublish.readTableAt(spark, root, wmTable, parent)
-              .head().getLong(0)
-          if (batchId <= applied) Some(parent) // replayed: committed
-          else if (complete || !manifest.contains(table))
-            AtomicPublish.publishDelta(spark, root, append = Map.empty,
-              replace = Map(table -> batch, wmTable -> wmDF),
-              parent = Some(parent), partitionBy = layout(partCols),
-              statsBy = layout(statsCols), bloomBy = layout(bloomCols),
-              bucketBy = bucketLay, checks = checkLay)
-          else
-            AtomicPublish.publishDelta(spark, root,
-              append = Map(table -> batch),
-              replace = Map(wmTable -> wmDF), parent = Some(parent))
-      }
-    }
-    ()
   }
 }

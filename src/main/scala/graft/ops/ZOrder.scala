@@ -49,7 +49,7 @@ object ZOrder {
     * back to lexicographic on degenerate quantile stats — empty input,
     * all-null column). The write faces use this so the DECLARING write
     * already has the locality its recorded spec promises; later
-    * auto-compactions re-apply the same spec from the manifest
+    * compactions re-apply the same spec from the manifest
     * ([[Compaction.compactStore]]). */
   def cluster(df: org.apache.spark.sql.DataFrame, cols: Seq[String],
       zOrder: Boolean): org.apache.spark.sql.DataFrame = {

@@ -3,8 +3,8 @@ package org.apache.spark.sql.graftstream
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.classic
 
-/** Batch↔streaming DataFrame bridges for the store's change-feed
-  * source and streaming sink, plus iteration-safe checkpoints.
+/** The batch→streaming DataFrame bridge for the store's change-feed
+  * source, plus iteration-safe checkpoints.
   * `internalCreateDataFrame` is private[sql], so the bridge lives in
   * this package (the established third-party-source pattern). */
 object StreamingBridge {
@@ -23,18 +23,6 @@ object StreamingBridge {
     val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
     spark.internalCreateDataFrame(df.queryExecution.toRdd, df.schema,
       isStreaming = true)
-  }
-
-  /** The inverse bridge, for the store's streaming SINK: the frame a V1
-    * `Sink.addBatch` receives is backed by the incremental execution
-    * (streaming-tagged leaves), so handing it to a batch writer throws.
-    * Rebinding the executed rows under a fresh batch frame — the
-    * log-backed lakehouse sinks' established move — lets the store's
-    * ordinary publish path consume the microbatch. */
-  def asBatch(data: Dataset[Row]): DataFrame = {
-    val spark = data.sparkSession.asInstanceOf[classic.SparkSession]
-    spark.internalCreateDataFrame(data.queryExecution.toRdd, data.schema,
-      isStreaming = false)
   }
 
   /** Iteration-safe checkpoint: eagerly materialize (localCheckpoint —

@@ -231,32 +231,6 @@ class BucketedStoreSpec extends SparkSuite {
     assert(e3.getMessage.contains("partition column"))
   }
 
-  test("streaming sink declares bucketing and checks at birth; appended " +
-      "microbatches inherit both") {
-    val root = freshRoot()
-    val sink = new GraftSink(spark, root, "docs",
-      Nil, Seq("doc_id"), Nil, complete = false,
-      bucketSpec = Some((Seq("doc_id"), 4)),
-      checks = Map("pos" -> "doc_id >= 0"))
-    sink.addBatch(0L, docs(0 until 100))
-    sink.addBatch(1L, docs(100 until 200))
-    val meta = AtomicPublish.currentManifestMeta(spark, root).get._2("docs")
-    assert(meta.numBuckets == 4 && meta.checks == Map("pos" -> "doc_id >= 0"))
-    assert(allBucketIds(root, "docs").forall(i => i >= 0 && i < 4))
-    // a violating microbatch refuses atomically: nothing lands, the
-    // watermark stays, so the stream surfaces the error instead of
-    // silently skipping
-    val before = AtomicPublish.currentTxn(spark, root)
-    val bad = docs(0 until 5)
-      .withColumn("doc_id", -col("doc_id") - 1)
-    val e = intercept[IllegalArgumentException] {
-      sink.addBatch(2L, bad)
-    }
-    assert(e.getMessage.contains("pos"))
-    assert(AtomicPublish.currentTxn(spark, root) == before)
-    assert(AtomicPublish.readTable(spark, root, "docs").count() == 200)
-  }
-
   test("write face option and SQL DDL both declare bucketing; INSERT " +
       "inherits it") {
     // df.write.format("graft").option("bucketBy", "4:doc_id")

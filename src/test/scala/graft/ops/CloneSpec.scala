@@ -127,7 +127,7 @@ class CloneSpec extends SparkSuite {
     assert(e2.getMessage.contains("nope"))
   }
 
-  test("SQL face: CALL clone + detail over the fork; catalog reads " +
+  test("SQL face: CALL clone; the fork's manifest and catalog reads " +
       "resolve the shared dirs") {
     val root = freshRoot(); stage(root)
     val cat = "clonecat"
@@ -138,9 +138,12 @@ class CloneSpec extends SparkSuite {
     assert(row.getAs[Int]("owners") == 2)
     assert(spark.sql(s"SELECT count(*) AS n FROM $cat.fork")
       .head().getLong(0) == 198) // 200 − 2 deleted
-    val d = spark.sql(s"CALL $cat.system.detail(table => 'fork')").head()
-    assert(d.getAs[Int]("owners") == 2)
-    assert(d.getAs[Long]("rows") == 200L) // raw, pre-tombstone
-    assert(d.getAs[Int]("tombstone_owners") == 1)
+    val metas = AtomicPublish.manifestMetaOf(spark, root,
+      AtomicPublish.currentTxn(spark, root).get)
+    val m = metas("fork")
+    assert(m.owners.size == 2)
+    // raw, pre-tombstone
+    assert(m.owners.map(o => m.segStats(o).rows).sum == 200L)
+    assert(metas(AtomicPublish.deleteTableOf("fork")).owners.size == 1)
   }
 }

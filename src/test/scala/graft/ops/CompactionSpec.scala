@@ -56,35 +56,6 @@ class CompactionSpec extends SparkSuite {
     assert(AtomicPublish.readTable(spark, root, "t").count() == 4)
   }
 
-  test("tombstone pressure alone triggers auto-compaction") {
-    val root = Files.createTempDirectory("graft-tpress").resolve("s").toString
-    AtomicPublish.publish(spark, root,
-      Map("docs" -> (0L until 100L).map(i => i -> s"p$i").toDF("id", "text")))
-    // six delete commits, ZERO appends: the base chain stays at one
-    // owner, so the owner-count trigger alone would never fire — but
-    // every read now pays a six-segment tombstone anti-join
-    (0 until 6).foreach { i =>
-      AtomicPublish.deleteRows(spark, root,
-        Map("docs" -> Seq(i.toLong).toDF("id")))
-    }
-    val txn = AtomicPublish.currentTxn(spark, root).get
-    val metas = AtomicPublish.manifestMetaOf(spark, root, txn)
-    assert(metas("docs").owners.size == 1)
-    assert(metas(AtomicPublish.deleteTableOf("docs")).owners.size == 6)
-    Compaction.autoCompact(spark, root, txn, maxOwners = 5,
-      targetFileBytes = 1L << 30)
-    // the rewrite applied the merge-on-read debt physically and emptied
-    // the tombstone table in the SAME commit
-    val (after, metas2) = AtomicPublish.currentManifestMeta(spark, root).get
-    assert(after != txn, "tombstone pressure should have compacted")
-    assert(metas2("docs").owners.size == 1)
-    assert(AtomicPublish.readTable(spark, root,
-      AtomicPublish.deleteTableOf("docs")).count() == 0)
-    val live = AtomicPublish.readTable(spark, root, "docs")
-    assert(live.count() == 94)
-    assert(live.where("id < 6").count() == 0)
-  }
-
   test("partition count follows on-disk bytes and the target size") {
     val dir = Files.createTempDirectory("graft-compact2").resolve("t").toString
     spark.range(2000).select(col("id"), md5(col("id").cast("string")).as("h"))

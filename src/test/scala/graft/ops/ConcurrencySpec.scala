@@ -151,10 +151,12 @@ class ConcurrencySpec extends SparkSuite {
     val root = freshRoot()
     val p0 = AtomicPublish.publish(spark, root,
       Map("docs" -> Seq((1L, "a")).toDF("id", "v")))
-    // winner adds a CHECK constraint the staged rows were never
-    // guarded against
-    AtomicPublish.setCheck(spark, root, "docs", "pos",
-      Some("id >= 0")).get
+    // winner redefines the table with a CHECK constraint the staged
+    // rows were never guarded against
+    AtomicPublish.publishDelta(spark, root, append = Map.empty,
+      replace = Map("docs" -> Seq((1L, "a")).toDF("id", "v")),
+      parent = Some(p0),
+      checks = Map("docs" -> Map("pos" -> "id >= 0"))).get
     assert(AtomicPublish.publishDelta(spark, root,
       append = Map("docs" -> Seq((2L, "b")).toDF("id", "v")),
       parent = Some(p0), rebase = true).isEmpty)

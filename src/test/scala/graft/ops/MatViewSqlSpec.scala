@@ -159,13 +159,13 @@ class MatViewSqlSpec extends SparkSuite {
       "not algebraic-mergeable")
   }
 
-  test("REFRESH/DROP of a view without a recorded definition names " +
-      "the procedure face") {
+  test("REFRESH of a view without a recorded definition is refused " +
+      "by name") {
     val (root, cat) = stage()
-    // procedure-created view: spec restated per CALL, no def table
-    s2.sql(s"""CALL $cat.system.matview(view => 'proc_mv',
-      |source => 'sales', aggs => 'sum:v:total',
-      |group_by => 'grp')""".stripMargin).collect()
+    // a view built through the Scala API: spec restated per refresh,
+    // no def table
+    MatView.refresh(s2, root, MatView.Def("sales", "proc_mv", Seq("grp"),
+      Seq(MatView.Agg("sum", "v", "total"))))
     assert(!AtomicPublish.currentManifestMeta(s2, root).get._2
       .contains("proc_mv_def"))
     val e = intercept[Exception] {

@@ -178,32 +178,6 @@ class PartitionEvolutionSpec extends SparkSuite {
     }
   }
 
-  test("a STREAM-FED table survives mid-stream evolution: later " +
-      "microbatches inherit the new spec, earlier dirs keep pruning") {
-    val root = freshRoot()
-    val sink = new GraftSink(spark, root, "ev",
-      partCols = Seq("days(ts)"), statsCols = Nil, bloomCols = Nil,
-      complete = false)
-    sink.addBatch(0L, tsDf(0 until 8).repartition(1))
-    assert(AtomicPublish.setPartitionSpec(spark, root, "ev",
-      Seq("months(ts)")).isDefined)
-    // the sink's APPEND path does not re-declare the layout — the
-    // manifest owns it, so the running stream needs no restart
-    sink.addBatch(1L, tsDf(8 until 16).repartition(1))
-    val m = AtomicPublish.currentManifestMeta(spark, root).get._2("ev")
-    assert(m.partitionCols == Seq("months(ts)"))
-    assert(dirNames(root, m.owners.head).forall(_.startsWith("ts__day=")),
-      dirNames(root, m.owners.head))
-    assert(dirNames(root, m.owners.last)
-      .forall(_.startsWith("ts__month=")), dirNames(root, m.owners.last))
-    val all = AtomicPublish.readTable(spark, root, "ev")
-    assert(all.count() == 16)
-    val pruned = all.filter(
-      col("ts") >= lit("1970-01-02 00:00:00").cast("timestamp"))
-    assert(pruned.count() == 12)
-    assert(ScanFiles(pruned) < ScanFiles(all))
-  }
-
   test("refusals: no-op spec, unknown source column, bucketed tables " +
       "freeze identity entries (r10: plain tables may evolve them)") {
     val root = freshRoot()

@@ -241,9 +241,10 @@ class SchemaEvolutionSpec extends SparkSuite {
   test("DROP COLUMN: rewrite without the column; guards refuse the " +
       "delete key, checked columns and layout columns") {
     val root = freshRoot()
-    AtomicPublish.publish(spark, root, Map("docs" -> docs(0 until 50)),
+    AtomicPublish.publish(spark, root, Map("docs" -> docs(0 until 50),
+        "checked" -> docs(0 until 5)),
       statsBy = Map("docs" -> Seq("doc_id")),
-      checks = Map("docs" -> Map("pos" -> "words >= 0")))
+      checks = Map("checked" -> Map("pos" -> "words >= 0")))
     AtomicPublish.deleteRows(spark, root,
       Map("docs" -> Seq(3L).toDF("doc_id")))
     val cat = mount(root)
@@ -254,13 +255,11 @@ class SchemaEvolutionSpec extends SparkSuite {
     def msgs(t: Throwable): String =
       if (t == null) "" else Option(t.getMessage).getOrElse("") + msgs(t.getCause)
     assert(msgs(e1).contains("delete key") || msgs(e1).contains("layout"))
-    // a checked column is anchored until the check drops
+    // a checked column is anchored
     val e2 = intercept[Exception] {
-      spark.sql(s"ALTER TABLE $cat.docs DROP COLUMN words")
+      spark.sql(s"ALTER TABLE $cat.checked DROP COLUMN words")
     }
     assert(msgs(e2).contains("check"))
-    spark.sql(s"CALL $cat.system.drop_check(table => 'docs', " +
-      "name => 'pos')").collect()
     spark.sql(s"ALTER TABLE $cat.docs DROP COLUMN words")
     val meta = AtomicPublish.currentManifestMeta(spark, root).get._2("docs")
     assert(meta.schema.fieldNames.toSeq == Seq("doc_id", "lang"))

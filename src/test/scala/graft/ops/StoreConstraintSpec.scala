@@ -11,11 +11,10 @@ import graft.SparkSuite
   * .checks]]): the TABLE owns its invariants — declared at definition
   * (publish / CREATE TABLE TBLPROPERTIES / NOT NULL columns), inherited
   * by every append and replace, ENFORCED before any commit stages (a
-  * violating slice refuses atomically, SQL semantics: NULL passes),
-  * and evolved on a live table via `setCheck` / `CALL add_check`,
-  * which verifies existing data first. The engine-side generalization
-  * of the reference's request validation (services/validation.py):
-  * no write face can bypass the rules. */
+  * violating slice refuses atomically, SQL semantics: NULL passes) and
+  * changed only by a replace that redeclares them. The engine-side
+  * generalization of the reference's request validation
+  * (services/validation.py): no write face can bypass the rules. */
 class StoreConstraintSpec extends SparkSuite {
   import spark.implicits._
 
@@ -139,32 +138,6 @@ class StoreConstraintSpec extends SparkSuite {
       .checks == rules)
   }
 
-  test("setCheck: adding verifies EXISTING data (refuses when violated); " +
-      "a clean add enforces later writes; drop re-allows") {
-    val root = freshRoot()
-    AtomicPublish.publish(spark, root, Map("docs" -> docs(0 until 20)))
-    // the live table has words up to 190 → words < 100 is violated
-    val e = intercept[IllegalArgumentException] {
-      AtomicPublish.setCheck(spark, root, "docs", "small",
-        Some("words < 100"))
-    }
-    assert(e.getMessage.contains(AtomicPublish.CheckViolation))
-    // a rule the data satisfies commits, and bites on the NEXT write
-    assert(AtomicPublish.setCheck(spark, root, "docs", "bounded",
-      Some("words < 1000")).isDefined)
-    intercept[IllegalArgumentException] {
-      AtomicPublish.publishDelta(spark, root,
-        append = Map("docs" -> docs(200 until 202)), // words 2000, 2010
-        parent = AtomicPublish.currentTxn(spark, root))
-    }
-    assert(AtomicPublish.setCheck(spark, root, "docs", "bounded",
-      None).isDefined)
-    AtomicPublish.publishDelta(spark, root,
-      append = Map("docs" -> docs(200 until 202)),
-      parent = AtomicPublish.currentTxn(spark, root))
-    assert(AtomicPublish.readTable(spark, root, "docs").count() == 22)
-  }
-
   test("a NOT NULL column whose name carries manifest-unsafe characters " +
       "still derives a safe check name (sanitized + hash-disambiguated)") {
     val root = freshRoot()
@@ -190,7 +163,7 @@ class StoreConstraintSpec extends SparkSuite {
   }
 
   test("SQL face: NOT NULL columns + TBLPROPERTIES checks on CREATE; " +
-      "INSERT refused by name; CALL add_check/drop_check") {
+      "INSERT refused by name") {
     val root = freshRoot()
     val cat = "constraintcat"
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
@@ -223,17 +196,5 @@ class StoreConstraintSpec extends SparkSuite {
     assert(props.get("check.word_bound")
       .contains("words BETWEEN 0 AND 10000"))
     assert(props.get("check.nn_doc_id").contains("`doc_id` IS NOT NULL"))
-    // live evolution through CALL
-    spark.sql(s"CALL $cat.system.add_check(table => 'docs', " +
-      "name => 'id_cap', predicate => 'doc_id < 100')").collect()
-    val e3 = intercept[Exception] {
-      spark.sql(s"INSERT INTO $cat.docs VALUES (500, 'en', 10)")
-    }
-    assert(names(e3).contains("id_cap"))
-    spark.sql(s"CALL $cat.system.drop_check(table => 'docs', " +
-      "name => 'id_cap')").collect()
-    spark.sql(s"INSERT INTO $cat.docs VALUES (500, 'en', 10)")
-    assert(spark.sql(s"SELECT count(*) FROM $cat.docs")
-      .head().getLong(0) == 3)
   }
 }

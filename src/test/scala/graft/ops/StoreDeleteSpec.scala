@@ -460,61 +460,4 @@ class StoreDeleteSpec extends SparkSuite {
       plan.contains("BroadcastExchange"), plan.take(2000))
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(2000))
   }
-
-  test("takedown after maintenance: dead signatures cannot kill resubmission") {
-    import graft.streaming.LlmIngest
-    val root = Files.createTempDirectory("takedown-sig").resolve("s").toString
-    def mk(n: Int, tag: String) =
-      "the a and of to in is " + (1 to (n - 7)).map(i => s"$tag$i")
-        .mkString(" ")
-    LlmIngest.ingestBatch(spark, root,
-      (1L to 6L).map(i => i -> mk(40, s"td$i")).toDF("doc_id", "text"),
-      "ts_b0")
-    // maintenance publishes doc 2's shingle/n-gram signatures
-    LlmIngest.maintainIncremental(spark, root)
-    val t = LlmIngest.takedown(spark, root, Seq(2L))
-    // the derived tables are tombstoned with the doc
-    val m = AtomicPublish.manifestOf(spark, root, t)
-    Seq(LlmIngest.SigsTable, LlmIngest.NgramsTable, LlmIngest.JudgedTable)
-      .foreach(tb => assert(m.contains(AtomicPublish.deleteTableOf(tb)), tb))
-    assert(AtomicPublish.readTable(spark, root, LlmIngest.SigsTable)
-      .where("doc_id = 2").count() == 0)
-    // resubmit the identical text under a new id: admitted by the
-    // barrier (fingerprint forgotten) AND it must SURVIVE maintenance —
-    // a dead doc's signature may not kill it as a near-dup of nothing
-    assert(LlmIngest.ingestBatch(spark, root,
-      Seq(101L -> mk(40, "td2")).toDF("doc_id", "text"), "ts_b1") == 1)
-    LlmIngest.maintainIncremental(spark, root)
-    assert(LlmIngest.liveDocs(spark, root)
-      .where("doc_id = 101").count() == 1,
-      "resubmitted doc was killed by a taken-down doc's signature")
-  }
-
-  test("llm takedown: one commit, reads forget, re-ingest re-admits") {
-    import graft.streaming.LlmIngest
-    val root = Files.createTempDirectory("takedown").resolve("s").toString
-    // stopword prefix keeps the docs above the ingest quality gate
-    def mk(n: Int, tag: String) =
-      "the a and of to in is " + (1 to (n - 7)).map(i => s"$tag$i")
-        .mkString(" ")
-    LlmIngest.ingestBatch(spark, root,
-      (1L to 6L).map(i => i -> mk(30, s"doc$i")).toDF("doc_id", "text"),
-      "b0")
-    assert(LlmIngest.liveDocs(spark, root).count() == 6)
-    val t = LlmIngest.takedown(spark, root, Seq(2L, 5L))
-    // one atomic commit tombstones docs, chunks and the dedup barrier
-    val m = AtomicPublish.manifestOf(spark, root, t)
-    Seq("docs", "chunks", "kept_docs").foreach { tb =>
-      assert(m(AtomicPublish.deleteTableOf(tb)).nonEmpty, tb)
-    }
-    assert(LlmIngest.liveDocs(spark, root).count() == 4)
-    assert(LlmIngest.liveChunks(spark, root)
-      .filter(col("doc_id").isin(2L, 5L)).count() == 0)
-    // the fingerprint is forgotten: resubmitting doc 2's exact text is
-    // admitted as a fresh document, not suppressed by the barrier
-    val n = LlmIngest.ingestBatch(spark, root,
-      Seq(100L -> mk(30, "doc2")).toDF("doc_id", "text"), "b1")
-    assert(n == 1, "resubmitted takedown text must be re-admitted")
-    assert(LlmIngest.liveDocs(spark, root).count() == 5)
-  }
 }

@@ -320,34 +320,6 @@ class StoreLayoutSpec extends SparkSuite {
     assert(ScanFiles(both) <= 4)
   }
 
-  test("streaming sink into a days(ts)-partitioned table: microbatches " +
-      "inherit the transform layout and raw-predicate pruning works") {
-    val root = freshRoot()
-    val sink = new GraftSink(spark, root, "ev",
-      partCols = Seq("days(ts)"), statsCols = Nil, bloomCols = Nil,
-      complete = false)
-    // 3 microbatches of 8 rows each, 4 rows per UTC day
-    for (b <- 0 until 3)
-      sink.addBatch(b.toLong, tsDf(b * 8 until (b + 1) * 8).repartition(1))
-    assert(AtomicPublish.readTable(spark, root, "ev").count() == 24)
-    val meta = AtomicPublish.currentManifestMeta(spark, root).get._2("ev")
-    assert(meta.partitionCols == Seq("days(ts)"))
-    // every owner segment laid out by day dirs
-    meta.owners.foreach { o =>
-      val seg = new java.io.File(s"$root/v_$o/ev")
-      assert(seg.listFiles().exists(_.getName.startsWith("ts__day=")),
-        s"owner $o not day-partitioned: ${seg.listFiles().toSeq}")
-    }
-    // raw-predicate pruning across the stream-fed owner chain: days
-    // 3..5 of 0..5 — half the rows, half the day dirs
-    val pruned = AtomicPublish.readTable(spark, root, "ev")
-      .filter(col("ts") >= lit("1970-01-04 00:00:00").cast("timestamp"))
-    assert(pruned.count() == 12)
-    assert(ScanFiles(pruned) < ScanFiles(
-      AtomicPublish.readTable(spark, root, "ev")),
-      "stream-fed transform table is not pruning")
-  }
-
   test("partitioned append: layout inherited, union prunes across owners") {
     val root = freshRoot()
     val v1 = AtomicPublish.publish(spark, root,

@@ -8,10 +8,11 @@ import graft.SparkSuite
 
 /** SQL maintenance procedures ([[GraftProcedures]] via
   * [[GraftCatalog]]'s `ProcedureCatalog` face): `CALL
-  * <cat>.system.compact/vacuum/history/consumers(...)` must run the
-  * SAME maintenance operations the Scala API exposes and return their
-  * summary rows as the statement result — so a SQL-only session can
-  * operate the store end to end (create → insert → maintain). */
+  * <cat>.system.<proc>(...)` (compact, vacuum, history, restore, …)
+  * must run the SAME maintenance operations the Scala API exposes and
+  * return their summary rows as the statement result — so a SQL-only
+  * session can operate the store end to end (create → insert →
+  * maintain). */
 class StoreProcedureSpec extends SparkSuite {
   import spark.implicits._
 
@@ -161,22 +162,6 @@ class StoreProcedureSpec extends SparkSuite {
       .head().getLong(0) == 300)
   }
 
-  test("CALL consumers shows registered checkpoints with lag") {
-    val root = freshRoot(); stage(root)
-    val cat = mount(root)
-    val versions = AtomicPublish.committedVersions(spark, root).map(_._1)
-    AtomicPublish.recordConsumer(spark, root, "ckpt-a", versions.head)
-    AtomicPublish.recordConsumer(spark, root, "ckpt-b", versions.last)
-    AtomicPublish.recordConsumer(spark, root, "ckpt-gone", "v_not_there")
-    val rows = spark.sql(s"CALL $cat.system.consumers()").collect()
-      .map(r => r.getAs[String]("consumer_id") ->
-        Option(r.getAs[Integer]("commits_behind"))).toMap
-    assert(rows.keySet == Set("ckpt-a", "ckpt-b", "ckpt-gone"))
-    assert(rows("ckpt-a").map(_.intValue).contains(versions.size - 1))
-    assert(rows("ckpt-b").map(_.intValue).contains(0))
-    assert(rows("ckpt-gone").isEmpty) // vacuumed away → resync on restart
-  }
-
   test("CALL restore rolls a table back as a new commit; history " +
       "stays time-travelable both ways") {
     val root = freshRoot(); stage(root)
@@ -272,85 +257,6 @@ class StoreProcedureSpec extends SparkSuite {
     assert(got == want)
   }
 
-  test("CALL detail: one-row summary — footprint, layout, checks, " +
-      "tombstone debt") {
-    import spark.implicits._
-    val root = freshRoot()
-    AtomicPublish.publish(spark, root,
-      Map("docs" -> docs(0 until 200, "en")),
-      statsBy = Map("docs" -> Seq("doc_id")),
-      bucketBy = Map("docs" -> (Seq("doc_id"), 4)),
-      checks = Map("docs" -> Map("pos_id" -> "doc_id >= 0")))
-    AtomicPublish.publishDelta(spark, root,
-      append = Map("docs" -> docs(200 until 300, "de")),
-      parent = AtomicPublish.currentTxn(spark, root))
-    AtomicPublish.deleteRows(spark, root,
-      Map("docs" -> Seq(7L).toDF("doc_id")))
-    val cat = mount(root)
-    val row = spark.sql(s"CALL $cat.system.detail(table => 'docs')").head()
-    assert(row.getAs[String]("table") == "docs")
-    assert(row.getAs[Int]("owners") == 2)
-    assert(row.getAs[Int]("files") > 0 && row.getAs[Long]("bytes") > 0)
-    assert(row.getAs[Long]("rows") == 300L) // raw, pre-tombstone
-    assert(row.getAs[String]("buckets") == "4:doc_id")
-    assert(row.getAs[String]("checks") == "pos_id: doc_id >= 0")
-    assert(row.getAs[Int]("tombstone_owners") == 1)
-    // what the planner sees (VERDICT-r11 #8): the merged NDV and the
-    // merged equi-height histogram per stat column, right in DETAIL
-    val ndvStr = row.getAs[String]("column_ndv")
-    assert(ndvStr.startsWith("doc_id="), ndvStr)
-    val ndv = ndvStr.stripPrefix("doc_id=").toLong
-    assert(ndv >= 250 && ndv <= 300, s"merged ndv $ndvStr vs 300 ids")
-    val histStr = row.getAs[String]("column_hist")
-    assert(histStr.startsWith(
-      s"doc_id=${AtomicPublish.HistogramBins}bins["), histStr)
-    // the merged span covers both owners' id ranges (0..299)
-    assert(histStr.contains("[0.0..299.0]"), histStr)
-    val e = intercept[Exception] {
-      spark.sql(s"CALL $cat.system.detail(table => 'nope')").collect()
-    }
-    assert(e.getMessage.contains("nope") ||
-      Option(e.getCause).exists(_.getMessage.contains("nope")))
-  }
-
-  test("CALL matview: SQL-only incremental view lifecycle — create, " +
-      "refresh-on-commit, query, drop with aux state") {
-    import spark.implicits._
-    val root = freshRoot()
-    AtomicPublish.publish(spark, root,
-      Map("docs" -> docs(0 until 100, "en")))
-    val cat = mount(root)
-    def call(): (Option[String], String) = {
-      val r = spark.sql(s"CALL $cat.system.matview(view => 'mv_lang', " +
-        "source => 'docs', aggs => 'count:doc_id:n,min:doc_id:lo', " +
-        "group_by => 'lang')").head()
-      (Option(r.getString(1)), r.getString(2))
-    }
-    // first call: full compute + publish
-    val (v1, a1) = call()
-    assert(v1.isDefined && a1 == "refreshed")
-    assert(spark.sql(s"SELECT n FROM $cat.mv_lang WHERE lang = 'en'")
-      .head().getLong(0) == 100)
-    // no commits since → current, no-op
-    assert(call() == ((None, "current")))
-    // a commit lands → the next call refreshes INCREMENTALLY and the
-    // view tracks (min state included)
-    spark.sql(s"INSERT INTO $cat.docs VALUES (-5, 'en', 'neg')")
-    val (v2, a2) = call()
-    assert(v2.isDefined && a2 == "refreshed")
-    val row = spark.sql(
-      s"SELECT n, lo FROM $cat.mv_lang WHERE lang = 'en'").head()
-    assert(row.getLong(0) == 101 && row.getLong(1) == -5L)
-    // drop removes the view AND its aux state tables
-    val dropped = spark.sql(s"CALL $cat.system.drop_matview(" +
-      "view => 'mv_lang', aggs => 'count:doc_id:n,min:doc_id:lo')")
-      .head().getAs[Int]("dropped")
-    assert(dropped >= 2) // view + aux (+ min/max value state)
-    val names = AtomicPublish.currentManifestMeta(spark, root).get._2.keySet
-    assert(!names.exists(_.startsWith("mv_lang")),
-      s"matview tables survived the drop: $names")
-  }
-
   test("CALL history carries OPERATION labels: every commit names " +
       "what it did (DESCRIBE HISTORY-grade observability)") {
     val root = freshRoot()
@@ -375,12 +281,42 @@ class StoreProcedureSpec extends SparkSuite {
     val listed = spark.sql(s"SHOW PROCEDURES IN $cat.system").collect()
       .map(_.getAs[String]("procedure_name")).toSet
     assert(listed == Set("analyze", "compact", "vacuum", "history",
-      "consumers", "restore", "add_check", "drop_check", "detail",
-      "clone", "matview", "drop_matview", "set_partition_spec",
-      "trim_cdf"))
+      "restore", "clone", "set_partition_spec"))
     val err = intercept[Exception] {
       spark.sql(s"CALL $cat.system.rewrite_everything()").collect()
     }
     assert(err.getMessage.contains("rewrite_everything"))
+  }
+
+  test("the surface is seven maintenance procedures and a change feed: " +
+      "removed CALLs are refused, writeStream has no graft sink") {
+    assert(GraftProcedures.names == Seq("analyze", "clone", "compact",
+      "history", "restore", "set_partition_spec", "vacuum"))
+    val root = freshRoot(); stage(root)
+    val cat = mount(root)
+    def msgs(t: Throwable): String =
+      if (t == null) "" else s"${t.getMessage} | ${msgs(t.getCause)}"
+    Seq("trim_cdf(table => 'docs', keep_last => 1)",
+        "detail(table => 'docs')").foreach { call =>
+      val e = intercept[Exception] {
+        spark.sql(s"CALL $cat.system.$call").collect()
+      }
+      assert(msgs(e).contains("is not defined on graft catalog"), msgs(e))
+    }
+    // the store's change feed still resolves as a stream source …
+    val feed = spark.readStream.format("graft")
+      .option("root", root).option("table", "docs").load()
+    assert(feed.isStreaming)
+    assert(feed.columns.toSeq.take(3) == Seq("doc_id", "lang", "text"))
+    // … but nothing streams INTO the store through the format
+    val ckpt = Files.createTempDirectory("storeproc-ck").toString
+    val e = intercept[Exception] {
+      feed.writeStream.format("graft")
+        .option("root", root).option("table", "copy")
+        .option("checkpointLocation", ckpt).start()
+    }
+    assert(msgs(e).contains("does not support streamed writing"), msgs(e))
+    assert(!AtomicPublish.manifestMetaOf(spark, root,
+      AtomicPublish.currentTxn(spark, root).get).contains("copy"))
   }
 }

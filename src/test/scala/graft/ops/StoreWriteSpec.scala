@@ -3,16 +3,12 @@ package graft.ops
 import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSuite
 
-/** The store's WRITE faces: `df.write.format("graft")` (atomic
+/** The store's WRITE face: `df.write.format("graft")` (atomic
   * CAS-committed save modes, layout options, recorded-schema
-  * validation) and `df.writeStream.format("graft")` (per-microbatch
-  * commits with exactly-once replay protection via the sink
-  * watermark). */
+  * validation). */
 class StoreWriteSpec extends SparkSuite {
   import spark.implicits._
 
@@ -82,78 +78,9 @@ class StoreWriteSpec extends SparkSuite {
       (0L until 30L).toSet)
   }
 
-  test("streaming sink: per-batch commits, restart adds no duplicates") {
-    val root = freshRoot()
-    val ckpt = Files.createTempDirectory("storewrite-ck").toString
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ms = MemoryStream[(Long, String)]
-    def run(): Unit = {
-      val q = ms.toDS().toDF("doc_id", "lang")
-        .writeStream.format("graft")
-        .option("root", root).option("table", "docs")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    ms.addData((0L, "en"), (1L, "en"))
-    run()
-    assert(readIds(root) == Set(0L, 1L))
-    // two more batches while down, restart on the same checkpoint
-    ms.addData((2L, "de"))
-    ms.addData((3L, "de"), (4L, "de"))
-    run()
-    assert(readIds(root) == (0L until 5L).toSet)
-    // the sink watermark rode every commit
-    assert(AtomicPublish.readTable(spark, root, "docs__sinkwm")
-      .head().getLong(0) >= 1L)
-  }
-
-  test("a replayed microbatch commits nothing (exactly-once)") {
-    val root = freshRoot()
-    val sink = new GraftSink(spark, root, "docs", Nil, Nil, Nil,
-      complete = false)
-    sink.addBatch(0L, docs(0 until 5, "en"))
-    val after0 = AtomicPublish.currentTxn(spark, root).get
-    // at-least-once redelivery of batch 0, then of a stale batch id
-    sink.addBatch(0L, docs(0 until 5, "en"))
-    assert(AtomicPublish.currentTxn(spark, root).get == after0)
-    sink.addBatch(1L, docs(5 until 8, "en"))
-    sink.addBatch(0L, docs(0 until 5, "en"))
-    assert(readIds(root) == (0L until 8L).toSet)
-  }
-
-  test("complete-mode sink replaces the table with each batch") {
-    val root = freshRoot()
-    val ckpt = Files.createTempDirectory("storewrite-ck2").toString
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ms = MemoryStream[(Long, String)]
-    def run(): Unit = {
-      val q = ms.toDS().toDF("doc_id", "lang")
-        .groupBy("lang").count()
-        .writeStream.format("graft")
-        .option("root", root).option("table", "lang_counts")
-        .option("checkpointLocation", ckpt)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    ms.addData((0L, "en"), (1L, "en"), (2L, "de"))
-    run()
-    val first = AtomicPublish.readTable(spark, root, "lang_counts")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(first == Map("en" -> 2L, "de" -> 1L))
-    ms.addData((3L, "en"))
-    run()
-    val second = AtomicPublish.readTable(spark, root, "lang_counts")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(second == Map("en" -> 3L, "de" -> 1L))
-  }
-
   test("write face declares clustering: the declaring write has the " +
-      "locality, the manifest records it, auto-compaction re-applies " +
-      "it") {
+      "locality, the manifest records it, a bare compaction " +
+      "re-applies it") {
     import org.apache.spark.sql.functions.col
     val root = freshRoot()
     val grid = spark.range(60L * 60L)
@@ -193,23 +120,22 @@ class StoreWriteSpec extends SparkSuite {
         .option("clusterBy", "x,y").option("zOrder", "true")
         .mode(SaveMode.Append).save()
     }
-    // bare auto-compaction re-applies the RECORDED spec (the
-    // ZOrderSpec contrast pin, reached from the write face)
+    // a bare compaction re-applies the RECORDED spec (the ZOrderSpec
+    // contrast pin, reached from the write face)
     val bytes = Compaction.storeTableBytes(spark, root, "t",
       AtomicPublish.currentTxn(spark, root).get)
-    Compaction.autoCompact(spark, root,
-      AtomicPublish.currentTxn(spark, root).get, maxOwners = 1,
-      targetFileBytes = math.max(bytes / 8, 1L))
+    Compaction.compactStore(spark, root, "t",
+      targetBytes = math.max(bytes / 8, 1L))
     val after = AtomicPublish.currentManifestMeta(spark, root).get._2("t")
     assert(after.owners.size == 1)
     assert(after.clusterCols == Seq("x", "y") && after.clusterZOrder,
-      "write-face-declared clustering lost across auto-compaction")
+      "write-face-declared clustering lost across compaction")
     // BOTH dimensions must still prune after the re-applied rewrite.
     // The tight locality margin lives in ZOrderSpec (fresh-session
     // geometry); here the margin is loose on purpose: the range
     // sampler inside the cluster rewrite seeds off RDD ids, so exact
     // file boundaries shift with suite order — this pin is about the
-    // SPEC surviving the write-face → auto-compaction path, not about
+    // SPEC surviving the write-face → compaction path, not about
     // re-proving the curve's constants.
     val totalAfter = after.fileStats(after.owners.head).size
     pinned("x"); pinned("y")

@@ -180,25 +180,4 @@ class TailCompactionSpec extends SparkSuite {
     }
     assert(AtomicPublish.readTable(spark, root, "docs").count() == 5200)
   }
-
-  test("repeated small appends: auto-compaction now runs the minor " +
-      "path — the first segment is never rewritten") {
-    val root = freshRoot()
-    AtomicPublish.publish(spark, root, Map("docs" -> docs(0 until 5000)))
-    val head = owners(root).head
-    val headBefore = segFiles(root, head)
-    (0 until 12).foreach { k =>
-      AtomicPublish.publishDelta(spark, root,
-        append = Map("docs" -> docs(5000 + k * 10 until 5010 + k * 10)),
-        parent = AtomicPublish.currentTxn(spark, root))
-      Compaction.autoCompact(spark, root,
-        AtomicPublish.currentTxn(spark, root).get,
-        maxOwners = 4, targetFileBytes = 10 * 1024)
-    }
-    assert(owners(root).size <= 5)
-    assert(owners(root).head == head)
-    assert(segFiles(root, head) == headBefore,
-      "auto-compaction rewrote the consolidated head")
-    assert(AtomicPublish.readTable(spark, root, "docs").count() == 5120)
-  }
 }

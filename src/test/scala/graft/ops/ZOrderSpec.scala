@@ -88,7 +88,7 @@ class ZOrderSpec extends SparkSuite {
     }
   }
 
-  test("recorded clustering survives auto-compaction") {
+  test("recorded clustering survives a bare compaction") {
     val root = Files.createTempDirectory("zkeep").resolve("t").toString
     val grid: DataFrame = spark.range(80L * 80L)
       .select((col("id") % 80).as("x"), (col("id") / 80).cast("long").as("y"),
@@ -114,13 +114,12 @@ class ZOrderSpec extends SparkSuite {
         Seq((i.toLong, 100L + i, 0L)).toDF("x", "y", "v")),
         parent = AtomicPublish.currentTxn(spark, root))
     }
-    // bare auto-compaction (no clustering args anywhere) must re-apply
+    // a bare compaction (no clustering args anywhere) must re-apply
     // the RECORDED z-order, not consolidate into an unclustered blob
     val txn = AtomicPublish.currentTxn(spark, root).get
-    Compaction.autoCompact(spark, root, txn, maxOwners = 8,
-      targetFileBytes = target)
+    Compaction.compactStore(spark, root, "t", targetBytes = target)
     val after = AtomicPublish.currentManifestMeta(spark, root).get
-    assert(after._1 != txn, "auto-compaction should have fired")
+    assert(after._1 != txn, "compaction should have committed")
     assert(after._2("t").owners.size == 1)
     assert(after._2("t").clusterCols == Seq("x", "y") &&
       after._2("t").clusterZOrder, "recorded clustering lost")

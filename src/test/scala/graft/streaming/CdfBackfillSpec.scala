@@ -212,65 +212,6 @@ class CdfBackfillSpec extends SparkSuite {
     assert(mirror.toMap == mirrorOf(root))
   }
 
-  test("CDF retention: trim_cdf drops aged change sets metadata-only; " +
-      "historical diffs still serve through the interval's own " +
-      "manifests and the trim commit itself streams through") {
-    val root = freshRoot()
-    AtomicPublish.publish(spark, root,
-      Map("docs" -> slice(0 until 8, 1L, "en")),
-      statsBy = Map("docs" -> Seq("day")))
-    val since = AtomicPublish.currentTxn(spark, root).get
-    // three backfills → three staged change sets on the companion
-    (1 to 3).foreach { k =>
-      AtomicPublish.overwriteWhere(spark, root, "docs",
-        slice(100 * k until 100 * k + 4, 1L, s"g$k"), "day = 1")
-    }
-    val cdfT = AtomicPublish.cdfTableOf("docs")
-    def cdfOwners(): Int = AtomicPublish.currentManifestMeta(spark, root)
-      .get._2.get(cdfT).map(_.owners.size).getOrElse(0)
-    assert(cdfOwners() == 3)
-    val docOwners = AtomicPublish.currentManifestMeta(spark, root)
-      .get._2("docs").owners
-    val trimTxn = AtomicPublish.trimCdf(spark, root, "docs", 1)
-      .getOrElse(fail("trim lost an uncontended CAS"))
-    assert(cdfOwners() == 1)
-    // metadata-only: the data table's owners are untouched
-    assert(AtomicPublish.manifestMetaOf(spark, root, trimTxn)("docs")
-      .owners == docOwners)
-    // a lagging diff SPANNING the trimmed rewrites still serves: the
-    // staged segments resolve through the interval's own manifests
-    // (which vacuum keeps while versions are within retention). The
-    // concatenated multi-rewrite diff is SIGNED-exact — a row staged
-    // by backfill k and removed by backfill k+1 appears on both sides
-    // — so the end-state identity is the multiset equation
-    // snapshot(since) ⊎ ins ∖ del == live
-    val (ins, del) = AtomicPublish.changesWithDeletes(spark, root,
-      "docs", since).getOrElse(fail("diff across trimmed CDF refused"))
-    val cols = Seq("doc_id", "day", "lang", "words")
-      .map(org.apache.spark.sql.functions.col)
-    val rebuilt = AtomicPublish.readTableAt(spark, root, "docs", since)
-      .select(cols: _*)
-      .unionAll(ins.select(cols: _*))
-      .exceptAll(del.select(cols: _*))
-      .collect().map(_.toString).sorted.toSeq
-    val live = AtomicPublish.readTable(spark, root, "docs")
-      .select(cols: _*).collect().map(_.toString).sorted.toSeq
-    assert(rebuilt == live,
-      "signed rebuild across the trimmed interval diverged from live")
-    // idempotent / within budget → no-op, nothing committed
-    assert(AtomicPublish.trimCdf(spark, root, "docs", 1).isEmpty)
-    // the SQL face; and one more backfill appends to the trimmed chain
-    val s2 = CdfBackfillSpec.extSession(spark)
-    val cat = CdfBackfillSpec.mount(s2, root)
-    AtomicPublish.overwriteWhere(spark, root, "docs",
-      slice(400 until 404, 1L, "g4"), "day = 1")
-    val r = s2.sql(
-      s"CALL $cat.system.trim_cdf(table => 'docs', keep_last => 1)")
-      .head()
-    assert(r.getInt(1) == 2 && r.getInt(2) == 1,
-      s"trim_cdf owners before/after: $r")
-  }
-
   test("restore: stage_cdf => true streams the rollback's row diff; " +
       "the default O(1) metadata restore keeps the resync contract") {
     val root = freshRoot()
@@ -304,40 +245,6 @@ class CdfBackfillSpec extends SparkSuite {
       .getOrElse(fail("default restore lost an uncontended CAS"))
     assert(AtomicPublish.changesWithDeletes(spark, root, "docs", since2)
       .isEmpty, "an unstaged restore must keep the resync contract")
-  }
-
-  test("trim_cdf under a lagging CDC consumer: a staged change set " +
-      "the live manifest no longer references still streams exactly " +
-      "— it resolves through the rewrite's own version") {
-    val root = freshRoot()
-    AtomicPublish.publish(spark, root,
-      Map("docs" -> slice(0 until 8, 1L, "en")),
-      statsBy = Map("docs" -> Seq("day")))
-    val ck = Files.createTempDirectory("cdftrim-ck").toString
-    val mirror = mutable.Map.empty[Long, (Long, String, Long)]
-    drainCdc(root, ck, mirror) // snapshot
-    assert(mirror.size == 8)
-    // a multi-file staged backfill lands while the consumer lags...
-    AtomicPublish.publishDelta(spark, root,
-      append = Map.empty,
-      replace = Map("docs" -> slice(100 until 106, 1L, "de")),
-      parent = AtomicPublish.currentTxn(spark, root),
-      cdf = Map("docs" -> (
-        slice(100 until 106, 1L, "de").repartition(3),
-        slice(0 until 8, 1L, "en").repartition(3)))).get
-    // ...then the LIVE manifest trims the companion away
-    AtomicPublish.trimCdf(spark, root, "docs", 0)
-      .getOrElse(fail("trim lost an uncontended CAS"))
-    assert(AtomicPublish.currentManifestMeta(spark, root).get._2
-      .get(AtomicPublish.cdfTableOf("docs")).forall(_.owners.isEmpty))
-    // the lagging consumer's next batch is still exact: the staged set
-    // resolves through v_<rewriteTxn>'s own manifest, which trim does
-    // not touch
-    val batches = drainCdc(root, ck, mirror)
-    assert(batches == Seq((0L until 8L).map("delete" -> _).toSet ++
-      (100L until 106L).map("insert" -> _)), batches)
-    assert(mirror.toMap == mirrorOf(root),
-      "mirror diverged when trim_cdf ran under a lagging consumer")
   }
 
   test("'_change_type' is a RESERVED column for CDF staging: every " +
